@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from data_validation_spark.stats.engine import compute_statistics
 from data_validation_spark.stats.options import StatsOptions
@@ -48,9 +49,9 @@ def _local_df(spark, rows, ddl) -> DataFrame:
         return spark.createDataFrame(rows, ddl)
     import pandas as pd
 
-    names = [part.strip().split()[0] for part in ddl.split(",")]
-    pdf = pd.DataFrame([tuple(r) for r in rows], columns=names)
-    return spark.createDataFrame(pdf, schema=ddl)
+    schema = StructType.fromDDL(ddl)
+    pdf = pd.DataFrame([tuple(r) for r in rows], columns=schema.fieldNames())
+    return spark.createDataFrame(pdf, schema=schema)
 
 
 # ----------------------------------------------------------------- flagship --
@@ -2119,14 +2120,12 @@ def _infer_schema_sql():
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Dict order is deliberate: the driver's CORRECTNESS snapshot records the
-    # first 50 of these 58 entries. Same rotation invariant as round 5: the 8
-    # entries the r05 snapshot could not fit (its tail — minhash_dedup,
-    # sketch_stats, weighted_sketch_stats, knn_mi, slice_multi,
-    # nl_token_stats, booldomain_violations, floatdomain_nan; all green in
-    # CORRECTNESS_r04) rotate to the FRONT this round, and the 8 rotated out
-    # of the head were all driver-green in CORRECTNESS_r05 — so every query
-    # name has a driver-green row across consecutive rounds' artifacts.
+    # Each CORRECTNESS_r0x snapshot records 50 of these 58 entries, and
+    # dict order does not choose which: CORRECTNESS_r05 and _r06 both lack
+    # minhash_dedup, sketch_stats, weighted_sketch_stats, knn_mi,
+    # slice_multi, nl_token_stats, booldomain_violations and floatdomain_nan
+    # although r06 had them first (last snapshot row: CORRECTNESS_r04).
+    # tools/verify_entry.py checks every entry against its oracle.
     return {
         "minhash_dedup": q_minhash_dedup,
         "sketch_stats": q_sketch_stats,

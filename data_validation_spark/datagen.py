@@ -185,7 +185,9 @@ def warm_session(spark) -> None:
     costs into the (untimed) setup phase, which is what a long-running
     cluster's steady state looks like.
     """
-    key = id(spark)
+    # The application id, not id(spark): a new session can reuse the
+    # address of a collected one.
+    key = spark.sparkContext.applicationId
     if key in _WARMED:
         return
     _WARMED.add(key)

@@ -9,11 +9,10 @@ Spark's execution model.
 The reference hands combiners Arrow RecordBatches inside a Beam
 ``CombinePerKey``; here the distributed fold is a single ``mapInPandas``
 pass producing one pickled, ``compact()``-ed accumulator row per
-(generator, slice, partition), followed by a salted executor-side pre-merge
-tier when the partial count is large (the same hot-key fanout shape as the
-sketch pass, :mod:`data_validation_spark.stats.sketches.runner`) and a final
-KB-scale driver merge. At 1000-executor scale the driver therefore never
-sees more than ``16 × slices × generators`` accumulators.
+(generator, slice, partition), merged per (generator, slice) on executors by
+the same combine path as the built-in sketches
+(:func:`data_validation_spark.stats.sketches.combine.combine_per_key`). The
+driver receives one accumulator per generator per slice.
 
 A generator's ``extract_output`` returns a :class:`DatasetStats` whose
 features are merged into the engine's artifact for the matching slice —
@@ -32,9 +31,6 @@ if TYPE_CHECKING:
     from data_validation_spark.schema import Schema
 
 from data_validation_spark.stats.result import DatasetStats, FeatureStats
-
-#: Partial-accumulator count above which the salted pre-merge tier runs.
-FANOUT_THRESHOLD = 64
 
 
 class StatsGenerator:
@@ -241,13 +237,15 @@ def run_combiner_generators(
 
     One ``mapInPandas`` pass folds every generator per slice per partition
     (generators ship to executors pickled inside the closure; ``setup()``
-    runs once per python worker), then partial accumulators merge through an
-    optional salted pre-merge tier and a final driver merge.
+    runs once per python worker), then partial accumulators merge per
+    (generator, slice) on executors through ``combine_per_key``.
 
     Returns {slice_key: [(generator_name, DatasetStats), ...]}.
     """
     import pandas as pd
     from pyspark.sql import functions as F
+
+    from data_validation_spark.stats.sketches.combine import combine_per_key
 
     gens = []
     for g in generators:
@@ -293,55 +291,20 @@ def run_combiner_generators(
         ]
         yield pd.DataFrame(rows, columns=["gen", "slice_key", "acc"])
 
-    partials = work.mapInPandas(partial, _PARTIAL_DDL)
-
-    def merge_keep(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        local_gens: list[CombinerStatsGenerator] = pickle.loads(gens_pkl)
-        i = int(pdf["gen"].iloc[0])
-        g = local_gens[i]
+    def merge(key, accs):
+        g = pickle.loads(gens_pkl)[key[0]]
         g.setup()
-        merged = g.merge_accumulators(
-            pickle.loads(bytes(b)) for b in pdf["acc"]
-        )
-        out = pdf.iloc[:1].copy()
-        out["acc"] = [pickle.dumps(g.compact(merged), protocol=4)]
-        return out
+        return g.compact(g.merge_accumulators(accs))
 
-    num_parts = work.rdd.getNumPartitions()
-    if num_parts > FANOUT_THRESHOLD:
-        salted = partials.withColumn(
-            "salt", F.pmod(F.xxhash64(F.rand(seed=7)), F.lit(16))
-        )
-        partials = (
-            salted.groupBy("gen", "slice_key", "salt")
-            .applyInPandas(merge_keep, _PARTIAL_DDL + ", salt bigint")
-            .drop("salt")
-        )
-        merged_df = partials.groupBy("gen", "slice_key").applyInPandas(
-            merge_keep, _PARTIAL_DDL
-        )
-        rows = merged_df.collect()
-        final: dict[tuple[int, str], Any] = {
-            (int(r["gen"]), r["slice_key"]): pickle.loads(bytes(r["acc"]))
-            for r in rows
-        }
-    else:
-        # Few partials: merge driver-side directly (KB-scale).
-        rows = partials.collect()
-        grouped: dict[tuple[int, str], list] = {}
-        for r in rows:
-            grouped.setdefault((int(r["gen"]), r["slice_key"]), []).append(
-                pickle.loads(bytes(r["acc"]))
-            )
-        final = {
-            key: gens[key[0]].merge_accumulators(accs)
-            for key, accs in grouped.items()
-        }
-
+    merged = combine_per_key(
+        work.mapInPandas(partial, _PARTIAL_DDL), ["gen", "slice_key"], merge
+    )
     out: dict[str, list[tuple[str, DatasetStats]]] = {}
-    for (i, sk), acc in final.items():
-        ds = gens[i].extract_output(acc)
-        out.setdefault(sk, []).append((gens[i].name, ds))
+    # Generator order, so later generators win custom-stat clashes.
+    for r in sorted(merged.collect(), key=lambda r: r["gen"]):
+        g = gens[r["gen"]]
+        ds = g.extract_output(pickle.loads(bytes(r["acc"])))
+        out.setdefault(r["slice_key"], []).append((g.name, ds))
     return out
 
 

@@ -18,7 +18,7 @@ Execution shape (cf. SURVEY.md §3.1 "Spark shape"):
 
 With ``options.use_sketches=True`` the long pass is replaced by a single
 Arrow-vectorized sketch pass (t-digest + count-min + HLL), mergeable
-accumulators combined tree-wise — see ``sketches/runner.py``.
+accumulators merged per key — see ``sketches/runner.py``.
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_validation_spark.stats import exprs as E
 from data_validation_spark.stats.options import StatsOptions
@@ -104,6 +105,8 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
             p.categorical = _want_topk(p, options)
         if p.name in options.image_columns and p.stats_type == E.BYTES:
             p.image_stats = True
+
+    _check_label(df, options)
 
     # ---- wide + long passes, submitted concurrently ------------------------
     # The two jobs are independent; overlapping them lets Spark's scheduler
@@ -197,20 +200,6 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         label = options.label_feature
         if not label:
             return []
-        if label not in df.columns:
-            raise ValueError(f"label_feature {label!r} not found in the data.")
-        from pyspark.sql import types as T
-
-        label_type = df.schema[label].dataType
-        label_is_categorical = label in options.categorical_features or isinstance(
-            label_type, (T.StringType, T.BooleanType, T.BinaryType)
-        )
-        if not label_is_categorical and not options.lift_y_boundaries:
-            raise ValueError(
-                f"label_feature {label!r} is numeric; lift needs "
-                "lift_y_boundaries (the reference LiftStatsGenerator's "
-                "y_boundaries requirement)."
-            )
         x_cols = [
             p.name
             for p in plans
@@ -295,6 +284,24 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
                     series.sort(key=lambda d: (d["y"], -d["lift"]))
                     fs.custom["lift"] = series
     return artifact
+
+
+def _check_label(df: DataFrame, options: StatsOptions) -> None:
+    """Reject unusable lift options before any Spark job is submitted."""
+    label = options.label_feature
+    if not label:
+        return
+    if label not in df.columns:
+        raise ValueError(f"label_feature {label!r} not found in the data.")
+    label_is_categorical = label in options.categorical_features or isinstance(
+        df.schema[label].dataType, (T.StringType, T.BooleanType, T.BinaryType)
+    )
+    if not label_is_categorical and not options.lift_y_boundaries:
+        raise ValueError(
+            f"label_feature {label!r} is numeric; lift needs "
+            "lift_y_boundaries (the reference LiftStatsGenerator's "
+            "y_boundaries requirement)."
+        )
 
 
 def _want_topk(p: E.ColumnPlan, options: StatsOptions) -> bool:

@@ -1,5 +1,5 @@
 """Distributed sketch pass: per-partition Arrow-vectorized partial
-accumulators (t-digest + count-min top-k + HLL), merged tree-wise.
+accumulators (t-digest + count-min top-k + HLL), merged per key.
 
 Execution shape — the Spark translation of the reference's
 CombinePerKey-with-hot-key-fanout over mergeable sketches
@@ -8,23 +8,29 @@ CombinePerKey-with-hot-key-fanout over mergeable sketches
 1. ``mapInPandas`` over the stacked long frame: each input partition builds
    one accumulator per (slice, feature) — values pre-grouped with
    ``value_counts`` before sketch insert — and emits it pickled.
-2. When many partials exist, an intermediate salted merge stage combines
-   per (slice, feature, salt) — the explicit two-tier combine / hot-key
-   fanout for the single-slice skew case.
-3. Final ``groupBy(slice, feature).applyInPandas`` merge → one extracted
-   result row per key, collected on the driver (tiny).
+2. :func:`~.combine.combine_per_key` merges the partials per
+   (slice, feature): one ``groupBy.applyInPandas``, preceded by a salted
+   pre-merge tier when the input has more than its single
+   ``FANOUT_THRESHOLD`` partitions (hot-key fanout for the single-slice
+   skew case). User combiner generators share the same path.
+3. The merged rows — one per key, KBs — are collected and extracted on the
+   driver.
+
+The exact mode's weighted quantiles (``build_weighted_digest_frame``) run
+the same fold and merge over the numeric features only.
 """
 
 from __future__ import annotations
 
 import pickle
+from dataclasses import replace
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from data_validation_spark.stats import exprs as E
+from data_validation_spark.stats.sketches.combine import combine_per_key
 from data_validation_spark.stats.sketches.countmin import CountMinTopK
 from data_validation_spark.stats.sketches.hll import HyperLogLog
 from data_validation_spark.stats.sketches.tdigest import TDigest
@@ -178,30 +184,15 @@ class FeatureAccumulator:
 
 
 _PARTIAL_DDL = "slice_key string, feature string, acc binary"
-
-# Partial-accumulator count above which the two-tier salted merge kicks in
-# (hot-key fanout for the single-slice skew case). Module-level so tests can
-# force the fanout tier on small inputs.
-FANOUT_THRESHOLD = 64
+_QS = [i / _QUANTILE_CUTS for i in range(_QUANTILE_CUTS + 1)]
 
 
-def run_sketch_pass(df, plans, slice_col, options):
-    """Returns (topk_data, uniq_data, arr_data, wtopk_data) with the same
-    shapes as the exact long pass (see engine._run_long_pass). With a weight
-    column, a second weighted CMS ranks values by weighted count (reference
-    `topk_weighted` MisraGries parity); otherwise wtopk mirrors topk."""
-    long_df = E.long_format(
-        df, plans, slice_col,
-        getattr(options, "example_weight_map", None) or options.weight_column,
-        include_scalar_numeric=True,
-    )
-    if long_df is None:
-        return {}, {}, {}, {}
-
-    opts = options
-
-    cats = set(opts.categorical_features or ())
-    weighted = bool(opts.weight_column)
+def _merged_sketches(long_df, options):
+    """Fold ``long_df`` into one FeatureAccumulator per (slice, feature) per
+    input partition and return the lazily merged ``(slice_key, feature,
+    acc)`` frame."""
+    cats = set(options.categorical_features or ())
+    weighted = bool(options.weight_column)
 
     def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         accs: dict[tuple[str, str], FeatureAccumulator] = {}
@@ -209,7 +200,7 @@ def run_sketch_pass(df, plans, slice_col, options):
             for (sk, feat), g in pdf.groupby(["slice_key", "feature"], sort=False):
                 acc = accs.get((sk, feat))
                 if acc is None:
-                    acc = accs[(sk, feat)] = FeatureAccumulator(opts, feat in cats)
+                    acc = accs[(sk, feat)] = FeatureAccumulator(options, feat in cats)
                 sv = g["str_value"].dropna()
                 if len(sv):
                     acc.add_strings(sv, g["weight"][sv.index] if weighted else None)
@@ -227,28 +218,47 @@ def run_sketch_pass(df, plans, slice_col, options):
             rows.append((sk, feat, pickle.dumps(acc, protocol=4)))
         yield pd.DataFrame(rows, columns=["slice_key", "feature", "acc"])
 
-    partials = long_df.mapInPandas(partial, _PARTIAL_DDL)
-
-    # Two-tier merge when many partials would pile onto one (slice, feature)
-    # reducer — the explicit hot-key fanout.
-    num_parts = long_df.rdd.getNumPartitions()
-    run_sketch_pass.last_used_fanout = num_parts > FANOUT_THRESHOLD
-    if num_parts > FANOUT_THRESHOLD:
-        salted = partials.withColumn(
-            "salt", F.pmod(F.xxhash64(F.rand(seed=7)), F.lit(16))
-        )
-        partials = (
-            salted.groupBy("slice_key", "feature", "salt")
-            .applyInPandas(_merge_group_keep, _PARTIAL_DDL + ", salt bigint")
-            .drop("salt")
-        )
-
-    merged = partials.groupBy("slice_key", "feature").applyInPandas(
-        _merge_group_keep, _PARTIAL_DDL
+    return combine_per_key(
+        long_df.mapInPandas(partial, _PARTIAL_DDL), ["slice_key", "feature"],
+        _merge_accumulators,
     )
-    rows = merged.collect()
 
-    qs = [i / _QUANTILE_CUTS for i in range(_QUANTILE_CUTS + 1)]
+
+def _merge_accumulators(key, accs: list[FeatureAccumulator]) -> FeatureAccumulator:
+    merged = accs[0]
+    for a in accs[1:]:
+        merged = merged.merge(a)
+    merged.compact()
+    return merged
+
+
+def _weighted_numeric(acc: FeatureAccumulator) -> dict:
+    """Weighted quantile grid + weighted moments of one merged accumulator
+    (reference WeightedNumericStatistics); the grid needs a weight column."""
+    return {
+        "wquants": acc.wtd.quantiles(_QS) if acc.wtd is not None and acc.fincnt else None,
+        "wfcnt": acc.wfcnt,
+        "wfsum": acc.wfsum,
+        "wfsumsq": acc.wfsumsq,
+        "wposinf": acc.wposinf,
+        "wneginf": acc.wneginf,
+    }
+
+
+def run_sketch_pass(df, plans, slice_col, options):
+    """Returns (topk_data, uniq_data, arr_data, wtopk_data) with the same
+    shapes as the exact long pass (see engine._run_long_pass). With a weight
+    column, a second weighted CMS ranks values by weighted count (reference
+    `topk_weighted` MisraGries parity); otherwise wtopk mirrors topk."""
+    long_df = E.long_format(
+        df, plans, slice_col,
+        getattr(options, "example_weight_map", None) or options.weight_column,
+        include_scalar_numeric=True,
+    )
+    if long_df is None:
+        return {}, {}, {}, {}
+    rows = _merged_sketches(long_df, options).collect()
+
     k = max(options.num_top_values, options.num_rank_histogram_buckets)
     topk_data: dict = {}
     uniq_data: dict = {}
@@ -259,7 +269,7 @@ def run_sketch_pass(df, plans, slice_col, options):
         key = (r["slice_key"], r["feature"])
         top = acc.topk.top_k(k)
         if top:
-            wtk = getattr(acc, "wtopk", None)
+            wtk = acc.wtopk
             wc_of = (
                 dict(zip([v for v, _ in top],
                          wtk.estimate([v for v, _ in top]).astype(float)))
@@ -307,8 +317,6 @@ def run_sketch_pass(df, plans, slice_col, options):
                     if n_nonnan
                     else 0.0
                 )
-            quants = acc.td.quantiles(qs) if acc.fincnt else None
-            wtd = getattr(acc, "wtd", None)
             arr_data[key] = {
                 "min": (-np.inf if acc.neginf else acc.td.min) if acc.fincnt or acc.neginf else None,
                 "max": (np.inf if acc.posinf else acc.td.max) if acc.fincnt or acc.posinf else None,
@@ -320,37 +328,24 @@ def run_sketch_pass(df, plans, slice_col, options):
                 "finmin": acc.td.min if acc.fincnt else None,
                 "finmax": acc.td.max if acc.fincnt else None,
                 "fincnt": acc.fincnt,
-                "quants": quants,
-                # Weighted quantile grid + moments (reference
-                # WeightedNumericStatistics): present only with a weight col.
-                "wquants": (
-                    wtd.quantiles(qs) if wtd is not None and acc.fincnt else None
-                ),
-                "wfcnt": acc.wfcnt,
-                "wfsum": acc.wfsum,
-                "wfsumsq": acc.wfsumsq,
-                "wposinf": acc.wposinf,
-                "wneginf": acc.wneginf,
+                "quants": acc.td.quantiles(_QS) if acc.fincnt else None,
+                **_weighted_numeric(acc),
             }
     return topk_data, uniq_data, arr_data, (wtopk_data or dict(topk_data))
 
 
 def build_weighted_digest_frame(df, plans, slice_col, options, weight_arg=None):
     """Lazy merged weighted-digest frame ``(slice_key, feature, acc)`` for
-    EXACT mode: when a weight column is configured but ``use_sketches`` is
-    off, the wide agg has weighted moments and the long pass has weighted
-    top-k, yet weighted QUANTILES (reference WeightedNumericStatistics
-    histograms) have no JVM builtin — this branch runs the same
-    mapInPandas/two-tier-merge shape as the sketch pass restricted to
-    numeric features. Round 4 ran it as a dedicated 4th concurrent job;
-    now the caller unions this KB-scale frame into the exact long pass's
-    single action (engine._run_long_pass), so Catalyst executes it as a
+    EXACT mode with a weight column: weighted QUANTILES (reference
+    WeightedNumericStatistics histograms) have no JVM builtin, so the
+    numeric features run through the sketch pass's fold and merge. The
+    caller unions this KB-scale frame into the exact long pass's single
+    action (engine._run_long_pass), so Catalyst executes it as a
     column-disjoint branch (numeric + weight columns only — plan-asserted
     in tests/test_plans.py) of ONE job instead of an extra full read.
-    The numeric-only long frame never feeds the string sketches, so the
-    reused FeatureAccumulator's CMS/HLL stay empty (allocation only).
-    Decode rows with ``decode_weighted_digest``."""
-    num_plans = [p for p in plans if p.numeric]
+    Plans lose their categorical flag here, so the accumulators' string
+    sketches stay empty. Decode rows with ``decode_weighted_digest``."""
+    num_plans = [replace(p, categorical=False) for p in plans if p.numeric]
     if not num_plans:
         return None
     long_df = E.long_format(
@@ -358,66 +353,11 @@ def build_weighted_digest_frame(df, plans, slice_col, options, weight_arg=None):
         weight_arg if weight_arg is not None else options.weight_column,
         include_scalar_numeric=True,
     )
-    if long_df is None:
-        return None
-    opts = options
-
-    def partial(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        accs: dict[tuple[str, str], FeatureAccumulator] = {}
-        for pdf in batches:
-            for (sk, feat), g in pdf.groupby(["slice_key", "feature"], sort=False):
-                acc = accs.get((sk, feat))
-                if acc is None:
-                    acc = accs[(sk, feat)] = FeatureAccumulator(opts)
-                nvs = g["num_value"].dropna()
-                if len(nvs):
-                    acc.add_numbers(
-                        nvs.to_numpy(dtype=np.float64),
-                        g["weight"][nvs.index].to_numpy(dtype=np.float64),
-                    )
-        rows = []
-        for (sk, feat), acc in accs.items():
-            acc.compact()
-            rows.append((sk, feat, pickle.dumps(acc, protocol=4)))
-        yield pd.DataFrame(rows, columns=["slice_key", "feature", "acc"])
-
-    partials = long_df.mapInPandas(partial, _PARTIAL_DDL)
-    if long_df.rdd.getNumPartitions() > FANOUT_THRESHOLD:
-        salted = partials.withColumn(
-            "salt", F.pmod(F.xxhash64(F.rand(seed=7)), F.lit(16))
-        )
-        partials = (
-            salted.groupBy("slice_key", "feature", "salt")
-            .applyInPandas(_merge_group_keep, _PARTIAL_DDL + ", salt bigint")
-            .drop("salt")
-        )
-    return partials.groupBy("slice_key", "feature").applyInPandas(
-        _merge_group_keep, _PARTIAL_DDL
-    )
+    return None if long_df is None else _merged_sketches(long_df, options)
 
 
 def decode_weighted_digest(acc_bytes) -> dict:
     """Driver-side decode of one merged weighted-digest row into the
     ``{wquants, wfcnt, wfsum, wfsumsq, wposinf, wneginf}`` dict consumed by
     engine._assemble_feature."""
-    qs = [i / _QUANTILE_CUTS for i in range(_QUANTILE_CUTS + 1)]
-    acc: FeatureAccumulator = pickle.loads(bytes(acc_bytes))
-    return {
-        "wquants": acc.wtd.quantiles(qs) if acc.wtd is not None and acc.fincnt else None,
-        "wfcnt": acc.wfcnt,
-        "wfsum": acc.wfsum,
-        "wfsumsq": acc.wfsumsq,
-        "wposinf": acc.wposinf,
-        "wneginf": acc.wneginf,
-    }
-
-
-def _merge_group_keep(pdf: pd.DataFrame) -> pd.DataFrame:
-    accs = [pickle.loads(bytes(b)) for b in pdf["acc"]]
-    merged = accs[0]
-    for a in accs[1:]:
-        merged = merged.merge(a)
-    merged.compact()
-    out = pdf.iloc[[0]].copy()
-    out["acc"] = [pickle.dumps(merged, protocol=4)]
-    return out
+    return _weighted_numeric(pickle.loads(bytes(acc_bytes)))

@@ -8,9 +8,9 @@ Arrow UDFs and each failing row emits ``(row_key, feature, anomaly_type,
 detail)``.
 
 Scale notes (100 TB posture):
-* Uniqueness: two-stage salted aggregation — partial dup-counts per
-  (key, salt) then final per key — so one pathological hot key cannot pin a
-  single reducer; AQE skew handling stays on for the shuffle.
+* Uniqueness: one count aggregation per key — map-side partial
+  aggregation turns a hot key into one partial count per map task; AQE
+  skew handling stays on for the shuffle.
 * Referential: anti-joins; the parent side is broadcast when small enough,
   else a shuffled hash anti-join on the key (explicitly repartitioned).
 * Pixel integrity: Arrow-batched decode, bytes column pruned to the scan,

@@ -189,11 +189,25 @@ def test_transform_generator(spark, pdf):
 
 def test_fanout_merge_tier(spark, pdf, monkeypatch):
     # Force the salted pre-merge tier and confirm identical results.
-    import data_validation_spark.generators as G
+    from data_validation_spark.stats.sketches import combine
 
-    monkeypatch.setattr(G, "FANOUT_THRESHOLD", 2)
+    frames = []
+    original = combine.combine_per_key
+
+    def recording(*args):
+        frame = original(*args)
+        frames.append(frame)
+        return frame
+
+    monkeypatch.setattr(combine, "combine_per_key", recording)
+    monkeypatch.setattr(combine, "FANOUT_THRESHOLD", 2)
     df = spark.createDataFrame(pdf).repartition(5)
     out = run_combiner_generators(df, [SumSquares()], stat_cols=["x", "y"])
+    # salted pre-merge + final merge
+    (frame,) = frames
+    assert frame._jdf.queryExecution().sparkPlan().toString().count(
+        "FlatMapGroupsInPandas"
+    ) == 2
     truth_gen = SumSquares(); truth_gen.setup()
     truth = truth_gen.add_input({}, pdf[["x", "y"]])
     (name, ds), = out["All Examples"]

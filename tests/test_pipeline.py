@@ -93,3 +93,33 @@ def test_pipeline_nl_constraints_on_caption(spark):
     r2 = validate_images(spark, df, schema)
     types = {a.type.value for a in r2.anomalies.anomalies}
     assert "SEQUENCE_VALUE_TOO_SMALL_FRACTION" in types
+
+
+def test_warm_session_memo_keys_on_application_id(monkeypatch):
+    """A new session can reuse a collected session's id(); the warm-up memo
+    keys on the application id, so a new application still warms up."""
+    from data_validation_spark import datagen
+
+    monkeypatch.setattr(datagen, "_WARMED", set())
+    warmed = []
+
+    class _Context:
+        def __init__(self, app_id):
+            self.applicationId = app_id
+
+        @property
+        def defaultParallelism(self):
+            # first thing the warm-up reads; failing here ends it early
+            warmed.append(self.applicationId)
+            raise RuntimeError("no cluster")
+
+    class _Session:
+        sparkContext = _Context("app-1")
+
+    session = _Session()
+    datagen.warm_session(session)
+    datagen.warm_session(session)
+    # same object, new application: what an id() reuse looks like
+    session.sparkContext = _Context("app-2")
+    datagen.warm_session(session)
+    assert warmed == ["app-1", "app-2"]

@@ -135,6 +135,22 @@ def test_embedding_topk_broadcasts_query(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
+def test_local_df_parameterized_ddl(spark):
+    """Field names come from the parsed DDL, so commas inside decimal(p,s)
+    and struct<...> types do not split fields."""
+    from decimal import Decimal
+
+    import __spark_entry__ as m
+
+    ddl = "d decimal(10,2), st struct<a:int,b:string>, n bigint"
+    out = m._local_df(spark, [(Decimal("1.50"), (1, "x"), 7)], ddl)
+    assert out.columns == ["d", "st", "n"]
+    (row,) = out.collect()
+    assert row["d"] == Decimal("1.50")
+    assert (row["st"]["a"], row["st"]["b"]) == (1, "x")
+    assert row["n"] == 7
+
+
 def test_partitioned_read_prunes_partitions(spark, tmp_path):
     """The checkpoint ledger's per-partition read must reach PartitionFilters
     (not a post-scan filter): identical semantics for hive-partitioned parquet

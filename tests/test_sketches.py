@@ -256,26 +256,51 @@ def test_weighted_sketch_quantiles_engine(spark):
     assert n2.weighted_median > n2.median + 2.0
 
 
-def test_fanout_merge_tier_activates_and_preserves_results(spark, monkeypatch):
+def _merge_groups(frame) -> int:
+    """FlatMapGroupsInPandas nodes in ``frame``'s physical plan: one per
+    merge tier of combine_per_key."""
+    return frame._jdf.queryExecution().sparkPlan().toString().count(
+        "FlatMapGroupsInPandas"
+    )
+
+
+@pytest.mark.parametrize(
+    "weighted, use_sketches",
+    [(False, True), (True, True), (True, False)],
+    ids=["unweighted_sketch", "weighted_sketch", "weighted_exact"],
+)
+def test_fanout_merge_tier_activates_and_preserves_results(
+    spark, monkeypatch, weighted, use_sketches
+):
     # Two-tier salted merge (the explicit hot-key fanout,
     # stats_impl.py:296-303 CombinePerKey-with-fanout analogue): force the
     # tier on by lowering the threshold below the input's partition count and
-    # assert (a) it activated and (b) sketch results are unchanged vs the
-    # single-tier path — merge must be associative across the salt split.
-    from data_validation_spark.stats import sketches
+    # assert (a) it activated — two merge nodes in the combine frame's plan
+    # instead of one — and (b) results are unchanged vs the single-tier path:
+    # merge must be associative across the salt split. The weighted exact
+    # case reaches the same path through its weighted-digest frame.
     from data_validation_spark.stats.engine import compute_statistics
     from data_validation_spark.stats.options import StatsOptions
-    from data_validation_spark.stats.sketches import runner
+    from data_validation_spark.stats.sketches import combine, runner
 
-    rows = [(float(i % 100), f"k{i % 11}") for i in range(8000)]
-    df = spark.createDataFrame(rows, "x double, s string").repartition(8)
+    frames = []
 
-    base = compute_statistics(df, StatsOptions(use_sketches=True))
-    assert runner.run_sketch_pass.last_used_fanout is False
+    def recording(*args):
+        frame = combine.combine_per_key(*args)
+        frames.append(frame)
+        return frame
 
-    monkeypatch.setattr(runner, "FANOUT_THRESHOLD", 2)
-    fanned = compute_statistics(df, StatsOptions(use_sketches=True))
-    assert runner.run_sketch_pass.last_used_fanout is True
+    monkeypatch.setattr(runner, "combine_per_key", recording)
+    rows = [(float(i % 100), f"k{i % 11}", 1.0 + i % 3) for i in range(8000)]
+    df = spark.createDataFrame(rows, "x double, s string, w double").repartition(8)
+    options = StatsOptions(
+        use_sketches=use_sketches, weight_column="w" if weighted else None
+    )
+
+    base = compute_statistics(df, options)
+    monkeypatch.setattr(combine, "FANOUT_THRESHOLD", 2)
+    fanned = compute_statistics(df, options)
+    assert [_merge_groups(f) for f in frames] == [1, 2]
 
     for stats in (base, fanned):
         n = stats.default_slice().feature("x").numeric
@@ -283,9 +308,13 @@ def test_fanout_merge_tier_activates_and_preserves_results(spark, monkeypatch):
         assert n.min == 0.0 and n.max == 99.0
         assert n.mean == pytest.approx(49.5, abs=0.5)
         assert s.unique == 11
-    assert fanned.default_slice().feature("x").numeric.median == pytest.approx(
-        base.default_slice().feature("x").numeric.median, abs=1.0
-    )
+    bn = base.default_slice().feature("x").numeric
+    fn = fanned.default_slice().feature("x").numeric
+    assert fn.median == pytest.approx(bn.median, abs=1.0)
+    if weighted:
+        assert bn.weighted_median is not None
+        assert fn.weighted_median == pytest.approx(bn.weighted_median, abs=1.0)
+        assert fn.weighted_mean == pytest.approx(bn.weighted_mean, rel=1e-9)
     assert dict(fanned.default_slice().feature("s").string.top_values) == (
         dict(base.default_slice().feature("s").string.top_values)
     )

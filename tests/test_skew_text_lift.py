@@ -849,6 +849,23 @@ def test_label_feature_lift_in_artifact(spark):
     assert dw[("a", "y1")]["lift"] == pytest.approx((2 / 3) / (3 / 5))
 
 
+@pytest.mark.parametrize(
+    "label, match", [("nope", "not found"), ("y", "lift_y_boundaries")]
+)
+def test_bad_lift_options_fail_before_any_job(spark, label, match):
+    """A missing label column and a numeric label without boundaries are
+    rejected before the stats fan-out submits any Spark job."""
+    df = spark.range(200_000).select(
+        (F.col("id") % 7).cast("string").alias("x"),
+        F.col("id").cast("double").alias("y"),
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    with pytest.raises(ValueError, match=match):
+        compute_statistics(df, StatsOptions(label_feature=label))
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+
+
 def test_label_feature_lift_sliced(spark):
     rows = [
         ("s1", "a", "y1"), ("s1", "a", "y2"), ("s1", "b", "y1"),
