@@ -22,10 +22,10 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from data_validation_spark.stats.engine import compute_statistics
 from data_validation_spark.stats.options import StatsOptions
+from data_validation_spark.util import local_frame
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -36,22 +36,9 @@ def _e6(col) -> "F.Column":
     return F.round(col * F.lit(1000000.0), 0).cast("long")
 
 
-def _local_df(spark, rows, ddl) -> DataFrame:
-    """Local-relation builder for KB-scale driver-assembled results.
-
-    ``createDataFrame(list, ddl)`` goes through the pickled-row parallelize
-    path (defaultParallelism slices + per-row verification) and measures
-    ~0.33 s per call even for 4 rows; the pandas/Arrow path is ~4× cheaper
-    (guide §6: Arrow for driver transfers). Same rows, same schema — only the
-    serialization route differs.
-    """
-    if not isinstance(ddl, str) or not rows:
-        return spark.createDataFrame(rows, ddl)
-    import pandas as pd
-
-    schema = StructType.fromDDL(ddl)
-    pdf = pd.DataFrame([tuple(r) for r in rows], columns=schema.fieldNames())
-    return spark.createDataFrame(pdf, schema=schema)
+# Driver-assembled KB-scale results plan as local relations (Arrow, no
+# parallelize job); see ``local_frame``.
+_local_df = local_frame
 
 
 # ----------------------------------------------------------------- flagship --
@@ -147,10 +134,9 @@ _ORDERS_COLS = [
 
 def q_presence_orders(spark, sf_dir):
     """Engine presence stats (non-missing / missing per column)."""
-    # Project to the reported columns (guide §1.2 / §2.3: don't compute what
-    # you throw away): round 5 profiled all 9 orders columns — including an
-    # exact top-k over ~150k distinct o_comment values — and discarded
-    # everything but these 6 columns' presence counters.
+    # The orders table has exactly these 6 columns; the explicit projection
+    # keeps the reported set fixed if a wider orders file (TPC-H's full 9,
+    # with o_comment) is ever passed in.
     orders = _t(spark, sf_dir, "orders").select(*_ORDERS_COLS)
     stats = compute_statistics(orders, StatsOptions())
     ds = stats.default_slice()

@@ -45,6 +45,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import struct
 import time
 import uuid as uuidlib
@@ -577,22 +578,35 @@ def read_table(
     return df.select(*columns) if columns else df
 
 
-def _normalize_path_col(col):
+_URI_SCHEME = r"^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
+
+
+def _normalize_path(path: str) -> str:
     """Strip any URI scheme: 'file:/p', 'file:///p', 'hdfs://nn/p' → path."""
+    return re.sub(_URI_SCHEME, "/", path)
+
+
+def _normalize_path_col(col):
+    """``_normalize_path`` as a column expression."""
     from pyspark.sql import functions as F
 
-    return F.regexp_replace(col, "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+    return F.regexp_replace(col, _URI_SCHEME, "/")
 
 
 def read_files(spark, entries: list, deletes: list, schema: dict):
     """One ``spark.read.parquet`` over planned data files, with positional
     deletes applied as an anti-join on (file, row position) — merge-on-read.
 
-    Delete rows name files by their ORIGINAL stored paths; a tiny broadcast
-    mapping (stored path → actual path, from the same plan) keeps deletes
-    correct for moved/copied tables. The anti-join runs distributed; delete
-    files are never collected to the driver."""
+    Delete rows name files by their ORIGINAL stored paths; a small file map
+    from the same plan (actual path → stored path, data sequence number),
+    built on the driver as a local relation and broadcast, keeps deletes
+    correct for moved/copied tables. Delete files are read by Spark, never
+    collected to the driver: Catalyst sizes the delete side from the delete
+    files and broadcasts a small delete set, or shuffles both sides of the
+    anti-join for a large one."""
     from pyspark.sql import functions as F
+
+    from data_validation_spark.util import local_frame
 
     flat = all(isinstance(f["type"], str) for f in schema.get("fields", []))
 
@@ -621,27 +635,25 @@ def read_files(spark, entries: list, deletes: list, schema: dict):
             "table mixes in ORC data files"
         )
     base_cols = df.columns
-    import re as _re
-
-    def norm(p: str) -> str:
-        return _re.sub(r"^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/", p)
-
     pos_deletes = [d for d in deletes if d.content == 1]
     eq_deletes = [d for d in deletes if d.content == 2]
 
-    df = df.withColumn(
-        "__dv_file", _normalize_path_col(F.col("_metadata.file_path"))
-    ).withColumn("__dv_pos", F.col("_metadata.row_index"))
-
-    if pos_deletes or eq_deletes:
-        # Data rows pick up their file's data sequence number via a
-        # broadcast (file → seq) map; both delete flavors are
-        # sequence-conditioned per the spec.
-        seq_map = spark.createDataFrame(
-            [(norm(e.path), e.data_seq) for e in entries],
-            "__dv_file string, __dv_seq long",
-        )
-        df = df.join(F.broadcast(seq_map), "__dv_file", "left")
+    # Each data row picks up its file's data sequence number (both delete
+    # flavors are sequence-conditioned per the spec) and its file's stored
+    # path, the name delete rows use for it.
+    file_map = local_frame(
+        spark,
+        [
+            (_normalize_path(e.path), _normalize_path(e.stored_path or e.path), e.data_seq)
+            for e in entries
+        ],
+        "__dv_file string, __dv_stored string, __dv_seq long",
+    )
+    df = (
+        df.withColumn("__dv_file", _normalize_path_col(F.col("_metadata.file_path")))
+        .withColumn("__dv_pos", F.col("_metadata.row_index"))
+        .join(F.broadcast(file_map), "__dv_file", "left")
+    )
 
     if pos_deletes:
         # Spec ordering: a position delete applies only to data files whose
@@ -649,28 +661,21 @@ def read_files(spark, entries: list, deletes: list, schema: dict):
         # file re-registered under a HIGHER sequence (add_files / rollback /
         # rewrite flows) must keep its rows even if an old delete file names
         # the same path+pos.
-        mapping = [(norm(e.stored_path or e.path), norm(e.path)) for e in entries]
-        map_df = spark.createDataFrame(mapping, "__orig string, __pd_file string")
-        parts = []
-        for d in pos_deletes:
-            parts.append(
-                spark.read.parquet(d.path)
-                .select(
-                    _normalize_path_col(F.col("file_path")).alias("__orig"),
-                    F.col("pos").cast("long").alias("__pd_pos"),
-                )
-                .withColumn("__pd_seq", F.lit(d.seq).cast("long"))
+        parts = [
+            spark.read.parquet(d.path).select(
+                _normalize_path_col(F.col("file_path")).alias("__pd_stored"),
+                F.col("pos").cast("long").alias("__pd_pos"),
+                F.lit(d.seq).cast("long").alias("__pd_seq"),
             )
+            for d in pos_deletes
+        ]
         del_df = parts[0]
         for extra in parts[1:]:
             del_df = del_df.unionByName(extra)
-        del_df = del_df.join(F.broadcast(map_df), "__orig").select(
-            "__pd_file", "__pd_pos", "__pd_seq"
-        )
         df = df.join(
             del_df,
             [
-                df["__dv_file"] == del_df["__pd_file"],
+                df["__dv_stored"] == del_df["__pd_stored"],
                 df["__dv_pos"] == del_df["__pd_pos"],
                 del_df["__pd_seq"] >= df["__dv_seq"],
             ],
@@ -1190,8 +1195,9 @@ def delete_rows(spark, table_path: str, predicate: str) -> Optional[int]:
     """Merge-on-read DELETE: writes positional-delete files naming the
     (file, pos) of rows matching ``predicate`` — no data-file rewrite — and
     commits a v2 snapshot. Returns the new snapshot id, or None when no rows
-    matched (no commit). ``read_table`` applies the deletes via a
-    distributed anti-join on (file, row position).
+    matched (no commit). ``read_table`` applies the deletes as an anti-join
+    on (file, row position): Catalyst broadcasts a small delete set and
+    shuffles both sides for a large one (see ``read_files``).
 
     The match job and the delete-file write are one distributed pass
     (filter → project → parquet write); only per-file record counts touch
@@ -1199,22 +1205,22 @@ def delete_rows(spark, table_path: str, predicate: str) -> Optional[int]:
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
+    from data_validation_spark.util import local_frame
+
     tm = load_table(table_path)
     entries, _prior_deletes = plan_scan(table_path)
     if not entries:
         return None
     schema = tm.schema()
     # Delete rows must name files by their MANIFEST (stored) paths — the
-    # spec's identity for a data file, and what read_files' stored→actual
-    # mapping keys on. Rebased actual paths would orphan the deletes after
-    # a table move (and break foreign readers).
-    import re as _re
-
-    def _norm(pth: str) -> str:
-        return _re.sub(r"^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/", pth)
-
-    actual_to_stored = [(_norm(e.path), e.stored_path or e.path) for e in entries]
-    stored_map = spark.createDataFrame(actual_to_stored, "__f string, file_path string")
+    # spec's identity for a data file, and what read_files' file map keys
+    # on. Rebased actual paths would orphan the deletes after a table move
+    # (and break foreign readers).
+    stored_map = local_frame(
+        spark,
+        [(_normalize_path(e.path), e.stored_path or e.path) for e in entries],
+        "__f string, file_path string",
+    )
     matches = (
         spark.read.schema(_schema_to_ddl(schema))
         .parquet(*[e.path for e in entries])

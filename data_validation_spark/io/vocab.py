@@ -43,7 +43,7 @@ def load_vocab(path: str) -> Tuple[Dict[str, int], Dict[int, str]]:
 def read_vocab_df(spark, path: str):
     """The vocabulary as a (token string, index int) DataFrame, ready for
     the broadcast join in [[vocab-token-stats]]."""
+    from data_validation_spark.util import local_frame
+
     vocab, _ = load_vocab(path)
-    return spark.createDataFrame(
-        [(tok, idx) for tok, idx in vocab.items()], "token string, index int"
-    )
+    return local_frame(spark, list(vocab.items()), "token string, index int")

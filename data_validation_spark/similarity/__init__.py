@@ -16,6 +16,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from data_validation_spark.util import local_frame
+
 
 def cosine_topk_bruteforce(
     df: DataFrame, id_col: str, vec_col: str, queries: list[tuple[int, list[float]]],
@@ -23,9 +25,7 @@ def cosine_topk_bruteforce(
 ) -> DataFrame:
     """Exact top-k per query: (query_id, rnk, id, cosine)."""
     spark = df.sparkSession
-    qdf = F.broadcast(
-        spark.createDataFrame(queries, f"query_id long, qv array<float>")
-    )
+    qdf = F.broadcast(local_frame(spark, queries, "query_id long, qv array<float>"))
     joined = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).crossJoin(qdf)
     dot = F.aggregate(F.zip_with("v", "qv", lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x)
     nv = F.sqrt(F.aggregate("v", F.lit(0.0), lambda s, x: s + x * x))
@@ -148,7 +148,7 @@ def cosine_topk_ivf(
         probes = np.argsort(-(cn @ q))[:nprobe]
         for b in probes:
             qc.append((qid, int(b), [float(x) for x in qv]))
-    qdf = F.broadcast(spark.createDataFrame(qc, "query_id long, bucket int, qv array<float>"))
+    qdf = F.broadcast(local_frame(spark, qc, "query_id long, bucket int, qv array<float>"))
 
     joined = bucketed.join(qdf, on="bucket")
     dot = F.aggregate(F.zip_with("v", "qv", lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x)

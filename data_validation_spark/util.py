@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 
 def ensure_min_partitions(df: DataFrame, minimum: int | None = None) -> DataFrame:
@@ -19,3 +20,27 @@ def ensure_min_partitions(df: DataFrame, minimum: int | None = None) -> DataFram
     if df.rdd.getNumPartitions() >= minimum:
         return df
     return df.repartition(minimum)
+
+
+def local_frame(spark, rows, ddl: str) -> DataFrame:
+    """A DataFrame over KB-scale driver-built rows, planned as a local relation.
+
+    ``createDataFrame(list, ddl)`` (and the pandas route when Arrow is off)
+    parallelizes pickled rows into a ``Scan ExistingRDD``: every action over
+    it re-runs a Python job, and the relation carries no size statistics, so
+    Catalyst never broadcasts it on its own and plans joins against it as
+    shuffles. An Arrow table built here from the rows, column by column, plans
+    as ``LocalTableScan`` with a real ``sizeInBytes`` and keeps Python ints
+    exact (``None`` stays null, 64-bit values stay whole).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)

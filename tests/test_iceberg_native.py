@@ -10,6 +10,7 @@ neither layer is merely self-consistent.
 import datetime
 import json
 import os
+import re
 import shutil
 import struct
 
@@ -563,6 +564,57 @@ def test_delete_rows_merge_on_read(spark, tmp_path):
     )
     ice.append_table(spark, df2, root)
     assert ice.read_table(spark, root).filter("id >= 200").count() == 20
+
+
+def _find_node(node, name: str, join_type: str):
+    if node.nodeName() == name and str(node.joinType()) == join_type:
+        return node
+    if node.getClass().getSimpleName().endswith("QueryStageExec"):
+        return _find_node(node.plan(), name, join_type)  # AQE stages are leaves
+    children = node.children().iterator()
+    while children.hasNext():
+        found = _find_node(children.next(), name, join_type)
+        if found is not None:
+            return found
+    return None
+
+
+@pytest.mark.parametrize("broadcast_threshold", [None, "-1"])
+def test_positional_delete_plan(spark, tmp_path, broadcast_threshold):
+    """The delete-side file map is a local relation (no Python job on every
+    action) and the delete side carries its file size, so Catalyst
+    broadcasts a small delete set: BroadcastHashJoin LeftAnti with no
+    shuffle on the data side. With broadcasts off the same read falls back
+    to a shuffled anti-join; both give the rows of the delete tests."""
+    root = str(tmp_path / "mor_plan")
+    df = spark.range(0, 200).selectExpr(
+        "id", "cast(id % 4 as int) as day_id", "cast(id * 2 as double) as v"
+    )
+    ice.write_table(spark, df, root, partition_by=["day_id"])
+    ice.delete_rows(spark, root, "id % 10 = 3")
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    if broadcast_threshold is not None:
+        spark.conf.set(key, broadcast_threshold)
+    try:
+        back = ice.read_table(spark, root).select("id", "v")
+        rows = sorted((r["id"], r["v"]) for r in back.collect())
+        plan = back._jdf.queryExecution().executedPlan().executedPlan()
+    finally:
+        spark.conf.set(key, old)
+
+    assert rows == [(i, i * 2.0) for i in range(200) if i % 10 != 3]
+    text = plan.toString()
+    assert "ExistingRDD" not in text and "LocalTableScan" in text
+    if broadcast_threshold is None:
+        anti = _find_node(plan, "BroadcastHashJoin", "LeftAnti")
+        assert anti is not None, text
+        data_side = anti.left().toString()
+        assert "ShuffleQueryStage" not in data_side, text
+        assert re.search(r"(?<!Broadcast)Exchange", data_side) is None, text
+    else:
+        assert _find_node(plan, "SortMergeJoin", "LeftAnti") is not None, text
 
 
 def test_deleted_table_moves_and_ledger(spark, tmp_path):

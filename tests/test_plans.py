@@ -151,6 +151,26 @@ def test_local_df_parameterized_ddl(spark):
     assert row["n"] == 7
 
 
+def test_local_frame_round_trips_exactly(spark):
+    """Driver rows come back unchanged through the Arrow route: a null in a
+    long column, a 64-bit value no float holds, float arrays (empty and
+    null too), and no rows at all; the plan is a local relation."""
+    from data_validation_spark.util import local_frame
+
+    ddl = "n bigint, v array<float>"
+    rows = [(None, [1.5, -2.0]), (2**62, []), (2**62 + 1, None)]
+    out = local_frame(spark, rows, ddl)
+    assert out.schema.simpleString() == "struct<n:bigint,v:array<float>>"
+    assert [tuple(r) for r in out.collect()] == rows
+    plan = plan_of(out)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+    empty = local_frame(spark, [], ddl)
+    assert empty.schema == out.schema
+    assert empty.collect() == []
+    assert "ExistingRDD" not in plan_of(empty)
+
+
 def test_partitioned_read_prunes_partitions(spark, tmp_path):
     """The checkpoint ledger's per-partition read must reach PartitionFilters
     (not a post-scan filter): identical semantics for hive-partitioned parquet
