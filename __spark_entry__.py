@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from data_validation_spark.stats.engine import compute_statistics
 from data_validation_spark.stats.options import StatsOptions
-from data_validation_spark.util import local_frame
+from data_validation_spark.util import local_frame, persisted
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -1104,39 +1104,37 @@ def q_simhash_docs(spark, sf_dir):
     # subset re-pass), an extra full scan wave at scale. Fingerprints are a
     # pure function of the text, so the subset's fingerprints are exactly the
     # cached rows filtered by id — bit-identical to re-fingerprinting.
-    fp_all = simhash_fingerprints(aug, "doc_id", "text").where(
-        F.col("fingerprint") != 0
-    ).cache()
-    pairs = simhash_near_dups_from_fingerprints(fp_all, radius=3).cache()
+    with persisted(
+        simhash_fingerprints(aug, "doc_id", "text").where(F.col("fingerprint") != 0)
+    ) as fp_all, persisted(
+        simhash_near_dups_from_fingerprints(fp_all, radius=3)
+    ) as pairs:
+        planted_found = (
+            pairs.where(F.col("id_b") - F.col("id_a") == _PLANT_DOC_OFFSET)
+            .where(F.col("id_b") >= _PLANT_DOC_OFFSET)
+            .count()
+        )
 
-    planted_found = (
-        pairs.where(F.col("id_b") - F.col("id_a") == _PLANT_DOC_OFFSET)
-        .where(F.col("id_b") >= _PLANT_DOC_OFFSET)
-        .count()
-    )
-
-    fp = fp_all.where(
-        (F.col("id") % 10 == 0) | (F.col("id") >= _PLANT_DOC_OFFSET)
-    )
-    fa = fp.select(F.col("id").alias("id_a"), F.col("fingerprint").alias("fa"))
-    fb = fp.select(F.col("id").alias("id_b"), F.col("fingerprint").alias("fb"))
-    exact_sub = {
-        (r["id_a"], r["id_b"])
-        for r in fa.crossJoin(fb)
-        .where(F.col("id_a") < F.col("id_b"))
-        .where(F.expr("bit_count(fa ^ fb) <= 3"))
-        .collect()
-    }
-    bucketed_sub = {
-        (r["id_a"], r["id_b"])
-        for r in pairs.where(
-            ((F.col("id_a") % 10 == 0) | (F.col("id_a") >= _PLANT_DOC_OFFSET))
-            & ((F.col("id_b") % 10 == 0) | (F.col("id_b") >= _PLANT_DOC_OFFSET))
-        ).collect()
-    }
-    bucketed_sub = {(min(p), max(p)) for p in bucketed_sub}
-    pairs.unpersist()
-    fp_all.unpersist()
+        fp = fp_all.where(
+            (F.col("id") % 10 == 0) | (F.col("id") >= _PLANT_DOC_OFFSET)
+        )
+        fa = fp.select(F.col("id").alias("id_a"), F.col("fingerprint").alias("fa"))
+        fb = fp.select(F.col("id").alias("id_b"), F.col("fingerprint").alias("fb"))
+        exact_sub = {
+            (r["id_a"], r["id_b"])
+            for r in fa.crossJoin(fb)
+            .where(F.col("id_a") < F.col("id_b"))
+            .where(F.expr("bit_count(fa ^ fb) <= 3"))
+            .collect()
+        }
+        bucketed_sub = {
+            (r["id_a"], r["id_b"])
+            for r in pairs.where(
+                ((F.col("id_a") % 10 == 0) | (F.col("id_a") >= _PLANT_DOC_OFFSET))
+                & ((F.col("id_b") % 10 == 0) | (F.col("id_b") >= _PLANT_DOC_OFFSET))
+            ).collect()
+        }
+        bucketed_sub = {(min(p), max(p)) for p in bucketed_sub}
     # planted_pairs = the count the bucketed pass FOUND; the oracle emits the
     # count the generator PLANTED — hash-equality is the recall-1 assertion.
     return _local_df(spark, 
@@ -1527,11 +1525,12 @@ def q_knn_mi(spark, sf_dir):
 
     # cache the 2-column projection once: three derived frames × (MI +
     # shuffled-MI) + the row count would otherwise re-scan lineitem ~7×
-    li = _t(spark, sf_dir, "lineitem").select(
-        F.col("l_quantity").cast("double").alias("q"),
-        (F.pmod(F.col("l_partkey"), F.lit(1000)).cast("double") / 1000.0).alias("u"),
-    ).cache()
-    try:
+    with persisted(
+        _t(spark, sf_dir, "lineitem").select(
+            F.col("l_quantity").cast("double").alias("q"),
+            (F.pmod(F.col("l_partkey"), F.lit(1000)).cast("double") / 1000.0).alias("u"),
+        )
+    ) as li:
         n_rows = int(li.count())  # also materializes the cache up front
         low_noise = li.select("q", (F.col("q") + 2.0 * F.col("u")).alias("y"))
         high_noise = li.select("q", (F.col("q") + 20.0 * F.col("u")).alias("y"))
@@ -1541,8 +1540,6 @@ def q_knn_mi(spark, sf_dir):
         r_low = estimated_knn_mutual_information(low_noise, "q", "y", **kw)
         r_high = estimated_knn_mutual_information(high_noise, "q", "y", **kw)
         r_ind = estimated_knn_mutual_information(indep, "q", "y", **kw)
-    finally:
-        li.unpersist()
 
     mi_low, mi_high, mi_ind = (
         r_low["mi"]["median"], r_high["mi"]["median"], r_ind["mi"]["median"],

@@ -7,14 +7,16 @@ The reference estimates kNN-based adjusted MI over random partitions
   numeric) pairs: one groupBy(x, y) shuffle + two marginal aggregations
   derived from it, MI summed driver-side in log2. Numeric columns are
   equi-width binned first (``num_bins``).
-* ``estimated_mutual_information`` — the reference's sample-partitioned
-  shape: MI computed per random partition via the partitioned harness,
+* ``estimated_mutual_information`` / ``estimated_knn_mutual_information`` —
+  the reference's sample-partitioned shape: plug-in or KSG MI computed per
+  random partition via the partitioned harness (``sparse.partitioned_stats``),
   summarized min/max/mean/median/std across partitions.
+
+The per-partition estimators (KSG, plug-in, digamma, neighbour search) are
+owned by [[mi_mixed]]; this module only prepares their inputs.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -66,27 +68,20 @@ def discrete_mutual_information(
     return max(float(mi_row["mi"] or 0.0), 0.0)
 
 
-def _digamma(x: float) -> float:
-    """Digamma via recurrence + asymptotic expansion (no scipy in image)."""
-    r = 0.0
-    while x < 6:
-        r -= 1.0 / x
-        x += 1.0
-    f = 1.0 / (x * x)
-    return r + math.log(x) - 0.5 / x - f * (
-        1.0 / 12 - f * (1.0 / 120 - f * (1.0 / 252 - f / 240))
-    )
-
-
 def kraskov_mi(x, y, k: int = 3) -> float:
     """KSG estimator #1 (Kraskov et al. 2004) of MI between two continuous
     samples, in nats — the reference's kNN-MI approach
-    (``mutual_information.py``). Brute-force neighbor search: intended for the
-    per-partition samples of the partitioned harness (n ≤ a few thousand).
+    (``mutual_information.py``):
 
         MI ≈ ψ(k) + ψ(N) − ⟨ψ(n_x+1) + ψ(n_y+1)⟩
-    """
+
+    Drops non-finite pairs, breaks ties with a tiny deterministic jitter,
+    then runs the shared KSG kernel (``_mi_high_dim_cc`` in [[mi_mixed]],
+    method 1): O(chunk·n) memory for the joint neighbour search, sorted
+    searchsorted counts per axis."""
     import numpy as np
+
+    from data_validation_spark.stats.mi_mixed import _LN2, _mi_high_dim_cc
 
     x = np.asarray(x, dtype=np.float64).ravel()
     y = np.asarray(y, dtype=np.float64).ravel()
@@ -101,19 +96,8 @@ def kraskov_mi(x, y, k: int = 3) -> float:
     g = np.random.Generator(np.random.Philox(key=[1234, 0]))
     x = x + g.normal(0, 1e-10 * rngx, n)
     y = y + g.normal(0, 1e-10 * rngy, n)
-
-    dx = np.abs(x[:, None] - x[None, :])
-    dy = np.abs(y[:, None] - y[None, :])
-    dj = np.maximum(dx, dy)  # Chebyshev distance in the joint space
-    np.fill_diagonal(dj, np.inf)
-    eps = np.partition(dj, k - 1, axis=1)[:, k - 1]  # k-th NN distance
-    nx = (dx < eps[:, None]).sum(axis=1) - 1  # exclude self
-    ny = (dy < eps[:, None]).sum(axis=1) - 1
-    psi = _digamma
-    mi = psi(k) + psi(n) - float(
-        np.mean([psi(a + 1) + psi(b + 1) for a, b in zip(nx, ny)])
-    )
-    return max(mi, 0.0)
+    bits, _ = _mi_high_dim_cc(x[:, None], y[:, None], k, "smaller_data", np.ones(n))
+    return bits * _LN2
 
 
 def estimated_knn_mutual_information(
@@ -161,11 +145,15 @@ def estimated_mutual_information(
     df: DataFrame, x_col: str, y_col: str, num_partitions: int = 10,
     num_bins: int = 10, seed: int = 42,
 ) -> dict:
-    """MI estimated per random partition, summarized across partitions —
-    the reference's partitioned-estimator shape (pandas-side per partition)."""
+    """MI in bits estimated per random partition, summarized across
+    partitions — the reference's partitioned-estimator shape. Floating
+    columns are equi-width binned per partition (``num_bins``); rows with a
+    missing value are dropped; each partition runs the shared plug-in kernel
+    (``_mi_high_dim_dd`` in [[mi_mixed]])."""
     import numpy as np
     import pandas as pd
 
+    from data_validation_spark.stats.mi_mixed import _mi_high_dim_dd
     from data_validation_spark.stats.sparse import partitioned_stats
 
     def fn(pdf: pd.DataFrame) -> dict:
@@ -175,16 +163,13 @@ def estimated_mutual_information(
             x = pd.cut(x, bins=num_bins, labels=False)
         if np.issubdtype(y.dtype, np.floating):
             y = pd.cut(y, bins=num_bins, labels=False)
-        joint = pd.crosstab(x, y).to_numpy().astype(float)
-        total = joint.sum()
-        if total == 0:
+        keep = (x.notna() & y.notna()).to_numpy()
+        if not keep.any():
             return {"mi": 0.0}
-        pxy = joint / total
-        px = pxy.sum(axis=1, keepdims=True)
-        py = pxy.sum(axis=0, keepdims=True)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            terms = pxy * np.log2(pxy / (px @ py))
-        return {"mi": float(np.nansum(terms))}
+        bits, _ = _mi_high_dim_dd(
+            pd.factorize(x[keep])[0], pd.factorize(y[keep])[0], np.ones(keep.sum())
+        )
+        return {"mi": bits}
 
     out = partitioned_stats(
         df.select(x_col, y_col), fn, num_partitions=num_partitions, seed=seed

@@ -14,13 +14,21 @@ tie-breaking noise, per-sample weights, filter feature, and the
 ``smaller_data`` / ``larger_data`` estimate methods (the PRE paper's
 methods 1 and 2). Output is in bits.
 
+This module owns the package's only copies of the MI kernels: ``_digamma``,
+the neighbour searches (``_kneighbors``, ``_radius_counts``), KSG
+(``_mi_high_dim_cc``), Ross (``_mi_high_dim_cd``) and the plug-in estimate
+(``_mi_high_dim_dd`` over ``_entropy_discrete``). [[mi]] (``kraskov_mi``,
+``estimated_mutual_information``) and [[mi_sklearn]] (the sklearn-parity
+estimators, in nats) call them rather than carrying their own.
+
 The reference leans on sklearn KDTree/NearestNeighbors and scipy digamma;
-neither ships in this image, so the neighbor searches are chunked
-brute-force Chebyshev kernels (O(n^2) time, O(chunk*n) memory) and digamma
-is a vectorized recurrence + asymptotic expansion. This is sized for the
-per-partition samples (a few thousand rows) that the partitioned stats
-harness feeds it — the same regime the reference runs these estimators in
-(each Beam partition computes MI on its own sample;
+neither ships in this image, so the k-nearest-neighbour search is a chunked
+Chebyshev scan (O(n^2) time, O(chunk*n) memory), one-dimensional radius
+counts are sorted searchsorteds (O(n log n)), and digamma is a vectorized
+recurrence + asymptotic expansion. This is sized for the per-partition
+samples (a few thousand rows) that the partitioned stats harness
+(``sparse.partitioned_stats``) feeds it — the same regime the reference runs
+these estimators in (each Beam partition computes MI on its own sample;
 ``partitioned_stats_generator.py``).
 """
 
@@ -611,8 +619,8 @@ def estimated_mixed_mi(
     """Spark wrapper: mixed-MI per random partition via the partitioned
     stats harness, summarized min/max/mean/median/std across partitions —
     the shape ``mutual_information.py`` runs these estimators in (each
-    partition computes MI on its own sample). Brute-force kernels stay
-    within the per-partition row cap."""
+    partition computes MI on its own sample). ``max_rows_per_partition``
+    bounds the O(n^2) neighbour search."""
     import pandas as pd
 
     from data_validation_spark.stats.sparse import partitioned_stats

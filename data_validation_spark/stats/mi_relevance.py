@@ -10,7 +10,7 @@ mixed kNN estimator ([[mi_mixed]]) per feature, and summarize across
 partitions with the PartitionedStatisticsAnalyzer's min/max/mean/median/
 std_dev/num_partitions naming (partitioned_stats_generator.py:36-50).
 
-Spark-first shape: one ``groupBy(rand).applyInPandas`` job per column
+Spark-first shape: one ``sparse.partitioned_stats`` job per column
 partition (the reference's ColumnHasher becomes an explicit feature-group
 projection — Catalyst prunes the scan to each group's columns plus the
 label), KB-scale per-partition results collected and summarized driver-side.
@@ -407,8 +407,8 @@ def adjusted_mutual_information_stats(
     """Distributed AMI relevance: the Spark shape of wiring
     ``MutualInformation`` through ``NonStreamingCustomStatsGenerator``.
 
-    Rows are assigned to ``row_partitions`` random partitions
-    (``groupBy(rand).applyInPandas``); with ``column_partitions > 1``
+    Rows are assigned to ``row_partitions`` random partitions by the shared
+    harness (``sparse.partitioned_stats``); with ``column_partitions > 1``
     features are split into groups and each group runs as its own
     column-pruned job with the label carried into every group (the
     reference's _PartitionFn column slicing, mutual_information.py:371-428,
@@ -419,8 +419,7 @@ def adjusted_mutual_information_stats(
 
     Returns ``{feature: {"min_<key>": ..., ..., "num_partitions_<key>": n}}``.
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from data_validation_spark.stats.sparse import partitioned_stats
 
     if categorical_features is None or multivalent_features is None:
         inferred_cat, inferred_multi = infer_feature_kinds(df)
@@ -438,7 +437,7 @@ def adjusted_mutual_information_stats(
     column_partitions = max(1, min(column_partitions, len(feature_cols)))
     groups = [feature_cols[i::column_partitions] for i in range(column_partitions)]
 
-    per_feature_values: Dict[str, List[float]] = collections.defaultdict(list)
+    summaries = {}
     for group in groups:
         gen = AdjustedMutualInformation(
             label_feature,
@@ -452,43 +451,33 @@ def adjusted_mutual_information_stats(
             custom_stats_key,
         )
 
-        def runner(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.drop(columns="__part")
+        def fn(pdf) -> dict:
             if len(pdf) > max_rows_per_partition:
                 pdf = pdf.sample(n=max_rows_per_partition, random_state=0)
-            stats = gen.compute(pdf)
-            names, values = [], []
-            for feature, d in stats.items():
-                names.append(feature)
-                values.append(float(d[custom_stats_key]))
-            return pd.DataFrame(
-                {"part": [key[0]] * len(names), "feature": names, "value": values}
+            return {
+                (feature, custom_stats_key): float(d[custom_stats_key])
+                for feature, d in gen.compute(pdf).items()
+            }
+
+        # get_valid_statistics parity: min_partitions_stat_presence tolerates
+        # invalid partitions up to the configured presence floor.
+        summaries.update(
+            partitioned_stats(
+                df.select(label_feature, *group), fn,
+                num_partitions=row_partitions, seed=seed,
+                min_partitions_stat_presence=min_partitions_stat_presence,
             )
-
-        projected = df.select(label_feature, *group).withColumn(
-            "__part", (F.rand(seed) * row_partitions).cast("int")
         )
-        rows = (
-            projected.groupBy("__part")
-            .applyInPandas(runner, "part int, feature string, value double")
-            .collect()
-        )
-        for r in rows:
-            per_feature_values[r["feature"]].append(r["value"])
+    return _analyzer_summary(summaries)
 
-    summary: Dict[str, Dict[str, float]] = {}
-    for feature, vals in per_feature_values.items():
-        if len(vals) < min_partitions_stat_presence:
-            # get_valid_statistics parity: tolerate invalid partitions up to
-            # the configured presence floor.
-            continue
-        a = np.asarray(vals, dtype=float)
-        summary[feature] = {
-            "min_" + custom_stats_key: float(a.min()),
-            "max_" + custom_stats_key: float(a.max()),
-            "mean_" + custom_stats_key: float(a.mean()),
-            "median_" + custom_stats_key: float(np.median(a)),
-            "std_dev_" + custom_stats_key: float(a.std()),
-            "num_partitions_" + custom_stats_key: int(a.size),
-        }
-    return summary
+
+def _analyzer_summary(summaries: dict) -> Dict[str, Dict[str, float]]:
+    """Harness summaries keyed ``(feature, stat)`` renamed to the
+    PartitionedStatisticsAnalyzer's ``{feature: {"min_<stat>": ...,
+    "std_dev_<stat>": ..., "num_partitions_<stat>": n}}``
+    (partitioned_stats_generator.py:36-50)."""
+    out: Dict[str, Dict[str, float]] = collections.defaultdict(dict)
+    for (feature, stat), summary in summaries.items():
+        for name, value in summary.items():
+            out[feature][("std_dev" if name == "std" else name) + "_" + stat] = value
+    return dict(out)

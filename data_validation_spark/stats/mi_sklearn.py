@@ -7,8 +7,9 @@ Two layers:
    / ``mutual_info_classif`` (the KSG estimator of Kraskov PRE 69.066138 for
    continuous pairs, the Ross PLoS ONE 9(2):e87357 estimator for
    continuous-discrete, and the contingency plug-in for discrete pairs, all
-   in nats), reusing the chunked Chebyshev neighbor kernels from
-   [[mi_mixed]]. Noise injection and scaling follow sklearn's
+   in nats). The estimators themselves are the [[mi_mixed]] kernels, which
+   own them; this module only converts bits to nats and keeps sklearn's
+   edge rules. Noise injection and scaling follow sklearn's
    ``_estimate_mi`` (unit-variance scale without centering, 1e-10 relative
    noise from a seeded RandomState) so results reproduce the reference's
    sklearn-derived goldens bit-for-bit.
@@ -23,14 +24,20 @@ Two layers:
 from __future__ import annotations
 
 import sys
-from typing import Any, Dict, List, Optional, Sequence, Set, Union
+from typing import Dict, Optional, Sequence, Set, Union
 
 import numpy as np
 
 from data_validation_spark.stats.mi_mixed import (
-    _digamma,
-    _kneighbors,
-    _radius_counts,
+    _LN2,
+    _mi_high_dim_cc,
+    _mi_high_dim_cd,
+    _mi_high_dim_dd,
+)
+from data_validation_spark.stats.mi_relevance import (
+    _analyzer_summary,
+    _cell_values,
+    infer_feature_kinds,
 )
 
 MUTUAL_INFORMATION_KEY = "sklearn_mutual_information"
@@ -43,90 +50,37 @@ _KNN_N_NEIGHBORS = 3
 
 
 # ------------------------------------------------- sklearn-parity kernels
-def _compute_mi_cc(x: np.ndarray, y: np.ndarray, n_neighbors: int) -> float:
-    """Continuous-continuous KSG method 1 in nats (sklearn _compute_mi_cc):
-    per-point radius one ulp inside the k-th joint neighbor, per-subspace
-    counts INCLUDING the point, psi-averaged."""
-    n_samples = x.size
-    xy = np.hstack([x.reshape((-1, 1)), y.reshape((-1, 1))])
-    k_dists, _ = _kneighbors(xy, n_neighbors)
-    radius = np.nextafter(k_dists[:, -1], 0)
-    nx = _radius_counts(x.reshape((-1, 1)), radius)
-    ny = _radius_counts(y.reshape((-1, 1)), radius)
-    mi = (
-        _digamma(n_samples)
-        + _digamma(n_neighbors)
-        - np.mean(_digamma(nx))
-        - np.mean(_digamma(ny))
-    )
-    return max(0.0, float(mi))
-
-
-def _compute_mi_cd(c: np.ndarray, d: np.ndarray, n_neighbors: int) -> float:
-    """Continuous-discrete Ross estimator in nats (sklearn _compute_mi_cd):
-    per-label kNN radius, pooled strict-inside counts, singleton labels
-    dropped."""
-    n_all = c.shape[0]
-    c = np.asarray(c, dtype=np.float64).reshape((-1, 1))
-    radius = np.empty(n_all)
-    label_counts = np.empty(n_all)
-    k_all = np.empty(n_all)
-    for label in np.unique(d):
-        mask = d == label
-        count = int(np.sum(mask))
-        if count > 1:
-            k = min(n_neighbors, count - 1)
-            k_dists, _ = _kneighbors(c[mask], k)
-            radius[mask] = np.nextafter(k_dists[:, -1], 0)
-            k_all[mask] = k
-        label_counts[mask] = count
-
-    mask = label_counts > 1
-    n_samples = int(np.sum(mask))
-    if n_samples == 0:
-        return 0.0
-    label_counts = label_counts[mask]
-    k_all = k_all[mask]
-    kept = c[mask]
-    radius = radius[mask]
-    m_all = _radius_counts(kept, radius)
-    mi = (
-        _digamma(n_samples)
-        + np.mean(_digamma(k_all))
-        - np.mean(_digamma(label_counts))
-        - np.mean(_digamma(m_all))
-    )
-    return max(0.0, float(mi))
-
-
 def mutual_info_score(x: np.ndarray, y: np.ndarray) -> float:
     """Discrete-discrete contingency plug-in MI in nats (sklearn
     metrics.mutual_info_score semantics, clipped at 0)."""
-    x = np.asarray(x)
-    y = np.asarray(y)
-    _, xi = np.unique(x, return_inverse=True)
-    _, yi = np.unique(y, return_inverse=True)
-    n = x.size
-    joint: Dict[tuple, int] = {}
-    for a, b in zip(xi, yi):
-        joint[(a, b)] = joint.get((a, b), 0) + 1
-    px = np.bincount(xi) / n
-    py = np.bincount(yi) / n
-    mi = 0.0
-    for (a, b), count in joint.items():
-        p = count / n
-        mi += p * (np.log(p) - np.log(px[a]) - np.log(py[b]))
-    return max(0.0, float(mi))
+    _, xi = np.unique(np.asarray(x), return_inverse=True)
+    _, yi = np.unique(np.asarray(y), return_inverse=True)
+    bits, _ = _mi_high_dim_dd(xi, yi, np.ones(xi.size))
+    return bits * _LN2
+
+
+def _column(v) -> np.ndarray:
+    return np.asarray(v, dtype=np.float64).reshape((-1, 1))
 
 
 def _compute_mi(x, y, x_discrete: bool, y_discrete: bool, n_neighbors: int) -> float:
+    """sklearn ``_compute_mi`` in nats: KSG for continuous pairs, Ross for
+    continuous-discrete, plug-in for discrete pairs — the [[mi_mixed]]
+    kernels with the ``smaller_data`` method (sklearn's strict-inside
+    radius) and unit weights."""
     if x_discrete and y_discrete:
         return mutual_info_score(x, y)
-    if x_discrete and not y_discrete:
-        return _compute_mi_cd(y, x, n_neighbors)
-    if not x_discrete and y_discrete:
-        return _compute_mi_cd(x, y, n_neighbors)
-    return _compute_mi_cc(x, y, n_neighbors)
+    weights = np.ones(len(x))
+    if x_discrete or y_discrete:
+        c, d = (y, x) if x_discrete else (x, y)
+        if not (np.unique(d, return_counts=True)[1] > 1).any():
+            return 0.0  # sklearn drops singleton labels; here that is all of them
+        bits, _ = _mi_high_dim_cd(_column(c), d, n_neighbors, "smaller_data", weights)
+    else:
+        bits, _ = _mi_high_dim_cc(
+            _column(x), _column(y), n_neighbors, "smaller_data", weights
+        )
+    return bits * _LN2
 
 
 def _scale_no_mean(arr: np.ndarray) -> np.ndarray:
@@ -220,23 +174,6 @@ def _calculate_mi_wrapper(
 
 
 # --------------------------------------------------------- TFDV generator
-def _is_missing_cell(cell: Any) -> bool:
-    if cell is None:
-        return True
-    if isinstance(cell, (list, tuple, np.ndarray)):
-        return len(cell) == 0
-    try:
-        return bool(np.isnan(cell))
-    except (TypeError, ValueError):
-        return False
-
-
-def _cell_value(cell: Any) -> Any:
-    if isinstance(cell, (list, tuple, np.ndarray)):
-        return cell[0]
-    return cell
-
-
 def flatten_and_impute(pdf, categorical_features: Set[str]) -> Dict[str, np.ndarray]:
     """sklearn_mutual_information.py:49-113 on univalent pandas columns:
     categorical missing -> fill category; numeric NaN/missing -> 10*max of
@@ -244,18 +181,13 @@ def flatten_and_impute(pdf, categorical_features: Set[str]) -> Dict[str, np.ndar
     num_rows = len(pdf)
     result = {}
     for name in pdf.columns:
-        cells = list(pdf[name])
+        cells = [_cell_values(c) for c in pdf[name]]
         if name in categorical_features:
             fill = CATEGORICAL_FEATURE_IMPUTATION_FILL_VALUE
-            values = [
-                fill if _is_missing_cell(c) else _cell_value(c) for c in cells
-            ]
+            values = [v[0] if v else fill for v in cells]
             result[name] = np.asarray(values, dtype=object)
         else:
-            raw = np.array(
-                [np.nan if _is_missing_cell(c) else _cell_value(c) for c in cells],
-                dtype=np.float64,
-            )
+            raw = np.array([v[0] if v else np.nan for v in cells], dtype=np.float64)
             nan_mask = np.isnan(raw)
             if np.all(nan_mask):
                 fill = float(sys.maxsize)
@@ -433,14 +365,9 @@ def sklearn_mutual_information_stats(
 ) -> Dict[str, Dict[str, float]]:
     """Distributed MI/AMI/NAMI relevance with the partitioned-analyzer
     summary naming, mirroring ``adjusted_mutual_information_stats`` in
-    [[mi_relevance]] (one ``groupBy(rand).applyInPandas`` job; per-partition
-    outputs are feature-count-sized)."""
-    import collections
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from data_validation_spark.stats.mi_relevance import infer_feature_kinds
+    [[mi_relevance]]: one ``sparse.partitioned_stats`` job keyed by
+    ``(feature, stat)``; per-partition outputs are feature-count-sized."""
+    from data_validation_spark.stats.sparse import partitioned_stats
 
     inferred_cat, inferred_multi = infer_feature_kinds(df)
     if categorical_features is None:
@@ -454,39 +381,18 @@ def sklearn_mutual_information_stats(
         seed=seed,
     )
 
-    def runner(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.drop(columns="__part")
+    def fn(pdf) -> dict:
         if len(pdf) > max_rows_per_partition:
             pdf = pdf.sample(n=max_rows_per_partition, random_state=0)
-        stats = gen.compute(pdf)
-        rows = []
-        for feature, d in stats.items():
-            for stat, value in d.items():
-                rows.append((int(key[0]), feature, stat, float(value)))
-        return pd.DataFrame(rows, columns=["part", "feature", "stat", "value"])
+        return {
+            (feature, stat): float(value)
+            for feature, d in gen.compute(pdf).items()
+            for stat, value in d.items()
+        }
 
-    tagged = df.withColumn("__part", (F.rand(seed) * row_partitions).cast("int"))
-    collected = (
-        tagged.groupBy("__part")
-        .applyInPandas(runner, "part int, feature string, stat string, value double")
-        .collect()
-    )
-    per_stat: Dict[tuple, List[float]] = collections.defaultdict(list)
-    for r in collected:
-        per_stat[(r["feature"], r["stat"])].append(r["value"])
-    summary: Dict[str, Dict[str, float]] = collections.defaultdict(dict)
-    for (feature, stat), vals in per_stat.items():
-        if len(vals) < min_partitions_stat_presence:
-            continue
-        a = np.asarray(vals, dtype=float)
-        summary[feature].update(
-            {
-                "min_" + stat: float(a.min()),
-                "max_" + stat: float(a.max()),
-                "mean_" + stat: float(a.mean()),
-                "median_" + stat: float(np.median(a)),
-                "std_dev_" + stat: float(a.std()),
-                "num_partitions_" + stat: int(a.size),
-            }
+    return _analyzer_summary(
+        partitioned_stats(
+            df, fn, num_partitions=row_partitions, seed=seed,
+            min_partitions_stat_presence=min_partitions_stat_presence,
         )
-    return dict(summary)
+    )

@@ -157,37 +157,45 @@ def partitioned_stats(
     num_partitions: int = 10,
     seed: int = 42,
     min_partitions_stat_presence: int = 1,
-) -> dict[str, dict]:
-    """Run ``fn(pdf) → {stat: value}`` on each of ``num_partitions`` random
-    row partitions; summarize each stat with min/max/mean/median/std across
-    partitions. The Spark shape of the reference's PartitionedStatsFn;
-    ``min_partitions_stat_presence`` drops stats reported by fewer
+) -> dict:
+    """Run ``fn(pdf) → {key: value}`` on each of ``num_partitions`` random
+    row partitions; summarize each key with min/max/mean/median/std across
+    partitions. A key is a stat name or a ``(feature, stat)`` pair, and the
+    result is keyed the same way. The Spark shape of the reference's
+    PartitionedStatsFn and the one partition harness of every MI estimator;
+    ``min_partitions_stat_presence`` drops keys reported by fewer
     partitions (partitioned_stats_generator.py:52-63 get_valid_statistics —
     the knob that tolerates allow-invalid partitions returning nothing)."""
     import numpy as np
 
     tagged = df.withColumn("__part", (F.rand(seed) * num_partitions).cast("int"))
 
-    def runner(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def runner(pdf: pd.DataFrame) -> pd.DataFrame:
         stats = fn(pdf.drop(columns="__part"))
+        keys = [k if isinstance(k, tuple) else (None, k) for k in stats]
         return pd.DataFrame(
-            {"part": [key[0]] * len(stats), "stat": list(stats), "value": list(stats.values())}
+            {
+                "feature": [k[0] for k in keys],
+                "stat": [k[1] for k in keys],
+                "value": list(stats.values()),
+            }
         )
 
     rows = (
         tagged.groupBy("__part")
-        .applyInPandas(runner, "part int, stat string, value double")
+        .applyInPandas(runner, "feature string, stat string, value double")
         .collect()
     )
-    by_stat: dict[str, list[float]] = {}
+    by_key: dict = {}
     for r in rows:
-        by_stat.setdefault(r["stat"], []).append(r["value"])
+        key = r["stat"] if r["feature"] is None else (r["feature"], r["stat"])
+        by_key.setdefault(key, []).append(r["value"])
     out = {}
-    for stat, vals in by_stat.items():
+    for key, vals in by_key.items():
         if len(vals) < min_partitions_stat_presence:
             continue
         a = np.asarray(vals, dtype=float)
-        out[stat] = {
+        out[key] = {
             "min": float(a.min()),
             "max": float(a.max()),
             "mean": float(a.mean()),

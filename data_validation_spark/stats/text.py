@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from data_validation_spark.stats.result import DatasetStatsList
+from data_validation_spark.util import persisted
 
 # Reference thresholds: NL domain inferred when ≥80% of ≥100 values match the
 # heuristic (natural_language_domain_inferring_stats_generator.py).
@@ -209,137 +210,138 @@ def compute_nl_statistics(
     # job to match ids collected from per_seq. Without the cache a
     # nondeterministic upstream (sample(), shuffle, task retry) could
     # recompute with shifted ids and return wrong/empty reported_sequences.
-    seqs = df.select(
-        F.monotonically_increasing_id().alias("__sid"),
-        toks.alias("__toks"),
-    ).where(F.col("__toks").isNotNull()).cache()
-    num_examples = seqs.count()
-    if num_examples == 0:
-        seqs.unpersist()
-        return {"num_examples": 0, "feature_coverage": 0.0, "avg_token_length": 0.0}
+    with persisted(
+        df.select(
+            F.monotonically_increasing_id().alias("__sid"),
+            toks.alias("__toks"),
+        ).where(F.col("__toks").isNotNull())
+    ) as seqs:
+        num_examples = seqs.count()
+        if num_examples == 0:
+            return {"num_examples": 0, "feature_coverage": 0.0, "avg_token_length": 0.0}
 
-    tokens = seqs.select(
-        "__sid",
-        F.size("__toks").alias("__slen"),
-        F.posexplode("__toks").alias("__pos", "tok"),
-    )
-    if vocab is not None:
-        v = F.broadcast(
-            vocab.select(F.col(vocab_col).alias("tok"))
-            .dropDuplicates(["tok"])
-            .withColumn("__iv", F.lit(1))
+        tokens = seqs.select(
+            "__sid",
+            F.size("__toks").alias("__slen"),
+            F.posexplode("__toks").alias("__pos", "tok"),
         )
-        tokens = tokens.join(v, "tok", "left").withColumn(
-            "__in_vocab", F.coalesce(F.col("__iv"), F.lit(0))
-        )
-    else:
-        # No vocabulary: every token is in-vocab unless listed OOV
-        # (reference semantics for string tokens without a vocab path).
-        oov_arr = (
-            F.array(*[F.lit(t) for t in sorted(oov_tokens)]) if oov_tokens else None
-        )
-        iv = (
-            F.when(F.array_contains(oov_arr, F.col("tok")), 0).otherwise(1)
-            if oov_arr is not None
-            else F.lit(1)
-        )
-        tokens = tokens.withColumn("__in_vocab", iv)
-    tokens = tokens.cache()
+        if vocab is not None:
+            v = F.broadcast(
+                vocab.select(F.col(vocab_col).alias("tok"))
+                .dropDuplicates(["tok"])
+                .withColumn("__iv", F.lit(1))
+            )
+            tokens = tokens.join(v, "tok", "left").withColumn(
+                "__in_vocab", F.coalesce(F.col("__iv"), F.lit(0))
+            )
+        else:
+            # No vocabulary: every token is in-vocab unless listed OOV
+            # (reference semantics for string tokens without a vocab path).
+            oov_arr = (
+                F.array(*[F.lit(t) for t in sorted(oov_tokens)]) if oov_tokens else None
+            )
+            iv = (
+                F.when(F.array_contains(oov_arr, F.col("tok")), 0).otherwise(1)
+                if oov_arr is not None
+                else F.lit(1)
+            )
+            tokens = tokens.withColumn("__in_vocab", iv)
+        with persisted(tokens) as tokens:
 
-    qs = [i / num_quantiles_histogram_buckets for i in range(num_quantiles_histogram_buckets + 1)]
-    ivl = F.when(F.col("__in_vocab") == 1, F.length("tok"))
+            qs = [i / num_quantiles_histogram_buckets for i in range(num_quantiles_histogram_buckets + 1)]
+            ivl = F.when(F.col("__in_vocab") == 1, F.length("tok"))
 
-    # Per-sequence rollup: effective length (minus excluded tokens), coverage,
-    # avg in-vocab token length → sequence-length stats + reported sequences.
-    n_excl = (
-        F.sum(F.when(F.col("tok").isin(*excluded), 1).otherwise(0))
-        if excluded
-        else F.lit(0)
-    )
-    per_seq = tokens.groupBy("__sid").agg(
-        (F.first("__slen") - n_excl).alias("eff_len"),
-        (F.sum("__in_vocab") / F.count(F.lit(1))).alias("coverage"),
-        F.avg(ivl).alias("avg_tok_len"),
-    )
-
-    # Reported sequences: 5 lowest by coverage, 5 lowest by avg token length
-    # (TakeOrderedAndProject — a distributed top-k, not a global sort).
-    def _bottom5(order_col):
-        ids = [r["__sid"] for r in per_seq.orderBy(F.col(order_col).asc_nulls_last(), "__sid").limit(5).collect()]
-        if not ids:
-            return []
-        rows = seqs.where(F.col("__sid").isin(ids)).select("__sid", "__toks").collect()
-        by_id = {r["__sid"]: list(r["__toks"]) for r in rows}
-        return [by_id[i] for i in ids if i in by_id]
-
-    # Token rank histogram: salted two-phase exact top-k on token frequency.
-    from pyspark.sql import Window
-
-    salts = 16
-    counts = tokens.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")).withColumn(
-        "salt", F.pmod(F.xxhash64("tok"), F.lit(salts))
-    )
-    wa = Window.partitionBy("salt").orderBy(F.desc("cnt"), F.desc("tok"))
-    wb = Window.orderBy(F.desc("cnt"), F.desc("tok"))
-    top_df = (
-        counts.withColumn("r", F.row_number().over(wa))
-        .where(F.col("r") <= num_rank_histogram_buckets)
-        .withColumn("r2", F.row_number().over(wb))
-        .where(F.col("r2") <= num_rank_histogram_buckets)
-        .select("r2", "tok", "cnt")
-    )
-
-    # Submit the independent job graphs concurrently (coverage agg, sequence
-    # rollup, rank top-k, reported sequences, per-token stats) — they share
-    # the cached `tokens` frame, and overlapping them hides each job's fixed
-    # scheduling cost (same pattern as the engine's wide/long submission).
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=6) as pool:
-        cov_f = pool.submit(
-            lambda: tokens.agg(
-                F.count(F.lit(1)).alias("total"),
-                F.sum("__in_vocab").alias("in_vocab"),
+            # Per-sequence rollup: effective length (minus excluded tokens), coverage,
+            # avg in-vocab token length → sequence-length stats + reported sequences.
+            n_excl = (
+                F.sum(F.when(F.col("tok").isin(*excluded), 1).otherwise(0))
+                if excluded
+                else F.lit(0)
+            )
+            per_seq = tokens.groupBy("__sid").agg(
+                (F.first("__slen") - n_excl).alias("eff_len"),
+                (F.sum("__in_vocab") / F.count(F.lit(1))).alias("coverage"),
                 F.avg(ivl).alias("avg_tok_len"),
-                F.percentile_approx(ivl.cast("double"), qs, 10000).alias("tok_len_q"),
-            ).collect()[0]
-        )
-        seq_f = pool.submit(
-            lambda: per_seq.agg(
-                F.min("eff_len").alias("minlen"),
-                F.max("eff_len").alias("maxlen"),
-                F.percentile_approx(F.col("eff_len").cast("double"), qs, 10000).alias("len_q"),
-            ).collect()[0]
-        )
-        top_f = pool.submit(top_df.collect)
-        b5cov_f = pool.submit(_bottom5, "coverage")
-        b5atl_f = pool.submit(_bottom5, "avg_tok_len")
-        tok_f = pos_f = None
-        if constrained_tokens:
-            ct = tokens.where(F.col("tok").isin(*constrained_tokens))
-            pos_bucket = F.least(
-                F.floor(F.col("__pos") / F.col("__slen") * num_histogram_buckets),
-                F.lit(num_histogram_buckets - 1),
-            ).cast("int")
-            per_tok_seq = ct.groupBy("tok", "__sid").agg(F.count(F.lit(1)).alias("occ"))
-            tok_f = pool.submit(
-                per_tok_seq.groupBy("tok").agg(
-                    F.sum("occ").alias("frequency"),
-                    F.count(F.lit(1)).alias("num_sequences"),
-                    F.min("occ").alias("min_per_seq"),
-                    F.max("occ").alias("max_per_seq"),
-                    F.avg("occ").alias("avg_per_seq"),
-                ).collect
             )
-            pos_f = pool.submit(
-                ct.groupBy("tok", pos_bucket.alias("bucket"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect
+
+            # Reported sequences: 5 lowest by coverage, 5 lowest by avg token length
+            # (TakeOrderedAndProject — a distributed top-k, not a global sort).
+            def _bottom5(order_col):
+                ids = [r["__sid"] for r in per_seq.orderBy(F.col(order_col).asc_nulls_last(), "__sid").limit(5).collect()]
+                if not ids:
+                    return []
+                rows = seqs.where(F.col("__sid").isin(ids)).select("__sid", "__toks").collect()
+                by_id = {r["__sid"]: list(r["__toks"]) for r in rows}
+                return [by_id[i] for i in ids if i in by_id]
+
+            # Token rank histogram: salted two-phase exact top-k on token frequency.
+            from pyspark.sql import Window
+
+            salts = 16
+            counts = tokens.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")).withColumn(
+                "salt", F.pmod(F.xxhash64("tok"), F.lit(salts))
             )
-        cov_row = cov_f.result()
-        seq_row = seq_f.result()
-        top_rows = top_f.result()
-        b5cov, b5atl = b5cov_f.result(), b5atl_f.result()
+            wa = Window.partitionBy("salt").orderBy(F.desc("cnt"), F.desc("tok"))
+            wb = Window.orderBy(F.desc("cnt"), F.desc("tok"))
+            top_df = (
+                counts.withColumn("r", F.row_number().over(wa))
+                .where(F.col("r") <= num_rank_histogram_buckets)
+                .withColumn("r2", F.row_number().over(wb))
+                .where(F.col("r2") <= num_rank_histogram_buckets)
+                .select("r2", "tok", "cnt")
+            )
+
+            # Submit the independent job graphs concurrently (coverage agg, sequence
+            # rollup, rank top-k, reported sequences, per-token stats) — they share
+            # the cached `tokens` frame, and overlapping them hides each job's fixed
+            # scheduling cost (same pattern as the engine's wide/long submission).
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=6) as pool:
+                cov_f = pool.submit(
+                    lambda: tokens.agg(
+                        F.count(F.lit(1)).alias("total"),
+                        F.sum("__in_vocab").alias("in_vocab"),
+                        F.avg(ivl).alias("avg_tok_len"),
+                        F.percentile_approx(ivl.cast("double"), qs, 10000).alias("tok_len_q"),
+                    ).collect()[0]
+                )
+                seq_f = pool.submit(
+                    lambda: per_seq.agg(
+                        F.min("eff_len").alias("minlen"),
+                        F.max("eff_len").alias("maxlen"),
+                        F.percentile_approx(F.col("eff_len").cast("double"), qs, 10000).alias("len_q"),
+                    ).collect()[0]
+                )
+                top_f = pool.submit(top_df.collect)
+                b5cov_f = pool.submit(_bottom5, "coverage")
+                b5atl_f = pool.submit(_bottom5, "avg_tok_len")
+                tok_f = pos_f = None
+                if constrained_tokens:
+                    ct = tokens.where(F.col("tok").isin(*constrained_tokens))
+                    pos_bucket = F.least(
+                        F.floor(F.col("__pos") / F.col("__slen") * num_histogram_buckets),
+                        F.lit(num_histogram_buckets - 1),
+                    ).cast("int")
+                    per_tok_seq = ct.groupBy("tok", "__sid").agg(F.count(F.lit(1)).alias("occ"))
+                    tok_f = pool.submit(
+                        per_tok_seq.groupBy("tok").agg(
+                            F.sum("occ").alias("frequency"),
+                            F.count(F.lit(1)).alias("num_sequences"),
+                            F.min("occ").alias("min_per_seq"),
+                            F.max("occ").alias("max_per_seq"),
+                            F.avg("occ").alias("avg_per_seq"),
+                        ).collect
+                    )
+                    pos_f = pool.submit(
+                        ct.groupBy("tok", pos_bucket.alias("bucket"))
+                        .agg(F.count(F.lit(1)).alias("n"))
+                        .collect
+                    )
+                cov_row = cov_f.result()
+                seq_row = seq_f.result()
+                top_rows = top_f.result()
+                b5cov, b5atl = b5cov_f.result(), b5atl_f.result()
     total = int(cov_row["total"] or 0)
     in_vocab = int(cov_row["in_vocab"] or 0)
 
@@ -371,8 +373,6 @@ def compute_nl_statistics(
                     "positions": {},
                 }
 
-    tokens.unpersist()
-    seqs.unpersist()
     return {
         "num_examples": num_examples,
         "total_tokens": total,

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
@@ -20,6 +23,18 @@ def ensure_min_partitions(df: DataFrame, minimum: int | None = None) -> DataFram
     if df.rdd.getNumPartitions() >= minimum:
         return df
     return df.repartition(minimum)
+
+
+@contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """``df.cache()`` for the body of a ``with`` block, unpersisted however
+    the block exits — an exception between a hand-paired cache/unpersist
+    otherwise leaves the cached blocks behind for the rest of the session."""
+    df = df.cache()
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def local_frame(spark, rows, ddl: str) -> DataFrame:

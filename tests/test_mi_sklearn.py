@@ -207,6 +207,40 @@ def test_mi_with_out_of_schema_feature_dropped():
     assert gen.compute(pdf) == {}
 
 
+def test_sklearn_estimator_paths_pinned():
+    # Pinned outputs, in nats, of each estimator path: KSG (cc), Ross (cd,
+    # dc) and the contingency plug-in (dd); exact up to summation order.
+    from data_validation_spark.stats.mi_sklearn import (
+        mutual_info_classif,
+        mutual_info_regression,
+        mutual_info_score,
+    )
+
+    rng = np.random.RandomState(3)
+    m = 400
+    c = rng.normal(size=(m, 2))
+    d = rng.randint(0, 4, size=(m, 2))
+    yc = c[:, 0] + d[:, 1] + 0.5 * rng.normal(size=m)
+    yd = (c[:, 1] > 0).astype(int) + d[:, 0] % 2
+    cases = [
+        (mutual_info_regression(c, yc, random_state=5), [0.28161954737865713, 0.0]),
+        (mutual_info_classif(c, yd, random_state=5), [0.0, 0.33666059000845094]),
+        (
+            mutual_info_regression(d, yc, discrete_features=True, random_state=5),
+            [0.055789766011195674, 0.3414720348698894],
+        ),
+        (
+            mutual_info_classif(d, yd, discrete_features=True, random_state=5),
+            [0.33829254135627457, 0.0036902098076769217],
+        ),
+    ]
+    for got, expected in cases:
+        assert got.tolist() == pytest.approx(expected, abs=1e-12)
+    assert mutual_info_score(d[:, 0], yd) == pytest.approx(0.33829254135627457, abs=1e-12)
+    # every label a singleton: sklearn's Ross estimate is 0, not an error
+    assert mutual_info_classif(c[:5], np.arange(5), random_state=5).tolist() == [0.0, 0.0]
+
+
 # ------------------------------------------------------------ Spark side
 def test_sklearn_mutual_information_stats_spark(spark):
     rng = np.random.RandomState(3)

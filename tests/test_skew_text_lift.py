@@ -398,6 +398,94 @@ def test_adjusted_knn_mi(spark):
     assert r0["ami"]["mean"] < 0.06
 
 
+def test_knn_mi_pinned_outputs(spark):
+    # Pinned outputs. KSG's marginal count (strict `<` with the point
+    # excluded, i.e. a nextafter radius with it included) and the fixed
+    # jitter and shuffle seeds make them exact up to summation order.
+    import math
+
+    import numpy as np
+
+    from data_validation_spark.stats.mi import estimated_knn_mutual_information, kraskov_mi
+
+    rng = np.random.RandomState(0)
+    n = 1200
+    x = rng.normal(size=n)
+    y = 0.8 * x + math.sqrt(1 - 0.64) * rng.normal(size=n)
+    assert kraskov_mi(x, y) == pytest.approx(0.5267558395032008, abs=1e-12)
+
+    rng = np.random.RandomState(7)
+    x = rng.normal(size=2400)
+    y = 0.8 * x + 0.6 * rng.normal(size=2400)
+    dep = spark.createDataFrame(
+        [(float(a), float(b)) for a, b in zip(x, y)], "x double, y double"
+    )
+    r = estimated_knn_mutual_information(dep, "x", "y", num_partitions=4, adjusted=True)
+    expected = {
+        "mi": (0.44849714510229344, 0.6304513801830822, 0.5202606188864449,
+               0.501046975130202, 0.06713941058023962),
+        "ami": (0.44849714510229344, 0.6240655606283854, 0.51498624337709,
+                0.49369113388884056, 0.06585793178628631),
+    }
+    for which, (lo, hi, mean, median, std) in expected.items():
+        s = r[which]
+        assert s["num_partitions"] == 4
+        assert [s["min"], s["max"], s["mean"], s["median"], s["std"]] == pytest.approx(
+            [lo, hi, mean, median, std], abs=1e-12
+        )
+
+
+def test_estimated_mutual_information_matches_crosstab(spark):
+    import numpy as np
+    import pandas as pd
+
+    from data_validation_spark.stats.mi import estimated_mutual_information
+
+    rng = np.random.RandomState(5)
+    n = 300
+    xs = rng.normal(size=n)
+    ys = np.where(xs + 0.7 * rng.normal(size=n) > 0, "hi", "lo").astype(object)
+    xs[::17] = np.nan
+    ys[::23] = None
+    pdf = pd.DataFrame({"x": xs, "y": ys})
+    df = spark.createDataFrame(
+        [(None if np.isnan(a) else float(a), b) for a, b in zip(xs, ys)],
+        "x double, y string",
+    )
+
+    # one partition: the estimate is the plug-in MI of the whole frame
+    joint = pd.crosstab(pd.cut(pdf["x"], bins=4, labels=False), pdf["y"])
+    p = joint.to_numpy(dtype=float) / joint.to_numpy().sum()
+    outer = p.sum(axis=1, keepdims=True) @ p.sum(axis=0, keepdims=True)
+    expected = float(np.sum(p[p > 0] * np.log2(p[p > 0] / outer[p > 0])))
+    assert expected > 0.1
+    out = estimated_mutual_information(df, "x", "y", num_partitions=1, num_bins=4)
+    assert out["num_partitions"] == 1
+    assert out["min"] == out["max"] == pytest.approx(expected, abs=1e-12)
+
+    out = estimated_mutual_information(df, "x", "y", num_partitions=3, num_bins=4)
+    assert out["num_partitions"] == 3
+    assert 0.0 <= out["min"] <= out["median"] <= out["max"] <= 1.0
+
+
+def test_nl_statistics_failure_releases_cache(spark):
+    # An error after `seqs` is cached (here: an unknown vocabulary column)
+    # must not leave the cache behind.
+    from pyspark.errors import AnalysisException
+
+    from data_validation_spark.stats.text import compute_nl_statistics
+
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    df = spark.createDataFrame([("a b c",), ("b c",)], "t string")
+    vocab = spark.createDataFrame([("a",)], "token string")
+    before = persisted_ids()
+    with pytest.raises(AnalysisException):
+        compute_nl_statistics(df, "t", vocab=vocab, vocab_col="nope")
+    assert persisted_ids() == before
+
+
 def test_nl_token_stats_and_constraints(spark):
     from data_validation_spark.anomalies import AnomalyType as AT
     from data_validation_spark.schema import (
