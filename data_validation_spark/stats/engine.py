@@ -138,12 +138,12 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         return df.groupBy(slice_col.alias("slice_key")).agg(*quant_exprs).collect()
 
     def bytes_job():
-        # ALL binary-column stats (presence, lengths, HLL unique, format
-        # sniff) run as their own concurrent job over a codegen'd projection
-        # of the payload (see exprs.build_agg_exprs docstring): the
-        # imperative HLL would disable codegen in the wide agg, and with the
-        # binary stats isolated the wide agg's scan skips the binary column
-        # entirely — each column is still read exactly once across the pass.
+        # ALL binary-column stats (presence, lengths, theta-sketch unique,
+        # format sniff) run as their own concurrent job over a codegen'd
+        # projection of the payload (see exprs.build_agg_exprs docstring):
+        # the sketch aggregate would disable codegen in the wide agg, and
+        # with the binary stats isolated the wide agg's scan skips the binary
+        # column entirely — each column is still read exactly once.
         if not bytes_exprs:
             return []
         projs = [pe for proj, _ in bytes_exprs for pe in proj]

@@ -34,6 +34,9 @@ UNKNOWN = "UNKNOWN"
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _FRACTIONAL = (T.FloatType, T.DoubleType, T.DecimalType)
+# log2 of the theta sketch's nominal entries for bytes uniques: 2^14 = 16,384,
+# the reference's KMV size (stats_impl.py:64-65).
+_THETA_LG_NOM_ENTRIES = 14
 
 
 @dataclass
@@ -123,8 +126,8 @@ def build_agg_exprs(
     quantiles_accuracy: int,
     count_values_hist_buckets: int,
     include_quantiles: bool = True,
-) -> tuple[list, list]:
-    """Aggregate expressions for the wide pass, split into two lists:
+) -> tuple[list, list, list]:
+    """Aggregate expressions for the wide pass, split into three lists:
 
     ``(main, quantile, bytes_unique)`` — ``quantile`` holds the
     ``percentile_approx`` expressions (numeric quantile grids + num-values
@@ -139,19 +142,31 @@ def build_agg_exprs(
     ``bytes_unique`` is ``(proj_exprs, agg_exprs)`` carrying ALL the
     binary-column statistics (presence, byte-length stats, distinct-count
     estimate, magic-byte format counters). They leave the main agg for two
-    reasons: (1) ``approx_count_distinct`` (HLL++) is an ImperativeAggregate,
-    and one in the main agg disables whole-stage codegen for EVERY expression
-    in it — measured 2-3× on a table with a large binary column; (2) with the
-    binary stats isolated, the main agg's scan no longer reads the binary
-    column at all. The caller projects ``proj_exprs`` (content hash, length,
-    sniffed format — codegen'd, so the multi-KB payload is touched exactly
-    once in compiled code) and aggregates ``agg_exprs`` over the projection
-    in its own job; the binary column is read exactly ONCE across the whole
-    stats pass, and only a cheap scalar-input aggregate runs interpreted.
-    All aggregates here are order-independent (counts, min/max, HLL
-    registers, and byte-length sums are integer-valued doubles « 2^53, i.e.
-    exact under any summation order), so the job may re-split an
-    under-split input.
+    reasons: (1) the distinct estimate is a theta (KMV) sketch,
+    ``theta_sketch_agg`` with 2^14 = 16,384 nominal entries, the reference's
+    own uniques estimator; it is a TypedImperativeAggregate, and one in the
+    main agg would push EVERY expression in it out of whole-stage codegen;
+    (2) with the binary stats isolated, the main agg's scan no longer reads
+    the binary column at all. The caller projects ``proj_exprs`` (content
+    hash, length, sniffed format — codegen'd, so the multi-KB payload is
+    touched exactly once in compiled code) and aggregates ``agg_exprs`` over
+    the projection in its own job; the binary column is read exactly ONCE
+    across the whole stats pass, and only a cheap scalar-input aggregate runs
+    interpreted.
+
+    The theta sketch keeps every hash until it holds 16,384 distinct ones, so
+    up to that many distinct payloads the count is exact; above it the
+    relative standard error is about 1/sqrt(16384) ≈ 0.8%. Its estimate does
+    not depend on how the input is partitioned or ordered (merging KMV
+    sketches keeps the k smallest hashes of the union). Spark's HLL++ (rsd
+    0.01, so p = 14) is not used: its 1,639-word aggregation buffer costs
+    code generation in every task, so its cost follows the task count — over
+    16k cached longs on ``local[4]`` (4-core host) it took 1.3 / 1.8 / 5.6 s
+    at 1 / 6 / 32 partitions against 0.15 / 0.16 / 0.23 s for the theta
+    sketch and 0.18-0.25 s for a plain ``max``. All aggregates here are
+    order-independent (counts, min/max, the theta sketch, and byte-length
+    sums are integer-valued doubles « 2^53, i.e. exact under any summation
+    order), so the job may re-split an under-split input.
 
     Returns aliased expressions; assembly decodes by alias convention
     ``{plan.alias}__{stat}``.
@@ -198,11 +213,13 @@ def build_agg_exprs(
                 F.avg(F.col(blen_col)).alias(f"{a}__avglen"),
                 F.min(F.col(blen_col)).alias(f"{a}__minbytes"),
                 F.max(F.col(blen_col)).alias(f"{a}__maxbytes"),
-                # HLL++ distinct estimate on a 64-bit content hash — one-pass,
-                # no expand; the reference estimates bytes uniques with a KMV
-                # sketch too. xxhash64(NULL) is non-null → gated on presence
-                # in the projection.
-                F.approx_count_distinct(F.col(h_col), 0.01).alias(f"{a}__unique"),
+                # KMV (theta) sketch of the 64-bit content hash, the
+                # reference's own uniques estimator at its 16,384 entries.
+                # xxhash64(NULL) is non-null → gated on presence in the
+                # projection.
+                F.theta_sketch_estimate(
+                    F.theta_sketch_agg(F.col(h_col), _THETA_LG_NOM_ENTRIES)
+                ).alias(f"{a}__unique"),
             ]
             pw = _w(p)
             if pw:

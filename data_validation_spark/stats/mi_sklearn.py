@@ -218,9 +218,10 @@ class SkLearnMutualInformationStats:
         self._label_feature_is_categorical = (
             label_feature in self._categorical_features
         )
+        # The reference seeds numpy's global RNG here; the label shuffle
+        # draws from a RandomState(seed) of its own per compute() instead, so
+        # a Python worker reused across partitions shuffles the same way.
         self._seed = seed
-        # Seed the global RNG used for label shuffling (reference ctor).
-        np.random.seed(seed)
 
     def _remove_unsupported_feature_columns(self, pdf):
         """Drop multivalent / out-of-schema columns (the reference drops
@@ -326,9 +327,8 @@ class SkLearnMutualInformationStats:
         assert label_entropy is not None and len(label_entropy) == 1
         label_entropy = label_entropy[0]
 
-        # Global-RNG in-place shuffle, exactly like the reference (seeded at
-        # construction).
-        np.random.shuffle(labels)
+        # In-place shuffle, as the reference's first one after seeding.
+        np.random.RandomState(seed).shuffle(labels)
         shuffled_mi_per_feature = _calculate_mi_wrapper(
             df.values,
             labels,

@@ -145,6 +145,57 @@ def test_bytes_stats(spark):
     assert fs.bytes.unique == 2
 
 
+def _payloads(spark, n_distinct, n_null=0, partitions=4, start=0):
+    """One binary column: distinct payloads ``start .. start+n_distinct-1``,
+    then ``n_null`` nulls, spread over ``partitions`` input partitions."""
+    from pyspark.sql import functions as F
+
+    idx = F.col("id")
+    payload = F.concat(F.lit(b"img-"), idx.cast("string").cast("binary"))
+    end = start + n_distinct
+    return spark.range(start, end + n_null, 1, partitions).select(
+        F.when(idx < end, payload).alias("b")
+    )
+
+
+def _bytes_unique(df):
+    return compute_statistics(df).default_slice().feature("b").bytes.unique
+
+
+def test_bytes_unique_exact_up_to_sketch_size(spark):
+    # The theta sketch keeps every hash up to its 16,384 nominal entries, so
+    # 16,000 distinct payloads count exactly.
+    assert _bytes_unique(_payloads(spark, 16000, n_null=300)) == 16000
+
+
+def test_bytes_unique_estimate_within_sketch_error(spark):
+    n = 40000
+    assert abs(_bytes_unique(_payloads(spark, n)) - n) <= 3 / math.sqrt(16384) * n
+
+
+def test_bytes_unique_independent_of_partitioning(spark):
+    # above the sketch size the count is an estimate; it must still be the
+    # same estimate however the rows are split into tasks
+    got = {_bytes_unique(_payloads(spark, 40000, partitions=k)) for k in (1, 7, 32)}
+    assert len(got) == 1, got
+
+
+def test_bytes_unique_all_null(spark):
+    assert _bytes_unique(_payloads(spark, 0, n_null=50)) == 0
+
+
+def test_bytes_unique_per_slice(spark):
+    # slice "a" holds payloads 0..11999, slice "b" 6000..13999: each slice
+    # counts its own payloads, exactly
+    from pyspark.sql import functions as F
+
+    a = _payloads(spark, 12000).withColumn("k", F.lit("a"))
+    b = _payloads(spark, 8000, start=6000).withColumn("k", F.lit("b"))
+    stats = compute_statistics(a.unionByName(b), StatsOptions(slice_column="k"))
+    assert stats.get_slice("a").feature("b").bytes.unique == 12000
+    assert stats.get_slice("b").feature("b").bytes.unique == 8000
+
+
 def test_empty_input(spark):
     df = spark.createDataFrame([], "x double, s string")
     stats = compute_statistics(df)

@@ -257,3 +257,29 @@ def test_sklearn_mutual_information_stats_spark(spark):
     assert out["perfect"]["mean_" + AMI] > 1.0
     assert out["noise"]["mean_" + AMI] < 0.1
     assert 0.9 < out["perfect"]["mean_" + NAMI] <= 1.0
+
+
+def test_sklearn_mutual_information_stats_reproducible(spark):
+    """The shuffled-label AMI/NAMI terms draw from a RandomState seeded per
+    partition call, so Python workers reused from one call to the next give
+    the same summaries every time."""
+    rng = np.random.RandomState(5)
+    n = 600
+    label = rng.randint(0, 3, n)
+    pdf = pd.DataFrame(
+        {
+            "label": label,
+            "near": label + rng.rand(n),
+            "noise": rng.rand(n),
+            "cat": rng.choice(["a", "b", "c"], n),
+        }
+    )
+    df = spark.createDataFrame(pdf)
+    runs = [
+        sklearn_mutual_information_stats(
+            df, "label", categorical_features={"label", "cat"}, row_partitions=3, seed=7
+        )
+        for _ in range(2)
+    ]
+    assert runs[0] == runs[1]
+    assert all(out["near"]["num_partitions_" + AMI] == 3 for out in runs)

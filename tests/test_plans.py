@@ -92,13 +92,15 @@ def test_wide_agg_is_partial_final(spark, sf_dir):
 
 
 def test_bytes_stats_stay_out_of_codegen_agg(spark, tmp_path):
-    """Binary-column stats must not ride the main wide agg: the HLL++
-    distinct estimator is an ImperativeAggregate and one imperative function
+    """Binary-column stats must not ride the main wide agg: the theta-sketch
+    distinct estimator is an imperative aggregate, and one such function
     disables whole-stage codegen for EVERY expression in the aggregate
     (measured 2-3× on a table with a large binary column). All bytes stats
     run in a dedicated job over a codegen'd projection of the payload, so
     the wide agg's scan does not read the binary column at all and the
-    payload is still read exactly once across the pass."""
+    payload is still read exactly once across the pass. The estimator is
+    the theta (KMV) sketch, not HLL++, whose buffer costs code generation
+    in every task."""
     from data_validation_spark.stats import exprs as E
     from data_validation_spark.stats.engine import compute_statistics
     from data_validation_spark.stats.options import StatsOptions
@@ -113,11 +115,18 @@ def test_bytes_stats_stay_out_of_codegen_agg(spark, tmp_path):
     plans = E.classify_columns(df.schema, set())
     aggs, _qaggs, baggs = E.build_agg_exprs(plans, None, 100, 1000, 10)
     main_plan = plan_of(df.groupBy().agg(*aggs))
-    assert "approx_count_distinct" not in main_plan
+    hll = ("approx_count_distinct", "HyperLogLogPlusPlus")
+    for name in (*hll, "theta_sketch_agg"):
+        assert name not in main_plan, name
     # wide agg's parquet scan must not read the payload column at all
     m = re.search(r"ReadSchema: struct<([^>]*)>", main_plan)
     assert m and "payload" not in m.group(1), main_plan
     assert len(baggs) == 1
+    ((projs, bagg),) = baggs
+    bytes_plan = plan_of(df.select(*projs).groupBy().agg(*bagg))
+    assert "theta_sketch_agg" in bytes_plan
+    for name in hll:
+        assert name not in bytes_plan, name
     # the engine still reports full bytes stats (50 distinct 10-byte payloads)
     stats = compute_statistics(df, StatsOptions())
     bs = stats.default_slice().feature("payload").bytes
