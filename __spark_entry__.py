@@ -1464,11 +1464,13 @@ def _minhash_dedup_sql():
 
 
 def q_sketch_stats(spark, sf_dir):
-    """Sketch-mode stats (t-digest quantiles + CMS top-k + HLL uniques),
-    self-verified: min/max/top-value are exact-matchable against the oracle;
-    the t-digest median and HLL unique count are bounds-checked in-query
-    against Spark-exact counterparts (|Δmedian| ≤ 1% of range, |Δuniques| ≤
-    max(5%, 1)), emitted as booleans the oracle expects to be true."""
+    """Sketch-mode stats (``percentile_approx`` quantiles + ``approx_top_k``
+    top-k + theta uniques; KLL was rejected because its median moved with
+    the partitioning), self-verified: min/max/top-value are exact-matchable
+    against the oracle; the median and unique count are bounds-checked
+    in-query against Spark-exact counterparts (|Δmedian| ≤ 1% of range,
+    |Δuniques| ≤ max(5%, 1)), emitted as booleans the oracle expects to be
+    true."""
     from concurrent.futures import ThreadPoolExecutor
 
     li = _t(spark, sf_dir, "lineitem").select("l_quantity", "l_returnflag")

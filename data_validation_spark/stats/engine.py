@@ -16,9 +16,14 @@ Execution shape (cf. SURVEY.md §3.1 "Spark shape"):
 3. **Assembly** — driver-side transform of the tiny aggregate output into the
    ``DatasetStatsList`` artifact (histogram math in ``quantiles.py``).
 
-With ``options.use_sketches=True`` the long pass is replaced by a single
-Arrow-vectorized sketch pass (t-digest + count-min + HLL), mergeable
-accumulators merged per key — see ``sketches/runner.py``.
+With ``options.use_sketches=True`` only the long pass's top-k/uniques branch
+changes: one ``groupBy(slice, feature)`` of Spark's own sketch aggregates —
+``theta_sketch_agg`` (KMV, 16,384 entries) for uniques and
+``approx_top_k_accumulate`` (frequent items, no false positives) for top-k.
+Quantiles are the same ``percentile_approx`` grids in both modes (KLL was
+rejected: its estimate moves with the partitioning). Only weighted top-k and
+weighted quantiles, which no Spark aggregate computes, run in Python — see
+``sketches/runner.py``.
 """
 
 from __future__ import annotations
@@ -36,6 +41,12 @@ from data_validation_spark.stats.quantiles import (
     equi_width_histogram,
     median_from_boundaries,
     quantiles_histogram,
+)
+from data_validation_spark.stats.sketches.runner import (
+    LARGE_BYTES_PLACEHOLDER,
+    LARGE_STRING_THRESHOLD,
+    build_weighted_digest_frame,
+    decode_weighted_digest,
 )
 from data_validation_spark.stats.result import (
     BytesStats,
@@ -120,22 +131,10 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         _QUANTILE_CUTS,
         options.quantiles_accuracy,
         options.num_values_histogram_buckets,
-        # sketch mode computes quantiles via t-digest in the sketch pass
-        include_quantiles=not options.use_sketches,
     )
 
     def wide_job():
         return df.groupBy(slice_col.alias("slice_key")).agg(*agg_exprs).collect()
-
-    def quant_job():
-        # percentile_approx grids can't share the wide agg: they'd force it
-        # into ObjectHashAggregate (no codegen). SKETCH mode runs them as
-        # their own column-pruned job (num-values histograms only — the
-        # quantile grids ride the sketch pass); EXACT mode folds them into
-        # the fused long union instead (see _run_long_pass).
-        if not quant_exprs or not options.use_sketches:
-            return []
-        return df.groupBy(slice_col.alias("slice_key")).agg(*quant_exprs).collect()
 
     def bytes_job():
         # ALL binary-column stats (presence, lengths, theta-sketch unique,
@@ -152,12 +151,9 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         return src.groupBy("slice_key").agg(*aggs).collect()
 
     def long_job():
-        if options.use_sketches:
-            from data_validation_spark.stats.sketches.runner import run_sketch_pass
-
-            return (*run_sketch_pass(df, plans, slice_col, options), {}, {})
-        # Exact mode: top-k/uniques + array-element stats + percentile grids
-        # + (when a weight column is set) weighted t-digest quantiles, all
+        # Top-k/uniques + array-element stats + percentile grids (which
+        # can't share the wide agg: they'd force it into ObjectHashAggregate,
+        # no codegen) + (when a weight column is set) weighted sketches, all
         # in ONE action — see _run_long_pass.
         return _run_long_pass(df, plans, slice_col, options, quant_exprs,
                               weight_arg=weight_arg)
@@ -220,15 +216,13 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
             y_boundaries=options.lift_y_boundaries,
         ).collect()
 
-    with ThreadPoolExecutor(max_workers=6) as pool:
+    with ThreadPoolExecutor(max_workers=5) as pool:
         wide_f = pool.submit(wide_job)
-        quant_f = pool.submit(quant_job)
         bytes_f = pool.submit(bytes_job)
         long_f = pool.submit(long_job)
         gen_f = pool.submit(custom_gen_job)
         lift_f = pool.submit(lift_job)
         wide_rows = wide_f.result()
-        quant_rows = quant_f.result()
         bytes_rows = bytes_f.result()
         (topk_data, uniq_data, arr_data, wtopk_data, wq_data,
          quant_long) = long_f.result()
@@ -239,10 +233,10 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         # Placeholder-for-empty-input parity (stats_impl.py:141-158).
         return DatasetStatsList([DatasetStats(options.default_slice_key, 0, features={})])
 
-    quant_by_slice = {r["slice_key"]: r.asDict() for r in quant_rows}
+    quant_by_slice: dict = {}
     for r in bytes_rows:  # binary-column stats, keyed by the same aliases
         quant_by_slice.setdefault(r["slice_key"], {}).update(r.asDict())
-    for sk, grids in quant_long.items():  # exact mode: grids from the union
+    for sk, grids in quant_long.items():  # percentile grids from the union
         quant_by_slice.setdefault(sk, {}).update(grids)
 
     # ---- assembly ----------------------------------------------------------
@@ -310,21 +304,22 @@ def _want_topk(p: E.ColumnPlan, options: StatsOptions) -> bool:
 
 def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None,
                    weight_arg=None):
-    """Exact top-k/uniques + array-element numeric stats + percentile grids
-    + (when a weight column is configured) weighted t-digest quantiles —
-    ONE Spark action.
+    """Top-k/uniques (exact, or sketched with ``use_sketches``) +
+    array-element numeric stats + percentile grids + (when a weight column
+    is configured) weighted sketches — ONE Spark action.
 
     Each concern builds a small (KB-scale) lazy result frame; their union is
     collected once. Catalyst compiles the union into column-disjoint
     parquet scans — categorical columns for top-k, nested numeric columns
     for array stats, scalar numeric columns for the percentile grids,
-    numeric + weight columns for the weighted digests (plan-asserted in
-    tests/test_plans.py) — so the long pass reads each table column at most
-    once and exact mode submits exactly TWO jobs (wide agg + this union).
-    Round 4 ran the weighted digest and the percentile grids as separate
-    concurrent jobs; at 100 TB each was an extra scan wave. The grid branch
-    is the only ObjectHashAggregate (percentile_approx) and it is isolated
-    in its own union branch, so the other branches keep WholeStageCodegen."""
+    numeric (+ categorical in sketch mode) + weight columns for the weighted
+    sketches (plan-asserted in tests/test_plans.py) — so the long pass reads
+    each table column at most once and either mode submits exactly TWO jobs
+    (wide agg + this union) besides the bytes job. Round 4 ran the weighted
+    digest and the percentile grids as separate concurrent jobs; at 100 TB
+    each was an extra scan wave. In exact mode the grid branch is the only
+    ObjectHashAggregate (percentile_approx) and it is isolated in its own
+    union branch, so the other branches keep WholeStageCodegen."""
     long_df = E.long_format(
         df, plans, slice_col,
         weight_arg if weight_arg is not None else options.weight_column,
@@ -344,7 +339,9 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
     weighted = bool(options.weight_column)
     k = max(options.num_top_values, options.num_rank_histogram_buckets)
 
-    if any_topk:
+    if any_topk and options.use_sketches:
+        finals.append(_sketch_topk_frame(long_df, options))
+    elif any_topk:
         counts = (
             long_df.where(F.col("str_value").isNotNull())
             .groupBy("slice_key", "feature", "str_value")
@@ -431,11 +428,6 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
             .select(F.lit("arr").alias("kind"), "*")
         )
 
-    from data_validation_spark.stats.sketches.runner import (
-        build_weighted_digest_frame,
-        decode_weighted_digest,
-    )
-
     if weighted:
         wq_frame = build_weighted_digest_frame(df, plans, slice_col, options,
                                                weight_arg=weight_arg)
@@ -487,15 +479,57 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
                     (r["wrank"], r["str_value"], r["cnt"], r["wcnt"])
                 )
             uniq_data[key] = r["unique"]
+        elif r["kind"] == "sktopk":
+            # ties come back in arbitrary order: rank by (count desc, value
+            # desc) here, the exact branch's order
+            top = sorted(((t["count"], t["item"]) for t in r["top"]), reverse=True)
+            topk_data[key] = [
+                (rank, v, c, None) for rank, (c, v) in enumerate(top[:k], start=1)
+            ]
+            uniq_data[key] = r["unique"]
         elif r["kind"] == "arr":
             arr_data[key] = r.asDict()
         elif r["kind"] == "qgrid":
             # feature holds the wide-agg alias (e.g. "c3__quants")
             quant_long.setdefault(r["slice_key"], {})[r["feature"]] = r["quants"]
         else:  # wacc
-            wq_data[key] = decode_weighted_digest(r["acc"])
+            wq_data[key], wtop = decode_weighted_digest(r["acc"], k)
+            if wtop:  # sketch mode; exact mode ranks it in the topk branch
+                wtopk_data[key] = wtop
 
     return topk_data, uniq_data, arr_data, wtopk_data, wq_data, quant_long
+
+
+def _sketch_topk_frame(long_df, options: StatsOptions):
+    """Sketch-mode top-k and uniques: one ``groupBy(slice, feature)`` of
+    Spark's frequent-items and theta (KMV) aggregates over the long frame.
+
+    ``approx_top_k`` reports only values it can guarantee are frequent (no
+    false positives). Its counts are exact while a feature has at most
+    ``cap`` distinct values; above that they overcount by at most 3.5·n / M
+    (DataSketches' bound; M is the power of two at or above cap / 0.75,
+    8,192 for the default cap), and a feature without heavy hitters may
+    report no top values at all. NULL is an item to it, so NULLs are
+    filtered first. The >1024-byte placeholder applies to the top-k of
+    non-categorical features only; uniques see raw values."""
+    sv = F.col("str_value")
+    large = F.octet_length(sv) > LARGE_STRING_THRESHOLD
+    if options.categorical_features:
+        large = large & ~F.col("feature").isin(*sorted(options.categorical_features))
+    topv = F.when(large, F.lit(LARGE_BYTES_PLACEHOLDER)).otherwise(sv)
+    cap = F.lit(options.topk_sketch_size * 4)
+    top = F.call_function(
+        "approx_top_k_estimate",
+        F.call_function("approx_top_k_accumulate", topv, cap),
+        cap,
+    )
+    unique = F.theta_sketch_estimate(F.theta_sketch_agg(sv, E.THETA_LG_NOM_ENTRIES))
+    return (
+        long_df.where(sv.isNotNull())
+        .groupBy("slice_key", "feature")
+        .agg(top.alias("top"), unique.alias("unique"))
+        .select(F.lit("sktopk").alias("kind"), "slice_key", "feature", "top", "unique")
+    )
 
 
 def _assemble_slice(
@@ -601,8 +635,6 @@ def _assemble_feature(
             num.finite_max = _g(rd, p, "finmax", num.max if math.isfinite(num.max) else None)
             quants = _g(rd, p, "quants")
             finite_count = nonmissing - num.num_nan - num.num_pos_inf - num.num_neg_inf
-            if quants is None and key in arr_data:  # sketch mode: t-digest quantiles
-                quants = arr_data[key]["quants"]
             if options.weight_column:
                 w_cnt = _g(rd, p, "w_cnt", 0.0) or 0.0
                 w_sum = _g(rd, p, "w_sum", 0.0) or 0.0
@@ -663,12 +695,8 @@ def _assemble_feature(
         # Weighted quantile stats (reference WeightedNumericStatistics median +
         # [weighted equi-width, weighted quantiles] histograms,
         # basic_stats_generator.py:838-876) — emitted when a weight column is
-        # configured and the sketch pass produced a weighted t-digest grid.
-        wdata = None
-        if options.weight_column:
-            # sketch mode: weighted grid lives in arr_data; exact mode: in
-            # the dedicated weighted-quantile pass output
-            wdata = (wq_data or {}).get(key) or arr_data.get(key)
+        # configured and the weighted sketch produced a weighted t-digest grid.
+        wdata = (wq_data or {}).get(key) if options.weight_column else None
         if wdata and wdata.get("wquants") is not None:
             wq = wdata["wquants"]
             wfin = wdata["wfcnt"]

@@ -34,9 +34,9 @@ UNKNOWN = "UNKNOWN"
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 _FRACTIONAL = (T.FloatType, T.DoubleType, T.DecimalType)
-# log2 of the theta sketch's nominal entries for bytes uniques: 2^14 = 16,384,
-# the reference's KMV size (stats_impl.py:64-65).
-_THETA_LG_NOM_ENTRIES = 14
+# log2 of the theta sketch's nominal entries for bytes and sketch-mode
+# uniques: 2^14 = 16,384, the reference's KMV size (stats_impl.py:64-65).
+THETA_LG_NOM_ENTRIES = 14
 
 
 @dataclass
@@ -125,7 +125,6 @@ def build_agg_exprs(
     num_quantile_cuts: int,
     quantiles_accuracy: int,
     count_values_hist_buckets: int,
-    include_quantiles: bool = True,
 ) -> tuple[list, list, list]:
     """Aggregate expressions for the wide pass, split into three lists:
 
@@ -218,7 +217,7 @@ def build_agg_exprs(
                 # xxhash64(NULL) is non-null → gated on presence in the
                 # projection.
                 F.theta_sketch_estimate(
-                    F.theta_sketch_agg(F.col(h_col), _THETA_LG_NOM_ENTRIES)
+                    F.theta_sketch_agg(F.col(h_col), THETA_LG_NOM_ENTRIES)
                 ).alias(f"{a}__unique"),
             ]
             pw = _w(p)
@@ -363,8 +362,7 @@ def build_agg_exprs(
                 exprs.append(
                     F.avg(F.length(v.cast("string"))).alias(f"{a}__avglen")
                 )
-            if include_quantiles:
-                qexprs.append(F.percentile_approx(xf, qs, quantiles_accuracy).alias(f"{a}__quants"))
+            qexprs.append(F.percentile_approx(xf, qs, quantiles_accuracy).alias(f"{a}__quants"))
             if p.is_float:
                 exprs += [
                     F.sum(F.when(F.isnan(x), 1).otherwise(0)).alias(f"{a}__nan"),
@@ -431,8 +429,8 @@ def long_format(df, plans: list[ColumnPlan], slice_col, weight_column: Optional[
                 # (top_k_uniques_sketch_stats_generator.py:211-222); the
                 # exact generator and the KMV uniques sketch see raw values,
                 # so collapsing here would undercount exact uniques and
-                # diverge exact top-k. The sketch runner applies it
-                # Python-side to its top-k inserts only.
+                # diverge exact top-k. Sketch mode applies it to its top-k
+                # sketches only (engine._sketch_topk_frame, runner).
                 sv = v.cast("string")
             else:
                 sv = F.lit(None).cast("string")

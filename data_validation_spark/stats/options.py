@@ -26,11 +26,13 @@ class StatsOptions:
     # Approximation knobs (reference: eps=0.01 quantiles; MG 1024; KMV 16384).
     # 1/eps for percentile_approx; reference eps=0.01 ⇒ 100 — default 2× that
     quantiles_accuracy: int = 200
+    # weighted t-digest (weighted quantiles)
     tdigest_compression: int = 200
+    # top-k sketches track topk_sketch_size × 4 items
     topk_sketch_size: int = 1024
-    hll_precision: int = 14  # 2^14 = 16384 registers
 
-    # Strategy: exact top-k/uniques (shuffle groupBy) vs sketches (one pass).
+    # Strategy: exact top-k/uniques (salted windows) vs sketches (theta
+    # uniques + approx_top_k; weighted top-k via count-min).
     use_sketches: bool = False
 
     # Which columns get string-stats (top-k/uniques) even though numeric.

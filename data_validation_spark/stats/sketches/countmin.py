@@ -1,10 +1,14 @@
-"""Count-min sketch + heavy-hitter candidate tracking for approximate top-k.
+"""Weighted count-min sketch + heavy-hitter candidate tracking for the
+weighted top-k.
 
-The reference uses a Misra-Gries sketch (1024 buckets) for top-k; the north
-star names count-min. This accumulator keeps a CMS (d×w int64 counters,
-multiply-shift hashing, numpy-vectorized) for frequency estimation plus a
-bounded candidate dict (capacity ``max_candidates``, Misra-Gries-style trim)
-so extraction never needs a second data pass. Mergeable: CMS adds
+The reference keeps a second, weighted Misra-Gries sketch
+(top_k_uniques_sketch_stats_generator ``topk_weighted``); Spark's
+``approx_top_k`` aggregates, which serve the unweighted top-k, take no
+weight. This accumulator keeps a CMS (d×w float64 counters, multiply-shift
+hashing, numpy-vectorized) for weighted-frequency estimation plus a bounded
+candidate dict (capacity ``max_candidates``, Misra-Gries-style trim) so
+extraction never needs a second data pass. Estimates never undercount and
+overcount by up to about total weight / width. Mergeable: CMS adds
 element-wise; candidates union then re-estimate against the merged CMS.
 """
 
@@ -21,18 +25,12 @@ _SEEDS = np.array(
 
 
 class CountMinTopK:
-    __slots__ = ("width", "depth", "table", "candidates", "max_candidates", "total",
-                 "weighted")
+    __slots__ = ("width", "depth", "table", "candidates", "max_candidates", "total")
 
-    def __init__(self, width: int = 2048, depth: int = 4, max_candidates: int = 4096,
-                 weighted: bool = False):
+    def __init__(self, width: int = 2048, depth: int = 4, max_candidates: int = 4096):
         self.width = width
         self.depth = depth
-        # weighted=True tracks float weights (the reference keeps a second
-        # weighted MisraGries sketch, top_k_uniques_sketch_stats_generator
-        # `topk_weighted`); unweighted counters stay int64.
-        self.weighted = weighted
-        self.table = np.zeros((depth, width), dtype=np.float64 if weighted else np.int64)
+        self.table = np.zeros((depth, width), dtype=np.float64)
         self.candidates: dict[str, float] = {}
         self.max_candidates = max_candidates
         self.total = 0.0
@@ -59,7 +57,7 @@ class CountMinTopK:
         reference's value_counts-before-AddValues trick)."""
         if not values:
             return
-        counts = np.asarray(counts, dtype=self.table.dtype)
+        counts = np.asarray(counts, dtype=np.float64)
         h = self._hash(values)
         rows = self._rows(h)
         for d in range(self.depth):
@@ -77,27 +75,23 @@ class CountMinTopK:
 
     def estimate(self, values: list[str]) -> np.ndarray:
         if not values:
-            return np.empty(0, dtype=np.int64)
+            return np.empty(0, dtype=np.float64)
         h = self._hash(values)
         rows = self._rows(h)
-        est = np.full(
-            h.size,
-            np.inf if self.weighted else np.iinfo(np.int64).max,
-            dtype=self.table.dtype,
-        )
+        est = np.full(h.size, np.inf)
         for d in range(self.depth):
             est = np.minimum(est, self.table[d][rows[d]])
         return est
 
     def merge(self, other: "CountMinTopK") -> "CountMinTopK":
         assert self.width == other.width and self.depth == other.depth
-        out = CountMinTopK(self.width, self.depth, self.max_candidates, self.weighted)
+        out = CountMinTopK(self.width, self.depth, self.max_candidates)
         out.table = self.table + other.table
         out.total = self.total + other.total
         cands = set(self.candidates) | set(other.candidates)
         cand_list = list(cands)
         est = out.estimate(cand_list)
-        out.candidates = dict(zip(cand_list, est.astype(float)))
+        out.candidates = dict(zip(cand_list, est))
         if len(out.candidates) > out.max_candidates:
             out._trim()
         return out
@@ -106,7 +100,5 @@ class CountMinTopK:
         """(value, estimated count) sorted by (count desc, value desc) —
         reference tie-break parity."""
         cand_list = list(self.candidates)
-        est = self.estimate(cand_list).astype(float)
-        pairs = list(zip(cand_list, est))
-        pairs.sort(key=lambda kv: (-kv[1], tuple(-b for b in kv[0].encode("utf-8", "surrogatepass"))))
-        return pairs[:k]
+        est = self.estimate(cand_list).tolist()
+        return sorted(zip(cand_list, est), key=lambda kv: (kv[1], kv[0]), reverse=True)[:k]

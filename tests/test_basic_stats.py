@@ -320,7 +320,7 @@ def test_topk_large_bytes_placeholder_sketch_only(spark):
         .string
     )
     assert sk.top_values[0] == ("__LARGE_BYTES__", 3.0)
-    assert sk.unique == 3  # HLL saw raw values
+    assert sk.unique == 3  # the theta sketch saw raw values
 
     # Schema-declared categorical features are exempt from the placeholder.
     cat = (

@@ -305,3 +305,33 @@ def test_exact_weighted_long_pass_fused(spark, tmp_path):
         [{"s", "w"}, {"x"}, {"x", "w"}], key=sorted
     ), colsets
     assert "ObjectHashAggregate" in plan  # the isolated grid branch
+
+
+def test_unweighted_sketch_long_pass_stays_in_jvm(spark, tmp_path):
+    """Sketch mode without weights computes top-k and uniques with Spark's
+    own sketch aggregates inside the long pass's union: no Python
+    (MapInPandas / FlatMapGroupsInPandas) node anywhere in its plan."""
+    from data_validation_spark.stats import engine
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    df = spark.range(500).select(
+        F.col("id").cast("double").alias("x"),
+        F.concat(F.lit("v"), (F.col("id") % 7).cast("string")).alias("s"),
+        F.array(F.col("id").cast("double")).alias("a"),
+    )
+    p = str(tmp_path / "sk.parquet")
+    df.write.parquet(p)
+    engine.CAPTURE_UNION_FRAME = True
+    try:
+        stats = compute_statistics(
+            spark.read.parquet(p), StatsOptions(use_sketches=True)
+        )
+        union = engine._last_union_frame
+    finally:
+        engine.CAPTURE_UNION_FRAME = False
+        engine._last_union_frame = None
+    assert stats.default_slice().feature("s").string.unique == 7
+    plan = plan_of(union)
+    assert "MapInPandas" not in plan and "FlatMapGroupsInPandas" not in plan
+    assert "approx_top_k_accumulate" in plan and "theta_sketch_agg" in plan

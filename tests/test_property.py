@@ -147,26 +147,6 @@ def test_tdigest_weighted_quantile_envelope(pairs):
     assert above <= (0.5 + eps) * W + 1e-9
 
 
-# ------------------------------------------------------------------ HLL -----
-@SET
-@given(st.integers(min_value=1, max_value=3000), st.integers(min_value=2, max_value=4))
-def test_hll_merge_union_bound(n, splits):
-    from data_validation_spark.stats.sketches.hll import HyperLogLog
-
-    vals = [f"v{i}" for i in range(n)]
-    parts = [HyperLogLog() for _ in range(splits)]
-    for i, v in enumerate(vals):
-        parts[i % splits].add([v])
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.merge(p)
-    one = HyperLogLog()
-    one.add(vals)
-    # merge of disjoint splits must estimate the SAME set as one-shot
-    assert merged.estimate() == one.estimate()
-    assert abs(merged.estimate() - n) <= max(0.05 * n, 2)
-
-
 # ---------------------------------------------------------------- drift -----
 @SET
 @given(

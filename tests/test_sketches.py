@@ -6,9 +6,9 @@ into one accumulator must all agree within tolerance.
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from data_validation_spark.stats.sketches.countmin import CountMinTopK
-from data_validation_spark.stats.sketches.hll import HyperLogLog
 from data_validation_spark.stats.sketches.tdigest import TDigest
 
 
@@ -102,29 +102,6 @@ def test_cms_tie_break_larger_value_first():
     top = cms.top_k(3)
     assert top[0][0] == "c"
     assert [t[0] for t in top[1:]] == ["b", "a"]  # tie → larger value first
-
-
-# ------------------------------------------------------------------ HLL
-def test_hll_estimate():
-    hll = HyperLogLog()
-    vals = [f"item{i}" for i in range(10_000)]
-    hll.add(vals)
-    assert hll.estimate() == pytest.approx(10_000, rel=0.03)
-
-
-def test_hll_merge():
-    a = HyperLogLog()
-    b = HyperLogLog()
-    a.add([f"a{i}" for i in range(5000)])
-    b.add([f"a{i}" for i in range(2500, 7500)])
-    m = a.merge(b)
-    assert m.estimate() == pytest.approx(7500, rel=0.03)
-
-
-def test_hll_small_range():
-    hll = HyperLogLog()
-    hll.add(["x", "y", "z", "x"])
-    assert hll.estimate() == 3
 
 
 # ----------------------------------------------------------- engine parity
@@ -265,20 +242,18 @@ def _merge_groups(frame) -> int:
 
 
 @pytest.mark.parametrize(
-    "weighted, use_sketches",
-    [(False, True), (True, True), (True, False)],
-    ids=["unweighted_sketch", "weighted_sketch", "weighted_exact"],
+    "use_sketches", [True, False], ids=["weighted_sketch", "weighted_exact"]
 )
 def test_fanout_merge_tier_activates_and_preserves_results(
-    spark, monkeypatch, weighted, use_sketches
+    spark, monkeypatch, use_sketches
 ):
     # Two-tier salted merge (the explicit hot-key fanout,
     # stats_impl.py:296-303 CombinePerKey-with-fanout analogue): force the
     # tier on by lowering the threshold below the input's partition count and
     # assert (a) it activated — two merge nodes in the combine frame's plan
     # instead of one — and (b) results are unchanged vs the single-tier path:
-    # merge must be associative across the salt split. The weighted exact
-    # case reaches the same path through its weighted-digest frame.
+    # merge must be associative across the salt split. Only weighted runs
+    # reach this path: unweighted sketch stats are Spark aggregates.
     from data_validation_spark.stats.engine import compute_statistics
     from data_validation_spark.stats.options import StatsOptions
     from data_validation_spark.stats.sketches import combine, runner
@@ -293,9 +268,7 @@ def test_fanout_merge_tier_activates_and_preserves_results(
     monkeypatch.setattr(runner, "combine_per_key", recording)
     rows = [(float(i % 100), f"k{i % 11}", 1.0 + i % 3) for i in range(8000)]
     df = spark.createDataFrame(rows, "x double, s string, w double").repartition(8)
-    options = StatsOptions(
-        use_sketches=use_sketches, weight_column="w" if weighted else None
-    )
+    options = StatsOptions(use_sketches=use_sketches, weight_column="w")
 
     base = compute_statistics(df, options)
     monkeypatch.setattr(combine, "FANOUT_THRESHOLD", 2)
@@ -311,13 +284,13 @@ def test_fanout_merge_tier_activates_and_preserves_results(
     bn = base.default_slice().feature("x").numeric
     fn = fanned.default_slice().feature("x").numeric
     assert fn.median == pytest.approx(bn.median, abs=1.0)
-    if weighted:
-        assert bn.weighted_median is not None
-        assert fn.weighted_median == pytest.approx(bn.weighted_median, abs=1.0)
-        assert fn.weighted_mean == pytest.approx(bn.weighted_mean, rel=1e-9)
-    assert dict(fanned.default_slice().feature("s").string.top_values) == (
-        dict(base.default_slice().feature("s").string.top_values)
-    )
+    assert bn.weighted_median is not None
+    assert fn.weighted_median == pytest.approx(bn.weighted_median, abs=1.0)
+    assert fn.weighted_mean == pytest.approx(bn.weighted_mean, rel=1e-9)
+    fs = fanned.default_slice().feature("s").string
+    bs = base.default_slice().feature("s").string
+    assert dict(fs.top_values) == dict(bs.top_values)
+    assert fs.weighted_top_values and fs.weighted_top_values == bs.weighted_top_values
 
 
 def test_weighted_quantiles_exact_mode_matches_sketch_mode(spark):
@@ -350,3 +323,95 @@ def test_weighted_quantiles_exact_mode_matches_sketch_mode(spark):
     # no weight column → no weighted quantile job, no weighted stats
     plain = compute_statistics(df.select("x"), StatsOptions())
     assert plain.default_slice().feature("x").numeric.weighted_median is None
+
+
+# ------------------------------------------- sketch-mode top-k and uniques
+def _sketch_string(df, **opts):
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    stats = compute_statistics(df, StatsOptions(use_sketches=True, **opts))
+    return stats.default_slice().feature("s").string
+
+
+@pytest.fixture(scope="module")
+def skewed(spark):
+    """60k rows: 5 heavy values x 2,000 plus 50k rows over ~18k distinct
+    noise values (more distinct values than the top-k sketch tracks)."""
+    rng = np.random.RandomState(21)
+    vals = [f"heavy{h}" for h in range(5) for _ in range(2000)]
+    vals += [f"n{i}" for i in rng.randint(0, 18_000, 50_000)]
+    rng.shuffle(vals)
+    df = spark.createDataFrame([(v,) for v in vals], "s string").repartition(8)
+    from collections import Counter
+
+    return df, Counter(vals)
+
+
+def test_sketch_topk_matches_exact_on_skewed_high_cardinality(skewed):
+    # Count-min overcounted these heavy hitters (2013-2020 for a true 2000)
+    # and ranked them out of tie order; the frequent-items sketch is exact.
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    df, _ = skewed
+    exact = compute_statistics(df, StatsOptions(num_top_values=5))
+    es = exact.default_slice().feature("s").string
+    ss = _sketch_string(df, num_top_values=5)
+    assert es.top_values == [(f"heavy{h}", 2000.0) for h in (4, 3, 2, 1, 0)]
+    assert ss.top_values == es.top_values
+
+
+def test_sketch_topk_counts_within_error_bound(skewed):
+    from data_validation_spark.stats.options import StatsOptions
+
+    df, truth = skewed
+    cap = StatsOptions().topk_sketch_size * 4
+    # DataSketches frequent items: a priori error 3.5·n / M, where Spark
+    # sizes the map M as the power of two at or above cap / 0.75.
+    map_size = 1 << int(np.ceil(np.log2(np.ceil(cap / 0.75))))
+    bound = 3.5 * sum(truth.values()) / map_size
+    st = _sketch_string(df)
+    assert st.rank_histogram  # the heavy hitters at least
+    for b in st.rank_histogram:
+        assert truth[b.label] > 0  # no false positives
+        assert abs(b.sample_count - truth[b.label]) <= bound, b
+    assert [v for v, _ in st.top_values] == [
+        b.label for b in st.rank_histogram[: len(st.top_values)]
+    ]
+
+
+def test_sketch_topk_ties_rank_larger_value_first(spark):
+    rows = [(v,) for v, n in (("a", 5), ("b", 5), ("c", 9), ("d", 5)) for _ in range(n)]
+    df = spark.createDataFrame(rows, "s string").repartition(3)
+    st = _sketch_string(df)
+    assert st.top_values == [("c", 9.0), ("d", 5.0), ("b", 5.0), ("a", 5.0)]
+
+
+def test_sketch_topk_never_reports_null(spark):
+    rows = [(None, None)] * 10 + [("a", 1)] * 3 + [("b", 2)] * 2
+    df = spark.createDataFrame(rows, "s string, n long")
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    stats = compute_statistics(
+        df, StatsOptions(use_sketches=True, categorical_features={"n"})
+    ).default_slice()
+    s, n = stats.feature("s").string, stats.feature("n").string
+    assert s.top_values == [("a", 3.0), ("b", 2.0)] and s.unique == 2
+    assert n.top_values == [("1", 3.0), ("2", 2.0)] and n.unique == 2
+
+
+@pytest.mark.parametrize("distinct", [16_000, 30_000])
+def test_sketch_uniques_exact_and_partition_independent(spark, distinct):
+    # theta (KMV) keeps every hash up to 16,384 distinct values; above that
+    # its estimate still does not depend on how the input is split.
+    df = spark.range(distinct + 2_000).select(
+        F.concat(F.lit("u"), (F.col("id") % distinct).cast("string")).alias("s")
+    )
+    got = {n: _sketch_string(df.repartition(n)).unique for n in (1, 7, 32)}
+    assert len(set(got.values())) == 1, got
+    if distinct < 16_384:
+        assert got[1] == distinct
+    else:
+        assert abs(got[1] - distinct) <= 3 * distinct / np.sqrt(16_384)
