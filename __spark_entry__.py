@@ -23,6 +23,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_validation_spark.jobs import run_parallel
 from data_validation_spark.stats.engine import compute_statistics
 from data_validation_spark.stats.options import StatsOptions
 from data_validation_spark.util import local_frame, persisted
@@ -164,23 +165,20 @@ _TOPK_FEATURES = [("lineitem", "l_returnflag"), ("lineitem", "l_linestatus"),
 
 
 def _stats_per_table(spark, sf_dir, options_fn):
-    """One engine call per table over BOTH its _TOPK_FEATURES columns, the two
-    tables submitted concurrently — 4 sequential single-column
-    compute_statistics calls (round 5) were 4 job waves where 2 suffice, and
-    each table was scanned once per column instead of once total."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    """One engine call per table over BOTH its _TOPK_FEATURES columns, the
+    tables run concurrently — 4 sequential single-column compute_statistics
+    calls (round 5) were 4 job waves where 2 suffice, and each table was
+    scanned once per column instead of once total."""
     tables: dict[str, list[str]] = {}
     for table, colname in _TOPK_FEATURES:
         tables.setdefault(table, []).append(colname)
 
-    def run(item):
-        table, colnames = item
-        df = _t(spark, sf_dir, table).select(*colnames)
-        return table, compute_statistics(df, options_fn())
+    def run(table):
+        df = _t(spark, sf_dir, table).select(*tables[table])
+        return lambda: compute_statistics(df, options_fn())
 
-    with ThreadPoolExecutor(max_workers=len(tables)) as pool:
-        return dict(pool.map(run, tables.items()))
+    out = run_parallel(spark, {f"entry.{table}": run(table) for table in tables})
+    return {table: out[f"entry.{table}"] for table in tables}
 
 
 def q_topk_categorical(spark, sf_dir):
@@ -1471,27 +1469,17 @@ def q_sketch_stats(spark, sf_dir):
     in-query against Spark-exact counterparts (|Δmedian| ≤ 1% of range,
     |Δuniques| ≤ max(5%, 1)), emitted as booleans the oracle expects to be
     true."""
-    from concurrent.futures import ThreadPoolExecutor
-
     li = _t(spark, sf_dir, "lineitem").select("l_quantity", "l_returnflag")
-    # sketch pass and the exact-counterpart aggregate are independent job
-    # graphs — submit both so the exact agg backfills the sketch pass's
-    # single-reducer merge stage instead of running after it.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        stats_f = pool.submit(
-            lambda: compute_statistics(li, StatsOptions(use_sketches=True))
-        )
-        ex_f = pool.submit(
-            lambda: li.agg(
-                F.expr("percentile(l_quantity, 0.5)").alias("md"),
-                F.countDistinct("l_returnflag").alias("u"),
-                F.min("l_quantity").alias("mn"),
-                F.max("l_quantity").alias("mx"),
-            ).collect()[0]
-        )
-        stats = stats_f.result()
-        ex = ex_f.result()
-    ds = stats.default_slice()
+    out = run_parallel(spark, {
+        "entry.sketch": lambda: compute_statistics(li, StatsOptions(use_sketches=True)),
+        "entry.exact": lambda: li.agg(
+            F.expr("percentile(l_quantity, 0.5)").alias("md"),
+            F.countDistinct("l_returnflag").alias("u"),
+            F.min("l_quantity").alias("mn"),
+            F.max("l_quantity").alias("mx"),
+        ).collect()[0],
+    })
+    ds, ex = out["entry.sketch"].default_slice(), out["entry.exact"]
     n = ds.feature("l_quantity").numeric
     s = ds.feature("l_returnflag").string
     median_ok = int(

@@ -255,7 +255,10 @@ def warm_session(spark) -> None:
             ).alias("text"),
         )
         cand = minhash_lsh_candidates(fake, "doc_id", "text", num_hashes=64, bands=16)
-        verify_jaccard(cand, fake, "doc_id", "text", threshold=0.5).count()
+        try:
+            verify_jaccard(cand, fake, "doc_id", "text", threshold=0.5).count()
+        finally:
+            cand.unpersist()  # verify_jaccard persists its candidates in place
         simhash_near_dups(fake, "doc_id", "text", radius=3).count()
     except Exception:
         # warm-up is best-effort; never fail the caller's setup over it

@@ -200,7 +200,8 @@ def minhash_lsh_candidates(
         .where((F.size("ids") > 1) & (F.size("ids") <= max_bucket_size))
     )
 
-    pair_schema = "id_a long, id_b long"
+    id_type = df.schema[id_col].dataType.simpleString()
+    pair_schema = f"id_a {id_type}, id_b {id_type}"
 
     def pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

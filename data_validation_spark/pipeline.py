@@ -17,6 +17,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, functions as F
 
 from data_validation_spark.anomalies import Anomalies
+from data_validation_spark.jobs import run_parallel
 from data_validation_spark.schema import (
     DriftComparator,
     FeatureSpec,
@@ -126,9 +127,6 @@ def validate_images(
     if "bytes" in df.columns:
         options.image_columns = set(options.image_columns) | {"bytes"}
 
-    # The stats pass and the row-level violations pass are independent job
-    # graphs — submit them concurrently so their stages interleave.
-    from concurrent.futures import ThreadPoolExecutor
     from functools import reduce
 
     def stats_job():
@@ -173,12 +171,8 @@ def validate_images(
                 out[(r["feature"], r["anomaly_type"])] = r["violation_count"]
         return out
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        stats_f = pool.submit(stats_job)
-        viol_f = pool.submit(violations_job)
-        stats, prev_stats_resolved = stats_f.result()
-        vc = viol_f.result()
-    prev_stats = prev_stats_resolved
+    out = run_parallel(spark, {"pipeline.stats": stats_job, "pipeline.rowlevel": violations_job})
+    (stats, prev_stats), vc = out["pipeline.stats"], out["pipeline.rowlevel"]
 
     anomalies = validate_statistics(
         stats, schema, environment=environment, previous_statistics=prev_stats

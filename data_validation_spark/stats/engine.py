@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_validation_spark.jobs import run_parallel
 from data_validation_spark.stats import exprs as E
 from data_validation_spark.stats.options import StatsOptions
 from data_validation_spark.stats.quantiles import (
@@ -119,12 +120,7 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
 
     _check_label(df, options)
 
-    # ---- wide + long passes, submitted concurrently ------------------------
-    # The two jobs are independent; overlapping them lets Spark's scheduler
-    # interleave their stages (fills the cluster while either job's final
-    # single-reducer stage runs) and hides per-job fixed overhead.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # ---- wide, bytes, long, generator and lift jobs, run concurrently -------
     agg_exprs, quant_exprs, bytes_exprs = E.build_agg_exprs(
         plans,
         weight_arg,
@@ -216,18 +212,16 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
             y_boundaries=options.lift_y_boundaries,
         ).collect()
 
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        wide_f = pool.submit(wide_job)
-        bytes_f = pool.submit(bytes_job)
-        long_f = pool.submit(long_job)
-        gen_f = pool.submit(custom_gen_job)
-        lift_f = pool.submit(lift_job)
-        wide_rows = wide_f.result()
-        bytes_rows = bytes_f.result()
-        (topk_data, uniq_data, arr_data, wtopk_data, wq_data,
-         quant_long) = long_f.result()
-        custom_gen_out = gen_f.result()
-        lift_rows = lift_f.result()
+    out = run_parallel(df.sparkSession, {
+        "stats.wide": wide_job,
+        "stats.bytes": bytes_job,
+        "stats.long": long_job,
+        "stats.generators": custom_gen_job,
+        "stats.lift": lift_job,
+    })
+    wide_rows, bytes_rows = out["stats.wide"], out["stats.bytes"]
+    (topk_data, uniq_data, arr_data, wtopk_data, wq_data, quant_long) = out["stats.long"]
+    custom_gen_out, lift_rows = out["stats.generators"], out["stats.lift"]
 
     if not wide_rows:
         # Placeholder-for-empty-input parity (stats_impl.py:141-158).

@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from data_validation_spark.util import local_frame
+
 
 def _fmt_bound(v: float) -> str:
     if v == float("-inf"):
@@ -60,8 +62,8 @@ def lift_stats(
         # weighted counts are weight sums (double); keep the empty-result
         # schema identical to the non-empty path so unions don't break
         cnt_t = "double" if weight_col else "bigint"
-        return df.sparkSession.createDataFrame(
-            [],
+        return local_frame(
+            df.sparkSession, [],
             f"x string, y string, lift double, xy_count {cnt_t}, "
             f"x_count {cnt_t}, y_rate double",
         )
@@ -129,9 +131,8 @@ def cross_feature_stats(df: DataFrame, pairs: list[tuple[str, str]]) -> DataFram
         rows.append(
             (a, b, int(row[f"{a}|{b}|n"] or 0), row[f"{a}|{b}|cov"], row[f"{a}|{b}|corr"])
         )
-    return df.sparkSession.createDataFrame(
-        rows, "feature_x string, feature_y string, count bigint, covariance double, correlation double"
-    )
+    return local_frame(df.sparkSession, rows, "feature_x string, feature_y string, "
+                       "count bigint, covariance double, correlation double")
 
 
 def lift_stats_multi(

@@ -15,6 +15,7 @@ from typing import Iterator, Optional
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from data_validation_spark.jobs import run_parallel
 from data_validation_spark.stats.result import DatasetStatsList
 from data_validation_spark.util import persisted
 
@@ -291,69 +292,53 @@ def compute_nl_statistics(
                 .select("r2", "tok", "cnt")
             )
 
-            # Submit the independent job graphs concurrently (coverage agg, sequence
-            # rollup, rank top-k, reported sequences, per-token stats) — they share
-            # the cached `tokens` frame, and overlapping them hides each job's fixed
-            # scheduling cost (same pattern as the engine's wide/long submission).
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=6) as pool:
-                cov_f = pool.submit(
-                    lambda: tokens.agg(
-                        F.count(F.lit(1)).alias("total"),
-                        F.sum("__in_vocab").alias("in_vocab"),
-                        F.avg(ivl).alias("avg_tok_len"),
-                        F.percentile_approx(ivl.cast("double"), qs, 10000).alias("tok_len_q"),
-                    ).collect()[0]
+            branches = {
+                "stats.text.coverage": lambda: tokens.agg(
+                    F.count(F.lit(1)).alias("total"),
+                    F.sum("__in_vocab").alias("in_vocab"),
+                    F.avg(ivl).alias("avg_tok_len"),
+                    F.percentile_approx(ivl.cast("double"), qs, 10000).alias("tok_len_q"),
+                ).collect()[0],
+                "stats.text.sequences": lambda: per_seq.agg(
+                    F.min("eff_len").alias("minlen"),
+                    F.max("eff_len").alias("maxlen"),
+                    F.percentile_approx(F.col("eff_len").cast("double"), qs, 10000).alias("len_q"),
+                ).collect()[0],
+                "stats.text.rank": top_df.collect,
+                "stats.text.low_coverage": lambda: _bottom5("coverage"),
+                "stats.text.low_token_length": lambda: _bottom5("avg_tok_len"),
+            }
+            if constrained_tokens:
+                ct = tokens.where(F.col("tok").isin(*constrained_tokens))
+                pos_bucket = F.least(
+                    F.floor(F.col("__pos") / F.col("__slen") * num_histogram_buckets),
+                    F.lit(num_histogram_buckets - 1),
+                ).cast("int")
+                per_tok_seq = ct.groupBy("tok", "__sid").agg(F.count(F.lit(1)).alias("occ"))
+                branches["stats.text.tokens"] = per_tok_seq.groupBy("tok").agg(
+                    F.sum("occ").alias("frequency"),
+                    F.count(F.lit(1)).alias("num_sequences"),
+                    F.min("occ").alias("min_per_seq"),
+                    F.max("occ").alias("max_per_seq"),
+                    F.avg("occ").alias("avg_per_seq"),
+                ).collect
+                branches["stats.text.positions"] = (
+                    ct.groupBy("tok", pos_bucket.alias("bucket"))
+                    .agg(F.count(F.lit(1)).alias("n"))
+                    .collect
                 )
-                seq_f = pool.submit(
-                    lambda: per_seq.agg(
-                        F.min("eff_len").alias("minlen"),
-                        F.max("eff_len").alias("maxlen"),
-                        F.percentile_approx(F.col("eff_len").cast("double"), qs, 10000).alias("len_q"),
-                    ).collect()[0]
-                )
-                top_f = pool.submit(top_df.collect)
-                b5cov_f = pool.submit(_bottom5, "coverage")
-                b5atl_f = pool.submit(_bottom5, "avg_tok_len")
-                tok_f = pos_f = None
-                if constrained_tokens:
-                    ct = tokens.where(F.col("tok").isin(*constrained_tokens))
-                    pos_bucket = F.least(
-                        F.floor(F.col("__pos") / F.col("__slen") * num_histogram_buckets),
-                        F.lit(num_histogram_buckets - 1),
-                    ).cast("int")
-                    per_tok_seq = ct.groupBy("tok", "__sid").agg(F.count(F.lit(1)).alias("occ"))
-                    tok_f = pool.submit(
-                        per_tok_seq.groupBy("tok").agg(
-                            F.sum("occ").alias("frequency"),
-                            F.count(F.lit(1)).alias("num_sequences"),
-                            F.min("occ").alias("min_per_seq"),
-                            F.max("occ").alias("max_per_seq"),
-                            F.avg("occ").alias("avg_per_seq"),
-                        ).collect
-                    )
-                    pos_f = pool.submit(
-                        ct.groupBy("tok", pos_bucket.alias("bucket"))
-                        .agg(F.count(F.lit(1)).alias("n"))
-                        .collect
-                    )
-                cov_row = cov_f.result()
-                seq_row = seq_f.result()
-                top_rows = top_f.result()
-                b5cov, b5atl = b5cov_f.result(), b5atl_f.result()
+            out = run_parallel(df.sparkSession, branches)
+    cov_row, seq_row = out["stats.text.coverage"], out["stats.text.sequences"]
     total = int(cov_row["total"] or 0)
     in_vocab = int(cov_row["in_vocab"] or 0)
 
     # Per-token statistics for schema-constrained tokens (small set).
     token_statistics = {}
     if constrained_tokens:
-        tok_rows = tok_f.result()
-        pos_rows = pos_f.result()
         pos_hist: dict[str, dict[int, int]] = {}
-        for r in pos_rows:
+        for r in out["stats.text.positions"]:
             pos_hist.setdefault(r["tok"], {})[int(r["bucket"])] = int(r["n"])
-        for r in tok_rows:
+        for r in out["stats.text.tokens"]:
             token_statistics[r["tok"]] = {
                 "frequency": int(r["frequency"]),
                 "fraction_of_sequences": r["num_sequences"] / num_examples,
@@ -385,11 +370,12 @@ def compute_nl_statistics(
         "sequence_length_quantiles": list(seq_row["len_q"] or []),
         "rank_histogram": [
             {"rank": r["r2"], "label": r["tok"], "sample_count": int(r["cnt"])}
-            for r in top_rows
+            for r in out["stats.text.rank"]
         ],
         "token_statistics": token_statistics,
         "reported_sequences": (
-            [" ".join(s) for s in b5cov] + [" ".join(s) for s in b5atl]
+            [" ".join(s) for s in out["stats.text.low_coverage"]]
+            + [" ".join(s) for s in out["stats.text.low_token_length"]]
         ),
     }
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_validation_spark.schema import FeatureType, Schema
+from data_validation_spark.util import local_frame
 
 VIOLATION_DDL = "row_key string, feature string, anomaly_type string, detail string"
 
@@ -223,7 +224,7 @@ def check_row_constraints(df: DataFrame, schema: Schema, key_col: str) -> DataFr
         )
         parts.append(fused)
     if not parts:
-        return df.sparkSession.createDataFrame([], VIOLATION_DDL)
+        return local_frame(df.sparkSession, [], VIOLATION_DDL)
     return reduce(lambda a, b: a.unionByName(b), parts)
 
 

@@ -109,6 +109,24 @@ def test_simhash_string_ids(spark):
     assert all(isinstance(a, str) and isinstance(b, str) for a, b in pairs)
 
 
+def test_minhash_string_ids(spark):
+    # The pairing stage derives its output schema from the input id column,
+    # as simhash_near_dups does; string ids used to fail on a long schema.
+    rows = [
+        ("doc-a", "alpha beta gamma delta epsilon zeta eta theta"),
+        ("doc-b", "alpha beta gamma delta epsilon zeta eta theta"),
+        ("doc-c", "completely different content here entirely unrelated words"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id string, text string")
+    cand = minhash_lsh_candidates(df, "doc_id", "text")
+    assert cand.schema.simpleString() == "struct<id_a:string,id_b:string>"
+    pairs = {(r["id_a"], r["id_b"]) for r in cand.collect()}
+    assert ("doc-a", "doc-b") in pairs
+    verified = verify_jaccard(cand, df, "doc_id", "text", threshold=0.99).collect()
+    cand.unpersist()
+    assert {(r["id_a"], r["id_b"]) for r in verified} == {("doc-a", "doc-b")}
+
+
 @pytest.fixture(scope="module")
 def vectors(spark):
     rng = np.random.RandomState(7)

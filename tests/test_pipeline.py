@@ -123,3 +123,17 @@ def test_warm_session_memo_keys_on_application_id(monkeypatch):
     session.sparkContext = _Context("app-2")
     datagen.warm_session(session)
     assert warmed == ["app-1", "app-2"]
+
+
+def test_warm_session_releases_its_persists(spark, monkeypatch):
+    """The warm-up runs verify_jaccard, which persists its candidates; it must
+    hand the session back with no persisted RDD of its own."""
+    from data_validation_spark import datagen
+
+    key = spark.sparkContext.applicationId
+    monkeypatch.setattr(datagen, "_WARMED", datagen._WARMED - {key})
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    datagen.warm_session(spark)
+    assert key in datagen._WARMED
+    assert set(persisted().keys()) == before

@@ -179,6 +179,18 @@ def test_local_frame_round_trips_exactly(spark):
     assert empty.collect() == []
     assert "ExistingRDD" not in plan_of(empty)
 
+    # a schema with no row constraint yields the empty violations frame
+    from pyspark.sql.types import StructType
+
+    from data_validation_spark.schema import Schema
+    from data_validation_spark.validate.rowlevel import VIOLATION_DDL, check_row_constraints
+
+    none = check_row_constraints(spark.range(3), Schema(), "id")
+    assert none.schema == StructType.fromDDL(VIOLATION_DDL)
+    assert none.collect() == []
+    plan = plan_of(none)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
 
 def test_partitioned_read_prunes_partitions(spark, tmp_path):
     """The checkpoint ledger's per-partition read must reach PartitionFilters
