@@ -231,8 +231,8 @@ def warm_session(spark) -> None:
 
         # Dedup-operator shapes on SYNTHETIC text (pure range-derived rows —
         # no input table is read, nothing reusable is computed): compiles the
-        # LSH/fingerprint pipelines' generated code (explode-of-structs,
-        # collect_list ObjectHashAggregate, struct-consuming mapInPandas,
+        # LSH/fingerprint pipelines' generated code (band/block posexplode,
+        # collect_list ObjectHashAggregate, the bucket-pair explode,
         # dropDuplicates, persist, broadcast semi-join), which measured
         # ~3.5 s of one-time first-call cost that otherwise lands on the
         # first dedup query of a fresh JVM.

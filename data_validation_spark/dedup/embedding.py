@@ -1,9 +1,11 @@
 """Embedding-cosine near-duplicate detection.
 
 Baseline: all-pairs cosine above threshold (self-join; only viable at modest
-n). Scale path: random-hyperplane LSH — sign-bucket the vectors with ``bits``
-random hyperplanes, equi-join within buckets (one shuffle), verify cosine
-exactly inside buckets. Multi-probe via ``num_tables`` independent tables.
+n). Scale path: random-hyperplane LSH — one vectorized Arrow pass signs the
+vectors against ``bits`` random hyperplanes for each of ``num_tables``
+independent tables (multi-probe); the pairs inside each (table, signature)
+bucket come from the shared JVM generator ``buckets.bucket_pairs`` and are
+verified with the exact cosine as a column expression.
 """
 
 from __future__ import annotations
@@ -14,12 +16,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from data_validation_spark.dedup.buckets import bucket_pairs
+
 
 def _cosine_expr(a, b):
+    """Cosine of two array columns; 0.0 when either vector has norm 0, NULL
+    when either is NULL. ``try_divide`` gives NULL for a zero divisor, where
+    a bare division raises ``DIVIDE_BY_ZERO`` under ANSI mode."""
     dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
     na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
     nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, x: acc + x * x))
-    return dot / (na * nb)
+    return F.coalesce(F.try_divide(dot, na * nb), F.when(dot.isNotNull(), F.lit(0.0)))
 
 
 def cosine_pairs_bruteforce(
@@ -49,51 +56,24 @@ def cosine_pairs_lsh(
 ) -> DataFrame:
     """Random-hyperplane LSH bucketing, then exact cosine verify per bucket."""
     rng = np.random.RandomState(seed)
-    planes = rng.normal(size=(num_tables, bits, dim)).astype(np.float32)
+    planes = rng.normal(size=(num_tables * bits, dim)).astype(np.float32)
+    shifts = np.arange(bits, dtype=np.uint64)
 
-    def bucketize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def signatures(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float32)
-            ids_out, tbl_out, sig_out, vec_out = [], [], [], []
-            if len(vecs):
-                for t in range(num_tables):
-                    proj = vecs @ planes[t].T  # (n, bits)
-                    sigs = ((proj > 0).astype(np.uint64) << np.arange(bits, dtype=np.uint64)).sum(
-                        axis=1
-                    )
-                    ids_out.extend(pdf[id_col].tolist())
-                    tbl_out.extend([t] * len(vecs))
-                    sig_out.extend(sigs.astype(np.int64).tolist())
-                    vec_out.extend(pdf[vec_col].tolist())
-            yield pd.DataFrame({"id": ids_out, "tbl": tbl_out, "sig": sig_out, "vec": vec_out})
+            n = len(pdf)
+            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float32).reshape(n, dim)
+            above = (vecs @ planes.T > 0).reshape(n, num_tables, bits)
+            sigs = (above.astype(np.uint64) << shifts).sum(axis=2).astype(np.int64)
+            yield pd.DataFrame({"id": pdf[id_col], "vec": pdf[vec_col], "sigs": list(sigs)})
 
-    buckets = df.select(id_col, vec_col).mapInPandas(
-        bucketize, f"id long, tbl int, sig long, vec array<float>"
+    types = [df.schema[c].dataType.simpleString() for c in (id_col, vec_col)]
+    keyed = (
+        df.select(id_col, vec_col)
+        .mapInPandas(signatures, "id {}, vec {}, sigs array<long>".format(*types))
+        .select("id", "vec", F.posexplode("sigs").alias("tbl", "sig"))
     )
-
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2 or n > max_bucket_size:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
-            )
-        vecs = np.array(pdf["vec"].tolist(), dtype=np.float32)
-        norms = np.linalg.norm(vecs, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        unit = vecs / norms
-        sims = unit @ unit.T
-        ids = pdf["id"].to_numpy()
-        ia, ib = np.triu_indices(n, k=1)
-        mask = sims[ia, ib] >= threshold
-        return pd.DataFrame(
-            {
-                "id_a": np.minimum(ids[ia[mask]], ids[ib[mask]]),
-                "id_b": np.maximum(ids[ia[mask]], ids[ib[mask]]),
-                "cosine": sims[ia, ib][mask].astype(np.float64),
-            }
-        )
-
-    pairs = buckets.groupBy("tbl", "sig").applyInPandas(
-        verify, "id_a long, id_b long, cosine double"
-    )
-    return pairs.dropDuplicates(["id_a", "id_b"])
+    pairs = bucket_pairs(keyed, ["tbl", "sig"], max_bucket_size, payload=["vec"])
+    return pairs.select(
+        "id_a", "id_b", _cosine_expr(F.col("vec_a"), F.col("vec_b")).alias("cosine")
+    ).where(F.col("cosine") >= threshold)

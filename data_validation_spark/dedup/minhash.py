@@ -1,5 +1,5 @@
 """MinHash + LSH near-duplicate detection: shingle → minhash signature →
-band → bucket-join → candidate pairs (→ optional exact-Jaccard verify).
+band → bucket pairs → candidate pairs (→ optional exact-Jaccard verify).
 
 Signature computation is one Arrow pass with the entire hot loop batch-
 vectorized in C (pandas C string split, ``pd.util.hash_array`` SipHash word
@@ -7,9 +7,10 @@ hashing, k-step numpy k-gram mix, ``np.minimum.reduceat`` permutation
 minima) — no per-row or per-shingle Python, and measured ~2× faster than an
 all-JVM ``aggregate``/``zip_with`` formulation (Catalyst higher-order-
 function lambdas are interpreted, not codegen'd). Banding turns the O(n²)
-pair search into one groupBy shuffle on (band, band-hash) buckets; pair
-explosion happens inside buckets only and hot buckets are bounded by
-``max_bucket_size``.
+pair search into one groupBy shuffle on (band, band-hash) buckets; the
+pairs inside each bucket come from the shared JVM generator
+``buckets.bucket_pairs``, which drops buckets above ``max_bucket_size``.
+Everything after the signature pass, verify included, runs in the JVM.
 
 Reference semantics: near-dup candidate generation for large text corpora
 (the reference has no dedup operators; this is the LLM-pipeline extension
@@ -24,6 +25,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+
+from data_validation_spark.dedup.buckets import bucket_pairs
 
 _MERSENNE = (1 << 61) - 1
 
@@ -183,38 +186,15 @@ def minhash_lsh_candidates(
     assert num_hashes % bands == 0
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_k)
-    band_cols = [
+    band_hashes = [
         F.xxhash64(
             F.lit(bi),
             *[F.col("signature")[bi * rows_per_band + r] for r in range(rows_per_band)],
-        ).alias("bh")
+        )
         for bi in range(bands)
     ]
-    banded = sig.select(
-        "id", F.explode(F.array(*[F.struct(F.lit(bi).alias("band"), bc) for bi, bc in
-                                  enumerate(band_cols)])).alias("x")
-    ).select("id", F.col("x.band").alias("band"), F.col("x.bh").alias("bh"))
-    buckets = (
-        banded.groupBy("band", "bh")
-        .agg(F.collect_list("id").alias("ids"))
-        .where((F.size("ids") > 1) & (F.size("ids") <= max_bucket_size))
-    )
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    pair_schema = f"id_a {id_type}, id_b {id_type}"
-
-    def pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_a, out_b = [], []
-            for ids in pdf["ids"]:
-                ids = sorted(set(ids))
-                for i in range(len(ids)):
-                    for j in range(i + 1, len(ids)):
-                        out_a.append(ids[i])
-                        out_b.append(ids[j])
-            yield pd.DataFrame({"id_a": out_a, "id_b": out_b})
-
-    return buckets.select("ids").mapInPandas(pairs, pair_schema).dropDuplicates()
+    banded = sig.select("id", F.posexplode(F.array(*band_hashes)).alias("band", "bh"))
+    return bucket_pairs(banded, ["band", "bh"], max_bucket_size)
 
 
 def verify_jaccard(

@@ -1,8 +1,12 @@
 """SimHash near-duplicate detection: 64-bit locality-sensitive fingerprints
 from token hashes; near-dups = fingerprints within a Hamming radius, found by
 the standard block-permutation trick (split 64 bits into ``radius+1`` blocks —
-any pair within the radius shares at least one exact block → equi-join on
-(block index, block value), then exact Hamming verify).
+any pair within the radius shares at least one exact block → pairs within
+each (block index, block value) bucket, then exact Hamming verify).
+
+The fingerprint pass is one vectorized Arrow pass; the pairs come from the
+shared JVM generator ``buckets.bucket_pairs`` and the verify is a
+``bit_count(fingerprint_a ^ fingerprint_b)`` column expression.
 """
 
 from __future__ import annotations
@@ -13,6 +17,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from data_validation_spark.dedup.buckets import bucket_pairs
 
 
 def simhash64(text: str) -> int:
@@ -91,83 +97,32 @@ def simhash_near_dups(
     territory, not near-dup.
     """
     fp = simhash_fingerprints(df, id_col, text_col).where(F.col("fingerprint") != 0)
-    idt = df.schema[id_col].dataType.simpleString()
     return simhash_near_dups_from_fingerprints(
-        fp, radius=radius, max_bucket_size=max_bucket_size, id_type=idt
+        fp, radius=radius, max_bucket_size=max_bucket_size
     )
 
 
 def simhash_near_dups_from_fingerprints(
     fp: DataFrame, radius: int = 3, max_bucket_size: int = 1000,
-    id_type: str | None = None,
 ) -> DataFrame:
     """``simhash_near_dups`` over a precomputed ``(id, fingerprint)`` frame.
 
     Lets a caller that needs both the pairs *and* the raw fingerprints (e.g.
     a recall self-check against brute force) fingerprint the corpus once
     instead of running the Arrow pass per consumer. ``fp`` must already have
-    degenerate fingerprints filtered if desired.
+    degenerate fingerprints filtered if desired. The pairs keep ``fp``'s id
+    type.
     """
-    idt = id_type or fp.schema["id"].dataType.simpleString()
-    blocks = radius + 1
-    width = 64 // blocks
-    exploded = fp.select(
-        "id",
-        "fingerprint",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("blk"),
-                        F.shiftrightunsigned(F.col("fingerprint"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("bv"),
-                    )
-                    for b in range(blocks)
-                ]
-            )
-        ).alias("x"),
-    ).select("id", "fingerprint", F.col("x.blk").alias("blk"), F.col("x.bv").alias("bv"))
-    buckets = (
-        exploded.groupBy("blk", "bv")
-        .agg(
-            F.collect_list(F.struct("id", "fingerprint")).alias("members"),
+    width = 64 // (radius + 1)
+    blocks = [
+        F.shiftrightunsigned(F.col("fingerprint"), b * width).bitwiseAND(
+            F.lit((1 << width) - 1)
         )
-        .where((F.size("members") > 1) & (F.size("members") <= max_bucket_size))
-    )
-
-    def pairs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_a, out_b, out_h = [], [], []
-            for members in pdf["members"]:
-                seen = {m["id"]: m["fingerprint"] for m in members}
-                ids = sorted(seen)
-                fps = np.array([seen[i] for i in ids], dtype=np.int64).view(np.uint64)
-                ia, ib = np.triu_indices(len(ids), k=1)
-                xor = fps[ia] ^ fps[ib]
-                # vectorized popcount (byte-table over the 8 bytes of u64)
-                ham = (
-                    np.unpackbits(xor.view(np.uint8).reshape(-1, 8), axis=1)
-                    .sum(axis=1)
-                    .astype(np.int64)
-                )
-                keep = ham <= radius
-                idarr = np.asarray(ids, dtype=object)
-                out_a.extend(idarr[ia[keep]].tolist())
-                out_b.extend(idarr[ib[keep]].tolist())
-                out_h.extend(ham[keep].tolist())
-            yield pd.DataFrame(
-                {
-                    "id_a": pd.Series(out_a, dtype=object),
-                    "id_b": pd.Series(out_b, dtype=object),
-                    "hamming": pd.Series(out_h, dtype="int32"),
-                }
-            )
-
-    # Preserve the caller's id type (string/binary/long doc ids all work),
-    # exactly as simhash_fingerprints/minhash_signatures derive theirs.
-    return (
-        buckets.select("members")
-        .mapInPandas(pairs, f"id_a {idt}, id_b {idt}, hamming int")
-        .dropDuplicates(["id_a", "id_b"])
+        for b in range(radius + 1)
+    ]
+    keyed = fp.select("id", "fingerprint", F.posexplode(F.array(*blocks)).alias("blk", "bv"))
+    pairs = bucket_pairs(keyed, ["blk", "bv"], max_bucket_size, payload=["fingerprint"])
+    hamming = F.bit_count(F.col("fingerprint_a").bitwiseXOR(F.col("fingerprint_b")))
+    return pairs.select("id_a", "id_b", hamming.alias("hamming")).where(
+        F.col("hamming") <= radius
     )

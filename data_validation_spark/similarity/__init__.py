@@ -16,6 +16,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from data_validation_spark.dedup.embedding import _cosine_expr
 from data_validation_spark.util import local_frame
 
 
@@ -27,10 +28,15 @@ def cosine_topk_bruteforce(
     spark = df.sparkSession
     qdf = F.broadcast(local_frame(spark, queries, "query_id long, qv array<float>"))
     joined = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).crossJoin(qdf)
-    dot = F.aggregate(F.zip_with("v", "qv", lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x)
-    nv = F.sqrt(F.aggregate("v", F.lit(0.0), lambda s, x: s + x * x))
-    nq = F.sqrt(F.aggregate("qv", F.lit(0.0), lambda s, x: s + x * x))
-    scored = joined.select("query_id", "id", (dot / (nv * nq)).alias("cosine"))
+    return _top_k(joined, k)
+
+
+def _top_k(joined: DataFrame, k: int) -> DataFrame:
+    """(query_id, rnk, id, cosine): the ``k`` rows of ``joined`` (query_id,
+    id, v, qv) nearest each query by cosine, ties broken by id."""
+    scored = joined.select(
+        "query_id", "id", _cosine_expr(F.col("v"), F.col("qv")).alias("cosine")
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -137,7 +143,7 @@ def cosine_topk_ivf(
             )
 
     bucketed = df.select(id_col, vec_col).mapInPandas(
-        assign, "id long, bucket int, v array<float>"
+        assign, f"id {df.schema[id_col].dataType.simpleString()}, bucket int, v array<float>"
     )
 
     qc = []
@@ -150,14 +156,4 @@ def cosine_topk_ivf(
             qc.append((qid, int(b), [float(x) for x in qv]))
     qdf = F.broadcast(local_frame(spark, qc, "query_id long, bucket int, qv array<float>"))
 
-    joined = bucketed.join(qdf, on="bucket")
-    dot = F.aggregate(F.zip_with("v", "qv", lambda a, b: a * b), F.lit(0.0), lambda s, x: s + x)
-    nv = F.sqrt(F.aggregate("v", F.lit(0.0), lambda s, x: s + x * x))
-    nq = F.sqrt(F.aggregate("qv", F.lit(0.0), lambda s, x: s + x * x))
-    scored = joined.select("query_id", "id", (dot / (nv * nq)).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "rnk", "id", "cosine")
-    )
+    return _top_k(bucketed.join(qdf, on="bucket"), k)

@@ -1,5 +1,7 @@
 """Dedup (exact / minhash / simhash / embedding) and similarity-search tests."""
 
+from itertools import combinations
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -173,3 +175,99 @@ def test_similarity_ivf_recall(vectors):
     ids = [r["id"] for r in res]
     assert ids[0] == 0
     assert 100 in ids and 101 in ids  # near-dups land in the probed buckets
+
+
+def _string_ids(vectors):
+    return vectors.select(
+        F.concat(F.lit("v-"), F.col("vec_id").cast("string")).alias("vec_id"), "embedding"
+    )
+
+
+def test_embedding_lsh_string_ids(vectors):
+    # The hyperplane pass takes its id type from the input, like
+    # minhash_signatures.
+    res = cosine_pairs_lsh(
+        _string_ids(vectors), "vec_id", "embedding", dim=16, threshold=0.99, bits=8,
+        num_tables=6,
+    )
+    assert res.schema["id_a"].dataType.simpleString() == "string"
+    pairs = {(r["id_a"], r["id_b"]) for r in res.collect()}
+    assert ("v-0", "v-100") in pairs and ("v-0", "v-101") in pairs
+
+
+def test_similarity_ivf_string_ids(vectors):
+    q = vectors.where(F.col("vec_id") == 0).collect()[0]["embedding"]
+    res = cosine_topk_ivf(
+        _string_ids(vectors), "vec_id", "embedding", [(0, q)], k=3, num_centroids=4,
+        nprobe=2,
+    ).collect()
+    ids = [r["id"] for r in res]
+    assert ids[0] == "v-0"
+    assert "v-100" in ids and "v-101" in ids
+
+
+@pytest.fixture(scope="module")
+def vectors_with_zeros(vectors):
+    zeros = vectors.sparkSession.createDataFrame(
+        [(200, [0.0] * 16), (201, [0.0] * 16)], vectors.schema
+    )
+    return vectors.unionByName(zeros)
+
+
+def test_cosine_pairs_zero_vector(vectors, vectors_with_zeros):
+    # A zero vector has cosine 0.0 with every vector, also under ANSI mode,
+    # where a bare division raises DIVIDE_BY_ZERO. The two zero vectors share
+    # every LSH bucket, so the LSH verify meets a zero vector too.
+    every = cosine_pairs_bruteforce(vectors_with_zeros, "vec_id", "embedding", -1.0).collect()
+    assert {r["cosine"] for r in every if 200 in (r["id_a"], r["id_b"])} == {0.0}
+
+    def pairs(op, df, **kw):
+        return {(r["id_a"], r["id_b"]) for r in
+                op(df, "vec_id", "embedding", threshold=0.99, **kw).collect()}
+
+    for op, kw in ((cosine_pairs_bruteforce, {}),
+                   (cosine_pairs_lsh, dict(dim=16, bits=8, num_tables=6))):
+        assert pairs(op, vectors_with_zeros, **kw) == pairs(op, vectors, **kw)
+
+
+def test_cosine_topk_zero_vector(vectors, vectors_with_zeros):
+    # Zero vectors in the data score 0.0; a zero query scores 0.0 everywhere,
+    # so its top-k is the k lowest ids.
+    q = vectors.where(F.col("vec_id") == 0).collect()[0]["embedding"]
+    queries = [(0, q), (1, [0.0] * 16)]
+    for res in (
+        cosine_topk_bruteforce(vectors_with_zeros, "vec_id", "embedding", queries, k=3),
+        cosine_topk_ivf(vectors_with_zeros, "vec_id", "embedding", queries, k=3,
+                        num_centroids=4, nprobe=4),
+    ):
+        rows = sorted(res.collect(), key=lambda r: (r["query_id"], r["rnk"]))
+        assert [r["id"] for r in rows if r["query_id"] == 0] == [0, 101, 100]
+        assert [(r["id"], r["cosine"]) for r in rows if r["query_id"] == 1] == [
+            (0, 0.0), (1, 0.0), (2, 0.0)
+        ]
+
+
+@pytest.mark.parametrize("operator", ["minhash", "simhash", "embedding"])
+def test_bucket_cap_boundary(spark, operator):
+    # n identical rows share every bucket: up to max_bucket_size members the
+    # bucket yields all C(n, 2) pairs, one more member and it yields none.
+    cap = 5
+
+    def pairs(n):
+        if operator == "embedding":
+            df = spark.createDataFrame(
+                [(i, [1.0, 2.0, 3.0, 4.0]) for i in range(n)], "id long, v array<float>"
+            )
+            out = cosine_pairs_lsh(df, "id", "v", dim=4, bits=4, num_tables=2,
+                                   max_bucket_size=cap)
+        else:
+            df = spark.createDataFrame(
+                [(i, "alpha beta gamma delta epsilon zeta") for i in range(n)],
+                "id long, text string",
+            )
+            op = minhash_lsh_candidates if operator == "minhash" else simhash_near_dups
+            out = op(df, "id", "text", max_bucket_size=cap)
+        return {(r["id_a"], r["id_b"]) for r in out.collect()}
+
+    assert pairs(cap) == set(combinations(range(cap), 2))
+    assert pairs(cap + 1) == set()

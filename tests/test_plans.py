@@ -347,3 +347,26 @@ def test_unweighted_sketch_long_pass_stays_in_jvm(spark, tmp_path):
     plan = plan_of(union)
     assert "MapInPandas" not in plan and "FlatMapGroupsInPandas" not in plan
     assert "approx_top_k_accumulate" in plan and "theta_sketch_agg" in plan
+
+
+def test_lsh_pairing_stays_in_jvm(spark):
+    """MinHash, SimHash and embedding LSH pair the members of a bucket with
+    Spark's own operators: the only Python node in each plan is its one
+    signature, fingerprint or hyperplane ``MapInPandas``."""
+    from data_validation_spark.dedup.embedding import cosine_pairs_lsh
+    from data_validation_spark.dedup.minhash import minhash_lsh_candidates
+    from data_validation_spark.dedup.simhash import simhash_near_dups
+
+    docs = spark.createDataFrame([(0, "a b c d"), (1, "a b c e")], "id long, text string")
+    vecs = spark.createDataFrame([(0, [1.0, 0.0]), (1, [1.0, 0.1])], "id long, v array<float>")
+    for out in (
+        minhash_lsh_candidates(docs, "id", "text"),
+        simhash_near_dups(docs, "id", "text"),
+        cosine_pairs_lsh(vecs, "id", "v", dim=2),
+    ):
+        plan = out._sc._jvm.PythonSQLUtils.explainString(
+            out._jdf.queryExecution(), "simple"
+        )
+        nodes = [line.lstrip(" :+-").split(" ")[0] for line in plan.splitlines()]
+        python = [n for n in nodes if "Pandas" in n or "Python" in n or "Arrow" in n]
+        assert python == ["MapInPandas"], plan
