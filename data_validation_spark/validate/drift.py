@@ -59,7 +59,9 @@ def jensen_shannon_divergence_counts(
     b_sum = sum(map_2.values())
     if a_sum <= 0 or b_sum <= 0:
         return None
-    keys = set(map_1) | set(map_2)
+    # sorted, not set order: the float sum must not depend on string hashing,
+    # which changes from process to process
+    keys = sorted(set(map_1) | set(map_2))
     kl_sum = 0.0
     for k in keys:
         pa = map_1.get(k, 0.0) / a_sum

@@ -64,6 +64,32 @@ def test_jsd_counts_hand_computed():
     assert jensen_shannon_divergence_counts(m1, m2) == pytest.approx(expected)
 
 
+def test_jsd_counts_independent_of_string_hashing():
+    """The sum runs over the keys in sorted order, so two processes with
+    different string-hash seeds get bit-equal values (regression: set order
+    changed the last bit from one process to the next)."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "from data_validation_spark.validate.drift import "
+        "jensen_shannon_divergence_counts as jsd\n"
+        "a = {f'v{i}': float(i % 7 + 1) for i in range(300)}\n"
+        "b = {f'v{i}': float(i % 11 + 1) for i in range(50, 350)}\n"
+        "print(repr(jsd(a, b)))\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = {
+        subprocess.run(
+            [sys.executable, "-c", code], cwd=root, check=True, capture_output=True,
+            text=True, env={**os.environ, "PYTHONHASHSEED": seed},
+        ).stdout
+        for seed in ("1", "2", "3")
+    }
+    assert len(out) == 1, out
+
+
 def test_jsd_histograms_identical_zero():
     h = H([(0, 1, 10), (1, 2, 20)])
     assert jensen_shannon_divergence_histograms(h, H([(0, 1, 10), (1, 2, 20)])) == pytest.approx(

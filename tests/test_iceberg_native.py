@@ -238,6 +238,12 @@ def test_pruning_empty_plan_keeps_schema(spark, ice_table):
     df = ice.read_table(spark, ice_table, partition_filter={"day_id": 99})
     assert df.count() == 0
     assert sorted(df.columns) == ["day_id", "image_id", "v"]
+    _assert_local_relation(df)
+
+
+def _assert_local_relation(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 def test_table_partitions_for_ledger(ice_table):
@@ -431,7 +437,7 @@ def test_add_column_preserves_schema_history(spark, tmp_path):
     assert ice.load_table(root).current_snapshot()["schema-id"] == old_sid + 1
 
 
-def test_positional_delete_sequence_condition(spark, tmp_path):
+def test_positional_delete_sequence_condition(spark, tmp_path, monkeypatch):
     """A position delete applies only to data files with data_seq ≤ the
     delete's sequence number (spec): a data file (re-)registered at a HIGHER
     sequence keeps its rows even when an old delete file names the same
@@ -467,9 +473,10 @@ def test_positional_delete_sequence_condition(spark, tmp_path):
         out = ice.read_files(spark, [entry], deletes, schema)
         return sorted(r["id"] for r in out.collect())
 
-    assert rows(delete_seq=5) == [11, 12]   # del_seq ≥ data_seq → applies
-    assert rows(delete_seq=7) == [11, 12]
-    assert rows(delete_seq=3) == [10, 11, 12]  # older delete → file immune
+    for _path in _delete_paths(monkeypatch):
+        assert rows(delete_seq=5) == [11, 12]   # del_seq ≥ data_seq → applies
+        assert rows(delete_seq=7) == [11, 12]
+        assert rows(delete_seq=3) == [10, 11, 12]  # older delete → file immune
 
 
 def test_iceberg_ledger_refuses_foreign_table(spark, tmp_path):
@@ -527,8 +534,22 @@ def test_add_column_schema_evolution(spark, tmp_path):
 # --------------------------------------------------------------------------
 # v2 merge-on-read: positional deletes
 # --------------------------------------------------------------------------
-def test_delete_rows_merge_on_read(spark, tmp_path):
-    root = str(tmp_path / "mor_tbl")
+def _delete_paths(monkeypatch):
+    """Run the loop body once per positional-delete path: the driver-built
+    scan filter (the tests' delete sets are far under the bound), then the
+    anti-join, forced by a bound of 0. Yields the path's name."""
+    yield "filter"
+    with monkeypatch.context() as m:
+        m.setattr(ice, "_FILTER_DELETE_BOUND", 0)
+        yield "join"
+
+
+def test_delete_rows_merge_on_read(spark, tmp_path, monkeypatch):
+    for path in _delete_paths(monkeypatch):
+        _delete_rows_merge_on_read(spark, str(tmp_path / path / "mor_tbl"))
+
+
+def _delete_rows_merge_on_read(spark, root):
     df = spark.range(0, 200).selectExpr(
         "id", "cast(id % 4 as int) as day_id", "cast(id * 2 as double) as v"
     )
@@ -579,32 +600,38 @@ def _find_node(node, name: str, join_type: str):
     return None
 
 
-@pytest.mark.parametrize("broadcast_threshold", [None, "-1"])
-def test_positional_delete_plan(spark, tmp_path, broadcast_threshold):
-    """The delete-side file map is a local relation (no Python job on every
-    action) and the delete side carries its file size, so Catalyst
-    broadcasts a small delete set: BroadcastHashJoin LeftAnti with no
-    shuffle on the data side. With broadcasts off the same read falls back
-    to a shuffled anti-join; both give the rows of the delete tests."""
-    root = str(tmp_path / "mor_plan")
+def _deleted_rows_plan(spark, root):
+    """Rows and executed plan of a read after deleting ``id % 10 = 3``."""
     df = spark.range(0, 200).selectExpr(
         "id", "cast(id % 4 as int) as day_id", "cast(id * 2 as double) as v"
     )
     ice.write_table(spark, df, root, partition_by=["day_id"])
     ice.delete_rows(spark, root, "id % 10 = 3")
+    back = ice.read_table(spark, root).select("id", "v")
+    rows = sorted((r["id"], r["v"]) for r in back.collect())
+    assert rows == [(i, i * 2.0) for i in range(200) if i % 10 != 3]
+    return back._jdf.queryExecution().executedPlan()
 
+
+@pytest.mark.parametrize("broadcast_threshold", [None, "-1"])
+def test_positional_delete_plan(spark, tmp_path, monkeypatch, broadcast_threshold):
+    """On the anti-join path (forced here by a bound of 0) the file map is a
+    local relation (no Python job on every action) and the delete side
+    carries its file size, so Catalyst broadcasts a small delete set:
+    BroadcastHashJoin LeftAnti with no shuffle on the data side. With
+    broadcasts off the same read falls back to a shuffled anti-join; both
+    give the rows of the delete tests."""
+    monkeypatch.setattr(ice, "_FILTER_DELETE_BOUND", 0)
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     if broadcast_threshold is not None:
         spark.conf.set(key, broadcast_threshold)
     try:
-        back = ice.read_table(spark, root).select("id", "v")
-        rows = sorted((r["id"], r["v"]) for r in back.collect())
-        plan = back._jdf.queryExecution().executedPlan().executedPlan()
+        adaptive = _deleted_rows_plan(spark, str(tmp_path / "mor_plan"))
+        plan = adaptive.executedPlan()  # the final plan under AQE
     finally:
         spark.conf.set(key, old)
 
-    assert rows == [(i, i * 2.0) for i in range(200) if i % 10 != 3]
     text = plan.toString()
     assert "ExistingRDD" not in text and "LocalTableScan" in text
     if broadcast_threshold is None:
@@ -615,6 +642,23 @@ def test_positional_delete_plan(spark, tmp_path, broadcast_threshold):
         assert re.search(r"(?<!Broadcast)Exchange", data_side) is None, text
     else:
         assert _find_node(plan, "SortMergeJoin", "LeftAnti") is not None, text
+
+
+def test_positional_delete_filter_plan(spark, tmp_path):
+    """Under the bound, positional deletes are one filter on the data scan:
+    no join, no broadcast, and the same rows as the join path."""
+    text = _deleted_rows_plan(spark, str(tmp_path / "mor_filter_plan")).toString()
+    assert "Join" not in text and "BroadcastExchange" not in text, text
+    assert "Filter" in text, text
+
+
+def test_deletes_apply_under_uri_escaped_paths(spark, tmp_path, monkeypatch):
+    """Spark names data files URI-escaped in ``_metadata.file_path`` (a space
+    as %20, '%' as %25, '+' as is); the plan holds them as written. Both
+    sides must agree, or ``delete_rows`` matches nothing and the read keeps
+    deleted rows (regression: a table root with a space or a '%' did)."""
+    for path in _delete_paths(monkeypatch):
+        _delete_rows_merge_on_read(spark, str(tmp_path / path / "a b %41 c+d 'q'" / "tbl"))
 
 
 def test_deleted_table_moves_and_ledger(spark, tmp_path):
@@ -642,6 +686,47 @@ def test_deleted_table_moves_and_ledger(spark, tmp_path):
         spark, moved, default_image_schema(), str(tmp_path / "ledger")
     )
     assert sum(r.num_examples for r in recs.values()) == expect
+
+
+def test_positional_deletes_add_no_jobs_to_partitioned_run(spark, tmp_path):
+    """A small positional-delete snapshot costs a partitioned validation no
+    Spark job: the run at the delete snapshot submits no more jobs than the
+    run at the pre-delete snapshot (regression: the delete files' schema
+    inference and each branch's broadcasts took 24 more jobs per call on the
+    bench table), and leaves nothing persisted."""
+    import uuid
+
+    from data_validation_spark.datagen import images_df
+    from data_validation_spark.io.checkpoint import run_iceberg_partitioned
+    from data_validation_spark.pipeline import default_image_schema
+
+    root = str(tmp_path / "pin_jobs")
+    ice.write_table(spark, images_df(spark, 200, "clean", partitions=2), root,
+                    partition_by=[("image_id", "bucket[2]")])
+    assert len(ice.table_partitions(root)) == 2
+    delete_snap = ice.delete_rows(spark, root, "image_id LIKE '%9'")
+    sc = spark.sparkContext
+    listener_bus = sc._jsc.sc().listenerBus()
+
+    def jobs(snapshot_id):
+        group = f"pin-{uuid.uuid4().hex[:8]}"
+        persisted = set(sc._jsc.getPersistentRDDs().keys())
+        sc.setJobGroup(group, "job count pin")
+        try:
+            run_iceberg_partitioned(
+                spark, root, default_image_schema(),
+                str(tmp_path / f"ledger-{snapshot_id}"), snapshot_id=snapshot_id,
+            )
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        listener_bus.waitUntilEmpty()
+        assert set(sc._jsc.getPersistentRDDs().keys()) == persisted
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    before = jobs(1)
+    assert 0 < jobs(delete_snap) <= before
 
 
 def test_equality_deletes_with_sequence_ordering(spark, tmp_path):
@@ -726,7 +811,9 @@ def test_orc_data_files_read(spark, tmp_path):
     assert back.selectExpr("sum(v) s").first()["s"] == sum(float(i) for i in range(50))
 
 
-def test_metadata_tables(spark, ice_table):
+def test_metadata_tables(spark, ice_table, tmp_path):
+    for kind in ("snapshots", "history", "files", "partitions"):
+        _assert_local_relation(ice.metadata_table(spark, ice_table, kind))
     snaps = ice.metadata_table(spark, ice_table, "snapshots").collect()
     assert [s["snapshot_id"] for s in snaps] == [1, 2]
     assert snaps[1]["parent_id"] == 1
@@ -742,8 +829,18 @@ def test_metadata_tables(spark, ice_table):
     with pytest.raises(ValueError, match="unknown metadata table"):
         ice.metadata_table(spark, ice_table, "nope")
 
+    # delete files report the manifest's size and format
+    root = str(tmp_path / "meta_del")
+    ice.write_table(spark, spark.range(0, 20).selectExpr("id"), root)
+    ice.delete_rows(spark, root, "id % 5 = 0")
+    dels = [r for r in ice.metadata_table(spark, root, "files").collect() if r["content"]]
+    assert dels and sum(r["record_count"] for r in dels) == 4
+    for r in dels:
+        assert r["file_format"] == "PARQUET"
+        assert r["file_size_in_bytes"] == os.path.getsize(r["file_path"]) > 0
 
-def test_delete_before_move_survives_move(spark, tmp_path):
+
+def test_delete_before_move_survives_move(spark, tmp_path, monkeypatch):
     """Positional deletes written BEFORE a table move must still apply after
     it: delete files name data files by their manifest (stored) paths, and
     the stored→actual mapping rebases both sides (regression: writing
@@ -754,13 +851,13 @@ def test_delete_before_move_survives_move(spark, tmp_path):
     df = spark.range(0, 60).selectExpr("id", "cast(id as double) as v")
     ice.write_table(spark, df, root)
     ice.delete_rows(spark, root, "id % 6 = 1")
-    expect = ice.read_table(spark, root).count()
-    assert expect == 50
     moved = str(tmp_path / "post_move")
     _sh.copytree(root, moved)
-    got = ice.read_table(spark, moved)
-    assert got.count() == 50
-    assert got.filter("id % 6 = 1").count() == 0
+    for _path in _delete_paths(monkeypatch):
+        assert ice.read_table(spark, root).count() == 50
+        got = ice.read_table(spark, moved)
+        assert got.count() == 50
+        assert got.filter("id % 6 = 1").count() == 0
     # delete-file rows name stored paths == manifest paths (spec identity)
     _, deletes = ice.plan_scan(moved)
     stored = {e.stored_path for e in ice.plan_scan(moved)[0]}
@@ -772,10 +869,10 @@ def test_delete_before_move_survives_move(spark, tmp_path):
     assert del_paths <= stored
 
 
-def test_entry_level_sequence_number_inheritance(spark, tmp_path):
+def test_entry_level_sequence_number_inheritance(spark, tmp_path, monkeypatch):
     """Foreign compacted manifests carry per-entry sequence numbers for
     EXISTING entries; plan_scan must prefer the entry value over the
-    manifest's (else equality deletes mis-order against rewritten files)."""
+    manifest's (else deletes mis-order against rewritten files)."""
     root = str(tmp_path / "seq_tbl")
     df = spark.range(0, 10).selectExpr("id", "cast(id as double) as v")
     ice.write_table(spark, df, root)  # manifest seq 1
@@ -808,5 +905,8 @@ def test_entry_level_sequence_number_inheritance(spark, tmp_path):
     meta["last-sequence-number"] = 1
     ice._commit_metadata(str(tmp_path / "seq_tbl" / "metadata"), meta)
     ice.delete_rows_equality(spark, root, keys, ["id"])
-    left = {r["id"] for r in ice.read_table(spark, root).collect()}
-    assert left == set(range(10)) - {3}
+    # and a positional delete (seq 3 ≥ the entries' 1) stacks on it
+    ice.delete_rows(spark, root, "id = 5")
+    for _path in _delete_paths(monkeypatch):
+        left = {r["id"] for r in ice.read_table(spark, root).collect()}
+        assert left == set(range(10)) - {3, 5}
