@@ -599,9 +599,15 @@ _URI_SCHEME = r"^[a-zA-Z][a-zA-Z0-9+.-]*:/+"
 
 # Positional-delete rows (summed manifest record_count) up to which
 # read_files applies positional deletes as one scan filter built on the
-# driver; above it they stay a distributed anti-join. On a 4-core host, over
-# 2M rows, a NOT IN of 10k longs filtered in 0.8 s and one of 100k in 6.4 s.
-_FILTER_DELETE_BOUND = 10_000
+# driver (``_position_delete_sql``); above it they stay a distributed
+# anti-join. Driver memory sets the bound, not speed: Spark's SQL status
+# store keeps the plan text of its last spark.sql.ui.retainedExecutions
+# (default 1000) executions, and the filter's literals add about 370 bytes
+# per deleted row to each execution over the read: 0.36 MB at 1k rows,
+# 3.5 MB at 10k. Speed alone would allow about 10k: reading 2M rows on 4
+# cores with 1k / 10k / 30k deleted rows took 0.30 / 1.06 / 3.0 s through
+# the filter and 1.47 / 1.40 / 1.52 s through the anti-join.
+_FILTER_DELETE_BOUND = 1_000
 
 # The spec's positional-delete file schema.
 _POSITION_DELETE_DDL = "file_path string, pos long"
@@ -619,30 +625,16 @@ def _normalize_path_col(col):
     return F.regexp_replace(col, _URI_SCHEME, "/")
 
 
-def _file_keys(scan, entries: list) -> list[str]:
-    """Each entry's data file as ``_normalize_path_col(_metadata.file_path)``
-    names it in ``scan``, the parquet scan over exactly these entries.
+def _scan_path_col():
+    """``_metadata.file_path`` as ``_normalize_path`` names the same file in
+    a plan. Spark reports it URI-escaped (a space as %20, '%' as %25, '+'
+    kept as is); plans hold paths as written. ``url_decode`` undoes the
+    escaping once a bare '+', which it would turn into a space, is escaped
+    too."""
+    from pyspark.sql import functions as F
 
-    Spark reports file paths URI-escaped (a space as %20, '%' as %25, '+'
-    kept as is); plans hold them as written. The scan's own file list
-    carries the escaped form, and unescaping it (never turning '+' into a
-    space, as ``url_decode`` does) matches it to its entry, so the data side
-    and the driver side agree without re-implementing Hadoop's escaping. A
-    data file the scan does not list raises instead of silently keeping its
-    deleted rows."""
-    from urllib.parse import unquote
-
-    escaped = {}
-    for f in scan.inputFiles():
-        key = _normalize_path(f)
-        escaped[os.path.abspath(unquote(key))] = key
-    keys = []
-    for e in entries:
-        plain = os.path.abspath(_normalize_path(e.path))
-        if plain not in escaped:
-            raise ValueError(f"data file {e.path} is not among the scan's files")
-        keys.append(escaped[plain])
-    return keys
+    path = _normalize_path_col(F.col("_metadata.file_path"))
+    return F.url_decode(F.replace(path, F.lit("+"), F.lit("%2B")))
 
 
 def _sql_string(s: str) -> str:
@@ -650,7 +642,7 @@ def _sql_string(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _position_delete_sql(entries: list, keys: list[str], pos_deletes: list) -> Optional[str]:
+def _position_delete_sql(entries: list, pos_deletes: list) -> Optional[str]:
     """SQL over ``__dv_file`` / ``__dv_pos`` that is true for a row the
     positional deletes remove, or None when none of them names a data file
     of this read. The delete files are read on the driver; a data file gets
@@ -661,7 +653,9 @@ def _position_delete_sql(entries: list, keys: list[str], pos_deletes: list) -> O
     into one hash-set lookup per row however many files carry deletes (a
     ``CASE`` branch per file failed code generation at 200 files), and the
     values travel as one SQL string, not as one py4j call each. The key is
-    unambiguous: the position is all digits and comes first."""
+    unambiguous: the position is all digits and comes first. An ``IN`` over
+    the deleted positions alone goes first, so only rows at such a position
+    build the string key."""
     import pyarrow.parquet as pq
 
     named: dict[str, list[tuple[int, int]]] = {}  # stored path → (pos, seq)
@@ -670,13 +664,18 @@ def _position_delete_sql(entries: list, keys: list[str], pos_deletes: list) -> O
         for path, pos in zip(rows["file_path"], rows["pos"]):
             named.setdefault(_normalize_path(path), []).append((pos, d.seq))
     deleted = set()
-    for e, key in zip(entries, keys):
+    for e in entries:
+        key = _normalize_path(e.path)
         stored = _normalize_path(e.stored_path or e.path)
-        deleted.update(f"{p}:{key}" for p, seq in named.get(stored, ()) if seq >= e.data_seq)
+        deleted.update((p, key) for p, seq in named.get(stored, ()) if seq >= e.data_seq)
     if not deleted:
         return None
-    values = ",".join(map(_sql_string, sorted(deleted)))
-    return f"concat(__dv_pos, ':', __dv_file) IN ({values})"
+    positions = ",".join(map(str, sorted({p for p, _ in deleted})))
+    values = ",".join(_sql_string(f"{p}:{key}") for p, key in sorted(deleted))
+    return (
+        f"__dv_pos IN ({positions}) AND "
+        f"concat(__dv_pos, ':', __dv_file) IN ({values})"
+    )
 
 
 def read_files(spark, entries: list, deletes: list, schema: dict):
@@ -727,13 +726,12 @@ def read_files(spark, entries: list, deletes: list, schema: dict):
     base_cols = df.columns
     pos_deletes = [d for d in deletes if d.content == 1]
     eq_deletes = [d for d in deletes if d.content == 2]
-    keys = _file_keys(df, entries)
-    df = df.withColumn(
-        "__dv_file", _normalize_path_col(F.col("_metadata.file_path"))
-    ).withColumn("__dv_pos", F.col("_metadata.row_index"))
+    df = df.withColumn("__dv_file", _scan_path_col()).withColumn(
+        "__dv_pos", F.col("_metadata.row_index")
+    )
 
     if pos_deletes and sum(d.record_count for d in pos_deletes) <= _FILTER_DELETE_BOUND:
-        deleted = _position_delete_sql(entries, keys, pos_deletes)
+        deleted = _position_delete_sql(entries, pos_deletes)
         if deleted is not None:
             df = df.filter(f"NOT ({deleted})")
         pos_deletes = []
@@ -745,8 +743,8 @@ def read_files(spark, entries: list, deletes: list, schema: dict):
         file_map = local_frame(
             spark,
             [
-                (key, _normalize_path(e.stored_path or e.path), e.data_seq)
-                for e, key in zip(entries, keys)
+                (_normalize_path(e.path), _normalize_path(e.stored_path or e.path), e.data_seq)
+                for e in entries
             ],
             "__dv_file string, __dv_stored string, __dv_seq long",
         )
@@ -1318,14 +1316,15 @@ def delete_rows(spark, table_path: str, predicate: str) -> Optional[int]:
     # spec's identity for a data file, and what read_files' file map keys
     # on. Rebased actual paths would orphan the deletes after a table move
     # (and break foreign readers).
-    scan = spark.read.schema(_schema_to_ddl(schema)).parquet(*[e.path for e in entries])
     stored_map = local_frame(
         spark,
-        [(key, e.stored_path or e.path) for e, key in zip(entries, _file_keys(scan, entries))],
+        [(_normalize_path(e.path), e.stored_path or e.path) for e in entries],
         "__f string, file_path string",
     )
     matches = (
-        scan.withColumn("__f", _normalize_path_col(F.col("_metadata.file_path")))
+        spark.read.schema(_schema_to_ddl(schema))
+        .parquet(*[e.path for e in entries])
+        .withColumn("__f", _scan_path_col())
         .withColumn("__p", F.col("_metadata.row_index"))
         .filter(predicate)
         .join(F.broadcast(stored_map), "__f")

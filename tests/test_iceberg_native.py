@@ -658,7 +658,7 @@ def test_deletes_apply_under_uri_escaped_paths(spark, tmp_path, monkeypatch):
     sides must agree, or ``delete_rows`` matches nothing and the read keeps
     deleted rows (regression: a table root with a space or a '%' did)."""
     for path in _delete_paths(monkeypatch):
-        _delete_rows_merge_on_read(spark, str(tmp_path / path / "a b %41 c+d 'q'" / "tbl"))
+        _delete_rows_merge_on_read(spark, str(tmp_path / path / "a b %41 c+d 'q' é" / "tbl"))
 
 
 def test_deleted_table_moves_and_ledger(spark, tmp_path):
