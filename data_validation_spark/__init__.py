@@ -7,8 +7,8 @@ A from-scratch reimplementation of the capabilities of tensorflow/data-validatio
   per-column statistics — counts, presence/valency, min/max/mean/stddev,
   approximate quantiles (``percentile_approx`` grids), top-k / unique counts
   (exact, or in sketch mode Spark's ``approx_top_k`` frequent-items and
-  ``theta_sketch_agg`` KMV aggregates; weighted top-k and quantiles use
-  count-min and t-digest sketches), string/bytes stats, and semantic-domain
+  ``theta_sketch_agg`` KMV aggregates; weighted quantiles use a t-digest),
+  string/bytes stats, and semantic-domain
   stats (image format histograms, natural-language heuristics, time formats).
   Built-in Catalyst aggregate expressions cover everything they can express
   (JVM-side, whole-stage codegen); mergeable sketch accumulators run as

@@ -57,6 +57,7 @@ import glob
 import json
 import os
 import re
+import shutil
 import struct
 import time
 import uuid as uuidlib
@@ -680,23 +681,14 @@ def _position_delete_sql(entries: list, pos_deletes: list) -> Optional[str]:
 
 def read_files(spark, entries: list, deletes: list, schema: dict):
     """One ``spark.read.parquet`` over planned data files, with deletes
-    applied — merge-on-read.
+    applied — merge-on-read (see ``_merge_on_read``)."""
+    if not deletes:
+        return _scan_files(spark, entries, schema)
+    return _merge_on_read(spark, entries, deletes, schema).drop("__dv_file", "__dv_pos")
 
-    Delete rows name data files by their ORIGINAL stored paths, which a
-    plan maps to actual paths, so deletes stay correct for moved/copied
-    tables. Positional deletes summing at most ``_FILTER_DELETE_BOUND`` rows
-    are read on the driver and applied as one filter on (file, row
-    position) over the scan: no join and no job. Larger positional delete
-    sets, and all equality deletes, are read by Spark, never collected to
-    the driver, and anti-joined against the scan; a small file map from the
-    same plan (actual path → stored path, data sequence number), built on
-    the driver as a local relation and broadcast, attaches each row's
-    sequence. Catalyst broadcasts a small delete side and shuffles both
-    sides for a large one."""
-    from pyspark.sql import functions as F
 
-    from data_validation_spark.util import local_frame
-
+def _scan_files(spark, entries: list, schema: dict):
+    """One scan per file format over the planned data files."""
     flat = all(isinstance(f["type"], str) for f in schema.get("fields", []))
 
     def scan(fmt: str, paths: list[str]):
@@ -716,13 +708,35 @@ def read_files(spark, entries: list, deletes: list, schema: dict):
     df = frames[0]
     for extra in frames[1:]:
         df = df.unionByName(extra)
-    if not deletes:
-        return df
-    if set(by_fmt) != {"PARQUET"}:
+    return df
+
+
+def _merge_on_read(spark, entries: list, deletes: list, schema: dict):
+    """The scan of ``entries`` with ``deletes`` applied, plus each surviving
+    row's ``__dv_file`` (its data file, as ``_normalize_path`` names it)
+    and ``__dv_pos`` (its row position in that file).
+
+    Delete rows name data files by their ORIGINAL stored paths, which a
+    plan maps to actual paths, so deletes stay correct for moved/copied
+    tables. Positional deletes summing at most ``_FILTER_DELETE_BOUND`` rows
+    are read on the driver and applied as one filter on (file, row
+    position) over the scan: no join and no job. Larger positional delete
+    sets, and all equality deletes, are read by Spark, never collected to
+    the driver, and anti-joined against the scan; a small file map from the
+    same plan (actual path → stored path, data sequence number), built on
+    the driver as a local relation and broadcast, attaches each row's
+    sequence. Catalyst broadcasts a small delete side and shuffles both
+    sides for a large one."""
+    from pyspark.sql import functions as F
+
+    from data_validation_spark.util import local_frame
+
+    if any(e.file_format != "PARQUET" for e in entries):
         raise NotImplementedError(
             "merge-on-read deletes need parquet _metadata.row_index; this "
             "table mixes in ORC data files"
         )
+    df = _scan_files(spark, entries, schema)
     base_cols = df.columns
     pos_deletes = [d for d in deletes if d.content == 1]
     eq_deletes = [d for d in deletes if d.content == 2]
@@ -794,13 +808,17 @@ def read_files(spark, entries: list, deletes: list, schema: dict):
             cols = [id_to_name[i] for i in ids if i in id_to_name]
             if len(cols) != len(ids):
                 raise ValueError(f"equality delete references unknown field ids {ids}")
-            parts = []
-            for d in group:
-                parts.append(
-                    spark.read.parquet(d.path)
-                    .select(*cols)
-                    .withColumn("__del_seq", F.lit(d.seq).cast("long"))
-                )
+            # the key columns' types come from the table schema: no
+            # schema-inference job per delete file
+            key_ddl = _schema_to_ddl(
+                {"fields": [f for f in schema["fields"] if f["id"] in ids]}
+            )
+            parts = [
+                spark.read.schema(key_ddl).parquet(d.path)
+                .select(*cols)
+                .withColumn("__del_seq", F.lit(d.seq).cast("long"))
+                for d in group
+            ]
             dels = parts[0]
             for extra in parts[1:]:
                 dels = dels.unionByName(extra)
@@ -812,7 +830,7 @@ def read_files(spark, entries: list, deletes: list, schema: dict):
             joined = df.join(dels, cond, "left_anti")
             df = joined
 
-    return df.select(*base_cols)
+    return df.select(*base_cols, "__dv_file", "__dv_pos")
 
 
 _ICEBERG_TO_DDL = {
@@ -1308,10 +1326,9 @@ def delete_rows(spark, table_path: str, predicate: str) -> Optional[int]:
     from data_validation_spark.util import local_frame
 
     tm = load_table(table_path)
-    entries, _prior_deletes = plan_scan(table_path)
+    entries, deletes = plan_scan(table_path)
     if not entries:
         return None
-    schema = tm.schema()
     # Delete rows must name files by their MANIFEST (stored) paths — the
     # spec's identity for a data file, and what read_files' file map keys
     # on. Rebased actual paths would orphan the deletes after a table move
@@ -1319,16 +1336,15 @@ def delete_rows(spark, table_path: str, predicate: str) -> Optional[int]:
     stored_map = local_frame(
         spark,
         [(_normalize_path(e.path), e.stored_path or e.path) for e in entries],
-        "__f string, file_path string",
+        "__dv_file string, file_path string",
     )
+    # Match over the merge-on-read frame: rows the table's positional or
+    # equality deletes already removed are not deleted again.
     matches = (
-        spark.read.schema(_schema_to_ddl(schema))
-        .parquet(*[e.path for e in entries])
-        .withColumn("__f", _scan_path_col())
-        .withColumn("__p", F.col("_metadata.row_index"))
+        _merge_on_read(spark, entries, deletes, tm.schema())
         .filter(predicate)
-        .join(F.broadcast(stored_map), "__f")
-        .select("file_path", F.col("__p").cast("long").alias("pos"))
+        .join(F.broadcast(stored_map), "__dv_file")
+        .select("file_path", F.col("__dv_pos").cast("long").alias("pos"))
     )
     ddir = os.path.join(table_path, "data")
     out_dir = os.path.join(ddir, f"deletes-{uuidlib.uuid4()}")
@@ -1336,6 +1352,7 @@ def delete_rows(spark, table_path: str, predicate: str) -> Optional[int]:
     files = sorted(_list_parquet(out_dir))
     counts = {fp: pq.ParquetFile(fp).metadata.num_rows for fp in files}
     if sum(counts.values()) == 0:
+        shutil.rmtree(out_dir)
         return None
 
     return _commit_delete_snapshot(
@@ -1365,6 +1382,7 @@ def delete_rows_equality(spark, table_path: str, keys_df, key_cols: list[str]) -
     files = sorted(_list_parquet(out_dir))
     counts = {fp: pq.ParquetFile(fp).metadata.num_rows for fp in files}
     if sum(counts.values()) == 0:
+        shutil.rmtree(out_dir)
         return None
 
     return _commit_delete_snapshot(

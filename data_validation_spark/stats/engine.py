@@ -20,9 +20,10 @@ With ``options.use_sketches=True`` only the long pass's top-k/uniques branch
 changes: one ``groupBy(slice, feature)`` of Spark's own sketch aggregates —
 ``theta_sketch_agg`` (KMV, 16,384 entries) for uniques and
 ``approx_top_k_accumulate`` (frequent items, no false positives) for top-k.
+A weighted top-k ranks by weight in the exact mode's window in both modes.
 Quantiles are the same ``percentile_approx`` grids in both modes (KLL was
-rejected: its estimate moves with the partitioning). Only weighted top-k and
-weighted quantiles, which no Spark aggregate computes, run in Python — see
+rejected: its estimate moves with the partitioning). Only the weighted
+quantiles, which no Spark aggregate computes, run in Python — see
 ``sketches/runner.py``.
 """
 
@@ -44,8 +45,6 @@ from data_validation_spark.stats.quantiles import (
     quantiles_histogram,
 )
 from data_validation_spark.stats.sketches.runner import (
-    LARGE_BYTES_PLACEHOLDER,
-    LARGE_STRING_THRESHOLD,
     build_weighted_digest_frame,
     decode_weighted_digest,
 )
@@ -62,6 +61,11 @@ from data_validation_spark.stats.result import (
 )
 
 _QUANTILE_CUTS = 100  # fine grid size; 10× the default 10 histogram buckets
+
+# Sketch-mode top-k counts values over LARGE_STRING_THRESHOLD bytes as one
+# placeholder (see _sketch_topk_value).
+LARGE_STRING_THRESHOLD = 1024
+LARGE_BYTES_PLACEHOLDER = "__LARGE_BYTES__"
 
 # Test hook: when True, _run_long_pass records its fused union frame in
 # _last_union_frame for plan assertions. Off by default — retaining the
@@ -300,20 +304,27 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
                    weight_arg=None):
     """Top-k/uniques (exact, or sketched with ``use_sketches``) +
     array-element numeric stats + percentile grids + (when a weight column
-    is configured) weighted sketches — ONE Spark action.
+    is configured) weighted top-k, weighted array moments and the weighted
+    t-digests — ONE Spark action.
 
     Each concern builds a small (KB-scale) lazy result frame; their union is
     collected once. Catalyst compiles the union into column-disjoint
-    parquet scans — categorical columns for top-k, nested numeric columns
-    for array stats, scalar numeric columns for the percentile grids,
-    numeric (+ categorical in sketch mode) + weight columns for the weighted
-    sketches (plan-asserted in tests/test_plans.py) — so the long pass reads
-    each table column at most once and either mode submits exactly TWO jobs
-    (wide agg + this union) besides the bytes job. Round 4 ran the weighted
-    digest and the percentile grids as separate concurrent jobs; at 100 TB
-    each was an extra scan wave. In exact mode the grid branch is the only
-    ObjectHashAggregate (percentile_approx) and it is isolated in its own
-    union branch, so the other branches keep WholeStageCodegen."""
+    parquet scans — categorical (+ weight) columns for top-k, nested numeric
+    (+ weight) columns for array stats, scalar numeric columns for the
+    percentile grids, numeric + weight columns for the weighted t-digest
+    (plan-asserted in tests/test_plans.py) — so the long pass reads each
+    table column at most once per concern and either mode submits exactly
+    TWO jobs (wide agg + this union) besides the bytes job. Round 4 ran the
+    weighted digest and the percentile grids as separate concurrent jobs;
+    at 100 TB each was an extra scan wave. In exact mode the grid branch is
+    the only ObjectHashAggregate (percentile_approx) and it is isolated in
+    its own union branch, so the other branches keep WholeStageCodegen.
+
+    Top-k ranks values in one salted window (``_salted_topk``): by count
+    and, weighted, by weight in exact mode; by weight only in weighted
+    sketch mode, whose count top-k and uniques are Spark's sketch
+    aggregates. The weighted t-digest is the only Python node
+    (``sketches/runner.py``)."""
     long_df = E.long_format(
         df, plans, slice_col,
         weight_arg if weight_arg is not None else options.weight_column,
@@ -335,75 +346,51 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
 
     if any_topk and options.use_sketches:
         finals.append(_sketch_topk_frame(long_df, options))
+        if weighted:
+            # Weighted top-k: no Spark sketch takes a weight, so rank the
+            # (placeholder-collapsed) values by weight in the exact window.
+            # Uniques stay the theta sketch's: these rows carry none.
+            wcounts = (
+                long_df.where(F.col("str_value").isNotNull())
+                .groupBy("slice_key", "feature",
+                         _sketch_topk_value(options).alias("str_value"))
+                .agg(F.sum("weight").alias("wcnt"))
+            )
+            finals.append(_salted_topk(wcounts, k, {"wrank": "wcnt"}))
     elif any_topk:
         counts = (
             long_df.where(F.col("str_value").isNotNull())
             .groupBy("slice_key", "feature", "str_value")
             .agg(F.count(F.lit(1)).alias("cnt"), F.sum("weight").alias("wcnt"))
         )
-        # Exact two-phase salted top-k: a single window over (slice, feature)
-        # sorts every distinct value in ONE task per feature — a straggler at
-        # high cardinality. Phase A ranks within (slice, feature, salt) so the
-        # heavy sort spreads over `salts` tasks per feature and also carries
-        # each salt bucket's distinct-count; phase B ranks the ≤ salts×k
-        # survivors. Exact: the global top-k of a salt bucket's values is in
-        # that bucket's local top-k, and salt buckets partition the distinct
-        # values so their sizes sum to the exact unique count.
-        salts = 16
-        salt = F.pmod(F.xxhash64("str_value"), F.lit(salts))
         # With a weight column the reference emits BOTH an unweighted top-k
         # (string_stats.top_values) and a weighted one ranked by weighted
         # frequency (weighted_string_stats) — so rank by both orderings in
-        # the same pass (same shuffle partitioning, two sorts) and keep any
-        # row in either top-k. Tie-break parity: larger value wins.
-        wa = Window.partitionBy("slice_key", "feature", "salt").orderBy(
-            F.desc("cnt"), F.desc("str_value")
-        )
-        wa_cnt = Window.partitionBy("slice_key", "feature", "salt")
-        local = counts.withColumn("salt", salt).withColumn(
-            "r", F.row_number().over(wa)
-        )
-        keep = F.col("r") <= k
-        if weighted:
-            wa_w = Window.partitionBy("slice_key", "feature", "salt").orderBy(
-                F.desc("wcnt"), F.desc("str_value")
-            )
-            local = local.withColumn("rw", F.row_number().over(wa_w))
-            keep = keep | (F.col("rw") <= k)
-        local = local.withColumn("u", F.count(F.lit(1)).over(wa_cnt)).where(keep)
-        wb = Window.partitionBy("slice_key", "feature").orderBy(
-            F.desc("cnt"), F.desc("str_value")
-        )
-        wb_all = Window.partitionBy("slice_key", "feature")
-        final = local.withColumn("rank", F.row_number().over(wb)).withColumn(
-            "unique",
-            F.sum(F.when(F.col("r") == 1, F.col("u")).otherwise(0)).over(wb_all),
-        )
-        if weighted:
-            wb_w = Window.partitionBy("slice_key", "feature").orderBy(
-                F.desc("wcnt"), F.desc("str_value")
-            )
-            final = final.withColumn("wrank", F.row_number().over(wb_w))
-            final = final.where((F.col("rank") <= k) | (F.col("wrank") <= k))
-        else:
-            final = final.withColumn(
-                "wrank", F.lit(None).cast("int")
-            ).where(F.col("rank") <= k)
-        finals.append(
-            final.select(
-                F.lit("topk").alias("kind"), "slice_key", "feature",
-                "str_value", "cnt", "wcnt", "rank", "wrank", "unique",
-            )
-        )
+        # the same pass (same shuffle partitioning, two sorts).
+        ranks = {"rank": "cnt", "wrank": "wcnt"} if weighted else {"rank": "cnt"}
+        finals.append(_salted_topk(counts, k, ranks, unique=True))
 
     if any_arr:
         qs = [i / _QUANTILE_CUTS for i in range(_QUANTILE_CUTS + 1)]
         nv = F.col("num_value")
         finite = F.when(~nv.isin(float("inf"), float("-inf")), nv)
+        wsums = []
+        if weighted:
+            # weighted moments over the finite values plus the ±inf
+            # weights; assembly rebuilds the ±inf semantics from them
+            w = F.col("weight")
+            wsums = [
+                F.sum(F.when(finite.isNotNull(), w)).alias("w_cnt"),
+                F.sum(finite * w).alias("w_sum"),
+                F.sum(finite * finite * w).alias("w_sumsq"),
+                F.sum(F.when(nv == float("inf"), w)).alias("w_posinf"),
+                F.sum(F.when(nv == float("-inf"), w)).alias("w_neginf"),
+            ]
         finals.append(
             long_df.where(nv.isNotNull())
             .groupBy("slice_key", "feature")
             .agg(
+                *wsums,
                 F.min(nv).alias("min"),
                 F.max(nv).alias("max"),
                 # non-NaN values including ±inf — reference accumulator
@@ -461,18 +448,17 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
     if CAPTURE_UNION_FRAME:
         global _last_union_frame
         _last_union_frame = out
-    for r in out.collect():
+    for row in out.collect():
+        r = row.asDict()
         key = (r["slice_key"], r["feature"])
         if r["kind"] == "topk":
-            if r["rank"] <= k:
-                topk_data.setdefault(key, []).append(
-                    (r["rank"], r["str_value"], r["cnt"], r["wcnt"])
-                )
-            if weighted and r["wrank"] <= k:
-                wtopk_data.setdefault(key, []).append(
-                    (r["wrank"], r["str_value"], r["cnt"], r["wcnt"])
-                )
-            uniq_data[key] = r["unique"]
+            for rank, ranked in ((r.get("rank"), topk_data), (r.get("wrank"), wtopk_data)):
+                if rank is not None and rank <= k:
+                    ranked.setdefault(key, []).append(
+                        (rank, r["str_value"], r.get("cnt"), r["wcnt"])
+                    )
+            if r.get("unique") is not None:
+                uniq_data[key] = r["unique"]
         elif r["kind"] == "sktopk":
             # ties come back in arbitrary order: rank by (count desc, value
             # desc) here, the exact branch's order
@@ -482,16 +468,72 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
             ]
             uniq_data[key] = r["unique"]
         elif r["kind"] == "arr":
-            arr_data[key] = r.asDict()
+            arr_data[key] = r
         elif r["kind"] == "qgrid":
             # feature holds the wide-agg alias (e.g. "c3__quants")
             quant_long.setdefault(r["slice_key"], {})[r["feature"]] = r["quants"]
         else:  # wacc
-            wq_data[key], wtop = decode_weighted_digest(r["acc"], k)
-            if wtop:  # sketch mode; exact mode ranks it in the topk branch
-                wtopk_data[key] = wtop
+            wq_data[key] = decode_weighted_digest(r["acc"])
 
     return topk_data, uniq_data, arr_data, wtopk_data, wq_data, quant_long
+
+
+def _salted_topk(counts, k: int, ranks: dict, unique: bool = False):
+    """Exact top-k of ``counts`` rows ``(slice_key, feature, str_value,
+    <count columns>)``: the ``topk`` union rows, each value in the top ``k``
+    of (slice, feature) under at least one of ``ranks`` (output rank column
+    → count column it orders by, descending; ties rank the larger value
+    first), with every rank column filled in. ``unique`` adds the number of
+    distinct values of (slice, feature).
+
+    Two phases: a single window over (slice, feature) sorts every distinct
+    value in ONE task per feature — a straggler at high cardinality. Phase A
+    ranks within (slice, feature, salt) so the heavy sort spreads over
+    ``salts`` tasks per feature and also carries each salt bucket's
+    distinct-count; phase B ranks the ≤ salts×k survivors. Exact: the
+    global top-k of a salt bucket's values is in that bucket's local top-k,
+    and salt buckets partition the distinct values so their sizes sum to
+    the exact unique count."""
+    salts = 16
+    bucket = ("slice_key", "feature", "salt")
+    local = counts.withColumn("salt", F.pmod(F.xxhash64("str_value"), F.lit(salts)))
+    keep = F.lit(False)
+    for i, cnt in enumerate(ranks.values()):
+        w = Window.partitionBy(*bucket).orderBy(F.desc(cnt), F.desc("str_value"))
+        local = local.withColumn(f"r{i}", F.row_number().over(w))
+        keep = keep | (F.col(f"r{i}") <= k)
+    if unique:
+        local = local.withColumn("u", F.count(F.lit(1)).over(Window.partitionBy(*bucket)))
+    final = local.where(keep)
+    keep = F.lit(False)
+    for rank, cnt in ranks.items():
+        w = Window.partitionBy("slice_key", "feature").orderBy(
+            F.desc(cnt), F.desc("str_value")
+        )
+        final = final.withColumn(rank, F.row_number().over(w))
+        keep = keep | (F.col(rank) <= k)
+    if unique:
+        # one row per salt bucket carries that bucket's distinct-count
+        final = final.withColumn("unique", F.sum(
+            F.when(F.col("r0") == 1, F.col("u")).otherwise(0)
+        ).over(Window.partitionBy("slice_key", "feature")))
+    return final.where(keep).select(
+        F.lit("topk").alias("kind"), "slice_key", "feature", "str_value",
+        *counts.columns[3:], *ranks, *(["unique"] if unique else []),
+    )
+
+
+def _sketch_topk_value(options: StatsOptions):
+    """``str_value`` as sketch mode's top-k counts it: a value over 1024
+    bytes becomes one placeholder unless its feature is schema-declared
+    categorical (reference parity:
+    top_k_uniques_sketch_stats_generator.py:49-50,211-222). The exact
+    generator and the uniques sketches see raw values."""
+    sv = F.col("str_value")
+    large = F.octet_length(sv) > LARGE_STRING_THRESHOLD
+    if options.categorical_features:
+        large = large & ~F.col("feature").isin(*sorted(options.categorical_features))
+    return F.when(large, F.lit(LARGE_BYTES_PLACEHOLDER)).otherwise(sv)
 
 
 def _sketch_topk_frame(long_df, options: StatsOptions):
@@ -504,13 +546,10 @@ def _sketch_topk_frame(long_df, options: StatsOptions):
     (DataSketches' bound; M is the power of two at or above cap / 0.75,
     8,192 for the default cap), and a feature without heavy hitters may
     report no top values at all. NULL is an item to it, so NULLs are
-    filtered first. The >1024-byte placeholder applies to the top-k of
-    non-categorical features only; uniques see raw values."""
+    filtered first. The top-k counts ``_sketch_topk_value``; uniques see
+    raw values."""
     sv = F.col("str_value")
-    large = F.octet_length(sv) > LARGE_STRING_THRESHOLD
-    if options.categorical_features:
-        large = large & ~F.col("feature").isin(*sorted(options.categorical_features))
-    topv = F.when(large, F.lit(LARGE_BYTES_PLACEHOLDER)).otherwise(sv)
+    topv = _sketch_topk_value(options)
     cap = F.lit(options.topk_sketch_size * 4)
     top = F.call_function(
         "approx_top_k_estimate",
@@ -527,8 +566,8 @@ def _sketch_topk_frame(long_df, options: StatsOptions):
 
 
 def _assemble_slice(
-    rd, plans, options: StatsOptions, topk_data, uniq_data, arr_data, wtopk_data=None,
-    wq_data=None,
+    rd, plans, options: StatsOptions, topk_data, uniq_data, arr_data, wtopk_data,
+    wq_data,
 ):
     slice_key = rd["slice_key"]
     num_examples = rd["num_examples"]
@@ -540,7 +579,7 @@ def _assemble_slice(
     for p in plans:
         ds.features[p.name] = _assemble_feature(
             p, rd, num_examples, slice_key, options, topk_data, uniq_data, arr_data,
-            wtopk_data or {}, wq_data or {},
+            wtopk_data, wq_data,
         )
     return ds
 
@@ -552,7 +591,7 @@ def _g(rd, p, stat, default=None):
 
 def _assemble_feature(
     p, rd, num_examples, slice_key, options, topk_data, uniq_data, arr_data,
-    wtopk_data=None, wq_data=None,
+    wtopk_data, wq_data,
 ):
     fs = FeatureStats(name=p.name, type=p.stats_type)
     if p.source_type and p.source_type not in ("LONG", "DOUBLE", "STRING", "BINARY"):
@@ -641,6 +680,7 @@ def _assemble_feature(
                     # (basic_stats_generator.py:787).
                     var = max(0.0, w_sumsq / w_cnt - num.weighted_mean**2)
                     num.weighted_std_dev = math.sqrt(var)
+            winf = (_g(rd, p, "w_posinf", 0.0), _g(rd, p, "w_neginf", 0.0))
         else:
             a = arr_data.get(key)
             exact_nan = _g(rd, p, "nan")  # wide-pass NaN counter (float nests)
@@ -672,6 +712,11 @@ def _assemble_feature(
                 )
             quants = a["quants"]
             finite_count = int(a["fincnt"])
+            winf = (a.get("w_posinf") or 0.0, a.get("w_neginf") or 0.0)
+            if options.weight_column and finite_count:
+                num.weighted_mean, num.weighted_std_dev = _nested_weighted_moments(
+                    a, *winf
+                )
         if quants is not None:
             num.median = median_from_boundaries(quants)
             qh = quantiles_histogram(
@@ -689,46 +734,19 @@ def _assemble_feature(
         # Weighted quantile stats (reference WeightedNumericStatistics median +
         # [weighted equi-width, weighted quantiles] histograms,
         # basic_stats_generator.py:838-876) — emitted when a weight column is
-        # configured and the weighted sketch produced a weighted t-digest grid.
-        wdata = (wq_data or {}).get(key) if options.weight_column else None
-        if wdata and wdata.get("wquants") is not None:
-            wq = wdata["wquants"]
-            wfin = wdata["wfcnt"]
+        # configured and the feature has a finite value: the weighted
+        # t-digest grid and its finite weight, plus the ±inf weights.
+        wdig = wq_data.get(key)
+        if wdig is not None:
+            wq, wfin = wdig
             num.weighted_median = median_from_boundaries(wq)
             wqh = quantiles_histogram(
                 wq, wfin, options.num_quantiles_histogram_buckets, num.num_nan
             )
             weh = equi_width_histogram(
-                wq,
-                wfin,
-                options.num_histogram_buckets,
-                num.num_nan,
-                wdata["wposinf"],
-                wdata["wneginf"],
+                wq, wfin, options.num_histogram_buckets, num.num_nan, *winf
             )
             num.weighted_histograms = [h for h in (weh, wqh) if h is not None]
-            if num.weighted_mean is None:
-                # Nested features: weighted mean/std from the sketch
-                # accumulators (the wide pass only covers scalars). Same
-                # ±inf reconstruction as the unweighted path above.
-                wn = wfin + wdata["wposinf"] + wdata["wneginf"]
-                if wdata["wposinf"] and wdata["wneginf"]:
-                    num.weighted_mean = float("nan")
-                elif wdata["wposinf"]:
-                    num.weighted_mean = float("inf")
-                elif wdata["wneginf"]:
-                    num.weighted_mean = float("-inf")
-                elif wn > 0:
-                    num.weighted_mean = wdata["wfsum"] / wn
-                if num.weighted_mean is not None:
-                    if wdata["wposinf"] or wdata["wneginf"]:
-                        wvar = 0.0
-                    else:
-                        wvar = max(
-                            0.0,
-                            wdata["wfsumsq"] / wn - num.weighted_mean**2,
-                        ) if wn > 0 else 0.0
-                    num.weighted_std_dev = math.sqrt(wvar)
         fs.numeric = num
         if not p.categorical:
             return fs
@@ -752,7 +770,7 @@ def _assemble_feature(
             RankBucket(r, r, v, float(c))
             for (r, v, c, _wc) in entries[: options.num_rank_histogram_buckets]
         ]
-        if options.weight_column and wtopk_data is not None:
+        if options.weight_column:
             # weighted_string_stats parity: a second top-k ranked by weighted
             # frequency, reporting weighted counts.
             wentries = sorted(wtopk_data.get(key, []))
@@ -793,6 +811,22 @@ def _assemble_feature(
             if total >= 100 and supported / total >= 0.8:
                 fs.custom["domain_info"] = "image_domain {}"
     return fs
+
+
+def _nested_weighted_moments(a, wposinf: float, wneginf: float):
+    """Weighted (mean, std_dev) of a nested feature from the long pass's
+    finite-value sums and ±inf weights (the wide pass only covers
+    scalars). Same ±inf semantics as the unweighted path: one-signed
+    infinities give a ±inf mean, both give nan, and either gives std 0."""
+    if wposinf and wneginf:
+        return float("nan"), 0.0
+    if wposinf or wneginf:
+        return float("inf") if wposinf else float("-inf"), 0.0
+    wn = a["w_cnt"] or 0.0
+    if wn <= 0:
+        return None, None
+    mean = a["w_sum"] / wn
+    return mean, math.sqrt(max(0.0, a["w_sumsq"] / wn - mean**2))
 
 
 def _nn(v, default=0.0):

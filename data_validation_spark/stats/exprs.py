@@ -381,6 +381,13 @@ def build_agg_exprs(
                     F.sum(w * xn).alias(f"{a}__w_sum"),
                     F.sum(w * xn * xn).alias(f"{a}__w_sumsq"),
                 ]
+                if p.is_float:
+                    # ±inf weights: the end buckets of the weighted
+                    # equi-width histogram
+                    exprs += [
+                        F.sum(F.when(x == float("inf"), w)).alias(f"{a}__w_posinf"),
+                        F.sum(F.when(x == float("-inf"), w)).alias(f"{a}__w_neginf"),
+                    ]
         elif p.stats_type == STRING:
             exprs.append(F.avg(F.length(F.col(p.name))).alias(f"{a}__avglen"))
     return exprs, qexprs, bexprs

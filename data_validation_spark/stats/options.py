@@ -32,7 +32,7 @@ class StatsOptions:
     topk_sketch_size: int = 1024
 
     # Strategy: exact top-k/uniques (salted windows) vs sketches (theta
-    # uniques + approx_top_k; weighted top-k via count-min).
+    # uniques + approx_top_k; a weighted top-k keeps the exact windows).
     use_sketches: bool = False
 
     # Which columns get string-stats (top-k/uniques) even though numeric.

@@ -300,38 +300,36 @@ def test_weighted_and_unweighted_topk(spark):
 
 def test_topk_large_bytes_placeholder_sketch_only(spark):
     # Reference parity (top_k_uniques_sketch_stats_generator.py:49-50,211-222):
-    # the >1024-byte placeholder lives ONLY in the sketch top-k. The exact
-    # generator and the uniques sketch see raw values.
+    # the >1024-byte placeholder lives ONLY in the sketch top-k, weighted or
+    # not. The exact generator and the uniques sketch see raw values.
     big1, big2 = "x" * 2000, "y" * 2000
-    rows = [(big1,), (big1,), (big2,), ("small",)]
-    df = spark.createDataFrame(rows, "s string")
+    rows = [(big1, 2.0), (big1, 2.0), (big2, 2.0), ("small", 2.0)]
+    df = spark.createDataFrame(rows, "s string, w double")
 
-    # Exact mode: raw values — two distinct large values stay distinct.
-    st = compute_statistics(df).default_slice().feature("s").string
-    assert st.unique == 3
-    assert st.top_values[0][0] in (big1,)  # count 2 wins
-    assert ("small", 1.0) in st.top_values
+    def string_stats(**opts):
+        return compute_statistics(df, StatsOptions(**opts)).default_slice().feature("s").string
 
-    # Sketch mode: top-k collapses large values; uniques does NOT.
-    sk = (
-        compute_statistics(df, StatsOptions(use_sketches=True))
-        .default_slice()
-        .feature("s")
-        .string
-    )
-    assert sk.top_values[0] == ("__LARGE_BYTES__", 3.0)
-    assert sk.unique == 3  # the theta sketch saw raw values
+    for w in (None, "w"):
+        # Exact mode: raw values — two distinct large values stay distinct.
+        st = string_stats(weight_column=w)
+        assert st.unique == 3
+        assert st.top_values[0][0] in (big1,)  # count 2 wins
+        assert ("small", 1.0) in st.top_values
+        if w:
+            assert st.weighted_top_values[0] == (big1, 4.0)
 
-    # Schema-declared categorical features are exempt from the placeholder.
-    cat = (
-        compute_statistics(
-            df, StatsOptions(use_sketches=True, categorical_features={"s"})
-        )
-        .default_slice()
-        .feature("s")
-        .string
-    )
-    assert cat.top_values[0] == (big1, 2.0)
+        # Sketch mode: top-k collapses large values; uniques does NOT.
+        sk = string_stats(weight_column=w, use_sketches=True)
+        assert sk.top_values[0] == ("__LARGE_BYTES__", 3.0)
+        assert sk.unique == 3  # the theta sketch saw raw values
+        if w:
+            assert sk.weighted_top_values == [("__LARGE_BYTES__", 6.0), ("small", 2.0)]
+
+        # Schema-declared categorical features are exempt from the placeholder.
+        cat = string_stats(weight_column=w, use_sketches=True, categorical_features={"s"})
+        assert cat.top_values[0] == (big1, 2.0)
+        if w:
+            assert cat.weighted_top_values[0] == (big1, 4.0)
 
 
 def test_sketch_weighted_topk_ranked_by_weight(spark):
@@ -348,6 +346,24 @@ def test_sketch_weighted_topk_ranked_by_weight(spark):
     assert st.top_values[0] == ("b", 3.0)
     assert st.weighted_top_values[0] == ("a", 20.0)
     assert [b.label for b in st.weighted_rank_histogram] == ["a", "b"]
+
+
+def test_sketch_weighted_topk_is_exact(spark):
+    # One heavy value among 20,000 distinct light ones: sketch mode ranks the
+    # weighted top-k in the exact window, so no light value is overcounted
+    # and the heavy one carries exactly its weight.
+    rows = [(f"v{i}", 1.0) for i in range(20_000)] + [("z", 100.0)]
+    df = spark.createDataFrame(rows, "s string, w double")
+    st = (
+        compute_statistics(df, StatsOptions(weight_column="w", use_sketches=True))
+        .default_slice()
+        .feature("s")
+        .string
+    )
+    assert st.weighted_top_values[0] == ("z", 100.0)
+    assert len(st.weighted_top_values) == 20
+    assert all(wc == 1.0 for _, wc in st.weighted_top_values[1:])
+    assert all(b.sample_count == 1.0 for b in st.weighted_rank_histogram[1:])
 
 
 def test_struct_domain_validates_children(spark):

@@ -157,6 +157,57 @@ def test_weighted_accumulator_with_inf(spark):
     assert n.weighted_std_dev == 0.0
 
 
+@pytest.mark.parametrize("parts", [1, 8])
+@pytest.mark.parametrize("use_sketches", [False, True])
+def test_nested_weighted_moments_golden(spark, use_sketches, parts):
+    """Weighted mean/std and weighted histogram mass of array<double>
+    features: NaNs drop out, a +inf makes the weighted mean inf and a mix
+    of both infinities makes it nan (std_dev 0.0 either way). The STANDARD
+    histogram carries the finite weight plus the ±inf weights as end
+    buckets; the QUANTILES histogram carries the finite weight only."""
+    rows = [
+        ([1.0, 2.0], [1.0, INF], [1.0, INF], 1.0),
+        ([3.0, NAN], [3.0, NAN], [-INF, 2.0], 2.0),
+        ([4.0], [5.0], [NAN], 0.5),
+        ([], None, [], 1.0),
+        (None, [], None, 3.0),
+        ([2.0, 2.0, NAN], [2.0], [4.0], 1.5),
+    ]
+    df = spark.createDataFrame(
+        rows, "a array<double>, p array<double>, b array<double>, w double"
+    ).repartition(parts)
+    ds = compute_statistics(
+        df, StatsOptions(weight_column="w", use_sketches=use_sketches)
+    ).default_slice()
+
+    def masses(n):
+        return {h.type: (h.total_count(), h.num_nan) for h in n.weighted_histograms}
+
+    # a: finite (value, weight) pairs 1:1, 2:1, 3:2, 4:.5, 2:1.5, 2:1.5
+    a = ds.feature("a").numeric
+    mean = 17.0 / 7.5
+    assert a.weighted_mean == pytest.approx(mean, rel=1e-9)
+    assert a.weighted_std_dev == pytest.approx(math.sqrt(43.0 / 7.5 - mean**2), rel=1e-9)
+    assert a.weighted_median == 2.0
+    assert masses(a) == {"STANDARD": (pytest.approx(7.5, rel=1e-9), 2),
+                         "QUANTILES": (pytest.approx(7.5, rel=1e-9), 2)}
+
+    # p: finite weight 5, +inf weight 1
+    p = ds.feature("p").numeric
+    assert p.weighted_mean == INF and p.weighted_std_dev == 0.0
+    assert masses(p) == {"STANDARD": (pytest.approx(6.0, rel=1e-9), 1),
+                         "QUANTILES": (pytest.approx(5.0, rel=1e-9), 1)}
+
+    # b: finite weight 4.5, +inf weight 1, -inf weight 2
+    b = ds.feature("b").numeric
+    assert math.isnan(b.weighted_mean) and b.weighted_std_dev == 0.0
+    std_b = next(h for h in b.weighted_histograms if h.type == "STANDARD")
+    assert (std_b.buckets[0].low_value, std_b.buckets[0].sample_count) == (-INF, 2.0)
+    assert (std_b.buckets[-1].high_value, std_b.buckets[-1].sample_count) == (INF, 1.0)
+    assert masses(b) == {"STANDARD": (pytest.approx(7.5, rel=1e-9), 1),
+                         "QUANTILES": (pytest.approx(4.5, rel=1e-9), 1)}
+
+
 # --------------------------------------------------------------------------
 # quantiles_util goldens (utils/quantiles_util_test.py) — exact ports against
 # get_bin_weights with the reference's own (quantiles, cumulative_counts).

@@ -761,9 +761,60 @@ def test_equality_deletes_with_sequence_ordering(spark, tmp_path):
 
     # empty key set → no commit; unknown key column → loud error
     empty = spark.createDataFrame([], "image_id string")
+    data_files = set(os.listdir(os.path.join(root, "data")))
     assert ice.delete_rows_equality(spark, root, empty, ["image_id"]) is None
+    assert set(os.listdir(os.path.join(root, "data"))) == data_files
     with pytest.raises(ValueError, match="unknown key column"):
         ice.delete_rows_equality(spark, root, keys, ["nope"])
+
+
+def test_delete_rows_skips_already_deleted_rows(spark, tmp_path):
+    """delete_rows matches its predicate over the merge-on-read frame: rows
+    an earlier positional or equality delete removed are not deleted
+    again, so a repeated call commits nothing."""
+    root = str(tmp_path / "redelete")
+    ice.write_table(spark, spark.range(0, 20).selectExpr("id", "cast(id as string) as k"), root)
+    first = ice.delete_rows(spark, root, "id < 5")
+    assert first is not None
+    snapshots = len(ice.load_table(root).snapshots())
+    data_files = set(os.listdir(os.path.join(root, "data")))
+    assert ice.delete_rows(spark, root, "id < 5") is None
+    assert len(ice.load_table(root).snapshots()) == snapshots
+    assert set(os.listdir(os.path.join(root, "data"))) == data_files  # nothing left behind
+
+    # an overlapping predicate deletes only the rows still live
+    ice.delete_rows(spark, root, "id < 7")
+    assert ice.load_table(root).current_snapshot()["summary"]["added-position-deletes"] == "2"
+
+    keys = spark.createDataFrame([("10",)], "k string")
+    ice.delete_rows_equality(spark, root, keys, ["k"])
+    snapshots = len(ice.load_table(root).snapshots())
+    assert ice.delete_rows(spark, root, "id = 10") is None
+    assert len(ice.load_table(root).snapshots()) == snapshots
+    assert ice.read_table(spark, root).count() == 12
+
+
+def test_equality_delete_read_submits_no_job(spark, tmp_path):
+    """Building a read over an equality-delete snapshot runs no Spark job:
+    the delete files are read under the key columns' types from the table
+    schema, not by schema inference."""
+    import uuid
+
+    root = str(tmp_path / "eq_nojob")
+    ice.write_table(spark, spark.range(0, 20).selectExpr("id", "cast(id % 4 as string) as k"), root)
+    ice.delete_rows_equality(spark, root, spark.createDataFrame([("1",)], "k string"), ["k"])
+    sc = spark.sparkContext
+    group = f"eq-read-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "equality-delete read plan")
+    try:
+        df = ice.read_table(spark, root)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    assert df.count() == 15
 
 
 def test_equality_delete_multi_column_and_nulls(spark, tmp_path):

@@ -349,6 +349,64 @@ def test_unweighted_sketch_long_pass_stays_in_jvm(spark, tmp_path):
     assert "approx_top_k_accumulate" in plan and "theta_sketch_agg" in plan
 
 
+def _scan_branches(plan: str) -> list[tuple[set, bool]]:
+    """(ReadSchema column names, whether a Python node is above the scan)
+    for each scan of a physical plan's tree string."""
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    lines = plan.splitlines()
+    out = []
+    for i, line in enumerate(lines):
+        m = re.search(r"ReadSchema: (struct<.*>)", line)
+        if m is None:
+            continue
+        d, python = depth(line), False
+        for up in reversed(lines[:i]):
+            if depth(up) < d:
+                d = depth(up)
+                python |= "Pandas" in up.lstrip(" :+-").split(" ")[0]
+        out.append((set(re.findall(r"[<,](\w+):", m.group(1))), python))
+    return out
+
+
+def test_weighted_sketch_long_pass_has_one_python_node(spark, tmp_path):
+    """Sketch mode with a weight column: the weighted t-digest partial is
+    the union's only ``MapInPandas``, and it reads only the numeric columns
+    and the weight. The weighted top-k branch (a scan of the long frame's
+    string and weight columns) has no Python node above it."""
+    from data_validation_spark.stats import engine
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    df = spark.range(500).select(
+        F.col("id").cast("double").alias("x"),
+        F.concat(F.lit("v"), (F.col("id") % 7).cast("string")).alias("s"),
+        F.array(F.col("id").cast("double")).alias("a"),
+        (F.rand(3) + 0.5).alias("w"),
+    )
+    p = str(tmp_path / "wsk.parquet")
+    df.write.parquet(p)
+    engine.CAPTURE_UNION_FRAME = True
+    try:
+        stats = compute_statistics(
+            spark.read.parquet(p), StatsOptions(use_sketches=True, weight_column="w")
+        )
+        union = engine._last_union_frame
+    finally:
+        engine.CAPTURE_UNION_FRAME = False
+        engine._last_union_frame = None
+    s = stats.default_slice().feature("s").string
+    assert s.unique == 7 and len(s.weighted_top_values) == 7
+    plan = union._jdf.queryExecution().sparkPlan().toString()
+    nodes = [line.lstrip(" :+-").split(" ")[0] for line in plan.splitlines()]
+    assert nodes.count("MapInPandas") == 1, plan
+    branches = _scan_branches(plan)
+    assert [cols for cols, python in branches if python] == [{"x", "a", "w"}], plan
+    assert any({"s", "w"} <= cols and not python for cols, python in branches), plan
+
+
 def test_lsh_pairing_stays_in_jvm(spark):
     """MinHash, SimHash and embedding LSH pair the members of a bucket with
     Spark's own operators: the only Python node in each plan is its one

@@ -247,44 +247,6 @@ def test_decoders_reject_garbage_without_crashing(data):
     codec.dimensions(data)
 
 
-# ------------------------------------------------------------- count-min ----
-@SET
-@given(
-    st.dictionaries(
-        st.text(alphabet="abcdefghij", min_size=1, max_size=4),
-        st.integers(min_value=1, max_value=10_000),
-        min_size=1,
-        max_size=60,
-    ),
-    st.integers(min_value=2, max_value=4),
-)
-def test_cms_never_underestimates_and_merge_adds(counts, splits):
-    from data_validation_spark.stats.sketches.countmin import CountMinTopK
-
-    values = list(counts)
-    arr = np.array([counts[v] for v in values], dtype=np.float64)
-    one = CountMinTopK()
-    one.add_counts(values, arr)
-    # count-min property: estimate >= true count, total exact
-    est = one.estimate(values)
-    assert (est >= arr - 1e-9).all()
-    assert one.total == pytest.approx(arr.sum())
-
-    parts = [CountMinTopK() for _ in range(splits)]
-    for i, v in enumerate(values):
-        parts[i % splits].add_counts([v], arr[i : i + 1])
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.merge(p)
-    mest = merged.estimate(values)
-    assert (mest >= arr - 1e-9).all()
-    assert merged.total == pytest.approx(arr.sum())
-    # top-1 under distinct counts is exact when the max is unique and large
-    top_v = values[int(np.argmax(arr))]
-    if (arr == arr.max()).sum() == 1 and arr.max() >= 2 * np.sort(arr)[-2:][0]:
-        assert merged.top_k(1)[0][0] == top_v
-
-
 # --------------------------------------------------- histogram-JSD bounds ---
 def _mk_hist(buckets):
     from data_validation_spark.stats.result import Histogram, HistogramBucket

@@ -8,7 +8,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from data_validation_spark.stats.sketches.countmin import CountMinTopK
 from data_validation_spark.stats.sketches.tdigest import TDigest
 
 
@@ -66,42 +65,6 @@ def test_tdigest_ignores_nonfinite():
     td.add(np.array([1.0, np.nan, np.inf, -np.inf, 3.0]))
     assert td.count == 2
     assert td.quantile(0.5) == pytest.approx(2.0, abs=1.0)
-
-
-# ------------------------------------------------------------------ count-min
-def test_cms_topk_exactish():
-    rng = np.random.RandomState(2)
-    # zipf-ish: value v_i with count ~ 1000/i
-    values, counts = [], []
-    for i in range(1, 200):
-        values.append(f"v{i:03d}")
-        counts.append(max(1000 // i, 1))
-    cms = CountMinTopK()
-    order = rng.permutation(len(values))
-    cms.add_counts([values[i] for i in order], np.array([counts[i] for i in order]))
-    top = cms.top_k(5)
-    assert [t[0] for t in top] == ["v001", "v002", "v003", "v004", "v005"]
-    assert top[0][1] == pytest.approx(1000, rel=0.01)
-
-
-def test_cms_merge_parity():
-    a = CountMinTopK()
-    b = CountMinTopK()
-    a.add_counts(["x", "y"], np.array([100, 50]))
-    b.add_counts(["x", "z"], np.array([30, 70]))
-    m = a.merge(b)
-    top = dict(m.top_k(10))
-    assert top["x"] == pytest.approx(130, rel=0.02)
-    assert top["z"] == pytest.approx(70, rel=0.02)
-    assert m.total == pytest.approx(250)
-
-
-def test_cms_tie_break_larger_value_first():
-    cms = CountMinTopK()
-    cms.add_counts(["a", "b", "c"], np.array([5, 5, 9]))
-    top = cms.top_k(3)
-    assert top[0][0] == "c"
-    assert [t[0] for t in top[1:]] == ["b", "a"]  # tie → larger value first
 
 
 # ----------------------------------------------------------- engine parity
@@ -167,35 +130,6 @@ def test_tdigest_weighted_three_way_parity():
         for sk in (merged, compacted, seq):
             assert sk.quantile(q) == pytest.approx(truth, abs=0.6)
     assert merged.count == pytest.approx(all_w.sum(), rel=1e-9)
-
-
-def test_feature_accumulator_weighted_merge_parity():
-    import pandas as pd
-
-    from data_validation_spark.stats.options import StatsOptions
-    from data_validation_spark.stats.sketches.runner import FeatureAccumulator
-
-    opts = StatsOptions(weight_column="w")
-    rng = np.random.RandomState(4)
-    x = rng.uniform(0, 100, 9000)
-    w = rng.uniform(0.5, 2.0, 9000)
-
-    seq = FeatureAccumulator(opts)
-    seq.add_numbers(x, w)
-
-    parts = []
-    for i in range(3):
-        a = FeatureAccumulator(opts)
-        a.add_numbers(x[i::3], w[i::3])
-        parts.append(a)
-    merged = parts[0].merge(parts[1]).merge(parts[2])
-    merged.compact()
-
-    truth = _np_weighted_quantile(x, w, 0.5)
-    assert seq.wtd.quantile(0.5) == pytest.approx(truth, abs=0.8)
-    assert merged.wtd.quantile(0.5) == pytest.approx(truth, abs=0.8)
-    assert merged.wfcnt == pytest.approx(seq.wfcnt) == pytest.approx(w.sum())
-    assert merged.wfsum == pytest.approx(seq.wfsum, rel=1e-12)
 
 
 def test_weighted_sketch_quantiles_engine(spark):
