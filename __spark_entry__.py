@@ -1563,8 +1563,10 @@ def _knn_mi_sql():
 def q_weighted_sketch_stats(spark, sf_dir):
     """Weighted quantiles through the sketch pass (reference
     WeightedNumericStatistics median + histograms via its weighted
-    QuantilesSketch, basic_stats_generator.py:830-877; here a weighted
-    t-digest). Self-verified: the weighted median is bounds-checked against
+    QuantilesSketch, basic_stats_generator.py:830-877; here the long pass's
+    log-spaced value buckets, γ = 1.01: at most 1% relative value error,
+    exact on values more than 1% apart, no Python). Self-verified: the
+    weighted median is bounds-checked against
     the EXACT weighted median (l_quantity has ~50 distinct values → groupBy +
     50-row driver cumsum, no full sort), the weighted mean against the exact
     ratio aggregate, and the weighted histogram mass against total weight;
@@ -1578,9 +1580,9 @@ def q_weighted_sketch_stats(spark, sf_dir):
     n = stats.default_slice().feature("x").numeric
 
     # weighted-median RANK check via value-grouped cumulative weights
-    # (50 rows): the digest's guarantee is on rank, and l_quantity is
-    # DISCRETE (steps 2% of range apart), so a value-distance bound would
-    # reject rank-perfect estimates that interpolate between steps. Assert
+    # (50 rows): l_quantity is DISCRETE (steps 2% of range apart), so a
+    # value-distance bound would reject rank-perfect estimates that
+    # interpolate between steps. Assert
     # the weighted mass strictly below / above the estimate each ≤ 51% W.
     grp = sorted(
         li.groupBy("x").agg(F.sum("w").alias("ws")).collect(),

@@ -7,12 +7,14 @@ A from-scratch reimplementation of the capabilities of tensorflow/data-validatio
   per-column statistics — counts, presence/valency, min/max/mean/stddev,
   approximate quantiles (``percentile_approx`` grids), top-k / unique counts
   (exact, or in sketch mode Spark's ``approx_top_k`` frequent-items and
-  ``theta_sketch_agg`` KMV aggregates; weighted quantiles use a t-digest),
-  string/bytes stats, and semantic-domain
+  ``theta_sketch_agg`` KMV aggregates), weighted quantiles (weight summed
+  per log-spaced value bucket: at most 1% relative value error, exact on
+  values more than 1% apart), string/bytes stats, and semantic-domain
   stats (image format histograms, natural-language heuristics, time formats).
-  Built-in Catalyst aggregate expressions cover everything they can express
-  (JVM-side, whole-stage codegen); mergeable sketch accumulators run as
-  Arrow-vectorized ``mapInArrow`` partials merged tree-wise.
+  The built-in passes of ``compute_statistics`` are Catalyst aggregates
+  (JVM-side, whole-stage codegen where the aggregate allows it); Python
+  runs only in decode-bearing stats (image dimensions, NL tokens), the
+  partitioned MI estimators and user combiner generators.
 
 * **Validation phase** (driver-side): a declarative :class:`Schema` constraint
   spec is evaluated against the statistics artifact, emitting anomaly rows with

@@ -10,9 +10,10 @@ The reference hands combiners Arrow RecordBatches inside a Beam
 ``CombinePerKey``; here the distributed fold is a single ``mapInPandas``
 pass producing one pickled, ``compact()``-ed accumulator row per
 (generator, slice, partition), merged per (generator, slice) on executors by
-the same combine path as the built-in sketches
-(:func:`data_validation_spark.stats.sketches.combine.combine_per_key`). The
-driver receives one accumulator per generator per slice.
+:func:`combine_per_key` (``CombinePerKey`` with hot-key fanout,
+``stats_impl.py:276-303``). The driver receives one accumulator per
+generator per slice. The built-in statistics of ``compute_statistics``,
+weighted quantiles included, are Spark aggregates and do not use this path.
 
 A generator's ``extract_output`` returns a :class:`DatasetStats` whose
 features are merged into the engine's artifact for the matching slice —
@@ -225,6 +226,45 @@ class TransformStatsGenerator(StatsGenerator):
 # ------------------------------------------------------- distributed runner --
 _PARTIAL_DDL = "gen int, slice_key string, acc binary"
 
+# Input-partition count above which the salted pre-merge tier runs: it
+# spreads one hot key's partials over _SALTS reducers before the final
+# merge. Module-level so tests can force the tier on small inputs.
+FANOUT_THRESHOLD = 64
+_SALTS = 16
+
+
+def combine_per_key(partials, keys: list[str],
+                    merge: Callable[[tuple, list], Any]):
+    """Lazily merge ``partials``, rows of ``(keys…, acc binary)`` with one
+    pickled accumulator per key per input partition, to one
+    ``(keys…, acc)`` row per key.
+
+    ``merge(key, accs)`` runs on executors with the key's values and a list
+    of unpickled accumulators and returns the merged (compacted)
+    accumulator; it must be associative, because above
+    ``FANOUT_THRESHOLD`` input partitions the accumulators of one key are
+    merged in two tiers.
+    """
+    from pyspark.sql import functions as F
+
+    def merge_group(pdf):
+        out = pdf.iloc[:1].copy()
+        key = tuple(out[k].iloc[0] for k in keys)
+        accs = [pickle.loads(bytes(b)) for b in pdf["acc"]]
+        out["acc"] = [pickle.dumps(merge(key, accs), protocol=4)]
+        return out
+
+    if partials.rdd.getNumPartitions() > FANOUT_THRESHOLD:
+        salted = partials.withColumn(
+            "salt", F.pmod(F.xxhash64(F.rand(seed=7)), F.lit(_SALTS))
+        )
+        partials = (
+            salted.groupBy(*keys, "salt")
+            .applyInPandas(merge_group, salted.schema)
+            .drop("salt")
+        )
+    return partials.groupBy(*keys).applyInPandas(merge_group, partials.schema)
+
 
 def run_combiner_generators(
     df: "DataFrame",
@@ -244,8 +284,6 @@ def run_combiner_generators(
     """
     import pandas as pd
     from pyspark.sql import functions as F
-
-    from data_validation_spark.stats.sketches.combine import combine_per_key
 
     gens = []
     for g in generators:

@@ -21,15 +21,19 @@ changes: one ``groupBy(slice, feature)`` of Spark's own sketch aggregates —
 ``theta_sketch_agg`` (KMV, 16,384 entries) for uniques and
 ``approx_top_k_accumulate`` (frequent items, no false positives) for top-k.
 A weighted top-k ranks by weight in the exact mode's window in both modes.
-Quantiles are the same ``percentile_approx`` grids in both modes (KLL was
-rejected: its estimate moves with the partitioning). Only the weighted
-quantiles, which no Spark aggregate computes, run in Python — see
-``sketches/runner.py``.
+Quantiles are the same ``percentile_approx`` grids in both modes. KLL
+(``kll_sketch_agg_double``) was rejected: it gave a median of 26 against the
+exact 25 in 3 of 16 partition layouts, it raises on an empty sketch, and it
+takes no weight. Weighted quantiles, which no Spark aggregate computes, come
+from one more long-pass branch that sums the weights per log-spaced value
+bucket (``_weighted_quantile_frame``): at most 1% relative value error,
+exact on values more than 1% apart. No built-in statistic runs in Python.
 """
 
 from __future__ import annotations
 
 import math
+from dataclasses import replace
 from typing import Optional
 
 from pyspark.sql import DataFrame, Window
@@ -43,10 +47,7 @@ from data_validation_spark.stats.quantiles import (
     equi_width_histogram,
     median_from_boundaries,
     quantiles_histogram,
-)
-from data_validation_spark.stats.sketches.runner import (
-    build_weighted_digest_frame,
-    decode_weighted_digest,
+    weighted_quantile_grid,
 )
 from data_validation_spark.stats.result import (
     BytesStats,
@@ -61,6 +62,11 @@ from data_validation_spark.stats.result import (
 )
 
 _QUANTILE_CUTS = 100  # fine grid size; 10× the default 10 histogram buckets
+_QS = [i / _QUANTILE_CUTS for i in range(_QUANTILE_CUTS + 1)]
+# Ratio between the edges of one weighted-quantile bucket: a bucket holds
+# the values v with ceil(log_γ |v|) equal, so its lo and hi differ by at
+# most 1% of either (DDSketch's rule, which takes weights as they come).
+_WQ_GAMMA = 1.01
 
 # Sketch-mode top-k counts values over LARGE_STRING_THRESHOLD bytes as one
 # placeholder (see _sketch_topk_value).
@@ -305,30 +311,28 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
     """Top-k/uniques (exact, or sketched with ``use_sketches``) +
     array-element numeric stats + percentile grids + (when a weight column
     is configured) weighted top-k, weighted array moments and the weighted
-    t-digests — ONE Spark action.
+    quantile buckets — ONE Spark action.
 
     Each concern builds a small (KB-scale) lazy result frame; their union is
     collected once. Catalyst compiles the union into column-disjoint
     parquet scans — categorical (+ weight) columns for top-k, nested numeric
     (+ weight) columns for array stats, scalar numeric columns for the
-    percentile grids, numeric + weight columns for the weighted t-digest
-    (plan-asserted in tests/test_plans.py) — so the long pass reads each
-    table column at most once per concern and either mode submits exactly
-    TWO jobs (wide agg + this union) besides the bytes job. Round 4 ran the
-    weighted digest and the percentile grids as separate concurrent jobs;
-    at 100 TB each was an extra scan wave. In exact mode the grid branch is
-    the only ObjectHashAggregate (percentile_approx) and it is isolated in
-    its own union branch, so the other branches keep WholeStageCodegen.
+    percentile grids, numeric + weight columns for the weighted quantile
+    buckets (plan-asserted in tests/test_plans.py) — so the long pass reads
+    each table column at most once per concern and either mode submits
+    exactly TWO jobs (wide agg + this union) besides the bytes job. Round 4
+    ran the weighted quantiles and the percentile grids as separate
+    concurrent jobs; at 100 TB each was an extra scan wave. In exact mode
+    the grid branch is the only ObjectHashAggregate (percentile_approx) and
+    it is isolated in its own union branch, so the other branches keep
+    WholeStageCodegen.
 
     Top-k ranks values in one salted window (``_salted_topk``): by count
     and, weighted, by weight in exact mode; by weight only in weighted
     sketch mode, whose count top-k and uniques are Spark's sketch
-    aggregates. The weighted t-digest is the only Python node
-    (``sketches/runner.py``)."""
-    long_df = E.long_format(
-        df, plans, slice_col,
-        weight_arg if weight_arg is not None else options.weight_column,
-    )
+    aggregates. No branch has a Python node."""
+    weight = weight_arg if weight_arg is not None else options.weight_column
+    long_df = E.long_format(df, plans, slice_col, weight)
     topk_data: dict = {}
     uniq_data: dict = {}
     arr_data: dict = {}
@@ -371,7 +375,6 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
         finals.append(_salted_topk(counts, k, ranks, unique=True))
 
     if any_arr:
-        qs = [i / _QUANTILE_CUTS for i in range(_QUANTILE_CUTS + 1)]
         nv = F.col("num_value")
         finite = F.when(~nv.isin(float("inf"), float("-inf")), nv)
         wsums = []
@@ -404,20 +407,15 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
                 F.min(finite).alias("finmin"),
                 F.max(finite).alias("finmax"),
                 F.count(finite).alias("fincnt"),
-                F.percentile_approx(finite, qs, options.quantiles_accuracy).alias("quants"),
+                F.percentile_approx(finite, _QS, options.quantiles_accuracy).alias("quants"),
             )
             .select(F.lit("arr").alias("kind"), "*")
         )
 
     if weighted:
-        wq_frame = build_weighted_digest_frame(df, plans, slice_col, options,
-                                               weight_arg=weight_arg)
+        wq_frame = _weighted_quantile_frame(df, plans, slice_col, weight)
         if wq_frame is not None:
-            finals.append(
-                wq_frame.select(
-                    F.lit("wacc").alias("kind"), "slice_key", "feature", "acc"
-                )
-            )
+            finals.append(wq_frame)
 
     if quant_exprs:
         # percentile-grid branch: per-slice wide agg exploded to long
@@ -472,10 +470,35 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
         elif r["kind"] == "qgrid":
             # feature holds the wide-agg alias (e.g. "c3__quants")
             quant_long.setdefault(r["slice_key"], {})[r["feature"]] = r["quants"]
-        else:  # wacc
-            wq_data[key] = decode_weighted_digest(r["acc"])
+        else:  # wq
+            wq_data[key] = weighted_quantile_grid(r["buckets"], _QS)
 
     return topk_data, uniq_data, arr_data, wtopk_data, wq_data, quant_long
+
+
+def _weighted_quantile_frame(df, plans, slice_col, weight):
+    """The ``wq`` union rows: per numeric (slice, feature), its finite
+    values' log buckets ``array<struct<lo, hi, w>>`` sorted by ``lo``, read
+    by ``quantiles.weighted_quantile_grid``. A bucket is (sign, ⌈log_γ |v|⌉),
+    zero its own; it keeps its values' min, max and total weight. The
+    bucket rule does not depend on the partitioning, so neither do the
+    quantiles."""
+    wplans = [replace(p, categorical=False) for p in plans if p.numeric]
+    long_df = E.long_format(df, wplans, slice_col, weight,
+                            include_scalar_numeric=True)
+    if long_df is None:
+        return None
+    v = F.col("num_value")
+    bucket = F.struct(F.col("lo"), F.col("hi"), F.col("w"))
+    return (
+        long_df.where(v.isNotNull() & ~v.isin(float("inf"), float("-inf")))
+        .groupBy("slice_key", "feature", F.signum(v).alias("sign"),
+                 F.ceil(F.log(_WQ_GAMMA, F.abs(v))).alias("exp"))
+        .agg(F.sum("weight").alias("w"), F.min(v).alias("lo"), F.max(v).alias("hi"))
+        .groupBy("slice_key", "feature")
+        .agg(F.array_sort(F.collect_list(bucket)).alias("buckets"))
+        .select(F.lit("wq").alias("kind"), "slice_key", "feature", "buckets")
+    )
 
 
 def _salted_topk(counts, k: int, ranks: dict, unique: bool = False):
@@ -713,7 +736,7 @@ def _assemble_feature(
             quants = a["quants"]
             finite_count = int(a["fincnt"])
             winf = (a.get("w_posinf") or 0.0, a.get("w_neginf") or 0.0)
-            if options.weight_column and finite_count:
+            if options.weight_column and (finite_count or any(winf)):
                 num.weighted_mean, num.weighted_std_dev = _nested_weighted_moments(
                     a, *winf
                 )
@@ -735,10 +758,10 @@ def _assemble_feature(
         # [weighted equi-width, weighted quantiles] histograms,
         # basic_stats_generator.py:838-876) — emitted when a weight column is
         # configured and the feature has a finite value: the weighted
-        # t-digest grid and its finite weight, plus the ±inf weights.
-        wdig = wq_data.get(key)
-        if wdig is not None:
-            wq, wfin = wdig
+        # bucket grid and its finite weight, plus the ±inf weights.
+        wgrid = wq_data.get(key)
+        if wgrid is not None:
+            wq, wfin = wgrid
             num.weighted_median = median_from_boundaries(wq)
             wqh = quantiles_histogram(
                 wq, wfin, options.num_quantiles_histogram_buckets, num.num_nan

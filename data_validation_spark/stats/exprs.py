@@ -437,7 +437,7 @@ def long_format(df, plans: list[ColumnPlan], slice_col, weight_column: Optional[
                 # exact generator and the KMV uniques sketch see raw values,
                 # so collapsing here would undercount exact uniques and
                 # diverge exact top-k. Sketch mode applies it to its top-k
-                # sketches only (engine._sketch_topk_frame, runner).
+                # sketches only (engine._sketch_topk_frame).
                 sv = v.cast("string")
             else:
                 sv = F.lit(None).cast("string")

@@ -26,8 +26,6 @@ class StatsOptions:
     # Approximation knobs (reference: eps=0.01 quantiles; MG 1024; KMV 16384).
     # 1/eps for percentile_approx; reference eps=0.01 ⇒ 100 — default 2× that
     quantiles_accuracy: int = 200
-    # weighted t-digest (weighted quantiles)
-    tdigest_compression: int = 200
     # top-k sketches track topk_sketch_size × 4 items
     topk_sketch_size: int = 1024
 
@@ -61,8 +59,8 @@ class StatsOptions:
     # aggregation pass (no separate scan of the binary column).
     image_columns: set[str] = field(default_factory=set)
 
-    # Semantic-domain stats (image format sniffing, NL heuristics, time).
-    enable_semantic_domain_stats: bool = False
+    # Semantic-domain stats sample rate (reference
+    # semantic_domain_stats_sample_rate).
     semantic_domain_sample_rate: Optional[float] = None
 
     # Vocabulary files for NL stats: {vocabulary_name: path}, resolving the
@@ -81,10 +79,6 @@ class StatsOptions:
 
     # Dataset-level sampling before any stats.
     sample_rate: Optional[float] = None
-
-    # Cardinality guard: skip exact top-k for columns whose approx distinct
-    # count exceeds this (rank histogram would be meaningless + shuffle-heavy).
-    max_topk_cardinality: int = 1_000_000
 
     @property
     def example_weight_map(self):

@@ -104,9 +104,9 @@ class NumericStats:
     weighted_std_dev: Optional[float] = None
     # Weighted quantile stats (the reference's WeightedNumericStatistics
     # median + histograms, basic_stats_generator.py:830-877): present only
-    # when a weight column was configured AND the sketch pass ran (weighted
-    # quantiles come from the weighted t-digest, mirroring the reference's
-    # weighted QuantilesSketch).
+    # when a weight column was configured and the feature has a finite value
+    # (in both modes, from the long pass's weighted log buckets, in the role
+    # of the reference's weighted QuantilesSketch).
     weighted_median: Optional[float] = None
     weighted_histograms: list[Histogram] = field(default_factory=list)
 

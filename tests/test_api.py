@@ -84,7 +84,7 @@ def test_pyfiles_archive_importable(tmp_path):
         "import sys; sys.path.insert(0, %r); "
         "import data_validation_spark as d; "
         "from data_validation_spark.stats import engine, exprs, quantiles; "
-        "from data_validation_spark.stats.sketches import runner, tdigest; "
+        "from data_validation_spark import generators; "
         "from data_validation_spark.validate import rules, infer, rowlevel, skew; "
         "from data_validation_spark.io import artifacts, checkpoint, tfrecord; "
         "from data_validation_spark.dedup import minhash, simhash, embedding; "

@@ -12,6 +12,7 @@ percentile grid + interpolation (both are approximations; the oracle-checked
 
 import math
 
+import numpy as np
 import pytest
 
 from data_validation_spark.stats.engine import compute_statistics
@@ -206,6 +207,70 @@ def test_nested_weighted_moments_golden(spark, use_sketches, parts):
     assert (std_b.buckets[-1].high_value, std_b.buckets[-1].sample_count) == (INF, 1.0)
     assert masses(b) == {"STANDARD": (pytest.approx(7.5, rel=1e-9), 1),
                          "QUANTILES": (pytest.approx(4.5, rel=1e-9), 1)}
+
+
+@pytest.mark.parametrize("use_sketches", [False, True])
+def test_nested_all_inf_weighted_moments(spark, use_sketches):
+    """A nested feature whose values are all +inf gets the scalar rule's
+    weighted mean inf and std_dev 0.0, not None."""
+    df = spark.createDataFrame([([INF], INF, 2.0)], "a array<double>, s double, w double")
+    ds = compute_statistics(
+        df, StatsOptions(weight_column="w", use_sketches=use_sketches)
+    ).default_slice()
+    for name in ("a", "s"):
+        n = ds.feature(name).numeric
+        assert (n.mean, n.weighted_mean, n.weighted_std_dev) == (INF, INF, 0.0), name
+
+
+def _weighted_quantile(sorted_x, cum_w, q):
+    """Lower weighted quantile: the first value whose cumulative weight
+    reaches q·W."""
+    if q <= 0:
+        return sorted_x[0]
+    if q >= 1:
+        return sorted_x[-1]
+    return sorted_x[int(np.searchsorted(cum_w, q * cum_w[-1], side="left"))]
+
+
+@pytest.mark.parametrize("parts", [1, 8])
+@pytest.mark.parametrize("use_sketches", [False, True])
+def test_weighted_quantiles_heavy_discrete_exact(spark, use_sketches, parts):
+    """20 distinct values x 300 copies, weight 1 + v % 3: the weighted
+    median and the weighted QUANTILES boundaries are the empirical weighted
+    quantiles exactly, however the rows are partitioned."""
+    rng = np.random.default_rng(7)
+    x = np.repeat(np.arange(1.0, 21.0), 300)
+    rng.shuffle(x)
+    w = 1.0 + x % 3
+    df = spark.createDataFrame(
+        [(float(a), float(b)) for a, b in zip(x, w)], "x double, w double"
+    ).repartition(parts)
+    n = compute_statistics(
+        df, StatsOptions(weight_column="w", use_sketches=use_sketches)
+    ).default_slice().feature("x").numeric
+    order = np.argsort(x, kind="stable")
+    xs, cw = x[order], np.cumsum(w[order])
+    assert n.weighted_median == _weighted_quantile(xs, cw, 0.5)
+    qh = next(h for h in n.weighted_histograms if h.type == "QUANTILES")
+    bounds = [qh.buckets[0].low_value] + [b.high_value for b in qh.buckets]
+    assert bounds == [_weighted_quantile(xs, cw, i / 10) for i in range(11)]
+    assert qh.total_count() == pytest.approx(float(w.sum()), rel=1e-12)
+
+
+@pytest.mark.parametrize("parts", [1, 8])
+@pytest.mark.parametrize("use_sketches", [False, True])
+def test_weighted_quantiles_all_zero_weights(spark, use_sketches, parts):
+    """A numeric feature whose weights are all 0 has no weighted mass: its
+    weighted median is the minimum and it gets no weighted histogram."""
+    df = spark.createDataFrame(
+        [(float(i), 0.0) for i in range(1, 50)], "x double, w double"
+    ).repartition(parts)
+    n = compute_statistics(
+        df, StatsOptions(weight_column="w", use_sketches=use_sketches)
+    ).default_slice().feature("x").numeric
+    assert n.weighted_median == 1.0
+    assert n.weighted_histograms == []
+    assert n.median == pytest.approx(25.0, abs=1.0)
 
 
 # --------------------------------------------------------------------------

@@ -189,18 +189,18 @@ def test_transform_generator(spark, pdf):
 
 def test_fanout_merge_tier(spark, pdf, monkeypatch):
     # Force the salted pre-merge tier and confirm identical results.
-    from data_validation_spark.stats.sketches import combine
+    from data_validation_spark import generators
 
     frames = []
-    original = combine.combine_per_key
+    original = generators.combine_per_key
 
     def recording(*args):
         frame = original(*args)
         frames.append(frame)
         return frame
 
-    monkeypatch.setattr(combine, "combine_per_key", recording)
-    monkeypatch.setattr(combine, "FANOUT_THRESHOLD", 2)
+    monkeypatch.setattr(generators, "combine_per_key", recording)
+    monkeypatch.setattr(generators, "FANOUT_THRESHOLD", 2)
     df = spark.createDataFrame(pdf).repartition(5)
     out = run_combiner_generators(df, [SumSquares()], stat_cols=["x", "y"])
     # salted pre-merge + final merge

@@ -244,8 +244,8 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
 def test_weighted_quantile_pass_scan_pruned(spark, tmp_path):
     """Exact-mode weighted-quantile job (round 4): its long frame must scan
     ONLY the numeric columns + the weight column — string/binary columns are
-    Catalyst-pruned out (ReadSchema check), so at 100 TB the weighted-digest
-    pass reads GBs, not the full table."""
+    Catalyst-pruned out (ReadSchema check), so at 100 TB the weighted-quantile
+    branch reads GBs, not the full table."""
     from pyspark.sql import functions as F
 
     from data_validation_spark.stats import exprs as E
@@ -276,7 +276,7 @@ def test_weighted_quantile_pass_scan_pruned(spark, tmp_path):
 
 def test_exact_weighted_long_pass_fused(spark, tmp_path):
     """Round 5: exact mode runs top-k/uniques, the percentile grids, AND
-    (weighted) the t-digest quantiles as ONE unioned action — exact mode
+    (weighted) the weighted quantile buckets as ONE unioned action — exact mode
     submits exactly TWO jobs (wide agg + this union) instead of round-4's
     four. The union's physical plan must contain exactly one scan per
     branch with column-pruned ReadSchemas (categorical+weight / scalar
@@ -308,7 +308,7 @@ def test_exact_weighted_long_pass_fused(spark, tmp_path):
     assert fx.numeric is not None and fx.numeric.weighted_histograms
     plan = plan_of(union)
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    # top-k branch + weighted-digest branch + percentile-grid branch
+    # top-k branch + weighted-quantile branch + percentile-grid branch
     assert len(schemas) == 3, plan
     colsets = [
         {c.split(":")[0] for c in s.split(",") if c} for s in schemas
@@ -349,33 +349,11 @@ def test_unweighted_sketch_long_pass_stays_in_jvm(spark, tmp_path):
     assert "approx_top_k_accumulate" in plan and "theta_sketch_agg" in plan
 
 
-def _scan_branches(plan: str) -> list[tuple[set, bool]]:
-    """(ReadSchema column names, whether a Python node is above the scan)
-    for each scan of a physical plan's tree string."""
-
-    def depth(line):
-        return len(line) - len(line.lstrip(" :+-"))
-
-    lines = plan.splitlines()
-    out = []
-    for i, line in enumerate(lines):
-        m = re.search(r"ReadSchema: (struct<.*>)", line)
-        if m is None:
-            continue
-        d, python = depth(line), False
-        for up in reversed(lines[:i]):
-            if depth(up) < d:
-                d = depth(up)
-                python |= "Pandas" in up.lstrip(" :+-").split(" ")[0]
-        out.append((set(re.findall(r"[<,](\w+):", m.group(1))), python))
-    return out
-
-
-def test_weighted_sketch_long_pass_has_one_python_node(spark, tmp_path):
-    """Sketch mode with a weight column: the weighted t-digest partial is
-    the union's only ``MapInPandas``, and it reads only the numeric columns
-    and the weight. The weighted top-k branch (a scan of the long frame's
-    string and weight columns) has no Python node above it."""
+def test_weighted_long_pass_has_no_python_node(spark, tmp_path):
+    """With a weight column, in both modes, the long pass's union has no
+    Python node: the weighted quantile buckets and the weighted top-k are
+    Spark aggregates. The bucket branch reads only the numeric columns and
+    the weight."""
     from data_validation_spark.stats import engine
     from data_validation_spark.stats.engine import compute_statistics
     from data_validation_spark.stats.options import StatsOptions
@@ -388,23 +366,28 @@ def test_weighted_sketch_long_pass_has_one_python_node(spark, tmp_path):
     )
     p = str(tmp_path / "wsk.parquet")
     df.write.parquet(p)
-    engine.CAPTURE_UNION_FRAME = True
-    try:
-        stats = compute_statistics(
-            spark.read.parquet(p), StatsOptions(use_sketches=True, weight_column="w")
-        )
-        union = engine._last_union_frame
-    finally:
-        engine.CAPTURE_UNION_FRAME = False
-        engine._last_union_frame = None
-    s = stats.default_slice().feature("s").string
-    assert s.unique == 7 and len(s.weighted_top_values) == 7
-    plan = union._jdf.queryExecution().sparkPlan().toString()
-    nodes = [line.lstrip(" :+-").split(" ")[0] for line in plan.splitlines()]
-    assert nodes.count("MapInPandas") == 1, plan
-    branches = _scan_branches(plan)
-    assert [cols for cols, python in branches if python] == [{"x", "a", "w"}], plan
-    assert any({"s", "w"} <= cols and not python for cols, python in branches), plan
+    for use_sketches in (False, True):
+        engine.CAPTURE_UNION_FRAME = True
+        try:
+            stats = compute_statistics(
+                spark.read.parquet(p),
+                StatsOptions(use_sketches=use_sketches, weight_column="w"),
+            )
+            union = engine._last_union_frame
+        finally:
+            engine.CAPTURE_UNION_FRAME = False
+            engine._last_union_frame = None
+        s = stats.default_slice().feature("s").string
+        assert s.unique == 7 and len(s.weighted_top_values) == 7
+        assert stats.default_slice().feature("a").numeric.weighted_median is not None
+        plan = union._jdf.queryExecution().sparkPlan().toString()
+        nodes = [line.lstrip(" :+-").split(" ")[0] for line in plan.splitlines()]
+        python = [n for n in nodes if "Pandas" in n or "EvalPython" in n]
+        assert python == [], plan
+        schemas = [set(re.findall(r"[<,](\w+):", m))
+                   for m in re.findall(r"ReadSchema: (struct<.*>)", plan)]
+        assert {"x", "a", "w"} in schemas, plan
+        assert any({"s", "w"} <= cols for cols in schemas), plan
 
 
 def test_lsh_pairing_stays_in_jvm(spark):

@@ -1,14 +1,12 @@
 """Property-based tests (hypothesis) over the pure driver-side kernels —
 the fuzz layer of the reference's test strategy (SURVEY.md §5), aimed at
 the math that golden tests only sample: histogram mass conservation,
-sketch/merge invariants, codec roundtrips, drift metric bounds.
+weighted quantile bounds, codec roundtrips, drift metric bounds.
 
 No SparkSession here: everything under test is driver-side numpy/python,
 so the suite stays fast and deterministic (hypothesis derandomized
 per-profile via explicit seeds/settings).
 """
-
-import math
 
 import numpy as np
 import pytest
@@ -78,73 +76,50 @@ def test_median_from_boundaries_between_extremes(values):
     assert min(values) - 1e-9 <= med <= max(values) + 1e-9
 
 
-# --------------------------------------------------------------- t-digest ---
-@SET
-@given(
-    st.lists(
-        st.floats(min_value=-1e4, max_value=1e4, allow_nan=False),
-        min_size=10,
-        max_size=2000,
-    ),
-    st.integers(min_value=2, max_value=5),
-)
-def test_tdigest_split_merge_equals_sequential(values, n_splits):
-    from data_validation_spark.stats.sketches.tdigest import TDigest
-
-    arr = np.asarray(values)
-    seq = TDigest(compression=100)
-    seq.add(arr)
-    parts = [TDigest(compression=100) for _ in range(n_splits)]
-    for i, t in enumerate(parts):
-        chunk = arr[i::n_splits]
-        if chunk.size:
-            t.add(chunk)
-    merged = parts[0]
-    for t in parts[1:]:
-        merged = merged.merge(t)
-    assert merged.count == pytest.approx(seq.count)
-    assert merged.min == seq.min and merged.max == seq.max
-    rng = (arr.max() - arr.min()) or 1.0
-    for q in (0.25, 0.5, 0.75):
-        assert abs(merged.quantile(q) - seq.quantile(q)) <= 0.05 * rng + 1e-9
-        # both stay within the data envelope
-        assert arr.min() - 1e-9 <= merged.quantile(q) <= arr.max() + 1e-9
-
-
+# ------------------------------------------------ weighted quantile grid ---
 @SET
 @given(
     st.lists(
         st.tuples(
             st.floats(min_value=-1e4, max_value=1e4, allow_nan=False),
-            st.floats(min_value=0.01, max_value=100.0),
+            # quarter weights: every sum is exact, so the rank of q·W is too
+            st.integers(min_value=1, max_value=400).map(lambda k: k / 4),
         ),
-        min_size=10,
-        max_size=800,
-    )
+        min_size=1,
+        max_size=300,
+    ),
+    st.data(),
 )
-def test_tdigest_weighted_quantile_envelope(pairs):
-    from data_validation_spark.stats.sketches.tdigest import TDigest
+def test_weighted_quantile_grid_stays_in_the_exact_bucket(pairs, data):
+    """Split sorted weighted values into any contiguous buckets: each grid
+    point lies in [lo, hi] of the bucket holding the exact (lower) weighted
+    quantile, q = 0 and q = 1 give the minimum and the maximum, and the mass
+    is the total weight."""
+    from data_validation_spark.stats.quantiles import weighted_quantile_grid
 
+    qs = [i / 100 for i in range(101)]
+    pairs = sorted(pairs)
     x = np.array([p[0] for p in pairs])
     w = np.array([p[1] for p in pairs])
-    td = TDigest(compression=100)
-    td.add(x, w)
-    assert td.count == pytest.approx(w.sum(), rel=1e-9)
-    # The digest's guarantee is on RANK, not value: between two point
-    # masses it interpolates (hypothesis found [0:w8.5, 1:w9] → 0.105,
-    # value error ~1 but rank error 0.014), so assert the weighted mass
-    # strictly below / strictly above the estimate each stay ≤ (0.5 + ε)W.
-    est = td.quantile(0.5)
-    W = w.sum()
-    # 1-ulp slack: centroid means reconstruct a point mass only to float
-    # rounding, and a strict < / > at the mass itself would count the whole
-    # point on the wrong side of an estimate 1 ulp off.
-    tol = 1e-9 * max(1.0, abs(est))
-    below = float(w[x < est - tol].sum())
-    above = float(w[x > est + tol].sum())
-    eps = 0.1
-    assert below <= (0.5 + eps) * W + 1e-9
-    assert above <= (0.5 + eps) * W + 1e-9
+    cuts = data.draw(st.lists(st.booleans(), min_size=x.size - 1, max_size=x.size - 1))
+    starts = [0] + [i + 1 for i, cut in enumerate(cuts) if cut]
+    ends = starts[1:] + [x.size]
+    buckets = [(x[a], x[b - 1], w[a:b].sum()) for a, b in zip(starts, ends)]
+    grid, mass = weighted_quantile_grid(buckets, qs)
+    assert mass == pytest.approx(w.sum(), rel=1e-12)
+    assert grid[0] == x.min() and grid[-1] == x.max()
+    cw = np.cumsum(w)
+    for q, est in zip(qs[1:-1], grid[1:-1]):
+        j = int(np.searchsorted(cw, q * cw[-1], side="left"))
+        b = int(np.searchsorted(starts, j, side="right")) - 1
+        lo, hi, _ = buckets[b]
+        assert lo <= est <= hi, (q, est, buckets[b])
+
+
+def test_weighted_quantile_grid_without_buckets():
+    from data_validation_spark.stats.quantiles import weighted_quantile_grid
+
+    assert weighted_quantile_grid([], [0.0, 0.5, 1.0]) is None
 
 
 # ---------------------------------------------------------------- drift -----
@@ -330,83 +305,6 @@ def test_tfexample_wire_roundtrip(features):
     # compare only non-empty features exactly, empties as empty
     for name, values in features.items():
         assert back.get(name, []) == values or (values == [] and back[name] == [])
-
-
-@SET
-@given(
-    st.lists(
-        st.integers(min_value=1, max_value=50), min_size=50, max_size=2000
-    ),
-    st.integers(min_value=2, max_value=12),
-)
-def test_tdigest_discrete_quantiles_across_merges(values, n_splits):
-    """Discrete data across partition splits and merges: identical point
-    values merge unconditionally into one indivisible point centroid per
-    distinct value. When EVERY centroid survives as a point mass (each
-    distinct value's weight beats the local k-span, so no mixed centroid
-    forms) the digest CDF equals the empirical CDF and quantiles are EXACT.
-    A low-mass distinct value may still legally be absorbed into a mixed
-    centroid by the k1-scale rule; then we assert the bounded rank error
-    instead (≤ half the center-span mass, ~pi/compression).
-    Regression: the k-span gate once split heavy values across centroids,
-    whose fragments averaged with neighboring values after merge()."""
-    from data_validation_spark.stats.sketches.tdigest import TDigest
-
-    arr = np.asarray(values, dtype=np.float64)
-    parts = [TDigest(compression=100) for _ in range(n_splits)]
-    for i, t in enumerate(parts):
-        chunk = arr[i::n_splits]
-        if chunk.size:
-            t.add(chunk)
-    merged = parts[0]
-    for t in parts[1:]:
-        merged = merged.merge(t)
-    merged.compact()
-    s = np.sort(arr)
-    n = arr.size
-    all_points = bool(merged.points.all())
-    # k1-scale center mass per centroid is total*pi/compression; rank error
-    # is at most half of one centroid span on each side of a boundary.
-    eps = math.pi / 100.0
-    for q in (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99):
-        got = merged.quantile(q)
-        if all_points:
-            # exact lower-rank quantile of the empirical CDF: the digest's
-            # step function returns the value covering q*total
-            k = min(int(np.ceil(q * n)) - 1, n - 1)
-            assert got == s[max(k, 0)]
-        else:
-            # rank window of the returned value must overlap [q-eps, q+eps]
-            lo_rank = np.searchsorted(s, got, side="left") / n
-            hi_rank = np.searchsorted(s, got, side="right") / n
-            assert lo_rank <= q + eps and hi_rank >= q - eps
-
-
-def test_tdigest_heavy_discrete_exact_after_merge():
-    """Deterministic pin of the motivating case: 20 distinct values x 300
-    copies each (6k rows) split across 8 partitions. Every distinct value's
-    mass (300) exceeds the center k-span (6000*pi/100 ~ 188), so with the
-    unconditional equal-value merge each distinct value stays a single point
-    centroid and all probed quantiles are exact. Before the fix, equal-value
-    merging was k-span-gated, fragments of heavy values averaged with
-    neighboring values after merge(), and the median drifted off-value."""
-    from data_validation_spark.stats.sketches.tdigest import TDigest
-
-    arr = np.repeat(np.arange(1.0, 21.0), 300)
-    rng = np.random.default_rng(7)
-    rng.shuffle(arr)
-    parts = [TDigest(compression=100) for _ in range(8)]
-    for i, t in enumerate(parts):
-        t.add(arr[i::8])
-    merged = parts[0]
-    for t in parts[1:]:
-        merged = merged.merge(t)
-    merged.compact()
-    assert merged.points.all()
-    s = np.sort(arr)
-    for q in (0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99):
-        k = min(int(np.ceil(q * arr.size)) - 1, arr.size - 1)
-        assert merged.quantile(q) == s[max(k, 0)]
 
 
 # ------------------------------------------------------- codec properties --

@@ -1,70 +1,11 @@
-"""Sketch-layer tests — three-way accumulate/merge/compact parity per the
-reference's harness pattern (tdv/utils/test_util.py:276-389): (a) one
-accumulator per batch then merge, (b) merge then compact, (c) sequential adds
-into one accumulator must all agree within tolerance.
+"""Sketch-mode and weighted-quantile tests through ``compute_statistics``:
+sketch mode against exact mode, the weighted quantile estimator against
+exact weighted quantiles, and the top-k / uniques sketches' bounds.
 """
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
-
-from data_validation_spark.stats.sketches.tdigest import TDigest
-
-
-# ------------------------------------------------------------------ t-digest
-def test_tdigest_quantiles_uniform():
-    rng = np.random.RandomState(0)
-    data = rng.uniform(0, 100, 50_000)
-    td = TDigest()
-    td.add(data)
-    for q in (0.01, 0.25, 0.5, 0.75, 0.99):
-        assert td.quantile(q) == pytest.approx(np.quantile(data, q), abs=1.0)
-    assert td.min == data.min() and td.max == data.max()
-
-
-def test_tdigest_three_way_parity():
-    rng = np.random.RandomState(1)
-    batches = [rng.normal(50, 10, 5000) for _ in range(4)]
-    all_data = np.concatenate(batches)
-
-    # (a) one accumulator per batch, merged
-    accs = []
-    for b in batches:
-        t = TDigest()
-        t.add(b)
-        accs.append(t)
-    merged = accs[0]
-    for t in accs[1:]:
-        merged = merged.merge(t)
-    # (b) merged + compacted again
-    compacted = merged.merge(TDigest())
-    # (c) sequential
-    seq = TDigest()
-    for b in batches:
-        seq.add(b)
-
-    for q in (0.1, 0.5, 0.9):
-        truth = np.quantile(all_data, q)
-        for sk in (merged, compacted, seq):
-            assert sk.quantile(q) == pytest.approx(truth, abs=0.5)
-    assert merged.count == pytest.approx(len(all_data))
-
-
-def test_tdigest_skewed_and_point_mass():
-    td = TDigest()
-    td.add(np.array([5.0] * 10_000))  # pure point mass
-    assert td.quantile(0.5) == pytest.approx(5.0)
-    td2 = TDigest()
-    td2.add(np.concatenate([np.zeros(9000), np.full(1000, 1000.0)]))
-    assert td2.quantile(0.5) == pytest.approx(0.0, abs=1e-6)
-    assert td2.quantile(0.95) == pytest.approx(1000.0, abs=5.0)
-
-
-def test_tdigest_ignores_nonfinite():
-    td = TDigest()
-    td.add(np.array([1.0, np.nan, np.inf, -np.inf, 3.0]))
-    assert td.count == 2
-    assert td.quantile(0.5) == pytest.approx(2.0, abs=1.0)
 
 
 # ----------------------------------------------------------- engine parity
@@ -98,38 +39,6 @@ def _np_weighted_quantile(x, w, q):
     xs, ws = x[order], w[order]
     cw = np.cumsum(ws)
     return float(xs[np.searchsorted(cw, q * cw[-1])])
-
-
-def test_tdigest_weighted_three_way_parity():
-    # Reference weighted_quantiles_summary parity
-    # (basic_stats_generator.py:350,387,470-472): the weighted digest must be
-    # order-insensitive under add/merge/compact, and track the exact weighted
-    # quantiles of the stream.
-    rng = np.random.RandomState(3)
-    batches = [
-        (rng.normal(50, 10, 4000), rng.uniform(0.1, 5.0, 4000)) for _ in range(4)
-    ]
-    all_x = np.concatenate([b[0] for b in batches])
-    all_w = np.concatenate([b[1] for b in batches])
-
-    accs = []
-    for x, w in batches:
-        t = TDigest()
-        t.add(x, w)
-        accs.append(t)
-    merged = accs[0]
-    for t in accs[1:]:
-        merged = merged.merge(t)
-    compacted = merged.merge(TDigest())
-    seq = TDigest()
-    for x, w in batches:
-        seq.add(x, w)
-
-    for q in (0.1, 0.5, 0.9):
-        truth = _np_weighted_quantile(all_x, all_w, q)
-        for sk in (merged, compacted, seq):
-            assert sk.quantile(q) == pytest.approx(truth, abs=0.6)
-    assert merged.count == pytest.approx(all_w.sum(), rel=1e-9)
 
 
 def test_weighted_sketch_quantiles_engine(spark):
@@ -167,71 +76,11 @@ def test_weighted_sketch_quantiles_engine(spark):
     assert n2.weighted_median > n2.median + 2.0
 
 
-def _merge_groups(frame) -> int:
-    """FlatMapGroupsInPandas nodes in ``frame``'s physical plan: one per
-    merge tier of combine_per_key."""
-    return frame._jdf.queryExecution().sparkPlan().toString().count(
-        "FlatMapGroupsInPandas"
-    )
-
-
-@pytest.mark.parametrize(
-    "use_sketches", [True, False], ids=["weighted_sketch", "weighted_exact"]
-)
-def test_fanout_merge_tier_activates_and_preserves_results(
-    spark, monkeypatch, use_sketches
-):
-    # Two-tier salted merge (the explicit hot-key fanout,
-    # stats_impl.py:296-303 CombinePerKey-with-fanout analogue): force the
-    # tier on by lowering the threshold below the input's partition count and
-    # assert (a) it activated — two merge nodes in the combine frame's plan
-    # instead of one — and (b) results are unchanged vs the single-tier path:
-    # merge must be associative across the salt split. Only weighted runs
-    # reach this path: unweighted sketch stats are Spark aggregates.
-    from data_validation_spark.stats.engine import compute_statistics
-    from data_validation_spark.stats.options import StatsOptions
-    from data_validation_spark.stats.sketches import combine, runner
-
-    frames = []
-
-    def recording(*args):
-        frame = combine.combine_per_key(*args)
-        frames.append(frame)
-        return frame
-
-    monkeypatch.setattr(runner, "combine_per_key", recording)
-    rows = [(float(i % 100), f"k{i % 11}", 1.0 + i % 3) for i in range(8000)]
-    df = spark.createDataFrame(rows, "x double, s string, w double").repartition(8)
-    options = StatsOptions(use_sketches=use_sketches, weight_column="w")
-
-    base = compute_statistics(df, options)
-    monkeypatch.setattr(combine, "FANOUT_THRESHOLD", 2)
-    fanned = compute_statistics(df, options)
-    assert [_merge_groups(f) for f in frames] == [1, 2]
-
-    for stats in (base, fanned):
-        n = stats.default_slice().feature("x").numeric
-        s = stats.default_slice().feature("s").string
-        assert n.min == 0.0 and n.max == 99.0
-        assert n.mean == pytest.approx(49.5, abs=0.5)
-        assert s.unique == 11
-    bn = base.default_slice().feature("x").numeric
-    fn = fanned.default_slice().feature("x").numeric
-    assert fn.median == pytest.approx(bn.median, abs=1.0)
-    assert bn.weighted_median is not None
-    assert fn.weighted_median == pytest.approx(bn.weighted_median, abs=1.0)
-    assert fn.weighted_mean == pytest.approx(bn.weighted_mean, rel=1e-9)
-    fs = fanned.default_slice().feature("s").string
-    bs = base.default_slice().feature("s").string
-    assert dict(fs.top_values) == dict(bs.top_values)
-    assert fs.weighted_top_values and fs.weighted_top_values == bs.weighted_top_values
-
-
 def test_weighted_quantiles_exact_mode_matches_sketch_mode(spark):
     # Exact mode with a weight column must ALSO emit WeightedNumericStatistics
     # median/histograms (reference emits them whenever weights are configured,
-    # regardless of generator flavor) — via the dedicated weighted-quantile
-    # job, agreeing with sketch mode within digest tolerance.
+    # regardless of generator flavor) — from the same weighted-quantile
+    # branch as sketch mode.
     from data_validation_spark.stats.engine import compute_statistics
     from data_validation_spark.stats.options import StatsOptions
 
@@ -257,6 +106,37 @@ def test_weighted_quantiles_exact_mode_matches_sketch_mode(spark):
     # no weight column → no weighted quantile job, no weighted stats
     plain = compute_statistics(df.select("x"), StatsOptions())
     assert plain.default_slice().feature("x").numeric.weighted_median is None
+
+
+def test_weighted_quantiles_do_not_depend_on_partitioning(spark):
+    """60k weighted normal(0, 10) values: the same weighted median and
+    weighted QUANTILES boundaries at 1, 7 and 32 input partitions, in both
+    modes (the weight sums may differ only in their rounding order)."""
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    rng = np.random.RandomState(17)
+    x = rng.normal(0, 10, 60_000)
+    w = rng.uniform(0.1, 5.0, 60_000)
+    df = spark.createDataFrame(
+        [(float(a), float(b)) for a, b in zip(x, w)], "x double, w double"
+    ).cache()
+    try:
+        for use_sketches in (False, True):
+            got = []
+            for parts in (1, 7, 32):
+                n = compute_statistics(
+                    df.repartition(parts),
+                    StatsOptions(weight_column="w", use_sketches=use_sketches),
+                ).default_slice().feature("x").numeric
+                qh = next(h for h in n.weighted_histograms if h.type == "QUANTILES")
+                got.append([n.weighted_median]
+                           + [b.high_value for b in qh.buckets])
+            for other in got[1:]:
+                assert other == pytest.approx(got[0], rel=1e-12), use_sketches
+            assert got[0][0] == pytest.approx(_np_weighted_quantile(x, w, 0.5), abs=0.1)
+    finally:
+        df.unpersist()
 
 
 # ------------------------------------------- sketch-mode top-k and uniques
