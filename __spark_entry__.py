@@ -1564,8 +1564,9 @@ def q_weighted_sketch_stats(spark, sf_dir):
     """Weighted quantiles through the sketch pass (reference
     WeightedNumericStatistics median + histograms via its weighted
     QuantilesSketch, basic_stats_generator.py:830-877; here the long pass's
-    log-spaced value buckets, γ = 1.01: at most 1% relative value error,
-    exact on values more than 1% apart, no Python). Self-verified: the
+    log-spaced value buckets, γ = 1.01, refined where one holds over 1% of
+    the weight: at most 1% value error and 1% of the weight in rank, exact
+    on values more than 1% apart, no Python). Self-verified: the
     weighted median is bounds-checked against
     the EXACT weighted median (l_quantity has ~50 distinct values → groupBy +
     50-row driver cumsum, no full sort), the weighted mean against the exact

@@ -8,7 +8,8 @@ A from-scratch reimplementation of the capabilities of tensorflow/data-validatio
   approximate quantiles (``percentile_approx`` grids), top-k / unique counts
   (exact, or in sketch mode Spark's ``approx_top_k`` frequent-items and
   ``theta_sketch_agg`` KMV aggregates), weighted quantiles (weight summed
-  per log-spaced value bucket: at most 1% relative value error, exact on
+  per log-spaced value bucket, buckets over 1% of the weight split
+  further: at most 1% value and 1%-of-weight rank error, exact on
   values more than 1% apart), string/bytes stats, and semantic-domain
   stats (image format histograms, natural-language heuristics, time formats).
   The built-in passes of ``compute_statistics`` are Catalyst aggregates

@@ -26,8 +26,11 @@ Quantiles are the same ``percentile_approx`` grids in both modes. KLL
 exact 25 in 3 of 16 partition layouts, it raises on an empty sketch, and it
 takes no weight. Weighted quantiles, which no Spark aggregate computes, come
 from one more long-pass branch that sums the weights per log-spaced value
-bucket (``_weighted_quantile_frame``): at most 1% relative value error,
-exact on values more than 1% apart. No built-in statistic runs in Python.
+bucket (``_weighted_quantile_frame``), with buckets over 1% of the weight
+split into sub-buckets by one more action when there are any
+(``_refine_heavy_buckets``): at most 1% value error and 1% of the weight in
+rank, exact on values more than 1% apart. No built-in statistic runs in
+Python.
 """
 
 from __future__ import annotations
@@ -67,6 +70,9 @@ _QS = [i / _QUANTILE_CUTS for i in range(_QUANTILE_CUTS + 1)]
 # the values v with ceil(log_γ |v|) equal, so its lo and hi differ by at
 # most 1% of either (DDSketch's rule, which takes weights as they come).
 _WQ_GAMMA = 1.01
+# Sub-buckets per refinement round of a bucket that holds over 1% of the
+# weight (_refine_heavy_buckets).
+_WQ_SPLIT = 1024
 
 # Sketch-mode top-k counts values over LARGE_STRING_THRESHOLD bytes as one
 # placeholder (see _sketch_topk_value).
@@ -412,10 +418,9 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
             .select(F.lit("arr").alias("kind"), "*")
         )
 
-    if weighted:
-        wq_frame = _weighted_quantile_frame(df, plans, slice_col, weight)
-        if wq_frame is not None:
-            finals.append(wq_frame)
+    wq_values = _weighted_values(df, plans, slice_col, weight) if weighted else None
+    if wq_values is not None:
+        finals.append(_weighted_quantile_frame(wq_values))
 
     if quant_exprs:
         # percentile-grid branch: per-slice wide agg exploded to long
@@ -471,34 +476,140 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
             # feature holds the wide-agg alias (e.g. "c3__quants")
             quant_long.setdefault(r["slice_key"], {})[r["feature"]] = r["quants"]
         else:  # wq
-            wq_data[key] = weighted_quantile_grid(r["buckets"], _QS)
+            wq_data[key] = [tuple(piece) for piece in r["pieces"]]
 
+    if wq_values is not None:
+        _refine_heavy_buckets(df, plans, slice_col, weight, wq_data)
+    for key, pieces in wq_data.items():
+        wq_data[key] = weighted_quantile_grid(pieces, _QS)
     return topk_data, uniq_data, arr_data, wtopk_data, wq_data, quant_long
 
 
-def _weighted_quantile_frame(df, plans, slice_col, weight):
-    """The ``wq`` union rows: per numeric (slice, feature), its finite
-    values' log buckets ``array<struct<lo, hi, w>>`` sorted by ``lo``, read
-    by ``quantiles.weighted_quantile_grid``. A bucket is (sign, ⌈log_γ |v|⌉),
-    zero its own; it keeps its values' min, max and total weight. The
-    bucket rule does not depend on the partitioning, so neither do the
-    quantiles."""
+def _weighted_values(df, plans, slice_col, weight):
+    """The finite values of every numeric (slice, feature) with their
+    weight ``w`` and log bucket (``sign``, ``exp`` = ⌈log_γ |v|⌉, zero its
+    own), or None without numeric features."""
     wplans = [replace(p, categorical=False) for p in plans if p.numeric]
     long_df = E.long_format(df, wplans, slice_col, weight,
                             include_scalar_numeric=True)
     if long_df is None:
         return None
     v = F.col("num_value")
-    bucket = F.struct(F.col("lo"), F.col("hi"), F.col("w"))
-    return (
-        long_df.where(v.isNotNull() & ~v.isin(float("inf"), float("-inf")))
-        .groupBy("slice_key", "feature", F.signum(v).alias("sign"),
-                 F.ceil(F.log(_WQ_GAMMA, F.abs(v))).alias("exp"))
-        .agg(F.sum("weight").alias("w"), F.min(v).alias("lo"), F.max(v).alias("hi"))
-        .groupBy("slice_key", "feature")
-        .agg(F.array_sort(F.collect_list(bucket)).alias("buckets"))
-        .select(F.lit("wq").alias("kind"), "slice_key", "feature", "buckets")
+    return long_df.where(v.isNotNull() & ~v.isin(float("inf"), float("-inf"))).select(
+        "slice_key", "feature", F.signum(v).alias("sign"),
+        F.coalesce(F.ceil(F.log(_WQ_GAMMA, F.abs(v))), F.lit(0)).alias("exp"),
+        v.alias("v"), F.col("weight").alias("w"),
     )
+
+
+def _ordered(frame, by, order_col, offset=None):
+    """``frame`` with, in ``order_col`` order within ``by``: ``before``, the
+    weight of the rows before each row plus ``offset``, and whether the row
+    is the first or the last."""
+    order = Window.partitionBy(*by).orderBy(order_col)
+    before = F.coalesce(
+        F.sum("w").over(order.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0.0))
+    return frame.select(
+        *frame.columns, (before if offset is None else offset + before).alias("before"),
+        (F.row_number().over(order) == 1).alias("first"),
+        F.lead(order_col).over(order).isNull().alias("last"),
+    )
+
+
+def _holds_target():
+    """Some grid point j·W/100 lies in the row's (before, before + w], give
+    or take 1e-6 of a grid step for the order of the weight sums; the first
+    and last rows hold the min and max."""
+    rank = lambda x: F.try_divide(x * _QUANTILE_CUTS, F.col("total"))
+    end = F.col("before") + F.col("w")
+    return F.col("first") | F.col("last") | (
+        (F.col("w") > 0)
+        & (F.floor(rank(end) + 1e-6) > F.floor(rank(F.col("before")) - 1e-6))
+    )
+
+
+_PIECE = ["lo", "hi", "before", "w"]
+
+
+def _weighted_quantile_frame(values):
+    """The ``wq`` union rows: per numeric (slice, feature), the log buckets
+    of ``values`` that hold a point of the quantile grid, and the first and
+    last, as one ``array<struct<lo, hi, before, w>>`` sorted by ``lo``:
+    each bucket's min, max, the weight of all smaller values and its own
+    weight. A window over each feature's buckets (their number is bounded
+    in docs/SCALE.md) gives ``before``, so only about 101 buckets per
+    feature come back."""
+    key = ["slice_key", "feature"]
+    buckets = (
+        values.groupBy(*key, "sign", "exp")
+        .agg(F.min("v").alias("lo"), F.max("v").alias("hi"), F.sum("w").alias("w"))
+        .withColumn("total", F.sum("w").over(Window.partitionBy(*key)))
+    )
+    return (
+        _ordered(buckets, key, "lo").where(_holds_target())
+        .groupBy(*key)
+        .agg(F.array_sort(F.collect_list(F.struct(*_PIECE))).alias("pieces"))
+        .select(F.lit("wq").alias("kind"), *key, "pieces")
+    )
+
+
+def _refine_heavy_buckets(df, plans, slice_col, weight, pieces_by_key):
+    """Split, in place, each collected piece that holds more than one grid
+    step of weight (W / 100) and more than one value into ``_WQ_SPLIT``
+    equal-width sub-buckets of its [lo, hi], of which again only those that
+    hold a grid point come back, with the piece's first and last. Repeat
+    while such a piece remains. Afterwards the grid interpolates only inside
+    a piece with at most 1% of the weight, so its rank error is under one
+    grid step, or reads a single value exactly.
+
+    One more action per round, run only when some piece is that heavy (a
+    feature whose values crowd within 1% of one another, such as years or
+    prices near one level). It reads the heavy features' columns again,
+    keeps the values of the heavy pieces (a broadcast join on slice, feature
+    and [lo, hi]) and aggregates them by sub-bucket, so nothing is sorted
+    but the sub-buckets. Each round narrows a piece ``_WQ_SPLIT``-fold, and
+    after four a 1%-wide bucket is under 10⁻¹⁴ of its value wide: a piece
+    still heavy then is interpolated within that."""
+    key = ["slice_key", "feature"]
+    totals = {k: ps[-1][2] + ps[-1][3] for k, ps in pieces_by_key.items()}
+    for _ in range(4):
+        heavy = {(k, p) for k, ps in pieces_by_key.items() for p in ps
+                 if p[0] < p[1] and p[3] > totals[k] / _QUANTILE_CUTS}
+        if not heavy:
+            return
+        features = {k[1] for k, _ in heavy}
+        values = _weighted_values(df, [p for p in plans if p.name in features],
+                                  slice_col, weight)
+        ranges = df.sparkSession.createDataFrame(
+            [(*k, lo, hi, before, totals[k]) for k, (lo, hi, before, _) in heavy],
+            "rslice string, rfeature string, plo double, phi double, "
+            "offset double, total double")
+        v = F.col("v")
+        sub = F.least(
+            F.floor((v - F.col("plo")) / (F.col("phi") - F.col("plo")) * _WQ_SPLIT),
+            F.lit(_WQ_SPLIT - 1))
+        subs = (
+            values.join(F.broadcast(ranges),
+                        F.col("slice_key").eqNullSafe(F.col("rslice"))
+                        & (F.col("feature") == F.col("rfeature"))
+                        & v.between(F.col("plo"), F.col("phi")))
+            .groupBy(*key, "plo", "offset", "total", sub.alias("sub"))
+            .agg(F.min(v).alias("lo"), F.max(v).alias("hi"), F.sum("w").alias("w"))
+        )
+        rows = (
+            _ordered(subs, key + ["plo"], "lo", F.col("offset"))
+            .where(_holds_target())
+            .select(*key, *_PIECE)
+            .collect()
+        )
+        split = {k for k, _ in heavy}
+        for k in split:
+            pieces_by_key[k] = [p for p in pieces_by_key[k] if (k, p) not in heavy]
+        for r in rows:
+            pieces_by_key[(r["slice_key"], r["feature"])].append(
+                tuple(r[c] for c in _PIECE))
+        for k in split:
+            pieces_by_key[k].sort()
 
 
 def _salted_topk(counts, k: int, ranks: dict, unique: bool = False):

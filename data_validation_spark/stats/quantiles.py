@@ -234,32 +234,33 @@ def equi_width_histogram(
     return Histogram("STANDARD", buckets, num_nan=num_nan)
 
 
-def weighted_quantile_grid(buckets, qs: Sequence[float]):
-    """Weighted quantiles from the long pass's log buckets.
+def weighted_quantile_grid(pieces, qs: Sequence[float]):
+    """Weighted quantiles from the long pass's pieces.
 
-    ``buckets`` holds ``(lo, hi, w)`` per populated bucket, sorted by ``lo``:
-    the smallest and largest value in it and their total weight. Buckets
-    never overlap in value. The quantile at ``q`` is read in the first bucket
-    whose cumulative weight reaches ``q·W``, interpolated from ``lo`` to
-    ``hi`` by the share of that bucket's weight used, so it lies in the same
-    bucket as the exact weighted quantile (a bucket with ``lo == hi`` gives
-    its value exactly). ``q = 0`` and ``q = 1`` give the minimum and the
-    maximum. Returns (the grid at ``qs``, ``W``), or None without buckets.
+    ``pieces`` holds ``(lo, hi, before, w)`` per piece of the values, sorted
+    by ``lo``: the smallest and largest value in it, the total weight of all
+    smaller values and its own weight. Pieces never overlap in value, and
+    they need not cover all values: only those that hold a grid point come
+    back, plus the first and the last. The quantile at ``q`` is read in the
+    first piece whose weight reaches ``q·W`` (so ``before < q·W ≤ before +
+    w``), interpolated from ``lo`` to ``hi`` by the share of that piece's
+    weight used; a piece with ``lo == hi`` gives its value exactly. ``q = 0``
+    and ``q = 1`` give the minimum and the maximum. Returns (the grid at
+    ``qs``, ``W``), or None without pieces.
     """
-    if not buckets:
+    if not pieces:
         return None
-    lo, hi, w = (np.asarray(c, dtype=np.float64) for c in zip(*buckets))
-    cum = np.cumsum(w)
-    before = np.concatenate(([0.0], cum[:-1]))
+    lo, hi, before, w = (np.asarray(c, dtype=np.float64) for c in zip(*pieces))
+    end = before + w
     q = np.asarray(qs, dtype=np.float64)
-    target = q * cum[-1]
-    i = np.minimum(np.searchsorted(cum, target, side="left"), w.size - 1)
+    target = q * end[-1]
+    i = np.minimum(np.searchsorted(end, target, side="left"), w.size - 1)
     used = np.divide(target - before[i], w[i], out=np.zeros_like(target),
                      where=w[i] > 0)
     grid = np.minimum(lo[i] + (hi[i] - lo[i]) * np.clip(used, 0.0, 1.0), hi[i])
     grid[q <= 0] = lo[0]
     grid[q >= 1] = hi[-1]
-    return [float(x) for x in grid], float(cum[-1])
+    return [float(x) for x in grid], float(end[-1])
 
 
 def median_from_boundaries(boundaries: Sequence[float]) -> float:

@@ -105,8 +105,9 @@ class NumericStats:
     # Weighted quantile stats (the reference's WeightedNumericStatistics
     # median + histograms, basic_stats_generator.py:830-877): present only
     # when a weight column was configured and the feature has a finite value
-    # (in both modes, from the long pass's weighted log buckets, in the role
-    # of the reference's weighted QuantilesSketch).
+    # (in both modes, from the long pass's weighted log buckets, refined
+    # where one holds over 1% of the weight, in the role of the reference's
+    # weighted QuantilesSketch).
     weighted_median: Optional[float] = None
     weighted_histograms: list[Histogram] = field(default_factory=list)
 

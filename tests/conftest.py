@@ -1,6 +1,7 @@
 import os
 import sys
 
+import numpy as np
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -20,3 +21,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def weighted_quantile(x, w, q):
+    """Exact lower weighted quantile: the first value, in sorted order,
+    whose cumulative weight reaches q·W; q = 0 and q = 1 give the minimum
+    and the maximum."""
+    order = np.argsort(x, kind="stable")
+    xs, cw = np.asarray(x)[order], np.cumsum(np.asarray(w)[order])
+    if q <= 0:
+        return float(xs[0])
+    if q >= 1:
+        return float(xs[-1])
+    return float(xs[np.searchsorted(cw, q * cw[-1], side="left")])

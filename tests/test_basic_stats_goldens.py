@@ -14,6 +14,7 @@ import math
 
 import numpy as np
 import pytest
+from conftest import weighted_quantile
 
 from data_validation_spark.stats.engine import compute_statistics
 from data_validation_spark.stats.options import StatsOptions
@@ -222,16 +223,6 @@ def test_nested_all_inf_weighted_moments(spark, use_sketches):
         assert (n.mean, n.weighted_mean, n.weighted_std_dev) == (INF, INF, 0.0), name
 
 
-def _weighted_quantile(sorted_x, cum_w, q):
-    """Lower weighted quantile: the first value whose cumulative weight
-    reaches q·W."""
-    if q <= 0:
-        return sorted_x[0]
-    if q >= 1:
-        return sorted_x[-1]
-    return sorted_x[int(np.searchsorted(cum_w, q * cum_w[-1], side="left"))]
-
-
 @pytest.mark.parametrize("parts", [1, 8])
 @pytest.mark.parametrize("use_sketches", [False, True])
 def test_weighted_quantiles_heavy_discrete_exact(spark, use_sketches, parts):
@@ -248,12 +239,10 @@ def test_weighted_quantiles_heavy_discrete_exact(spark, use_sketches, parts):
     n = compute_statistics(
         df, StatsOptions(weight_column="w", use_sketches=use_sketches)
     ).default_slice().feature("x").numeric
-    order = np.argsort(x, kind="stable")
-    xs, cw = x[order], np.cumsum(w[order])
-    assert n.weighted_median == _weighted_quantile(xs, cw, 0.5)
+    assert n.weighted_median == weighted_quantile(x, w, 0.5)
     qh = next(h for h in n.weighted_histograms if h.type == "QUANTILES")
     bounds = [qh.buckets[0].low_value] + [b.high_value for b in qh.buckets]
-    assert bounds == [_weighted_quantile(xs, cw, i / 10) for i in range(11)]
+    assert bounds == [weighted_quantile(x, w, i / 10) for i in range(11)]
     assert qh.total_count() == pytest.approx(float(w.sum()), rel=1e-12)
 
 

@@ -90,30 +90,38 @@ def test_median_from_boundaries_between_extremes(values):
     ),
     st.data(),
 )
-def test_weighted_quantile_grid_stays_in_the_exact_bucket(pairs, data):
-    """Split sorted weighted values into any contiguous buckets: each grid
-    point lies in [lo, hi] of the bucket holding the exact (lower) weighted
+def test_weighted_quantile_grid_stays_in_the_exact_piece(pairs, data):
+    """Split sorted weighted values into any contiguous pieces: each grid
+    point lies in [lo, hi] of the piece holding the exact (lower) weighted
     quantile, q = 0 and q = 1 give the minimum and the maximum, and the mass
-    is the total weight."""
+    is the total weight. Keeping only the pieces that hold a grid point,
+    and the first and last, gives the same grid."""
     from data_validation_spark.stats.quantiles import weighted_quantile_grid
 
     qs = [i / 100 for i in range(101)]
     pairs = sorted(pairs)
     x = np.array([p[0] for p in pairs])
     w = np.array([p[1] for p in pairs])
+    cw = np.cumsum(w)
     cuts = data.draw(st.lists(st.booleans(), min_size=x.size - 1, max_size=x.size - 1))
     starts = [0] + [i + 1 for i, cut in enumerate(cuts) if cut]
     ends = starts[1:] + [x.size]
-    buckets = [(x[a], x[b - 1], w[a:b].sum()) for a, b in zip(starts, ends)]
-    grid, mass = weighted_quantile_grid(buckets, qs)
+    pieces = [(x[a], x[b - 1], cw[a - 1] if a else 0.0, w[a:b].sum())
+              for a, b in zip(starts, ends)]
+    grid, mass = weighted_quantile_grid(pieces, qs)
     assert mass == pytest.approx(w.sum(), rel=1e-12)
     assert grid[0] == x.min() and grid[-1] == x.max()
-    cw = np.cumsum(w)
     for q, est in zip(qs[1:-1], grid[1:-1]):
         j = int(np.searchsorted(cw, q * cw[-1], side="left"))
         b = int(np.searchsorted(starts, j, side="right")) - 1
-        lo, hi, _ = buckets[b]
-        assert lo <= est <= hi, (q, est, buckets[b])
+        lo, hi, _, _ = pieces[b]
+        assert lo <= est <= hi, (q, est, pieces[b])
+    holding = [
+        p for i, p in enumerate(pieces)
+        if i in (0, len(pieces) - 1)
+        or any(p[2] < q * cw[-1] <= p[2] + p[3] for q in qs)
+    ]
+    assert weighted_quantile_grid(holding, qs) == (grid, mass)
 
 
 def test_weighted_quantile_grid_without_buckets():

@@ -5,6 +5,7 @@ exact weighted quantiles, and the top-k / uniques sketches' bounds.
 
 import numpy as np
 import pytest
+from conftest import weighted_quantile
 from pyspark.sql import functions as F
 
 
@@ -34,13 +35,6 @@ def test_sketch_mode_vs_exact(spark):
 
 
 # ------------------------------------------------- weighted quantile sketch
-def _np_weighted_quantile(x, w, q):
-    order = np.argsort(x)
-    xs, ws = x[order], w[order]
-    cw = np.cumsum(ws)
-    return float(xs[np.searchsorted(cw, q * cw[-1])])
-
-
 def test_weighted_sketch_quantiles_engine(spark):
     # End-to-end: weighted median / mean / histograms in sketch mode
     # (WeightedNumericStatistics parity, basic_stats_generator.py:830-877).
@@ -57,7 +51,7 @@ def test_weighted_sketch_quantiles_engine(spark):
     n = stats.default_slice().feature("x").numeric
 
     assert n.weighted_median == pytest.approx(
-        _np_weighted_quantile(x, w, 0.5), abs=0.5
+        weighted_quantile(x, w, 0.5), abs=0.5
     )
     assert n.weighted_mean == pytest.approx(float((x * w).sum() / w.sum()), rel=1e-9)
     # histogram pair [STANDARD, QUANTILES], masses sum to total weight
@@ -94,7 +88,7 @@ def test_weighted_quantiles_exact_mode_matches_sketch_mode(spark):
     sketch = compute_statistics(df, StatsOptions(weight_column="w", use_sketches=True))
     ne = exact.default_slice().feature("x").numeric
     ns = sketch.default_slice().feature("x").numeric
-    truth = _np_weighted_quantile(x, w, 0.5)
+    truth = weighted_quantile(x, w, 0.5)
     assert ne.weighted_median == pytest.approx(truth, abs=1.0)
     assert ne.weighted_median == pytest.approx(ns.weighted_median, abs=1.0)
     assert [h.type for h in ne.weighted_histograms] == ["STANDARD", "QUANTILES"]
@@ -134,9 +128,69 @@ def test_weighted_quantiles_do_not_depend_on_partitioning(spark):
                            + [b.high_value for b in qh.buckets])
             for other in got[1:]:
                 assert other == pytest.approx(got[0], rel=1e-12), use_sketches
-            assert got[0][0] == pytest.approx(_np_weighted_quantile(x, w, 0.5), abs=0.1)
+            assert got[0][0] == pytest.approx(weighted_quantile(x, w, 0.5), abs=0.1)
     finally:
         df.unpersist()
+
+
+@pytest.mark.parametrize("parts", [1, 4])
+@pytest.mark.parametrize("use_sketches", [False, True])
+def test_weighted_quantiles_rank_bounded_on_offset_data(spark, use_sketches, parts):
+    """Values crowded within 1% of one another share a log bucket; the
+    weighted quantiles must still be right in rank, not just within 1% of
+    the value. A point mass at 1000 (weight 100) under 1001..1009 (weight
+    1) has the weighted median 1000 exactly; years and 4,000 values in
+    [1000, 1005) get every weighted QUANTILES boundary with at most one grid
+    step (1% of W) of extra weight strictly below or above it."""
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    rng = np.random.default_rng(5)
+    cases = {
+        "mass": ([1000.0] + [1000.0 + i for i in range(1, 10)], [100.0] + [1.0] * 9),
+        "year": (rng.integers(2000, 2025, 4000).astype(float), rng.uniform(0.1, 3.0, 4000)),
+        "near": (1000.0 + rng.uniform(0.0, 5.0, 4000), rng.uniform(0.1, 3.0, 4000)),
+    }
+    for name, (x, w) in cases.items():
+        x, w = np.asarray(x), np.asarray(w)
+        df = spark.createDataFrame(
+            [(float(a), float(b)) for a, b in zip(x, w)], "x double, w double"
+        ).repartition(parts)
+        n = compute_statistics(
+            df, StatsOptions(weight_column="w", use_sketches=use_sketches)
+        ).default_slice().feature("x").numeric
+        total = w.sum()
+        below, above = w[x < n.weighted_median].sum(), w[x > n.weighted_median].sum()
+        assert below <= 0.51 * total and above <= 0.51 * total, (name, n.weighted_median)
+        qh = next(h for h in n.weighted_histograms if h.type == "QUANTILES")
+        bounds = [qh.buckets[0].low_value] + [b.high_value for b in qh.buckets]
+        for i, b in enumerate(bounds):
+            q = i / 10
+            assert w[x < b].sum() <= (q + 0.01) * total, (name, q, b)
+            assert w[x > b].sum() <= (1 - q + 0.01) * total, (name, q, b)
+        if name == "mass":
+            assert n.weighted_median == 1000.0
+            assert n.weighted_median == weighted_quantile(x, w, 0.5)
+
+
+def test_weighted_quantiles_refine_per_slice_and_feature(spark):
+    """The refinement keys on (slice, feature): in each of two slices a
+    scalar and a nested feature crowded near one level get the exact
+    weighted median, and a wide-range feature next to them is unaffected."""
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    rows = []
+    for sl, base in (("p", 1000.0), ("q", 2000.0)):
+        rows.append((sl, base, [base], 1.0, 100.0))
+        rows += [(sl, base + i, [base + i], 10.0 ** i, 1.0) for i in range(1, 10)]
+    df = spark.createDataFrame(rows, "sl string, x double, a array<double>, b double, w double")
+    stats = compute_statistics(df, StatsOptions(weight_column="w", slice_column="sl"))
+    for sl, base in (("p", 1000.0), ("q", 2000.0)):
+        ds = stats.get_slice(sl)
+        assert ds.feature("x").numeric.weighted_median == base
+        assert ds.feature("a").numeric.weighted_median == base
+        assert ds.feature("b").numeric.weighted_median == 1.0
 
 
 # ------------------------------------------- sketch-mode top-k and uniques
