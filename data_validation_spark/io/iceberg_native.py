@@ -61,7 +61,7 @@ import shutil
 import struct
 import time
 import uuid as uuidlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Callable, Optional
 
 from data_validation_spark.io.avro import read_avro_file, write_avro_file
@@ -909,11 +909,6 @@ def _df_iceberg_schema(df) -> dict:
             }
         )
     return {"type": "struct", "schema-id": 0, "fields": fields}
-
-
-@dataclass
-class _PendingSpec:
-    fields: list[dict] = field(default_factory=list)
 
 
 def _make_spec(partition_by: Optional[list], schema: dict) -> list[dict]:

@@ -130,7 +130,7 @@ def validate_images(
     from functools import reduce
 
     def stats_job():
-        # format histogram is fused into the wide agg (options.image_columns);
+        # format histogram is fused into the bytes stats (options.image_columns);
         # the bytes column is scanned once for all its stats.
         s = compute_statistics(df, options)
         # Schema-driven NL stats (caption columns): computed only when the

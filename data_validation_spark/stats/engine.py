@@ -3,15 +3,18 @@
 Execution shape (cf. SURVEY.md §3.1 "Spark shape"):
 
 1. **Wide pass** — one ``df.groupBy(slice_key).agg(*exprs)`` computing every
-   built-in-expressible statistic for every column in a single scan: counts,
-   presence, valency, min/max/mean/stddev (NaN-excluded), zero/NaN/±inf
-   counts, approximate quantile grids, string/bytes lengths. Entirely JVM-side
-   (whole-stage codegen, partial+final hash agg — the reference's combiner
-   fusion and hot-key fanout are what Spark's partial aggregation already does).
+   codegen-able statistic for every non-binary column in a single scan:
+   counts, presence, valency, min/max/mean/stddev (NaN-excluded),
+   zero/NaN/±inf counts, string lengths. Entirely JVM-side (whole-stage
+   codegen, partial+final hash agg — the reference's combiner fusion and
+   hot-key fanout are what Spark's partial aggregation already does).
 
-2. **Long pass** — a stacked ``(slice, feature, value)`` projection feeding one
-   groupBy shuffle for exact top-k / unique counts (the reference's
-   ``top_k_uniques_stats_generator``) and numeric stats of array elements.
+2. **Long pass** — one action over a union of small result frames: a
+   stacked ``(slice, feature, value)`` projection feeding one groupBy
+   shuffle for exact top-k / unique counts (the reference's
+   ``top_k_uniques_stats_generator``) and numeric stats of array elements,
+   plus a per-slice object aggregate holding what would cost the wide pass
+   its codegen: the percentile grids and the binary-column stats.
 
 3. **Assembly** — driver-side transform of the tiny aggregate output into the
    ``DatasetStatsList`` artifact (histogram math in ``quantiles.py``).
@@ -129,15 +132,13 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         df.select(*stat_cols).schema, options.categorical_features
     )
     for p in plans:
-        if p.categorical:
-            p.categorical = _want_topk(p, options)
         if p.name in options.image_columns and p.stats_type == E.BYTES:
             p.image_stats = True
 
     _check_label(df, options)
 
-    # ---- wide, bytes, long, generator and lift jobs, run concurrently -------
-    agg_exprs, quant_exprs, bytes_exprs = E.build_agg_exprs(
+    # ---- wide, long, generator and lift jobs, run concurrently --------------
+    wide_exprs, obj_projs, obj_aggs = E.build_agg_exprs(
         plans,
         weight_arg,
         _QUANTILE_CUTS,
@@ -146,29 +147,15 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
     )
 
     def wide_job():
-        return df.groupBy(slice_col.alias("slice_key")).agg(*agg_exprs).collect()
-
-    def bytes_job():
-        # ALL binary-column stats (presence, lengths, theta-sketch unique,
-        # format sniff) run as their own concurrent job over a codegen'd
-        # projection of the payload (see exprs.build_agg_exprs docstring):
-        # the sketch aggregate would disable codegen in the wide agg, and
-        # with the binary stats isolated the wide agg's scan skips the binary
-        # column entirely — each column is still read exactly once.
-        if not bytes_exprs:
-            return []
-        projs = [pe for proj, _ in bytes_exprs for pe in proj]
-        aggs = [ae for _, agg in bytes_exprs for ae in agg]
-        src = df.select(slice_col.alias("slice_key"), *projs)
-        return src.groupBy("slice_key").agg(*aggs).collect()
+        return df.groupBy(slice_col.alias("slice_key")).agg(*wide_exprs).collect()
 
     def long_job():
-        # Top-k/uniques + array-element stats + percentile grids (which
-        # can't share the wide agg: they'd force it into ObjectHashAggregate,
-        # no codegen) + (when a weight column is set) weighted sketches, all
-        # in ONE action — see _run_long_pass.
-        return _run_long_pass(df, plans, slice_col, options, quant_exprs,
-                              weight_arg=weight_arg)
+        # Top-k/uniques + array-element stats + the object aggregate
+        # (percentile grids and binary-column stats, which would force the
+        # wide agg out of codegen) + (when a weight column is set) weighted
+        # quantile buckets, all in ONE action — see _run_long_pass.
+        return _run_long_pass(df, plans, slice_col, options, weight_arg,
+                              obj_projs, obj_aggs)
 
     def custom_gen_job():
         # User-defined generators (StatsOptions.generators) — their combiner
@@ -230,30 +217,23 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
 
     out = run_parallel(df.sparkSession, {
         "stats.wide": wide_job,
-        "stats.bytes": bytes_job,
         "stats.long": long_job,
         "stats.generators": custom_gen_job,
         "stats.lift": lift_job,
     })
-    wide_rows, bytes_rows = out["stats.wide"], out["stats.bytes"]
-    (topk_data, uniq_data, arr_data, wtopk_data, wq_data, quant_long) = out["stats.long"]
+    wide_rows = out["stats.wide"]
+    (topk_data, uniq_data, arr_data, wtopk_data, wq_data, obj_data) = out["stats.long"]
     custom_gen_out, lift_rows = out["stats.generators"], out["stats.lift"]
 
     if not wide_rows:
         # Placeholder-for-empty-input parity (stats_impl.py:141-158).
         return DatasetStatsList([DatasetStats(options.default_slice_key, 0, features={})])
 
-    quant_by_slice: dict = {}
-    for r in bytes_rows:  # binary-column stats, keyed by the same aliases
-        quant_by_slice.setdefault(r["slice_key"], {}).update(r.asDict())
-    for sk, grids in quant_long.items():  # percentile grids from the union
-        quant_by_slice.setdefault(sk, {}).update(grids)
-
     # ---- assembly ----------------------------------------------------------
     slices = []
     for row in wide_rows:
-        rd = row.asDict()
-        rd.update(quant_by_slice.get(rd["slice_key"], {}))
+        # the object aggregate's values carry the wide agg's alias convention
+        rd = {**row.asDict(), **obj_data.get(row["slice_key"], {})}
         slices.append(
             _assemble_slice(
                 rd, plans, options, topk_data, uniq_data, arr_data, wtopk_data, wq_data
@@ -308,43 +288,40 @@ def _check_label(df: DataFrame, options: StatsOptions) -> None:
         )
 
 
-def _want_topk(p: E.ColumnPlan, options: StatsOptions) -> bool:
-    return p.stats_type == E.STRING or p.name in options.categorical_features
-
-
-def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None,
-                   weight_arg=None):
+def _run_long_pass(df, plans, slice_col, options: StatsOptions, weight,
+                   obj_projs, obj_aggs):
     """Top-k/uniques (exact, or sketched with ``use_sketches``) +
-    array-element numeric stats + percentile grids + (when a weight column
-    is configured) weighted top-k, weighted array moments and the weighted
-    quantile buckets — ONE Spark action.
+    array-element numeric stats + the object aggregate + (when a weight
+    column is configured) weighted top-k, weighted array moments and the
+    weighted quantile buckets — ONE Spark action.
 
     Each concern builds a small (KB-scale) lazy result frame; their union is
     collected once. Catalyst compiles the union into column-disjoint
     parquet scans — categorical (+ weight) columns for top-k, nested numeric
-    (+ weight) columns for array stats, scalar numeric columns for the
-    percentile grids, numeric + weight columns for the weighted quantile
-    buckets (plan-asserted in tests/test_plans.py) — so the long pass reads
-    each table column at most once per concern and either mode submits
-    exactly TWO jobs (wide agg + this union) besides the bytes job. Round 4
-    ran the weighted quantiles and the percentile grids as separate
-    concurrent jobs; at 100 TB each was an extra scan wave. In exact mode
-    the grid branch is the only ObjectHashAggregate (percentile_approx) and
-    it is isolated in its own union branch, so the other branches keep
-    WholeStageCodegen.
+    (+ weight) columns for array stats, numeric + weight columns for the
+    weighted quantile buckets, and the scalar numeric, nested and binary
+    columns the object aggregate projects (plan-asserted in
+    tests/test_plans.py) — so the long pass reads each table column at most
+    once per concern and either mode submits exactly TWO jobs (wide agg +
+    this union). The object aggregate (``obj_projs`` projected per row,
+    ``obj_aggs`` grouped by slice; see ``exprs.build_agg_exprs``) holds every
+    aggregate that would force the wide agg into ObjectHashAggregate, which
+    has no codegen: the ``percentile_approx`` grids and the binary-column
+    stats with their theta sketch. It is its own union branch, so the other
+    branches keep WholeStageCodegen; its row carries the aggregates as one
+    ``obj`` struct under the wide agg's aliases.
 
     Top-k ranks values in one salted window (``_salted_topk``): by count
     and, weighted, by weight in exact mode; by weight only in weighted
     sketch mode, whose count top-k and uniques are Spark's sketch
     aggregates. No branch has a Python node."""
-    weight = weight_arg if weight_arg is not None else options.weight_column
     long_df = E.long_format(df, plans, slice_col, weight)
     topk_data: dict = {}
     uniq_data: dict = {}
     arr_data: dict = {}
     wtopk_data: dict = {}
     wq_data: dict = {}
-    quant_long: dict = {}
+    obj_data: dict = {}
     finals = []
 
     any_topk = long_df is not None and any(p.categorical for p in plans)
@@ -422,28 +399,16 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
     if wq_values is not None:
         finals.append(_weighted_quantile_frame(wq_values))
 
-    if quant_exprs:
-        # percentile-grid branch: per-slice wide agg exploded to long
-        # (slice_key, feature=alias__stat, quants=grid) so it unions with
-        # the other result frames; scan pruned to the scalar numeric columns.
-        qagg = df.groupBy(slice_col.alias("slice_key")).agg(*quant_exprs)
-        qcols = [c for c in qagg.columns if c != "slice_key"]
-        stacked = F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(c).alias("feature"), F.col(c).alias("quants"))
-                    for c in qcols
-                ]
-            )
-        )
+    if obj_aggs:
         finals.append(
-            qagg.select(
-                F.lit("qgrid").alias("kind"), "slice_key", stacked.alias("p")
-            ).select("kind", "slice_key", "p.feature", "p.quants")
+            df.select(slice_col.alias("slice_key"), *obj_projs)
+            .groupBy("slice_key")
+            .agg(F.struct(*obj_aggs).alias("obj"))
+            .select(F.lit("obj").alias("kind"), "*")
         )
 
     if not finals:
-        return topk_data, uniq_data, arr_data, wtopk_data, wq_data, quant_long
+        return topk_data, uniq_data, arr_data, wtopk_data, wq_data, obj_data
 
     out = finals[0]
     for f in finals[1:]:
@@ -453,6 +418,9 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
         _last_union_frame = out
     for row in out.collect():
         r = row.asDict()
+        if r["kind"] == "obj":  # one per slice, no feature
+            obj_data[r["slice_key"]] = r["obj"].asDict()
+            continue
         key = (r["slice_key"], r["feature"])
         if r["kind"] == "topk":
             for rank, ranked in ((r.get("rank"), topk_data), (r.get("wrank"), wtopk_data)):
@@ -472,9 +440,6 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
             uniq_data[key] = r["unique"]
         elif r["kind"] == "arr":
             arr_data[key] = r
-        elif r["kind"] == "qgrid":
-            # feature holds the wide-agg alias (e.g. "c3__quants")
-            quant_long.setdefault(r["slice_key"], {})[r["feature"]] = r["quants"]
         else:  # wq
             wq_data[key] = [tuple(piece) for piece in r["pieces"]]
 
@@ -482,7 +447,7 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, quant_exprs=None
         _refine_heavy_buckets(df, plans, slice_col, weight, wq_data)
     for key, pieces in wq_data.items():
         wq_data[key] = weighted_quantile_grid(pieces, _QS)
-    return topk_data, uniq_data, arr_data, wtopk_data, wq_data, quant_long
+    return topk_data, uniq_data, arr_data, wtopk_data, wq_data, obj_data
 
 
 def _weighted_values(df, plans, slice_col, weight):

@@ -5,9 +5,10 @@ This is the Spark-native replacement for the reference's fused combiner
 (``tensorflow_data_validation/statistics/stats_impl.py:276-303`` fuses all
 per-feature combiners into one Beam CombinePerKey): here every
 built-in-expressible statistic for every column becomes one aggregate
-expression in a single ``df.groupBy(slice).agg(*exprs)`` — one scan, one
-partial+final hash aggregation, fully whole-stage-codegen'd, no Python in the
-hot path.
+expression, either in a single ``df.groupBy(slice).agg(*exprs)`` — one scan,
+one partial+final hash aggregation, fully whole-stage-codegen'd — or, for the
+aggregates that would cost it its codegen, in one per-slice object
+aggregate; no Python in the hot path.
 
 NaN/Inf semantics follow the reference
 (``basic_stats_generator.py:336-476``): NaN is excluded from every numeric
@@ -51,7 +52,7 @@ class ColumnPlan:
     is_float: bool = False  # element type can hold NaN
     categorical: bool = False  # include in top-k/uniques long job
     numeric: bool = False  # gets numeric stats
-    image_stats: bool = False  # fuse magic-byte format counters into wide agg
+    image_stats: bool = False  # add magic-byte format counters to its bytes stats
     source_type: str = ""  # original Spark type name (e.g. TIMESTAMP)
     exprs: list = field(default_factory=list)
 
@@ -126,32 +127,31 @@ def build_agg_exprs(
     quantiles_accuracy: int,
     count_values_hist_buckets: int,
 ) -> tuple[list, list, list]:
-    """Aggregate expressions for the wide pass, split into three lists:
+    """Aggregate expressions for the stats pass, as ``(wide, object_projections,
+    object_aggregates)``.
 
-    ``(main, quantile, bytes_unique)`` — ``quantile`` holds the
-    ``percentile_approx`` expressions (numeric quantile grids + num-values
-    histograms). They are TypedImperativeAggregates: a single one in an
-    aggregate forces the whole plan into ``ObjectHashAggregateExec``, which
-    has NO whole-stage codegen — every other expression (including the
-    binary-column image sniff) would be evaluated interpreted. Running them
-    as a separate concurrent job keeps the heavy ``main`` agg inside
-    WholeStageCodegen, and Catalyst column-prunes the quantile job's scan to
-    just the numeric columns it references.
+    ``wide`` is the wide agg: every statistic whose aggregate Spark runs in
+    ``HashAggregateExec``, fully whole-stage-codegen'd. The rest are
+    TypedImperativeAggregates, and one of them in an aggregate forces the
+    whole plan into ``ObjectHashAggregateExec``, which has NO whole-stage
+    codegen: every other expression would be evaluated interpreted. They go
+    to the object aggregate instead, which the caller runs as
+    ``df.select(slice_key, *object_projections).groupBy("slice_key")
+    .agg(*object_aggregates)``, one branch of the long pass. Its inputs are
+    projected first, in codegen'd code, so the aggregates read only scalar
+    columns:
 
-    ``bytes_unique`` is ``(proj_exprs, agg_exprs)`` carrying ALL the
-    binary-column statistics (presence, byte-length stats, distinct-count
-    estimate, magic-byte format counters). They leave the main agg for two
-    reasons: (1) the distinct estimate is a theta (KMV) sketch,
-    ``theta_sketch_agg`` with 2^14 = 16,384 nominal entries, the reference's
-    own uniques estimator; it is a TypedImperativeAggregate, and one in the
-    main agg would push EVERY expression in it out of whole-stage codegen;
-    (2) with the binary stats isolated, the main agg's scan no longer reads
-    the binary column at all. The caller projects ``proj_exprs`` (content
-    hash, length, sniffed format — codegen'd, so the multi-KB payload is
-    touched exactly once in compiled code) and aggregates ``agg_exprs`` over
-    the projection in its own job; the binary column is read exactly ONCE
-    across the whole stats pass, and only a cheap scalar-input aggregate runs
-    interpreted.
+    - the ``percentile_approx`` grids: the finite values of each scalar
+      numeric (``{alias}__quants``) and the value counts of each nested
+      feature (``{alias}__valshist``);
+    - ALL the binary-column statistics: presence, byte-length stats,
+      distinct-count estimate and magic-byte format counters. The distinct
+      estimate is a theta (KMV) sketch, ``theta_sketch_agg`` with 2^14 =
+      16,384 nominal entries, the reference's own uniques estimator. With
+      the binary stats out of it, the wide agg's scan does not read the
+      binary column at all. The projection (content hash, length, sniffed
+      format) touches the multi-KB payload once in compiled code, so the
+      binary column is read exactly ONCE across the whole stats pass.
 
     The theta sketch keeps every hash until it holds 16,384 distinct ones, so
     up to that many distinct payloads the count is exact; above it the
@@ -162,10 +162,7 @@ def build_agg_exprs(
     code generation in every task, so its cost follows the task count — over
     16k cached longs on ``local[4]`` (4-core host) it took 1.3 / 1.8 / 5.6 s
     at 1 / 6 / 32 partitions against 0.15 / 0.16 / 0.23 s for the theta
-    sketch and 0.18-0.25 s for a plain ``max``. All aggregates here are
-    order-independent (counts, min/max, the theta sketch, and byte-length
-    sums are integer-valued doubles « 2^53, i.e. exact under any summation
-    order), so the job may re-split an under-split input.
+    sketch and 0.18-0.25 s for a plain ``max``.
 
     Returns aliased expressions; assembly decodes by alias convention
     ``{plan.alias}__{stat}``.
@@ -184,8 +181,8 @@ def build_agg_exprs(
         return wmap.get(p.name) if wmap else weight_column
 
     exprs = [F.count(F.lit(1)).alias("num_examples")]
-    qexprs: list = []
-    bexprs: list = []
+    projs: list = []
+    oaggs: list = []
     if global_w:
         exprs.append(F.sum(F.col(global_w).cast("double")).alias("weighted_num_examples"))
 
@@ -198,16 +195,16 @@ def build_agg_exprs(
             continue
 
         if p.stats_type == BYTES and p.nest_depth == 0:
-            # ALL binary-column stats go to the dedicated bytes job (see
+            # ALL binary-column stats go to the object aggregate (see
             # docstring): projections touch the payload once in codegen,
             # the aggregates are cheap scalar-input ones.
             c = F.col(p.name)
             blen_col, h_col = f"{a}__blen", f"{a}__h64"
-            proj = [
+            projs += [
                 F.octet_length(c).alias(blen_col),
                 F.when(c.isNotNull(), F.xxhash64(c)).alias(h_col),
             ]
-            bagg = [
+            oaggs += [
                 F.count(F.col(blen_col)).alias(f"{a}__nonmissing"),
                 F.avg(F.col(blen_col)).alias(f"{a}__avglen"),
                 F.min(F.col(blen_col)).alias(f"{a}__minbytes"),
@@ -223,8 +220,8 @@ def build_agg_exprs(
             pw = _w(p)
             if pw:
                 w = F.col(pw).cast("double")
-                proj.append(F.when(c.isNotNull(), w).alias(f"{a}__wnn"))
-                bagg.append(F.sum(F.col(f"{a}__wnn")).alias(f"{a}__w_nonmissing"))
+                projs.append(F.when(c.isNotNull(), w).alias(f"{a}__wnn"))
+                oaggs.append(F.sum(F.col(f"{a}__wnn")).alias(f"{a}__w_nonmissing"))
                 if pw != global_w:
                     exprs.append(F.sum(w).alias(f"{a}__w_total"))
             if p.image_stats:
@@ -233,14 +230,13 @@ def build_agg_exprs(
                 from data_validation_spark.stats.image import sniff_format_col
 
                 fmt_col = f"{a}__fmt"
-                proj.append(sniff_format_col(c).alias(fmt_col))
+                projs.append(sniff_format_col(c).alias(fmt_col))
                 for label in ("png", "jpeg", "gif", "bmp", "UNKNOWN"):
-                    bagg.append(
+                    oaggs.append(
                         F.sum(F.when(F.col(fmt_col) == label, 1).otherwise(0)).alias(
                             f"{a}__imgfmt_{label}"
                         )
                     )
-            bexprs.append((proj, bagg))
             continue
 
         if p.nest_depth == 0:
@@ -259,9 +255,10 @@ def build_agg_exprs(
                 F.max(sz).alias(f"{a}__maxvals"),
                 F.sum(sz).alias(f"{a}__totvals"),
             ]
-            qexprs.append(
+            projs.append(sz.cast("double").alias(f"{a}__sz"))
+            oaggs.append(
                 F.percentile_approx(
-                    sz.cast("double"),
+                    F.col(f"{a}__sz"),
                     [i / count_values_hist_buckets for i in range(count_values_hist_buckets + 1)],
                     quantiles_accuracy,
                 ).alias(f"{a}__valshist")
@@ -362,7 +359,11 @@ def build_agg_exprs(
                 exprs.append(
                     F.avg(F.length(v.cast("string"))).alias(f"{a}__avglen")
                 )
-            qexprs.append(F.percentile_approx(xf, qs, quantiles_accuracy).alias(f"{a}__quants"))
+            projs.append(xf.alias(f"{a}__xf"))
+            oaggs.append(
+                F.percentile_approx(F.col(f"{a}__xf"), qs, quantiles_accuracy)
+                .alias(f"{a}__quants")
+            )
             if p.is_float:
                 exprs += [
                     F.sum(F.when(F.isnan(x), 1).otherwise(0)).alias(f"{a}__nan"),
@@ -390,7 +391,7 @@ def build_agg_exprs(
                     ]
         elif p.stats_type == STRING:
             exprs.append(F.avg(F.length(F.col(p.name))).alias(f"{a}__avglen"))
-    return exprs, qexprs, bexprs
+    return exprs, projs, oaggs
 
 
 def long_format(df, plans: list[ColumnPlan], slice_col, weight_column: Optional[str],

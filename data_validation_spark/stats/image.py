@@ -5,8 +5,9 @@ signal ≥80% recognized over ≥100 values).
 
 Format sniffing runs fully JVM-side (substring comparisons on the binary
 column — no Python in that path). Dimension extraction decodes headers in an
-Arrow-vectorized ``mapInArrow`` pass, optionally sampled
-(``semantic_domain_sample_rate``, mirroring stats_impl.py:894-950).
+Arrow-vectorized ``mapInArrow`` pass, optionally sampled (its
+``sample_rate``, mirroring the reference's semantic-domain sampling,
+stats_impl.py:894-950).
 """
 
 from __future__ import annotations

@@ -30,17 +30,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
+
 # ---------------------------------------------------------------- sniffing --
-_MEDIA_MAGICS = [
-    ("wav", 0, b"RIFF"),  # + WAVE at 8, checked below
-    ("flac", 0, b"fLaC"),
-    ("ogg", 0, b"OggS"),
-    ("mp3", 0, b"ID3"),
-    ("webm", 0, b"\x1a\x45\xdf\xa3"),
-    ("avi", 0, b"RIFF"),  # + AVI at 8
-]
-
-
 def sniff_media_col(col) -> "F.Column":
     """JVM-side media-container sniffing: wav/mp3/flac/ogg/mp4/webm/avi/UNKNOWN."""
     b = F.col(col) if isinstance(col, str) else col

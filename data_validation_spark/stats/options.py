@@ -55,13 +55,9 @@ class StatsOptions:
     # slice_column (setting both raises at construction).
     slice_specs: list = field(default_factory=list)
 
-    # Binary columns whose magic-byte format histogram is fused into the wide
-    # aggregation pass (no separate scan of the binary column).
+    # Binary columns whose magic-byte format histogram is fused into their
+    # bytes stats (no separate scan of the binary column).
     image_columns: set[str] = field(default_factory=set)
-
-    # Semantic-domain stats sample rate (reference
-    # semantic_domain_stats_sample_rate).
-    semantic_domain_sample_rate: Optional[float] = None
 
     # Vocabulary files for NL stats: {vocabulary_name: path}, resolving the
     # schema's NaturalLanguageDomain.vocabulary (reference
@@ -108,13 +104,6 @@ class StatsOptions:
         stats_options_test.py INVALID_STATS_OPTIONS)."""
         if self.sample_rate is not None and not (0 < self.sample_rate <= 1):
             raise ValueError(f"Invalid sample_rate {self.sample_rate}")
-        if self.semantic_domain_sample_rate is not None and not (
-            0 < self.semantic_domain_sample_rate <= 1
-        ):
-            raise ValueError(
-                "Invalid semantic_domain_stats_sample_rate "
-                f"{self.semantic_domain_sample_rate}"
-            )
         if self.num_values_histogram_buckets <= 1:
             raise ValueError(
                 f"Invalid num_values_histogram_buckets {self.num_values_histogram_buckets}"

@@ -275,22 +275,15 @@ def compute_nl_statistics(
                 by_id = {r["__sid"]: list(r["__toks"]) for r in rows}
                 return [by_id[i] for i in ids if i in by_id]
 
-            # Token rank histogram: salted two-phase exact top-k on token frequency.
-            from pyspark.sql import Window
+            # Token rank histogram: the engine's salted exact top-k on token
+            # frequency, over one (slice, feature) key.
+            from data_validation_spark.stats.engine import _salted_topk
 
-            salts = 16
-            counts = tokens.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")).withColumn(
-                "salt", F.pmod(F.xxhash64("tok"), F.lit(salts))
-            )
-            wa = Window.partitionBy("salt").orderBy(F.desc("cnt"), F.desc("tok"))
-            wb = Window.orderBy(F.desc("cnt"), F.desc("tok"))
-            top_df = (
-                counts.withColumn("r", F.row_number().over(wa))
-                .where(F.col("r") <= num_rank_histogram_buckets)
-                .withColumn("r2", F.row_number().over(wb))
-                .where(F.col("r2") <= num_rank_histogram_buckets)
-                .select("r2", "tok", "cnt")
-            )
+            counts = tokens.groupBy(
+                F.lit("").alias("slice_key"), F.lit("").alias("feature"),
+                F.col("tok").alias("str_value"),
+            ).agg(F.count(F.lit(1)).alias("cnt"))
+            top_df = _salted_topk(counts, num_rank_histogram_buckets, {"rank": "cnt"})
 
             branches = {
                 "stats.text.coverage": lambda: tokens.agg(
@@ -369,8 +362,8 @@ def compute_nl_statistics(
         "max_sequence_length": int(seq_row["maxlen"] or 0),
         "sequence_length_quantiles": list(seq_row["len_q"] or []),
         "rank_histogram": [
-            {"rank": r["r2"], "label": r["tok"], "sample_count": int(r["cnt"])}
-            for r in out["stats.text.rank"]
+            {"rank": r["rank"], "label": r["str_value"], "sample_count": int(r["cnt"])}
+            for r in sorted(out["stats.text.rank"], key=lambda r: r["rank"])
         ],
         "token_statistics": token_statistics,
         "reported_sequences": (

@@ -19,6 +19,8 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import math
+import os
 import zlib
 from typing import Callable, Iterator, Optional
 
@@ -256,20 +258,19 @@ def check_pixel_integrity(
     expected_fn: Optional[Callable[[str, int, int], "np.ndarray"]] = None,
     min_psnr_db: float = 40.0,
     sample_rate: Optional[float] = None,
-    sample_unit: str = "auto",
 ) -> DataFrame:
     """Decoded-pixel integrity: decode each image (Arrow-batched) and assert
     PSNR ≥ ``min_psnr_db`` against the reference pixels
     (``expected_fn(image_id, w, h) → array``; defaults to the datagen rule).
     Undecodable payloads emit PIXEL_INTEGRITY_VIOLATION too.
 
-    ``sample_unit``: ``"rows"`` uses ``df.sample`` — which still READS every
-    page of the binary column and drops rows after decode-side I/O; at 10¹²
-    rows that is a full-table scan to check a fraction. ``"files"`` samples
-    whole parquet files (the Iceberg-file / partition granularity a real
-    cluster would sample), pruning the scan itself. ``"auto"`` picks files
-    when ``df`` is a bare parquet scan with enough files for the rate,
-    otherwise falls back to rows.
+    ``sample_rate`` checks a fraction of the images. When ``df`` is a bare
+    parquet scan with enough files for the rate, whole files are sampled
+    (the Iceberg-file / partition granularity a real cluster would sample),
+    which prunes the scan itself. Otherwise rows are sampled with
+    ``df.sample``, which still READS every page of the binary column and
+    drops rows after decode-side I/O; at 10¹² rows that is a full-table scan
+    to check a fraction.
     """
     from data_validation_spark.stats import imagecodec as codec
 
@@ -279,7 +280,7 @@ def check_pixel_integrity(
         def expected_fn(image_id, w, h):  # noqa: F811
             return expected_pixels(row_index_of(image_id), w, h)
 
-    src, _ = _pixel_source(df, id_col, bytes_col, sample_rate, sample_unit)
+    src, _ = _pixel_source(df, id_col, bytes_col, sample_rate)
 
     def run(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in it:
@@ -312,29 +313,32 @@ def check_pixel_integrity(
     )
 
 
-def _pixel_source(df, id_col, bytes_col, sample_rate, sample_unit):
+def _pixel_source(df, id_col, bytes_col, sample_rate):
     """(sampled (k, b) frame, mode) for the pixel pass — see
-    ``check_pixel_integrity``. File sampling is deterministic (crc32 of the
-    file path) so reruns check the same files."""
+    ``check_pixel_integrity``. File sampling keeps the ``ceil(rate · n)`` of
+    the ``n`` files whose paths, relative to their common directory, have
+    the lowest crc32: reruns, and copies of the table in another directory,
+    check the same files."""
     cols = [F.col(id_col).alias("k"), F.col(bytes_col).alias("b")]
     if sample_rate is None or sample_rate >= 1.0:
         return df.select(*cols), "all"
-    if sample_unit in ("auto", "files") and _is_bare_scan(df):
+    if _is_bare_scan(df):
         files = df.inputFiles()
         # need enough files that a file-grain sample approximates the rate
         if len(files) * sample_rate >= 4 and all(
             f.endswith(".parquet") for f in files
         ):
-            bound = int(sample_rate * (1 << 30))
-            keep = [f for f in files if zlib.crc32(f.encode()) % (1 << 30) < bound]
-            if keep:
-                from data_validation_spark.util import ensure_min_partitions
+            from data_validation_spark.util import ensure_min_partitions
 
-                sampled = df.sparkSession.read.schema(df.schema).parquet(*keep)
-                # a file-grain sample can leave fewer tasks than cores (one
-                # scan task per kept file); re-split so the Python decode
-                # uses the whole cluster — no-op when files ≫ cores
-                return ensure_min_partitions(sampled.select(*cols)), "files"
+            root = len(os.path.commonprefix(files).rpartition("/")[0])
+            ranked = sorted(files, key=lambda f: (zlib.crc32(f[root:].encode()), f[root:]))
+            # round first: 0.1 · 30 is 3.0000000000000004 in floating point
+            keep = ranked[: math.ceil(round(sample_rate * len(files), 9))]
+            sampled = df.sparkSession.read.schema(df.schema).parquet(*keep)
+            # a file-grain sample can leave fewer tasks than cores (one
+            # scan task per kept file); re-split so the Python decode
+            # uses the whole cluster — no-op when files ≫ cores
+            return ensure_min_partitions(sampled.select(*cols)), "files"
     return df.select(*cols).sample(fraction=sample_rate, seed=42), "rows"
 
 

@@ -473,8 +473,6 @@ def test_stats_options_validation_goldens():
         ({"sample_rate": 0}, "Invalid sample_rate 0"),
         ({"sample_rate": -1}, "Invalid sample_rate -1"),
         ({"sample_rate": 2}, "Invalid sample_rate 2"),
-        ({"semantic_domain_sample_rate": 0}, "Invalid semantic_domain_stats_sample_rate 0"),
-        ({"semantic_domain_sample_rate": 2}, "Invalid semantic_domain_stats_sample_rate 2"),
         ({"num_values_histogram_buckets": 1}, "Invalid num_values_histogram_buckets 1"),
         ({"num_values_histogram_buckets": 0}, "Invalid num_values_histogram_buckets 0"),
         ({"num_values_histogram_buckets": -1}, "Invalid num_values_histogram_buckets -1"),
@@ -490,5 +488,4 @@ def test_stats_options_validation_goldens():
     with _pytest.raises(TypeError, match="feature_allowlist"):
         StatsOptions(feature_allowlist=42)
     # valid edges accepted
-    StatsOptions(sample_rate=1.0, semantic_domain_sample_rate=0.5,
-                 num_values_histogram_buckets=2, num_histogram_buckets=1)
+    StatsOptions(sample_rate=1.0, num_values_histogram_buckets=2, num_histogram_buckets=1)

@@ -180,12 +180,12 @@ def test_pixel_source_file_sampling(spark, tmp_path):
     images_df(spark, 200, "clean", partitions=40).write.parquet(path)
     df = spark.read.parquet(path)
 
-    src, mode = _pixel_source(df, "image_id", "bytes", 0.25, "auto")
+    src, mode = _pixel_source(df, "image_id", "bytes", 0.25)
     assert mode == "files"  # bare parquet scan + 40 files → file-grain sample
     kept_rows = src.count()
     assert 0 < kept_rows < 200  # a strict subset of the table
     # deterministic: same files again on a rerun
-    src2, _ = _pixel_source(df, "image_id", "bytes", 0.25, "auto")
+    src2, _ = _pixel_source(df, "image_id", "bytes", 0.25)
     assert src2.count() == kept_rows
     # sampled frame is a genuine subset of the table's rows
     ids = {r["k"] for r in src.collect()}
@@ -194,12 +194,38 @@ def test_pixel_source_file_sampling(spark, tmp_path):
 
     # any transformation on top (e.g. a row sample) must fall back to rows —
     # re-reading files would silently undo the caller's transform
-    _, mode_t = _pixel_source(df.sample(0.5, seed=1), "image_id", "bytes", 0.25, "auto")
+    _, mode_t = _pixel_source(df.sample(0.5, seed=1), "image_id", "bytes", 0.25)
     assert mode_t == "rows"
     # too few files for the rate → rows
     few = spark.read.parquet(path).coalesce(1)
-    _, mode_f = _pixel_source(few, "image_id", "bytes", 0.25, "auto")
+    _, mode_f = _pixel_source(few, "image_id", "bytes", 0.25)
     assert mode_f == "rows"
+
+
+def test_pixel_file_sample_is_location_independent(spark, tmp_path):
+    """Two copies of one table under different directory names keep the
+    same files, relative to the table, and exactly ceil(rate · n) of them."""
+    import math
+    import shutil
+
+    from data_validation_spark.validate.rowlevel import _pixel_source
+
+    first = str(tmp_path / "imgs")
+    images_df(spark, 100, "clean", partitions=25).write.parquet(first)
+    second = str(tmp_path / "elsewhere" / "a_copy_with_another_name")
+    shutil.copytree(first, second)
+
+    def kept(path, rate):
+        src, mode = _pixel_source(spark.read.parquet(path), "image_id", "bytes", rate)
+        assert mode == "files"
+        return sorted(f.rsplit("/", 1)[1] for f in src.inputFiles())
+
+    for rate in (0.2, 0.25, 0.5):
+        names = kept(first, rate)
+        assert len(names) == math.ceil(rate * 25)
+        assert names == kept(second, rate)
+    # 0.28 · 25 is 7.000000000000001 in floating point: still 7 files
+    assert len(kept(first, 0.28)) == 7
 
 
 def test_pixel_integrity_corrupt(spark):

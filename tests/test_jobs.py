@@ -111,6 +111,39 @@ def test_validate_images_jobs_tagged_and_in_callers_group(spark):
     assert sum(t.startswith("dvs-call:") for t in wide) == 2
 
 
+def test_stats_pass_runs_as_wide_and_long_jobs_only(spark):
+    """Binary-column stats and the percentile grids ride the long pass's
+    union: a table with binary, scalar numeric, string and nested columns
+    tags its stats jobs only with the wide and the long layer."""
+    from data_validation_spark.stats.engine import compute_statistics
+
+    sc = spark.sparkContext
+    df = spark.range(0, 200, 1, 2).select(
+        F.encode(F.concat(F.lit("blob"), (F.col("id") % 17).cast("string")), "utf-8")
+        .alias("b"),
+        F.col("id").cast("double").alias("x"),
+        F.concat(F.lit("v"), (F.col("id") % 7).cast("string")).alias("s"),
+        F.array(F.col("id"), F.col("id") + 1).alias("a"),
+    )
+    group = f"stats-{uuid.uuid4().hex[:8]}"
+    _settle(sc)
+    sc.setJobGroup(group, "stats layers")
+    try:
+        stats = compute_statistics(df)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    _settle(sc)
+    layers = {t for job_id in sc.statusTracker().getJobIdsForGroup(group)
+              for t in _tags(_job(sc, job_id)) if t.startswith("dvs:")}
+    assert layers == {"dvs:stats.wide", "dvs:stats.long"}
+    ds = stats.default_slice()
+    assert ds.feature("b").bytes.unique == 17
+    assert ds.feature("x").numeric.median is not None
+    assert ds.feature("a").common.num_values_histogram
+
+
 def test_run_parallel_returns_results_by_layer(spark):
     sc = spark.sparkContext
     out = run_parallel(spark, {

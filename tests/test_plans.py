@@ -22,7 +22,7 @@ def test_stats_engine_prunes_columns(spark, sf_dir):
     df = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     sub = df.select("l_quantity", "l_discount")
     plans = E.classify_columns(sub.schema, set())
-    aggs, qaggs, _baggs = E.build_agg_exprs(plans, None, 100, 1000, 10)
+    aggs, projs, oaggs = E.build_agg_exprs(plans, None, 100, 1000, 10)
     plan = plan_of(df.select("l_quantity", "l_discount").groupBy().agg(*aggs[1:]))
     m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
     assert m, plan
@@ -30,14 +30,15 @@ def test_stats_engine_prunes_columns(spark, sf_dir):
     assert read_cols == {"l_quantity", "l_discount"}
     # The main wide agg must stay codegen-able: percentile_approx (a
     # TypedImperativeAggregate that forces ObjectHashAggregate, no codegen)
-    # is split into the separate quantile job.
+    # is split into the object aggregate.
     assert "ObjectHashAggregate" not in plan
     assert "HashAggregate" in plan
     assert plan.count("Aggregate") >= 2  # partial + final
 
-    # quantile job: ObjectHashAggregate by design, scan pruned to its columns
-    assert qaggs
-    qplan = plan_of(df.groupBy().agg(*qaggs))
+    # object aggregate: ObjectHashAggregate by design, scan pruned to its
+    # columns
+    assert oaggs
+    qplan = plan_of(df.select(*projs).groupBy().agg(*oaggs))
     qm = re.search(r"ReadSchema: struct<([^>]*)>", qplan)
     assert qm, qplan
     qcols = {c.split(":")[0] for c in qm.group(1).split(",") if c}
@@ -96,24 +97,25 @@ def test_bytes_stats_stay_out_of_codegen_agg(spark, tmp_path):
     distinct estimator is an imperative aggregate, and one such function
     disables whole-stage codegen for EVERY expression in the aggregate
     (measured 2-3× on a table with a large binary column). All bytes stats
-    run in a dedicated job over a codegen'd projection of the payload, so
-    the wide agg's scan does not read the binary column at all and the
-    payload is still read exactly once across the pass. The estimator is
-    the theta (KMV) sketch, not HLL++, whose buffer costs code generation
-    in every task."""
+    run in the object aggregate (a branch of the long pass) over a codegen'd
+    projection of the payload, so the wide agg's scan does not read the
+    binary column at all and the payload is still read exactly once across
+    the pass. The estimator is the theta (KMV) sketch, not HLL++, whose
+    buffer costs code generation in every task."""
+    from data_validation_spark.stats import engine
     from data_validation_spark.stats import exprs as E
     from data_validation_spark.stats.engine import compute_statistics
     from data_validation_spark.stats.options import StatsOptions
 
     src = spark.createDataFrame(
-        [(bytes([i]) * 10, i) for i in range(50)] + [(None, 99)],
-        "payload binary, k int",
+        [(bytes([i]) * 10, i, f"s{i}") for i in range(50)] + [(None, 99, "s")],
+        "payload binary, k int, s string",
     )
     path = str(tmp_path / "bytes_tbl")
     src.write.parquet(path)
     df = spark.read.parquet(path)
     plans = E.classify_columns(df.schema, set())
-    aggs, _qaggs, baggs = E.build_agg_exprs(plans, None, 100, 1000, 10)
+    aggs, projs, oaggs = E.build_agg_exprs(plans, None, 100, 1000, 10)
     main_plan = plan_of(df.groupBy().agg(*aggs))
     hll = ("approx_count_distinct", "HyperLogLogPlusPlus")
     for name in (*hll, "theta_sketch_agg"):
@@ -121,14 +123,23 @@ def test_bytes_stats_stay_out_of_codegen_agg(spark, tmp_path):
     # wide agg's parquet scan must not read the payload column at all
     m = re.search(r"ReadSchema: struct<([^>]*)>", main_plan)
     assert m and "payload" not in m.group(1), main_plan
-    assert len(baggs) == 1
-    ((projs, bagg),) = baggs
-    bytes_plan = plan_of(df.select(*projs).groupBy().agg(*bagg))
-    assert "theta_sketch_agg" in bytes_plan
+    assert sum("theta_sketch_agg" in str(a) for a in oaggs) == 1
+    obj_plan = plan_of(df.select(*projs).groupBy().agg(*oaggs))
+    assert "theta_sketch_agg" in obj_plan and "ObjectHashAggregate" in obj_plan
     for name in hll:
-        assert name not in bytes_plan, name
+        assert name not in obj_plan, name
+    # the object aggregate reads the payload and the numeric column only
+    m = re.search(r"ReadSchema: struct<([^>]*)>", obj_plan)
+    assert m and {c.split(":")[0] for c in m.group(1).split(",")} == {"payload", "k"}
     # the engine still reports full bytes stats (50 distinct 10-byte payloads)
-    stats = compute_statistics(df, StatsOptions())
+    engine.CAPTURE_UNION_FRAME = True
+    try:
+        stats = compute_statistics(df, StatsOptions())
+        union = engine._last_union_frame
+    finally:
+        engine.CAPTURE_UNION_FRAME = False
+        engine._last_union_frame = None
+    assert "theta_sketch_agg" in plan_of(union)
     bs = stats.default_slice().feature("payload").bytes
     assert bs.unique == 50
     assert bs.min_num_bytes == 10 and bs.max_num_bytes == 10
@@ -280,8 +291,9 @@ def test_exact_weighted_long_pass_fused(spark, tmp_path):
     submits exactly TWO jobs (wide agg + this union) instead of round-4's
     four. The union's physical plan must contain exactly one scan per
     branch with column-pruned ReadSchemas (categorical+weight / scalar
-    numeric / numeric+weight), and the percentile_approx branch must be
-    the only ObjectHashAggregate (everything else keeps hash agg)."""
+    numeric / numeric+weight), and the object-aggregate branch, which holds
+    the percentile grids, must be the only ObjectHashAggregate (everything
+    else keeps hash agg)."""
     from pyspark.sql import functions as F
 
     from data_validation_spark.stats import engine
@@ -308,7 +320,7 @@ def test_exact_weighted_long_pass_fused(spark, tmp_path):
     assert fx.numeric is not None and fx.numeric.weighted_histograms
     plan = plan_of(union)
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    # top-k branch + weighted-quantile branch + percentile-grid branch
+    # top-k branch + weighted-quantile branch + object-aggregate branch
     assert len(schemas) == 3, plan
     colsets = [
         {c.split(":")[0] for c in s.split(",") if c} for s in schemas
@@ -316,7 +328,7 @@ def test_exact_weighted_long_pass_fused(spark, tmp_path):
     assert sorted(colsets, key=sorted) == sorted(
         [{"s", "w"}, {"x"}, {"x", "w"}], key=sorted
     ), colsets
-    assert "ObjectHashAggregate" in plan  # the isolated grid branch
+    assert "ObjectHashAggregate" in plan  # the isolated object branch
 
 
 def test_unweighted_sketch_long_pass_stays_in_jvm(spark, tmp_path):

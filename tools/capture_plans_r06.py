@@ -71,9 +71,9 @@ def main():
         eng.CAPTURE_UNION_FRAME = False
         eng._last_union_frame = None
 
-    # images-table wide agg + bytes job (the flagship's stats-pass shape):
-    # captures whether the binary column is read by the codegen'd wide agg
-    # or by the dedicated bytes job
+    # images-table wide agg + object aggregate (the flagship's stats-pass
+    # shape): captures whether the binary column is read by the codegen'd
+    # wide agg or by the object aggregate
     from data_validation_spark.stats import exprs as EX
     from data_validation_spark.stats.options import StatsOptions as SO
 
@@ -84,18 +84,14 @@ def main():
     for p in iplans:
         if p.name == "bytes":
             p.image_stats = True
-    built = EX.build_agg_exprs(iplans, None, 100, 200, 10)
-    iaggs = built[0]
+    iaggs, projs, oaggs = EX.build_agg_exprs(iplans, None, 100, 200, 10)
     save("images_wide_agg", images.groupBy(F.lit("All Examples").alias("slice_key")).agg(*iaggs))
-    if len(built) > 2 and built[2]:
-        projs = [pe for proj, _ in built[2] for pe in proj]
-        baggs = [ae for _, agg in built[2] for ae in agg]
-        save(
-            "images_bytes_job",
-            images.select(F.lit("All Examples").alias("slice_key"), *projs)
-            .groupBy("slice_key")
-            .agg(*baggs),
-        )
+    save(
+        "images_object_agg",
+        images.select(F.lit("All Examples").alias("slice_key"), *projs)
+        .groupBy("slice_key")
+        .agg(*oaggs),
+    )
 
     # uniqueness violations frame (check_uniqueness over events pairs)
     from data_validation_spark.validate.rowlevel import check_uniqueness
