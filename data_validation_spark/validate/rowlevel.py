@@ -313,12 +313,15 @@ def check_pixel_integrity(
     )
 
 
-def _pixel_source(df, id_col, bytes_col, sample_rate):
+def _pixel_source(df, id_col, bytes_col, sample_rate, _sample_unit="auto"):
     """(sampled (k, b) frame, mode) for the pixel pass — see
     ``check_pixel_integrity``. File sampling keeps the ``ceil(rate · n)`` of
     the ``n`` files whose paths, relative to their common directory, have
     the lowest crc32: reruns, and copies of the table in another directory,
-    check the same files."""
+    check the same files.
+
+    ``_sample_unit`` is ignored: ``perfbench/workloads.py`` still passes the
+    removed ``sample_unit`` option's ``"auto"``."""
     cols = [F.col(id_col).alias("k"), F.col(bytes_col).alias("b")]
     if sample_rate is None or sample_rate >= 1.0:
         return df.select(*cols), "all"
