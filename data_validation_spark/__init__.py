@@ -74,8 +74,8 @@ _LAZY_EXPORTS = {
     "generate_statistics_from_csv": ("data_validation_spark.api", None),
     "generate_statistics_from_dataframe": ("data_validation_spark.api", None),
     "merge_statistics": ("data_validation_spark.io.artifacts", "merge_stats"),
-    "load_statistics": ("data_validation_spark.api", None),
-    "write_statistics": ("data_validation_spark.api", None),
+    "load_statistics": ("data_validation_spark.stats_view", None),
+    "write_statistics": ("data_validation_spark.io.artifacts", "save_stats"),
     # validation (validation_api / validation_lib)
     "validate_statistics": ("data_validation_spark.validate.rules", None),
     "validate_corresponding_slices": ("data_validation_spark.validate.rules", None),

@@ -1,7 +1,8 @@
 """Top-level convenience API — the Spark counterparts of the reference's
 public entry points (``tensorflow_data_validation/__init__.py`` exports:
-stats_gen_lib.py:46-260, validation_lib.py:60-150, schema_util.py:193-230,
-stats_util load/write helpers).
+stats_gen_lib.py:46-260, validation_lib.py:60-150, schema_util.py:193-230).
+The stats_util load/write helpers are exported straight from
+``stats_view`` and ``io.artifacts``.
 
 Each function composes the engine's building blocks; nothing here adds new
 semantics. Table-format note: the reference's TFRecord entry point maps to
@@ -161,18 +162,3 @@ def load_anomalies_text(input_path: str) -> "Anomalies":
 
     with open(input_path) as f:
         return Anomalies.from_json(f.read())
-
-
-def load_statistics(input_path: str) -> "DatasetStatsList":
-    """stats_util.load_statistics role: sniffs the gzip-binary artifact
-    magic, else reads the JSON text form (stats_view.load_statistics)."""
-    from data_validation_spark.stats_view import load_statistics as _load
-
-    return _load(input_path)
-
-
-def write_statistics(stats: "DatasetStatsList", output_path: str) -> None:
-    """stats_api WriteStatisticsToBinaryFile role (JSON artifact)."""
-    from data_validation_spark.io.artifacts import save_stats
-
-    save_stats(stats, output_path)

@@ -1,7 +1,7 @@
 """The one way this package runs Spark jobs concurrently.
 
-Independent job graphs (the stats engine's wide, bytes, long, generator and
-lift jobs; the pipeline's stats and row-check branches; the NL-statistics
+Independent job graphs (the stats engine's wide, long, generator and lift
+jobs; the pipeline's stats and row-check branches; the NL-statistics
 aggregates over one cached token frame) are submitted together: Spark's
 scheduler then interleaves their stages, filling the cores while one job's
 single-reducer final stage runs, and each job's fixed scheduling cost hides

@@ -1,13 +1,30 @@
-"""Lift statistics — P(y | x) / P(y) per (x-feature value, label value),
-behavioral port of the reference's lift generator
-(``lift_stats_generator.py``, formula at :521-523), re-expressed as two
-aggregations and one broadcast join:
+"""Lift statistics — P(Y=y | X=x) / P(Y=y) per (slice, x feature, x value,
+label value), behavioral port of the reference's lift generator
+(``lift_stats_generator.py``, formula at :521-523). One kernel,
+``lift_stats_multi``, melts every x column via ``stack`` so the scans do
+not multiply with the x columns, then joins three aggregates:
 
-    xy_counts = groupBy(x, y).count()        # one shuffle
-    y_rates   = groupBy(y).count() / total   # tiny, broadcast
-    lift(x,y) = (xy/x_total) / y_rate
+    xy_count = groupBy(slice, x_feature, x, y).count()   # one shuffle
+    x_count  = groupBy(slice, x_feature, x).count()
+    y_rate   = groupBy(slice, y).count() / slice total   # tiny, broadcast
+    lift     = (xy_count / x_count) / y_rate
 
-Top-k positive/negative lifts per y via a window.
+``lift_stats`` is its one-column call on the default slice. Top-k lifts
+per y via a window.
+
+The y-rate rule: P(Y=y) is taken over every labelled row of the slice; a
+row whose x is NULL still counts. Three reasons:
+
+- it does not depend on which x is asked about, so one melted frame serves
+  every x (y totals come from the unmelted rows: melting multiplies rows);
+- the y rates of a slice sum to 1;
+- the ``compute_statistics`` artifact (the ``label_feature`` path) keeps
+  the values it always had.
+
+Where x is never NULL it equals the rate over the rows with x present.
+Rows with a NULL label or a NULL or non-positive weight carry no labelled
+mass and are dropped before any total is taken, so every divisor is
+positive: a slice whose labelled weight is 0 gives no rows.
 """
 
 from __future__ import annotations
@@ -35,82 +52,19 @@ def lift_stats(
     include_zero_counts: bool = False,
     weight_col: str | None = None,
 ) -> DataFrame:
-    """Returns (x, y, lift, xy_count, x_count, y_rate) rows.
-
-    ``y_boundaries``: numeric labels are binned like the reference's
-    ``bin_util.bin_array`` — bin j iff boundaries[j-1] ≤ y < boundaries[j]
-    with implicit ∓inf end bounds (``lift_stats_generator.py:202``); the y
-    label is the interval ``[low,high)``, matching the reference's
-    ``y_bucket`` / "Lift (Y=[2,4))" rendering.
-
-    ``include_zero_counts``: emit a row for every (x, y-series) pair even
-    when x never co-occurs with y (lift 0.0) — the reference lists every x
-    in each lift_series.
-
-    ``weight_col``: weighted lift (reference ExampleWeightMap path,
-    lift_stats_generator_test.py:1066 test_lift_weighted): every count
-    becomes a weight sum — lift = (w(x∧y)/w(x)) / (w(y)/W).
-    """
-    wcol = (
-        F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    )
-    total_row = (
-        df.where(F.col(y_col).isNotNull()).agg(F.sum(wcol).alias("t")).collect()[0]
-    )
-    total = float(total_row["t"] or 0.0)
-    if total == 0:
-        # weighted counts are weight sums (double); keep the empty-result
-        # schema identical to the non-empty path so unions don't break
-        cnt_t = "double" if weight_col else "bigint"
-        return local_frame(
-            df.sparkSession, [],
-            f"x string, y string, lift double, xy_count {cnt_t}, "
-            f"x_count {cnt_t}, y_rate double",
-        )
-    if y_boundaries:
-        b = sorted(float(v) for v in y_boundaries)
-        lows, highs = [float("-inf")] + b, b + [float("inf")]
-        labels = [f"[{_fmt_bound(lo)},{_fmt_bound(hi)})" for lo, hi in zip(lows, highs)]
-        yd = F.col(y_col).cast("double")
-        idx = sum(((yd >= F.lit(v)).cast("int") for v in b), F.lit(0))
-        y_expr = F.element_at(F.array(*[F.lit(s) for s in labels]), idx + 1)
-    else:
-        y_expr = F.col(y_col).cast("string")
-    pairs = df.select(
-        F.col(x_col).cast("string").alias("x"), y_expr.alias("y"), wcol.alias("w")
-    ).where(F.col("x").isNotNull() & F.col("y").isNotNull())
-    cnt = F.sum("w") if weight_col else F.count(F.lit(1))
-    xy = pairs.groupBy("x", "y").agg(cnt.alias("xy_count"))
-    x_tot = pairs.groupBy("x").agg(cnt.alias("x_count"))
-    y_tot = pairs.groupBy("y").agg((cnt / total).alias("y_rate"))
-    if include_zero_counts:
-        # every x appears in every y series (zero-co-occurrence → lift 0.0):
-        # the x-totals × y-series grid is tiny (two small aggregates).
-        xy = (
-            x_tot.select("x")
-            .crossJoin(F.broadcast(y_tot.select("y")))
-            .join(xy, ["x", "y"], "left")
-            .na.fill({"xy_count": 0})
-        )
-    out = (
-        xy.join(x_tot, "x")
-        .join(F.broadcast(y_tot), "y")
-        .where(F.col("x_count") >= min_x_count)
-        .select(
-            "x",
-            "y",
-            ((F.col("xy_count") / F.col("x_count")) / F.col("y_rate")).alias("lift"),
-            "xy_count",
-            "x_count",
-            "y_rate",
-        )
-    )
-    if top_k_per_y:
-        w = Window.partitionBy("y").orderBy(F.desc("lift"), F.desc("x"))
-        out = out.withColumn("__r", F.row_number().over(w)).where(
-            F.col("__r") <= top_k_per_y
-        ).drop("__r")
-    return out
+    """Returns (x, y, lift, xy_count, x_count, y_rate) rows: the kernel
+    ``lift_stats_multi`` for one x column over the whole table. Lazy — no
+    Spark job runs before the caller's action."""
+    return lift_stats_multi(
+        df,
+        [x_col],
+        y_col,
+        min_x_count=min_x_count,
+        y_boundaries=y_boundaries,
+        weight_col=weight_col,
+        top_k_per_y=top_k_per_y,
+        include_zero_counts=include_zero_counts,
+    ).drop("slice_key", "x_feature")
 
 
 def cross_feature_stats(df: DataFrame, pairs: list[tuple[str, str]]) -> DataFrame:
@@ -144,13 +98,26 @@ def lift_stats_multi(
     y_boundaries: list[float] | None = None,
     weight_col: str | None = None,
     top_k_per_y: int | None = None,
+    include_zero_counts: bool = False,
 ) -> DataFrame:
     """Lift of EVERY categorical x against the label in ONE job — the
     engine-wired shape of the reference's LiftStatsGenerator (stats_impl.py
     386-396: ``options.label_feature`` → lift custom stats for all
-    categorical features). The x columns melt via ``stack`` so the table is
-    scanned once; per-slice y rates come from the unmelted rows (melting
-    multiplies rows, so y totals must not be counted off the melted frame).
+    categorical features).
+
+    ``y_boundaries``: numeric labels are binned like the reference's
+    ``bin_util.bin_array`` — bin j iff boundaries[j-1] ≤ y < boundaries[j]
+    with implicit ∓inf end bounds (``lift_stats_generator.py:202``); the y
+    label is the interval ``[low,high)``, matching the reference's
+    ``y_bucket`` / "Lift (Y=[2,4))" rendering.
+
+    ``include_zero_counts``: emit a row for every (x, y-series) pair of a
+    slice even when x never co-occurs with y (lift 0.0) — the reference
+    lists every x in each lift_series.
+
+    ``weight_col``: weighted lift (reference ExampleWeightMap path,
+    lift_stats_generator_test.py:1066 test_lift_weighted): every count
+    becomes a weight sum — lift = (w(x∧y)/w(x)) / (w(y)/W).
 
     Returns (slice_key, x_feature, x, y, lift, xy_count, x_count, y_rate).
     """
@@ -166,9 +133,15 @@ def lift_stats_multi(
     else:
         y_expr = F.col(y_col).cast("string")
 
+    # x columns go in under positional names, so a feature called y, w or
+    # slice_key cannot collide with the kernel's own columns
+    xs = [f"__x{i}" for i in range(len(x_cols))]
     base = df.select(
-        sc.alias("slice_key"), y_expr.alias("y"), wcol.alias("w"), *x_cols
-    ).where(F.col("y").isNotNull())
+        sc.alias("slice_key"),
+        y_expr.alias("y"),
+        wcol.alias("w"),
+        *[F.col(c).cast("string").alias(a) for c, a in zip(x_cols, xs)],
+    ).where(F.col("y").isNotNull() & (F.col("w") > 0))
 
     cnt = F.sum("w") if weight_col else F.count(F.lit(1))
     totals = base.groupBy("slice_key").agg(F.sum("w").alias("t"))
@@ -179,26 +152,31 @@ def lift_stats_multi(
         .select("slice_key", "y", (F.col("yw") / F.col("t")).alias("y_rate"))
     )
 
-    stack_args = ", ".join(
-        f"'{c}', CAST(`{c}` AS STRING)" for c in x_cols
-    )
+    stack = [F.lit(len(x_cols))]
+    for c, a in zip(x_cols, xs):
+        stack += [F.lit(c), F.col(a)]
     melted = base.select(
-        "slice_key",
-        "y",
-        "w",
-        F.expr(f"stack({len(x_cols)}, {stack_args})").alias("x_feature", "x"),
+        "slice_key", "y", "w", F.stack(*stack).alias("x_feature", "x")
     ).where(F.col("x").isNotNull())
 
-    xy = melted.groupBy("slice_key", "x_feature", "x", "y").agg(cnt.alias("xy_count"))
-    x_tot = melted.groupBy("slice_key", "x_feature", "x").agg(cnt.alias("x_count"))
+    keys = ["slice_key", "x_feature", "x"]
+    xy = melted.groupBy(*keys, "y").agg(cnt.alias("xy_count"))
+    x_tot = melted.groupBy(*keys).agg(cnt.alias("x_count"))
+    if include_zero_counts:
+        # every x of a slice in every y series of that slice: the grid joins
+        # the x totals to the slice's y values (both small aggregates)
+        xy = (
+            x_tot.select(*keys)
+            .join(F.broadcast(y_tot.select("slice_key", "y")), "slice_key")
+            .join(xy, [*keys, "y"], "left")
+            .na.fill({"xy_count": 0})
+        )
     out = (
-        xy.join(x_tot, ["slice_key", "x_feature", "x"])
+        xy.join(x_tot, keys)
         .join(F.broadcast(y_tot), ["slice_key", "y"])
         .where(F.col("x_count") >= min_x_count)
         .select(
-            "slice_key",
-            "x_feature",
-            "x",
+            *keys,
             "y",
             ((F.col("xy_count") / F.col("x_count")) / F.col("y_rate")).alias("lift"),
             "xy_count",

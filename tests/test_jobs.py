@@ -144,6 +144,37 @@ def test_stats_pass_runs_as_wide_and_long_jobs_only(spark):
     assert ds.feature("a").common.num_values_histogram
 
 
+def test_label_feature_stats_jobs_tagged_by_layer(spark):
+    """With a label feature the stats pass adds the lift layer: every job
+    carries the wide, long or lift tag, and the lift kernel (two x features
+    melted into one scan) submits its 8 jobs — three aggregate exchanges
+    over the scan and the joins' broadcast and shuffle stages under AQE."""
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    sc = spark.sparkContext
+    rows = [("a", "y1", "p"), ("a", "y1", "q"), ("a", "y2", "p"),
+            ("b", "y1", "q"), ("b", "y2", "p"), ("b", "y2", "q")] * 20
+    df = spark.createDataFrame(rows, "x string, label string, z string")
+    group = f"lift-{uuid.uuid4().hex[:8]}"
+    _settle(sc)
+    sc.setJobGroup(group, "stats layers with lift")
+    try:
+        stats = compute_statistics(df, StatsOptions(label_feature="label"))
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    _settle(sc)
+    layers = {"dvs:stats.wide", "dvs:stats.long", "dvs:stats.lift"}
+    jobs = [_tags(_job(sc, job_id))
+            for job_id in sc.statusTracker().getJobIdsForGroup(group)]
+    for tags in jobs:
+        assert tags & layers, tags
+    assert sum("dvs:stats.lift" in tags for tags in jobs) == 8
+    assert stats.default_slice().feature("z").custom["lift"]
+
+
 def test_run_parallel_returns_results_by_layer(spark):
     sc = spark.sparkContext
     out = run_parallel(spark, {

@@ -3,9 +3,10 @@ the fuzz layer of the reference's test strategy (SURVEY.md §5), aimed at
 the math that golden tests only sample: histogram mass conservation,
 weighted quantile bounds, codec roundtrips, drift metric bounds.
 
-No SparkSession here: everything under test is driver-side numpy/python,
-so the suite stays fast and deterministic (hypothesis derandomized
-per-profile via explicit seeds/settings).
+Everything but the lift kernel is driver-side numpy/python and needs no
+SparkSession, so the suite stays fast and deterministic (hypothesis
+derandomized per-profile via explicit seeds/settings); the lift property
+runs few, small examples on the shared session.
 """
 
 import numpy as np
@@ -371,3 +372,58 @@ def test_png_filters_always_roundtrip(h, w, ftypes, seed):
     from data_validation_spark.stats.imagecodec import decode_png
 
     assert np.array_equal(decode_png(_build_png(px, 2, ftypes)), px)
+
+
+# ------------------------------------------------------------------ lift ---
+def _lift_reference(rows):
+    """The lift rule in pandas: drop unlabelled and non-positive-weight
+    rows, take P(Y=y) over what is left (NULL x included), then per x
+    feature the weighted (x, y) and x totals; x below weight 1 is dropped
+    (``min_x_count=1``)."""
+    import pandas as pd
+
+    d = pd.DataFrame(rows, columns=["x1", "x2", "y", "w"])
+    d = d[d["y"].notna() & (d["w"] > 0)]
+    y_rate = d.groupby("y")["w"].sum() / d["w"].sum()
+    out = {}
+    for feature in ("x1", "x2"):
+        m = d[d[feature].notna()]
+        x_count = m.groupby(feature)["w"].sum()
+        for (x, y), xy in m.groupby([feature, "y"])["w"].sum().items():
+            if x_count[x] >= 1:
+                out[(feature, x, y)] = (
+                    xy / x_count[x] / y_rate[y], xy, x_count[x], y_rate[y]
+                )
+    return out
+
+
+@pytest.mark.parametrize("partitions", [1, 3])
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b", "c", None]),
+            st.sampled_from(["a", "b", None]),
+            st.sampled_from(["p", "q", "r", None]),
+            st.sampled_from([0.0, 0.5, 1.0, 2.0]),
+        ),
+        min_size=0,
+        max_size=30,
+    )
+)
+def test_lift_kernel_matches_reference(spark, partitions, rows):
+    from data_validation_spark.stats.lift import lift_stats_multi
+
+    df = spark.createDataFrame(
+        rows, "x1 string, x2 string, y string, w double"
+    ).repartition(partitions)
+    got = {
+        (r["x_feature"], r["x"], r["y"]): (
+            r["lift"], r["xy_count"], r["x_count"], r["y_rate"]
+        )
+        for r in lift_stats_multi(df, ["x1", "x2"], "y", weight_col="w").collect()
+    }
+    want = _lift_reference(rows)
+    assert got.keys() == want.keys()
+    for key, values in want.items():
+        assert got[key] == pytest.approx(values, rel=1e-9)

@@ -833,8 +833,8 @@ def test_confusion_feature_outside_compared_set(spark):
 
 
 def test_lift_weighted_empty_input_schema(spark):
-    """Weighted lift's empty-input early return must carry the same schema
-    (double counts) as the non-empty weighted path."""
+    """Weighted lift on empty input must carry the same schema (double
+    counts) as the non-empty weighted path."""
     df = spark.createDataFrame([], "x string, y string, w double")
     empty = lift_stats(df, "x", "y", weight_col="w")
     assert dict(empty.dtypes)["xy_count"] == "double"
@@ -968,3 +968,77 @@ def test_label_feature_lift_sliced(spark):
     # slice s2 only has y2 → every x lift is 1.0 there
     for r in by_key["s2"].feature("x").custom["lift"]:
         assert r["lift"] == pytest.approx(1.0)
+
+
+def _lift_entry_points(df, weight_col=None):
+    """The same (x, y) lift rows via lift_stats and via the engine's
+    label_feature path, each keyed by (x, y)."""
+    direct = {(r["x"], r["y"]): r.asDict()
+              for r in lift_stats(df, "x", "y", weight_col=weight_col).collect()}
+    stats = compute_statistics(
+        df, StatsOptions(label_feature="y", weight_column=weight_col)
+    )
+    engine = {(r["x"], r["y"]): r
+              for r in stats.default_slice().feature("x").custom.get("lift", [])}
+    return direct, engine
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_lift_y_rate_counts_rows_with_null_x(spark, weighted):
+    """P(Y=y) is taken over every labelled row, a NULL-x row included, by
+    both entry points: y_rate('1') = 3/4, so lift(a,'1') = (1/2)/(3/4) and
+    lift(b,'1') = 1/(3/4); the y rates sum to 1. Weight 2 on every row
+    leaves every ratio unchanged."""
+    df = spark.createDataFrame(
+        [(None, "1", 2.0), ("a", "1", 2.0), ("a", "0", 2.0), ("b", "1", 2.0)],
+        "x string, y string, w double",
+    )
+    for got in _lift_entry_points(df, "w" if weighted else None):
+        assert got[("a", "1")]["y_rate"] == pytest.approx(0.75)
+        assert got[("a", "1")]["lift"] == pytest.approx(2 / 3)
+        assert got[("b", "1")]["lift"] == pytest.approx(4 / 3)
+        y_rates = {y: r["y_rate"] for (_, y), r in got.items()}
+        assert sum(y_rates.values()) == pytest.approx(1.0)
+
+
+def test_lift_zero_labelled_weight_gives_no_rows(spark):
+    """A slice whose labelled weight is 0 has no y rates to divide by: both
+    entry points return no lift for it, and never raise DIVIDE_BY_ZERO under
+    ANSI mode (the engine call repeats, as its plan is chosen at run time)."""
+    df = spark.createDataFrame(
+        [("a", "1", 0.0), ("b", "0", 0.0), ("c", None, 1.0)],
+        "x string, y string, w double",
+    )
+    assert lift_stats(df, "x", "y", weight_col="w").collect() == []
+    for _ in range(5):
+        stats = compute_statistics(
+            df, StatsOptions(label_feature="y", weight_column="w")
+        )
+        assert "lift" not in stats.default_slice().feature("x").custom
+
+
+def test_lift_stats_submits_no_job_before_its_action(spark):
+    df = spark.createDataFrame(
+        [(None, "1"), ("a", "1"), ("a", "0"), ("b", "1")], "x string, y string"
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = lift_stats(df, "x", "y", include_zero_counts=True)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert len(out.collect()) == 4
+
+
+def test_label_feature_lift_for_features_named_like_kernel_columns(spark):
+    """Categorical features named y, w or slice_key, or with a quote in the
+    name, get their lift series like any other feature."""
+    names = ["y", "w", "slice_key", "it's"]
+    rows = [(x,) * len(names) + (label,)
+            for x, label in [("a", "p"), ("a", "q"), ("b", "p"), ("b", "p")]]
+    df = spark.createDataFrame(rows, [*names, "label"])
+    ds = compute_statistics(df, StatsOptions(label_feature="label")).default_slice()
+    for name in names:
+        lift = {(r["x"], r["y"]): r["lift"] for r in ds.feature(name).custom["lift"]}
+        assert lift[("a", "q")] == pytest.approx(2.0), name
