@@ -61,13 +61,6 @@ def shingle_array(text_col: Column, k: int) -> Column:
     )
 
 
-def shingle_hash_array(text_col: Column, k: int) -> Column:
-    """Distinct xxhash64 hashes of the k-word shingles (JVM-side)."""
-    return F.array_distinct(
-        F.transform(shingle_array(text_col, k), lambda s: F.xxhash64(s))
-    )
-
-
 def _batch_shingle_hashes(texts, k: int):
     """Vectorized shingle hashing for a whole Arrow batch.
 

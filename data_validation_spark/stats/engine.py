@@ -4,20 +4,30 @@ Execution shape (cf. SURVEY.md §3.1 "Spark shape"):
 
 1. **Wide pass** — one ``df.groupBy(slice_key).agg(*exprs)`` computing every
    codegen-able statistic for every non-binary column in a single scan:
-   counts, presence, valency, min/max/mean/stddev (NaN-excluded),
-   zero/NaN/±inf counts, string lengths. Entirely JVM-side (whole-stage
+   counts, presence, valency, the numeric stats of scalar features,
+   NaN counts, string lengths. Entirely JVM-side (whole-stage
    codegen, partial+final hash agg — the reference's combiner fusion and
    hot-key fanout are what Spark's partial aggregation already does).
 
 2. **Long pass** — one action over a union of small result frames: a
    stacked ``(slice, feature, value)`` projection feeding one groupBy
    shuffle for exact top-k / unique counts (the reference's
-   ``top_k_uniques_stats_generator``) and numeric stats of array elements,
-   plus a per-slice object aggregate holding what would cost the wide pass
-   its codegen: the percentile grids and the binary-column stats.
+   ``top_k_uniques_stats_generator``) and the numeric stats of nested
+   features' values, plus a per-slice object aggregate holding what would
+   cost the wide pass its codegen: the percentile grids and the
+   binary-column stats.
+
+   Scalar and nested numeric features get the same aggregates, from
+   ``exprs.numeric_aggs``: the wide pass computes them per scalar column
+   (its percentile grid in the object aggregate), the long pass per nested
+   feature over its values.
 
 3. **Assembly** — driver-side transform of the tiny aggregate output into the
-   ``DatasetStatsList`` artifact (histogram math in ``quantiles.py``).
+   ``DatasetStatsList`` artifact (histogram math in ``quantiles.py``). Every
+   aggregate reaches it under the wide agg's ``{alias}__{stat}`` names, so
+   one branch builds ``NumericStats`` for scalar and nested features alike;
+   ``num_nan`` is the wide pass's exact NaN count of a float feature, and 0
+   for any other.
 
 With ``options.use_sketches=True`` only the long pass's top-k/uniques branch
 changes: one ``groupBy(slice, feature)`` of Spark's own sketch aggregates —
@@ -93,15 +103,9 @@ _last_union_frame = None
 def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) -> DatasetStatsList:
     """Compute the full statistics artifact for ``df``."""
     options = options or StatsOptions()
-    # Per-feature weight overrides (ExampleWeightMap): weight_arg carries the
-    # map into the expression builders; plain weight_column otherwise.
-    weight_map = options.example_weight_map
-    weight_arg = weight_map if weight_map is not None else options.weight_column
-    weight_cols = (
-        sorted(weight_map.all_weight_features())
-        if weight_map is not None
-        else ([options.weight_column] if options.weight_column else [])
-    )
+    # The weight column with its per-feature overrides, or None.
+    weights = options.example_weight_map
+    weight_cols = sorted(weights.all_weight_features()) if weights else []
 
     if options.feature_allowlist:
         keep = list(options.feature_allowlist)
@@ -140,7 +144,7 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
     # ---- wide, long, generator and lift jobs, run concurrently --------------
     wide_exprs, obj_projs, obj_aggs = E.build_agg_exprs(
         plans,
-        weight_arg,
+        weights,
         _QUANTILE_CUTS,
         options.quantiles_accuracy,
         options.num_values_histogram_buckets,
@@ -150,11 +154,11 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         return df.groupBy(slice_col.alias("slice_key")).agg(*wide_exprs).collect()
 
     def long_job():
-        # Top-k/uniques + array-element stats + the object aggregate
+        # Top-k/uniques + nested numeric stats + the object aggregate
         # (percentile grids and binary-column stats, which would force the
         # wide agg out of codegen) + (when a weight column is set) weighted
         # quantile buckets, all in ONE action — see _run_long_pass.
-        return _run_long_pass(df, plans, slice_col, options, weight_arg,
+        return _run_long_pass(df, plans, slice_col, options, weights,
                               obj_projs, obj_aggs)
 
     def custom_gen_job():
@@ -191,7 +195,8 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
     def lift_job():
         # Label-driven lift (StatsOptions.label_feature → per-feature "lift"
         # custom stats; stats_impl.py:386-396). All categorical x melt into
-        # one stack so the table is scanned once.
+        # one stack, so the kernel scans the table twice whatever the
+        # number of x (once for the y totals, once for the (x, y) counts).
         label = options.label_feature
         if not label:
             return []
@@ -222,7 +227,7 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
         "stats.lift": lift_job,
     })
     wide_rows = out["stats.wide"]
-    (topk_data, uniq_data, arr_data, wtopk_data, wq_data, obj_data) = out["stats.long"]
+    (topk_data, uniq_data, wtopk_data, wq_data, slice_data) = out["stats.long"]
     custom_gen_out, lift_rows = out["stats.generators"], out["stats.lift"]
 
     if not wide_rows:
@@ -232,12 +237,10 @@ def compute_statistics(df: DataFrame, options: Optional[StatsOptions] = None) ->
     # ---- assembly ----------------------------------------------------------
     slices = []
     for row in wide_rows:
-        # the object aggregate's values carry the wide agg's alias convention
-        rd = {**row.asDict(), **obj_data.get(row["slice_key"], {})}
+        # the long pass's per-slice values carry the wide agg's aliases
+        rd = {**row.asDict(), **slice_data.get(row["slice_key"], {})}
         slices.append(
-            _assemble_slice(
-                rd, plans, options, topk_data, uniq_data, arr_data, wtopk_data, wq_data
-            )
+            _assemble_slice(rd, plans, options, topk_data, uniq_data, wtopk_data, wq_data)
         )
     slices.sort(key=lambda s: s.slice_key)
     artifact = DatasetStatsList(slices)
@@ -288,12 +291,12 @@ def _check_label(df: DataFrame, options: StatsOptions) -> None:
         )
 
 
-def _run_long_pass(df, plans, slice_col, options: StatsOptions, weight,
+def _run_long_pass(df, plans, slice_col, options: StatsOptions, weights,
                    obj_projs, obj_aggs):
-    """Top-k/uniques (exact, or sketched with ``use_sketches``) +
-    array-element numeric stats + the object aggregate + (when a weight
-    column is configured) weighted top-k, weighted array moments and the
-    weighted quantile buckets — ONE Spark action.
+    """Top-k/uniques (exact, or sketched with ``use_sketches``) + the
+    numeric stats of nested features + the object aggregate + (with
+    ``weights``, the ``ExampleWeightMap`` of a weight column) weighted top-k
+    and the weighted quantile buckets — ONE Spark action.
 
     Each concern builds a small (KB-scale) lazy result frame; their union is
     collected once. Catalyst compiles the union into column-disjoint
@@ -309,26 +312,29 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, weight,
     has no codegen: the ``percentile_approx`` grids and the binary-column
     stats with their theta sketch. It is its own union branch, so the other
     branches keep WholeStageCodegen; its row carries the aggregates as one
-    ``obj`` struct under the wide agg's aliases.
+    ``obj`` struct under the wide agg's aliases. The nested numeric branch
+    groups the long frame's values by (slice, feature) into the
+    ``exprs.numeric_aggs`` the wide agg computes for scalar features; its
+    rows are filed under the same aliases, so each slice's values come back
+    as one ``{alias}__{stat}`` dict.
 
     Top-k ranks values in one salted window (``_salted_topk``): by count
     and, weighted, by weight in exact mode; by weight only in weighted
     sketch mode, whose count top-k and uniques are Spark's sketch
     aggregates. No branch has a Python node."""
-    long_df = E.long_format(df, plans, slice_col, weight)
+    long_df = E.long_format(df, plans, slice_col, weights)
     topk_data: dict = {}
     uniq_data: dict = {}
-    arr_data: dict = {}
     wtopk_data: dict = {}
     wq_data: dict = {}
-    obj_data: dict = {}
+    slice_data: dict = {}
     finals = []
 
     any_topk = long_df is not None and any(p.categorical for p in plans)
     any_arr = long_df is not None and any(
         p.numeric and p.nest_depth > 0 for p in plans
     )
-    weighted = bool(options.weight_column)
+    weighted = weights is not None
     k = max(options.num_top_values, options.num_rank_histogram_buckets)
 
     if any_topk and options.use_sketches:
@@ -345,10 +351,11 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, weight,
             )
             finals.append(_salted_topk(wcounts, k, {"wrank": "wcnt"}))
     elif any_topk:
+        wcnt = [F.sum("weight").alias("wcnt")] if weighted else []
         counts = (
             long_df.where(F.col("str_value").isNotNull())
             .groupBy("slice_key", "feature", "str_value")
-            .agg(F.count(F.lit(1)).alias("cnt"), F.sum("weight").alias("wcnt"))
+            .agg(F.count(F.lit(1)).alias("cnt"), *wcnt)
         )
         # With a weight column the reference emits BOTH an unweighted top-k
         # (string_stats.top_values) and a weighted one ranked by weighted
@@ -359,43 +366,16 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, weight,
 
     if any_arr:
         nv = F.col("num_value")
-        finite = F.when(~nv.isin(float("inf"), float("-inf")), nv)
-        wsums = []
-        if weighted:
-            # weighted moments over the finite values plus the ±inf
-            # weights; assembly rebuilds the ±inf semantics from them
-            w = F.col("weight")
-            wsums = [
-                F.sum(F.when(finite.isNotNull(), w)).alias("w_cnt"),
-                F.sum(finite * w).alias("w_sum"),
-                F.sum(finite * finite * w).alias("w_sumsq"),
-                F.sum(F.when(nv == float("inf"), w)).alias("w_posinf"),
-                F.sum(F.when(nv == float("-inf"), w)).alias("w_neginf"),
-            ]
+        aggs = E.numeric_aggs(nv, _QS, options.quantiles_accuracy,
+                              F.col("weight") if weighted else None)
         finals.append(
             long_df.where(nv.isNotNull())
             .groupBy("slice_key", "feature")
-            .agg(
-                *wsums,
-                F.min(nv).alias("min"),
-                F.max(nv).alias("max"),
-                # non-NaN values including ±inf — reference accumulator
-                # semantics (basic_stats_generator.py:434-444); NaNs never
-                # reach the long frame (stripped in long_format)
-                F.avg(nv).alias("mean"),
-                F.stddev_pop(nv).alias("std"),
-                F.sum(F.when(nv == 0.0, 1).otherwise(0)).alias("zeros"),
-                F.sum(F.when(nv == float("inf"), 1).otherwise(0)).alias("posinf"),
-                F.sum(F.when(nv == float("-inf"), 1).otherwise(0)).alias("neginf"),
-                F.min(finite).alias("finmin"),
-                F.max(finite).alias("finmax"),
-                F.count(finite).alias("fincnt"),
-                F.percentile_approx(finite, _QS, options.quantiles_accuracy).alias("quants"),
-            )
+            .agg(F.struct(*[agg.alias(stat) for stat, agg in aggs.items()]).alias("num"))
             .select(F.lit("arr").alias("kind"), "*")
         )
 
-    wq_values = _weighted_values(df, plans, slice_col, weight) if weighted else None
+    wq_values = _weighted_values(df, plans, slice_col, weights) if weighted else None
     if wq_values is not None:
         finals.append(_weighted_quantile_frame(wq_values))
 
@@ -408,7 +388,7 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, weight,
         )
 
     if not finals:
-        return topk_data, uniq_data, arr_data, wtopk_data, wq_data, obj_data
+        return topk_data, uniq_data, wtopk_data, wq_data, slice_data
 
     out = finals[0]
     for f in finals[1:]:
@@ -416,17 +396,18 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, weight,
     if CAPTURE_UNION_FRAME:
         global _last_union_frame
         _last_union_frame = out
+    alias = {p.name: p.alias for p in plans}
     for row in out.collect():
         r = row.asDict()
         if r["kind"] == "obj":  # one per slice, no feature
-            obj_data[r["slice_key"]] = r["obj"].asDict()
+            slice_data.setdefault(r["slice_key"], {}).update(r["obj"].asDict())
             continue
         key = (r["slice_key"], r["feature"])
         if r["kind"] == "topk":
             for rank, ranked in ((r.get("rank"), topk_data), (r.get("wrank"), wtopk_data)):
                 if rank is not None and rank <= k:
                     ranked.setdefault(key, []).append(
-                        (rank, r["str_value"], r.get("cnt"), r["wcnt"])
+                        (rank, r["str_value"], r.get("cnt"), r.get("wcnt"))
                     )
             if r.get("unique") is not None:
                 uniq_data[key] = r["unique"]
@@ -439,23 +420,25 @@ def _run_long_pass(df, plans, slice_col, options: StatsOptions, weight,
             ]
             uniq_data[key] = r["unique"]
         elif r["kind"] == "arr":
-            arr_data[key] = r
+            slice_data.setdefault(r["slice_key"], {}).update(
+                (f"{alias[r['feature']]}__{stat}", v) for stat, v in r["num"].asDict().items()
+            )
         else:  # wq
             wq_data[key] = [tuple(piece) for piece in r["pieces"]]
 
     if wq_values is not None:
-        _refine_heavy_buckets(df, plans, slice_col, weight, wq_data)
+        _refine_heavy_buckets(df, plans, slice_col, weights, wq_data)
     for key, pieces in wq_data.items():
         wq_data[key] = weighted_quantile_grid(pieces, _QS)
-    return topk_data, uniq_data, arr_data, wtopk_data, wq_data, obj_data
+    return topk_data, uniq_data, wtopk_data, wq_data, slice_data
 
 
-def _weighted_values(df, plans, slice_col, weight):
+def _weighted_values(df, plans, slice_col, weights):
     """The finite values of every numeric (slice, feature) with their
     weight ``w`` and log bucket (``sign``, ``exp`` = ⌈log_γ |v|⌉, zero its
     own), or None without numeric features."""
     wplans = [replace(p, categorical=False) for p in plans if p.numeric]
-    long_df = E.long_format(df, wplans, slice_col, weight,
+    long_df = E.long_format(df, wplans, slice_col, weights,
                             include_scalar_numeric=True)
     if long_df is None:
         return None
@@ -518,7 +501,7 @@ def _weighted_quantile_frame(values):
     )
 
 
-def _refine_heavy_buckets(df, plans, slice_col, weight, pieces_by_key):
+def _refine_heavy_buckets(df, plans, slice_col, weights, pieces_by_key):
     """Split, in place, each collected piece that holds more than one grid
     step of weight (W / 100) and more than one value into ``_WQ_SPLIT``
     equal-width sub-buckets of its [lo, hi], of which again only those that
@@ -544,7 +527,7 @@ def _refine_heavy_buckets(df, plans, slice_col, weight, pieces_by_key):
             return
         features = {k[1] for k, _ in heavy}
         values = _weighted_values(df, [p for p in plans if p.name in features],
-                                  slice_col, weight)
+                                  slice_col, weights)
         ranges = df.sparkSession.createDataFrame(
             [(*k, lo, hi, before, totals[k]) for k, (lo, hi, before, _) in heavy],
             "rslice string, rfeature string, plo double, phi double, "
@@ -665,8 +648,7 @@ def _sketch_topk_frame(long_df, options: StatsOptions):
 
 
 def _assemble_slice(
-    rd, plans, options: StatsOptions, topk_data, uniq_data, arr_data, wtopk_data,
-    wq_data,
+    rd, plans, options: StatsOptions, topk_data, uniq_data, wtopk_data, wq_data,
 ):
     slice_key = rd["slice_key"]
     num_examples = rd["num_examples"]
@@ -677,7 +659,7 @@ def _assemble_slice(
     )
     for p in plans:
         ds.features[p.name] = _assemble_feature(
-            p, rd, num_examples, slice_key, options, topk_data, uniq_data, arr_data,
+            p, rd, num_examples, slice_key, options, topk_data, uniq_data,
             wtopk_data, wq_data,
         )
     return ds
@@ -689,7 +671,7 @@ def _g(rd, p, stat, default=None):
 
 
 def _assemble_feature(
-    p, rd, num_examples, slice_key, options, topk_data, uniq_data, arr_data,
+    p, rd, num_examples, slice_key, options, topk_data, uniq_data,
     wtopk_data, wq_data,
 ):
     fs = FeatureStats(name=p.name, type=p.stats_type)
@@ -752,70 +734,38 @@ def _assemble_feature(
     key = (slice_key, p.name)
 
     if p.numeric:
-        if p.nest_depth == 0:
-            num = NumericStats(
-                mean=_g(rd, p, "mean", 0.0) or 0.0,
-                std_dev=_std0(_g(rd, p, "std", 0.0)),
-                min=_nn(_g(rd, p, "min")),
-                max=_nn(_g(rd, p, "max")),
-                num_zeros=int(_g(rd, p, "zeros", 0) or 0),
-                num_nan=int(_g(rd, p, "nan", 0) or 0),
-                num_pos_inf=int(_g(rd, p, "posinf", 0) or 0),
-                num_neg_inf=int(_g(rd, p, "neginf", 0) or 0),
+        num_nan = int(_g(rd, p, "nan", 0))
+        if _g(rd, p, "fincnt") is None and not num_nan:
+            # a nested feature with no non-NaN value has no aggregate row
+            return fs
+        num = NumericStats(
+            mean=_g(rd, p, "mean", 0.0),
+            std_dev=_std0(_g(rd, p, "std")),
+            min=_nn(_g(rd, p, "min")),
+            max=_nn(_g(rd, p, "max")),
+            num_zeros=int(_g(rd, p, "zeros", 0)),
+            num_nan=num_nan,
+            num_pos_inf=int(_g(rd, p, "posinf", 0)),
+            num_neg_inf=int(_g(rd, p, "neginf", 0)),
+            finite_min=_g(rd, p, "finmin"),
+            finite_max=_g(rd, p, "finmax"),
+        )
+        quants = _g(rd, p, "quants")
+        finite_count = int(_g(rd, p, "fincnt", 0))
+        winf = (_g(rd, p, "w_posinf", 0.0), _g(rd, p, "w_neginf", 0.0))
+        w_cnt = _g(rd, p, "w_cnt", 0.0)
+        if any(winf):
+            # ±inf in the weighted accumulator: a ±inf mean, nan with both
+            # signs, and std 0.0 (sqrt(max(0, nan)), as unweighted)
+            num.weighted_mean = (
+                math.nan if all(winf) else math.inf if winf[0] else -math.inf
             )
-            num.finite_min = _g(rd, p, "finmin", num.min if math.isfinite(num.min) else None)
-            num.finite_max = _g(rd, p, "finmax", num.max if math.isfinite(num.max) else None)
-            quants = _g(rd, p, "quants")
-            finite_count = nonmissing - num.num_nan - num.num_pos_inf - num.num_neg_inf
-            if options.weight_column:
-                w_cnt = _g(rd, p, "w_cnt", 0.0) or 0.0
-                w_sum = _g(rd, p, "w_sum", 0.0) or 0.0
-                w_sumsq = _g(rd, p, "w_sumsq", 0.0) or 0.0
-                if w_cnt > 0:
-                    num.weighted_mean = w_sum / w_cnt
-                    # max(0, var) with 0 FIRST: max(0.0, nan) is 0.0, so a
-                    # nan variance (infinities present) collapses to std 0.0
-                    # — sqrt(max(0, variance)) reference semantics
-                    # (basic_stats_generator.py:787).
-                    var = max(0.0, w_sumsq / w_cnt - num.weighted_mean**2)
-                    num.weighted_std_dev = math.sqrt(var)
-            winf = (_g(rd, p, "w_posinf", 0.0), _g(rd, p, "w_neginf", 0.0))
-        else:
-            a = arr_data.get(key)
-            exact_nan = _g(rd, p, "nan")  # wide-pass NaN counter (float nests)
-            if a is None:
-                if exact_nan:
-                    # all values were NaN: no rows reached the long frame but
-                    # the reference still emits num_stats carrying the NaN
-                    # count (basic_stats_generator test_only_nan)
-                    fs.numeric = NumericStats(num_nan=int(exact_nan))
-                return fs
-            num = NumericStats(
-                mean=a["mean"] or 0.0,
-                std_dev=_std0(a["std"]),
-                min=_nn(a["min"]),
-                max=_nn(a["max"]),
-                num_zeros=int(a["zeros"] or 0),
-                num_pos_inf=int(a["posinf"] or 0),
-                num_neg_inf=int(a["neginf"] or 0),
+            num.weighted_std_dev = 0.0
+        elif w_cnt > 0:
+            num.weighted_mean = _g(rd, p, "w_sum") / w_cnt
+            num.weighted_std_dev = math.sqrt(
+                max(0.0, _g(rd, p, "w_sumsq") / w_cnt - num.weighted_mean**2)
             )
-            num.finite_min = a["finmin"]
-            num.finite_max = a["finmax"]
-            if exact_nan is not None:
-                num.num_nan = int(exact_nan)
-            else:
-                # NaNs never reach the long frame (stripped in long_format);
-                # count = tot - finite - infs.
-                num.num_nan = max(
-                    common.tot_num_values - int(a["fincnt"]) - num.num_pos_inf - num.num_neg_inf, 0
-                )
-            quants = a["quants"]
-            finite_count = int(a["fincnt"])
-            winf = (a.get("w_posinf") or 0.0, a.get("w_neginf") or 0.0)
-            if options.weight_column and (finite_count or any(winf)):
-                num.weighted_mean, num.weighted_std_dev = _nested_weighted_moments(
-                    a, *winf
-                )
         if quants is not None:
             num.median = median_from_boundaries(quants)
             qh = quantiles_histogram(
@@ -910,22 +860,6 @@ def _assemble_feature(
             if total >= 100 and supported / total >= 0.8:
                 fs.custom["domain_info"] = "image_domain {}"
     return fs
-
-
-def _nested_weighted_moments(a, wposinf: float, wneginf: float):
-    """Weighted (mean, std_dev) of a nested feature from the long pass's
-    finite-value sums and ±inf weights (the wide pass only covers
-    scalars). Same ±inf semantics as the unweighted path: one-signed
-    infinities give a ±inf mean, both give nan, and either gives std 0."""
-    if wposinf and wneginf:
-        return float("nan"), 0.0
-    if wposinf or wneginf:
-        return float("inf") if wposinf else float("-inf"), 0.0
-    wn = a["w_cnt"] or 0.0
-    if wn <= 0:
-        return None, None
-    mean = a["w_sum"] / wn
-    return mean, math.sqrt(max(0.0, a["w_sumsq"] / wn - mean**2))
 
 
 def _nn(v, default=0.0):

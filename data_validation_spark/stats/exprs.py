@@ -19,7 +19,6 @@ extrema are tracked separately; quantiles are computed over finite values only.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -120,9 +119,58 @@ def _value_col(p: ColumnPlan):
     return c
 
 
+def numeric_aggs(x, quantiles: list, accuracy: int, weight=None,
+                 is_float: bool = True) -> dict:
+    """The numeric statistics of ``x``, a double value column with NaN and
+    missing values as NULL, as named aggregates. Scalar and nested features
+    share them: the reference feeds every value of a numeric feature to one
+    accumulator, whatever its valency (``basic_stats_generator.py:434-476``).
+
+    - ``min``, ``max``, ``mean``, ``std`` over every non-NaN value,
+      INCLUDING ±inf (only the nan_mask is dropped before
+      mean_var_accumulator.update), so mean is ±inf with one-signed
+      infinities and nan with both; the nan variance collapses to std_dev
+      0.0 in assembly (sqrt(max(0, var)) reference semantics); ``zeros``;
+    - ``posinf``/``neginf`` counts and the finite ``finmin``, ``finmax``
+      and ``fincnt``;
+    - ``quants``: the ``percentile_approx`` grid at ``quantiles`` of the
+      finite values;
+    - with a ``weight`` column: ``w_cnt``, ``w_sum`` and ``w_sumsq`` of the
+      finite values and the ±inf weights ``w_posinf``/``w_neginf``, from
+      which assembly rebuilds the ±inf semantics of the weighted moments.
+
+    A column that holds no ±inf (``is_float`` False) gets no ±inf
+    aggregates; its finite extrema are its ``min`` and ``max``, which Spark
+    plans once."""
+    inf = (float("inf"), float("-inf"))
+    xf = F.when(~x.isin(*inf), x) if is_float else x
+    aggs = {
+        "min": F.min(x),
+        "max": F.max(x),
+        "mean": F.avg(x),
+        "std": F.stddev_pop(x),
+        "zeros": F.sum(F.when(x == 0.0, 1).otherwise(0)),
+        "finmin": F.min(xf),
+        "finmax": F.max(xf),
+        "fincnt": F.count(xf),
+        "quants": F.percentile_approx(xf, quantiles, accuracy),
+    }
+    if is_float:
+        aggs["posinf"] = F.sum(F.when(x == inf[0], 1).otherwise(0))
+        aggs["neginf"] = F.sum(F.when(x == inf[1], 1).otherwise(0))
+    if weight is not None:
+        aggs["w_cnt"] = F.sum(F.when(xf.isNotNull(), weight))
+        aggs["w_sum"] = F.sum(weight * xf)
+        aggs["w_sumsq"] = F.sum(weight * xf * xf)
+        if is_float:
+            aggs["w_posinf"] = F.sum(F.when(x == inf[0], weight))
+            aggs["w_neginf"] = F.sum(F.when(x == inf[1], weight))
+    return aggs
+
+
 def build_agg_exprs(
     plans: list[ColumnPlan],
-    weight_column: Optional[str],
+    weights,
     num_quantile_cuts: int,
     quantiles_accuracy: int,
     count_values_hist_buckets: int,
@@ -141,9 +189,10 @@ def build_agg_exprs(
     projected first, in codegen'd code, so the aggregates read only scalar
     columns:
 
-    - the ``percentile_approx`` grids: the finite values of each scalar
-      numeric (``{alias}__quants``) and the value counts of each nested
-      feature (``{alias}__valshist``);
+    - the ``percentile_approx`` grids: the ``numeric_aggs`` grid of each
+      scalar numeric over its projected NaN-excluded value
+      (``{alias}__quants``) and the value counts of each nested feature
+      (``{alias}__valshist``);
     - ALL the binary-column statistics: presence, byte-length stats,
       distinct-count estimate and magic-byte format counters. The distinct
       estimate is a theta (KMV) sketch, ``theta_sketch_agg`` with 2^14 =
@@ -167,18 +216,15 @@ def build_agg_exprs(
     Returns aliased expressions; assembly decodes by alias convention
     ``{plan.alias}__{stat}``.
 
-    ``weight_column`` may be an ``ExampleWeightMap`` (per-feature weight
-    overrides, reference example_weight_map.py): each plan's weighted
-    expressions then use that feature's resolved weight column;
-    ``weighted_num_examples`` always uses the global weight feature.
+    ``weights`` is an ``ExampleWeightMap`` (reference
+    example_weight_map.py) or None: each plan's weighted expressions use
+    that feature's resolved weight column; ``weighted_num_examples`` always
+    uses the global weight feature.
     """
-    from data_validation_spark.weights import ExampleWeightMap
-
-    wmap = weight_column if isinstance(weight_column, ExampleWeightMap) else None
-    global_w = wmap.weight_feature if wmap else weight_column
+    global_w = weights.weight_feature if weights else None
 
     def _w(p):
-        return wmap.get(p.name) if wmap else weight_column
+        return weights.get(p.name) if weights else None
 
     exprs = [F.count(F.lit(1)).alias("num_examples")]
     projs: list = []
@@ -328,8 +374,8 @@ def build_agg_exprs(
             continue
 
         pw = _w(p)
+        w = F.col(pw).cast("double") if pw else None
         if pw:
-            w = F.col(pw).cast("double")
             exprs.append(F.sum(F.when(present.isNotNull(), w)).alias(f"{a}__w_nonmissing"))
             if pw != global_w:
                 exprs.append(F.sum(w).alias(f"{a}__w_total"))
@@ -337,20 +383,17 @@ def build_agg_exprs(
         if p.numeric:
             x = v.cast("double")
             xn = F.when(~F.isnan(x), x) if p.is_float else x  # NaN-excluded
-            xf = F.when(~F.isnan(x) & ~x.isin(float("inf"), float("-inf")), x) if p.is_float else x
-            exprs += [
-                F.min(xn).alias(f"{a}__min"),
-                F.max(xn).alias(f"{a}__max"),
-                # mean/std over ALL non-NaN values INCLUDING ±inf
-                # (basic_stats_generator.py:434-444: only the nan_mask is
-                # dropped before mean_var_accumulator.update) — so mean is
-                # ±inf with one-signed infinities and nan with both; the
-                # resulting nan variance collapses to std_dev 0.0 in assembly
-                # (sqrt(max(0, var)) reference semantics).
-                F.avg(xn).alias(f"{a}__mean"),
-                F.stddev_pop(xn).alias(f"{a}__std"),
-                F.sum(F.when(xn == 0.0, 1).otherwise(0)).alias(f"{a}__zeros"),
-            ]
+            aggs = numeric_aggs(xn, qs, quantiles_accuracy, w, p.is_float)
+            # The grid would cost the wide agg its codegen: the object
+            # aggregate runs it over the value projected in codegen.
+            del aggs["quants"]
+            projs.append(xn.alias(f"{a}__x"))
+            grid = numeric_aggs(F.col(f"{a}__x"), qs, quantiles_accuracy,
+                                is_float=p.is_float)["quants"]
+            oaggs.append(grid.alias(f"{a}__quants"))
+            exprs += [agg.alias(f"{a}__{stat}") for stat, agg in aggs.items()]
+            if p.is_float:
+                exprs.append(F.sum(F.when(F.isnan(x), 1).otherwise(0)).alias(f"{a}__nan"))
             if p.categorical:
                 # categorical numerics also carry STRING stats whose
                 # avg_length is over the stringified values
@@ -359,49 +402,22 @@ def build_agg_exprs(
                 exprs.append(
                     F.avg(F.length(v.cast("string"))).alias(f"{a}__avglen")
                 )
-            projs.append(xf.alias(f"{a}__xf"))
-            oaggs.append(
-                F.percentile_approx(F.col(f"{a}__xf"), qs, quantiles_accuracy)
-                .alias(f"{a}__quants")
-            )
-            if p.is_float:
-                exprs += [
-                    F.sum(F.when(F.isnan(x), 1).otherwise(0)).alias(f"{a}__nan"),
-                    F.sum(F.when(x == float("inf"), 1).otherwise(0)).alias(f"{a}__posinf"),
-                    F.sum(F.when(x == float("-inf"), 1).otherwise(0)).alias(f"{a}__neginf"),
-                    F.min(xf).alias(f"{a}__finmin"),
-                    F.max(xf).alias(f"{a}__finmax"),
-                ]
-            if pw:
-                # weighted accumulator likewise sees all non-NaN values
-                # (basic_stats_generator.py:466-469)
-                w = F.col(pw).cast("double")
-                wx = F.when(xn.isNotNull(), w)
-                exprs += [
-                    F.sum(wx).alias(f"{a}__w_cnt"),
-                    F.sum(w * xn).alias(f"{a}__w_sum"),
-                    F.sum(w * xn * xn).alias(f"{a}__w_sumsq"),
-                ]
-                if p.is_float:
-                    # ±inf weights: the end buckets of the weighted
-                    # equi-width histogram
-                    exprs += [
-                        F.sum(F.when(x == float("inf"), w)).alias(f"{a}__w_posinf"),
-                        F.sum(F.when(x == float("-inf"), w)).alias(f"{a}__w_neginf"),
-                    ]
         elif p.stats_type == STRING:
             exprs.append(F.avg(F.length(F.col(p.name))).alias(f"{a}__avglen"))
     return exprs, projs, oaggs
 
 
-def long_format(df, plans: list[ColumnPlan], slice_col, weight_column: Optional[str],
+def long_format(df, plans: list[ColumnPlan], slice_col, weights=None,
                 include_scalar_numeric: bool = False):
-    """Build the long-format frame ``(slice_key, feature, str_value, num_value,
-    weight)`` feeding top-k/uniques and array-element numeric stats.
+    """Build the long-format frame ``(slice_key, feature, str_value,
+    num_value[, weight])`` feeding top-k/uniques and array-element numeric
+    stats. ``num_value`` is NULL for a NaN. With ``weights`` (an
+    ``ExampleWeightMap``) each row carries its feature's resolved weight;
+    without, the frame has no ``weight`` column.
 
     ONE scan: every participating column stacks into a per-row array of
-    ``(feature, str_value, num_value)`` structs which a single ``explode``
-    flattens — the analogue of the reference's explode + CombinePerKey
+    structs which a single ``explode`` flattens — the analogue of the
+    reference's explode + CombinePerKey
     (``top_k_uniques_stats_generator.py:106-336``). A unionByName of
     per-column projections would read the same total column bytes (Catalyst
     prunes each branch) but pays scan setup (footers, row-group init, task
@@ -409,17 +425,9 @@ def long_format(df, plans: list[ColumnPlan], slice_col, weight_column: Optional[
     of one. Downstream is a single groupBy shuffle keyed by
     (slice, feature, value).
     """
-    from data_validation_spark.weights import ExampleWeightMap
-
-    wmap = weight_column if isinstance(weight_column, ExampleWeightMap) else None
-    if wmap is not None:
-        # Per-feature weight rides inside the struct (each feature's rows
-        # carry its own resolved weight column); same single scan + explode.
-        struct_t = "struct<feature:string,str_value:string,num_value:double,weight:double>"
-        w = F.col("e.weight").alias("weight")
-    else:
-        struct_t = "struct<feature:string,str_value:string,num_value:double>"
-        w = (F.col(weight_column).cast("double") if weight_column else F.lit(1.0)).alias("weight")
+    fields_t = "feature:string,str_value:string,num_value:double"
+    if weights is not None:
+        fields_t += ",weight:double"
     arrays = []
     for p in plans:
         if p.stats_type in (STRUCT, UNKNOWN, BYTES):
@@ -453,11 +461,8 @@ def long_format(df, plans: list[ColumnPlan], slice_col, weight_column: Optional[
                 sv.alias("str_value"),
                 nv.alias("num_value"),
             ]
-            if wmap is not None:
-                pw = wmap.get(p.name)
-                fields.append(
-                    (F.col(pw).cast("double") if pw else F.lit(1.0)).alias("weight")
-                )
+            if weights is not None:
+                fields.append(F.col(weights.get(p.name)).cast("double").alias("weight"))
             return F.struct(*fields)
 
         if p.nest_depth > 0:
@@ -468,18 +473,10 @@ def long_format(df, plans: list[ColumnPlan], slice_col, weight_column: Optional[
         else:
             v = _value_col(p)
             arr = F.when(v.isNotNull(), F.array(entry(v)))
-        arrays.append(F.coalesce(arr, F.array().cast(f"array<{struct_t}>")))
+        arrays.append(F.coalesce(arr, F.array().cast(f"array<struct<{fields_t}>>")))
     if not arrays:
         return None
     stacked = F.concat(*arrays) if len(arrays) > 1 else arrays[0]
-    if wmap is not None:
-        exploded = df.select(slice_col.alias("slice_key"), F.explode(stacked).alias("e"))
-    else:
-        exploded = df.select(slice_col.alias("slice_key"), F.explode(stacked).alias("e"), w)
-    return exploded.select(
-        "slice_key",
-        F.col("e.feature").alias("feature"),
-        F.col("e.str_value").alias("str_value"),
-        F.col("e.num_value").alias("num_value"),
-        F.col("e.weight").alias("weight") if wmap is not None else F.col("weight"),
+    return df.select(slice_col.alias("slice_key"), F.explode(stacked).alias("e")).select(
+        "slice_key", "e.*"
     )

@@ -350,13 +350,6 @@ def decode_jpeg(data: bytes) -> Optional[np.ndarray]:
     return jpegcodec.decode(data)
 
 
-def encode_jpeg_baseline(rgb: np.ndarray, quality: int = 90, **kw) -> bytes:
-    """Real baseline JFIF encoder (pure numpy; see ``jpegcodec.py``)."""
-    from data_validation_spark.stats import jpegcodec
-
-    return jpegcodec.encode(rgb, quality=quality, **kw)
-
-
 def jpeg_dimensions(data: bytes) -> Optional[tuple[int, int]]:
     """Real SOF-marker scan — works on any baseline/progressive JPEG."""
     if data[:3] != JPEG_MAGIC:

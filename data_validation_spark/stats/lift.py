@@ -2,11 +2,12 @@
 label value), behavioral port of the reference's lift generator
 (``lift_stats_generator.py``, formula at :521-523). One kernel,
 ``lift_stats_multi``, melts every x column via ``stack`` so the scans do
-not multiply with the x columns, then joins three aggregates:
+not multiply with the x columns, then joins three aggregates from two scans
+of the input:
 
-    xy_count = groupBy(slice, x_feature, x, y).count()   # one shuffle
-    x_count  = groupBy(slice, x_feature, x).count()
-    y_rate   = groupBy(slice, y).count() / slice total   # tiny, broadcast
+    xy_count = groupBy(slice, x_feature, x, y).count()   # scan 1
+    x_count  = sum of xy_count over y
+    y_rate   = groupBy(slice, y).count() / its sum over the slice  # scan 2
     lift     = (xy_count / x_count) / y_rate
 
 ``lift_stats`` is its one-column call on the default slice. Top-k lifts
@@ -100,10 +101,10 @@ def lift_stats_multi(
     top_k_per_y: int | None = None,
     include_zero_counts: bool = False,
 ) -> DataFrame:
-    """Lift of EVERY categorical x against the label in ONE job — the
-    engine-wired shape of the reference's LiftStatsGenerator (stats_impl.py
-    386-396: ``options.label_feature`` → lift custom stats for all
-    categorical features).
+    """Lift of EVERY categorical x against the label from two scans of
+    ``df`` — the engine-wired shape of the reference's LiftStatsGenerator
+    (stats_impl.py 386-396: ``options.label_feature`` → lift custom stats
+    for all categorical features).
 
     ``y_boundaries``: numeric labels are binned like the reference's
     ``bin_util.bin_array`` — bin j iff boundaries[j-1] ≤ y < boundaries[j]
@@ -144,37 +145,38 @@ def lift_stats_multi(
     ).where(F.col("y").isNotNull() & (F.col("w") > 0))
 
     cnt = F.sum("w") if weight_col else F.count(F.lit(1))
-    totals = base.groupBy("slice_key").agg(F.sum("w").alias("t"))
     y_tot = (
         base.groupBy("slice_key", "y")
         .agg(F.sum("w").alias("yw"))
-        .join(totals, "slice_key")
-        .select("slice_key", "y", (F.col("yw") / F.col("t")).alias("y_rate"))
+        .select("slice_key", "y", (
+            F.col("yw") / F.sum("yw").over(Window.partitionBy("slice_key"))
+        ).alias("y_rate"))
     )
 
     stack = [F.lit(len(x_cols))]
     for c, a in zip(x_cols, xs):
         stack += [F.lit(c), F.col(a)]
+    # x_feature is never NULL; saying so gives both reads of the (x, y)
+    # counts the same plan, so the zero-fill grid's join reuses its scan
     melted = base.select(
         "slice_key", "y", "w", F.stack(*stack).alias("x_feature", "x")
-    ).where(F.col("x").isNotNull())
+    ).where(F.col("x").isNotNull() & F.col("x_feature").isNotNull())
 
     keys = ["slice_key", "x_feature", "x"]
     xy = melted.groupBy(*keys, "y").agg(cnt.alias("xy_count"))
-    x_tot = melted.groupBy(*keys).agg(cnt.alias("x_count"))
+    x_tot = xy.groupBy(*keys).agg(F.sum("xy_count").alias("x_count"))
     if include_zero_counts:
         # every x of a slice in every y series of that slice: the grid joins
-        # the x totals to the slice's y values (both small aggregates)
-        xy = (
-            x_tot.select(*keys)
-            .join(F.broadcast(y_tot.select("slice_key", "y")), "slice_key")
+        # the x totals to the slice's y rates (both small aggregates)
+        joined = (
+            x_tot.join(F.broadcast(y_tot), "slice_key")
             .join(xy, [*keys, "y"], "left")
             .na.fill({"xy_count": 0})
         )
+    else:
+        joined = xy.join(x_tot, keys).join(F.broadcast(y_tot), ["slice_key", "y"])
     out = (
-        xy.join(x_tot, keys)
-        .join(F.broadcast(y_tot), ["slice_key", "y"])
-        .where(F.col("x_count") >= min_x_count)
+        joined.where(F.col("x_count") >= min_x_count)
         .select(
             *keys,
             "y",

@@ -78,15 +78,15 @@ class StatsOptions:
 
     @property
     def example_weight_map(self):
-        """ExampleWeightMap when per-feature overrides are configured, else
-        None (the plain weight_column path covers the no-override case)."""
-        if not self.per_feature_weight_override:
-            return None
+        """The ExampleWeightMap of weight_column and its per-feature
+        overrides, or None without a weight column."""
         if not self.weight_column:
-            raise ValueError(
-                "per_feature_weight_override requires weight_column (the "
-                "global weight feature) to be set."
-            )
+            if self.per_feature_weight_override:
+                raise ValueError(
+                    "per_feature_weight_override requires weight_column (the "
+                    "global weight feature) to be set."
+                )
+            return None
         from data_validation_spark.weights import ExampleWeightMap
 
         return ExampleWeightMap(self.weight_column, self.per_feature_weight_override)

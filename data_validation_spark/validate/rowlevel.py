@@ -80,14 +80,6 @@ def check_uniqueness(df: DataFrame, key_cols: list[str] | str) -> DataFrame:
     )
 
 
-def deduplicate_exact(df: DataFrame, key_cols: list[str] | str) -> DataFrame:
-    """Keep one row per key (first by total ordering of remaining columns is
-    nondeterministic in a distributed setting, so use the cheapest exact form)."""
-    if isinstance(key_cols, str):
-        key_cols = [key_cols]
-    return df.dropDuplicates(key_cols)
-
-
 # ------------------------------------------------------------ referential ---
 def check_referential(
     child: DataFrame,

@@ -65,9 +65,11 @@ def test_single_signed_infinity_scalar(spark):
 
 def test_only_nan_golden(spark):
     """basic_stats_generator_test.py:2412-2463 (test_only_nan): a single
-    [[nan]] row still emits num_stats carrying the NaN count."""
-    df = spark.createDataFrame([([NAN],)], "a array<double>")
-    fs = compute_statistics(df, StatsOptions()).default_slice().feature("a")
+    [[nan]] row still emits num_stats carrying the NaN count. The same value
+    as a scalar gives the same numeric stats: no finite extrema."""
+    df = spark.createDataFrame([([NAN], NAN)], "a array<double>, s double")
+    ds = compute_statistics(df, StatsOptions()).default_slice()
+    fs = ds.feature("a")
     c = fs.common
     assert c.num_non_missing == 1 and c.num_missing == 0
     assert c.min_num_values == 1 and c.max_num_values == 1
@@ -76,6 +78,26 @@ def test_only_nan_golden(spark):
     assert fs.numeric.num_nan == 1
     assert fs.numeric.mean == 0.0  # proto default: no non-NaN values seen
     assert fs.numeric.num_pos_inf == 0 and fs.numeric.num_neg_inf == 0
+    scalar = ds.feature("s").numeric
+    assert scalar.finite_min is None and scalar.finite_max is None
+    assert scalar == fs.numeric
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_nested_int_null_elements_are_not_nan(spark, weighted):
+    """A NULL element of a nested int feature is no value: it is not
+    counted as NaN (ints hold none) and the stats cover 1, 3 and 4."""
+    rows = [([1, None, 3], 1.0), ([4], 1.0), (None, 1.0)]
+    df = spark.createDataFrame(rows, "a array<bigint>, w double")
+    opts = StatsOptions(weight_column="w" if weighted else None)
+    n = compute_statistics(df, opts).default_slice().feature("a").numeric
+    assert n.num_nan == 0
+    assert n.mean == pytest.approx(8 / 3)
+    assert n.median == 3.0
+    assert n.finite_min == 1.0 and n.finite_max == 4.0
+    if weighted:
+        assert n.weighted_mean == pytest.approx(8 / 3)
+        assert n.weighted_median == pytest.approx(3.0)
 
 
 def test_pure_null_column_golden(spark):

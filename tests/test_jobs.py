@@ -147,8 +147,9 @@ def test_stats_pass_runs_as_wide_and_long_jobs_only(spark):
 def test_label_feature_stats_jobs_tagged_by_layer(spark):
     """With a label feature the stats pass adds the lift layer: every job
     carries the wide, long or lift tag, and the lift kernel (two x features
-    melted into one scan) submits its 8 jobs — three aggregate exchanges
-    over the scan and the joins' broadcast and shuffle stages under AQE."""
+    melted into one stack) submits its 7 jobs — the shuffle and broadcast
+    stages over its two scans (the (x, y) counts and the y totals) under
+    AQE."""
     from data_validation_spark.stats.engine import compute_statistics
     from data_validation_spark.stats.options import StatsOptions
 
@@ -171,7 +172,7 @@ def test_label_feature_stats_jobs_tagged_by_layer(spark):
             for job_id in sc.statusTracker().getJobIdsForGroup(group)]
     for tags in jobs:
         assert tags & layers, tags
-    assert sum("dvs:stats.lift" in tags for tags in jobs) == 8
+    assert sum("dvs:stats.lift" in tags for tags in jobs) == 7
     assert stats.default_slice().feature("z").custom["lift"]
 
 

@@ -260,6 +260,7 @@ def test_weighted_quantile_pass_scan_pruned(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from data_validation_spark.stats import exprs as E
+    from data_validation_spark.weights import ExampleWeightMap
 
     df = spark.range(1000).select(
         F.col("id").cast("double").alias("x"),
@@ -274,7 +275,8 @@ def test_weighted_quantile_pass_scan_pruned(spark, tmp_path):
     plans = E.classify_columns(src.select("x", "s", "b").schema, set())
     num_plans = [pl for pl in plans if pl.numeric]
     long_df = E.long_format(
-        src, num_plans, F.lit("All Examples"), "w", include_scalar_numeric=True
+        src, num_plans, F.lit("All Examples"), ExampleWeightMap("w"),
+        include_scalar_numeric=True,
     )
     plan = plan_of(long_df)
     import re

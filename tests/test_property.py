@@ -3,15 +3,19 @@ the fuzz layer of the reference's test strategy (SURVEY.md §5), aimed at
 the math that golden tests only sample: histogram mass conservation,
 weighted quantile bounds, codec roundtrips, drift metric bounds.
 
-Everything but the lift kernel is driver-side numpy/python and needs no
-SparkSession, so the suite stays fast and deterministic (hypothesis
-derandomized per-profile via explicit seeds/settings); the lift property
-runs few, small examples on the shared session.
+Everything but the lift kernel and the scalar/nested numeric-stats
+agreement is driver-side numpy/python and needs no SparkSession, so the
+suite stays fast and deterministic (hypothesis derandomized per-profile via
+explicit seeds/settings); the two Spark properties run few, small examples
+on the shared session.
 """
+
+import dataclasses
+import json
 
 import numpy as np
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 SET = settings(
@@ -427,3 +431,45 @@ def test_lift_kernel_matches_reference(spark, partitions, rows):
     assert got.keys() == want.keys()
     for key, values in want.items():
         assert got[key] == pytest.approx(values, rel=1e-9)
+
+
+# ------------------------------------------------------- numeric stats ---
+def _numeric_json(num):
+    """Every field of a NumericStats, NaN included, as comparable text."""
+    return json.dumps(dataclasses.asdict(num), sort_keys=True)
+
+
+NAN = float("nan")
+
+
+@pytest.mark.parametrize("partitions", [1, 3])
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    st.lists(
+        st.tuples(
+            st.sampled_from([1.5, NAN, float("inf"), float("-inf"), None,
+                             0.0, -2.0, 3.0, 7.25]),
+            st.sampled_from([0.0, 0.5, 1.0, 2.0]),
+        ),
+        min_size=1,
+        max_size=20,
+    )
+)
+@example(rows=[(NAN, 1.0), (NAN, 2.0)])
+def test_scalar_and_one_element_array_numeric_stats_agree(spark, partitions, rows):
+    """A double column ``x`` and its one-element form ``array(x)`` (NULL
+    where ``x`` is NULL) hold the same values, so once ``x`` has a present
+    value their NumericStats agree in every field, weighted or not."""
+    from data_validation_spark.stats.engine import compute_statistics
+    from data_validation_spark.stats.options import StatsOptions
+
+    if all(x is None for x, _ in rows):
+        return
+    df = spark.createDataFrame(
+        [(x, None if x is None else [x], w) for x, w in rows],
+        "x double, a array<double>, w double",
+    ).repartition(partitions)
+    for weight in (None, "w"):
+        ds = compute_statistics(df, StatsOptions(weight_column=weight)).default_slice()
+        scalar, nested = ds.feature("x").numeric, ds.feature("a").numeric
+        assert _numeric_json(scalar) == _numeric_json(nested)

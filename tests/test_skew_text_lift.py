@@ -1031,6 +1031,27 @@ def test_lift_stats_submits_no_job_before_its_action(spark):
     assert len(out.collect()) == 4
 
 
+@pytest.mark.parametrize("include_zero_counts", [False, True])
+def test_lift_kernel_scans_its_input_twice(spark, tmp_path, include_zero_counts):
+    """The kernel reads its input twice, whatever the number of x columns:
+    once for the (x, y) counts, whose aggregate also gives the x totals, and
+    once for the y totals, whose window gives the slice totals. The
+    zero-fill grid reuses the (x, y) counts' scan."""
+    from data_validation_spark.stats.lift import lift_stats_multi
+
+    path = str(tmp_path / "lift.parquet")
+    spark.createDataFrame(
+        [("a", "p", "1"), ("a", "q", "0"), ("b", "p", "1"), (None, "q", "1")],
+        "x1 string, x2 string, y string",
+    ).write.parquet(path)
+    out = lift_stats_multi(spark.read.parquet(path), ["x1", "x2"], "y",
+                           include_zero_counts=include_zero_counts)
+    assert out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final and final.count("FileScan") == 2, final
+
+
 def test_label_feature_lift_for_features_named_like_kernel_columns(spark):
     """Categorical features named y, w or slice_key, or with a quote in the
     name, get their lift series like any other feature."""
