@@ -990,7 +990,9 @@ _PLANT_VEC_OFFSET = 1_000_000
 
 
 def _word_count_col():
-    return F.size(F.filter(F.split(F.trim(F.col("text")), r"\s+"), lambda w: F.length(w) > 0))
+    from data_validation_spark.util import words
+
+    return F.size(words(F.col("text")))
 
 
 def _docs_augmented(spark, sf_dir):

@@ -233,7 +233,7 @@ def warm_session(spark) -> None:
         # no input table is read, nothing reusable is computed): compiles the
         # LSH/fingerprint pipelines' generated code (band/block posexplode,
         # collect_list ObjectHashAggregate, the bucket-pair explode,
-        # dropDuplicates, persist, broadcast semi-join), which measured
+        # dropDuplicates, the verify's regroups and text join), which measured
         # ~3.5 s of one-time first-call cost that otherwise lands on the
         # first dedup query of a fresh JVM.
         from data_validation_spark.dedup.minhash import (
@@ -255,10 +255,7 @@ def warm_session(spark) -> None:
             ).alias("text"),
         )
         cand = minhash_lsh_candidates(fake, "doc_id", "text", num_hashes=64, bands=16)
-        try:
-            verify_jaccard(cand, fake, "doc_id", "text", threshold=0.5).count()
-        finally:
-            cand.unpersist()  # verify_jaccard persists its candidates in place
+        verify_jaccard(cand, fake, "doc_id", "text", threshold=0.5).count()
         simhash_near_dups(fake, "doc_id", "text", radius=3).count()
     except Exception:
         # warm-up is best-effort; never fail the caller's setup over it

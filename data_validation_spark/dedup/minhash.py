@@ -2,11 +2,12 @@
 band → bucket pairs → candidate pairs (→ optional exact-Jaccard verify).
 
 Signature computation is one Arrow pass with the entire hot loop batch-
-vectorized in C (pandas C string split, ``pd.util.hash_array`` SipHash word
-hashing, k-step numpy k-gram mix, ``np.minimum.reduceat`` permutation
-minima) — no per-row or per-shingle Python, and measured ~2× faster than an
-all-JVM ``aggregate``/``zip_with`` formulation (Catalyst higher-order-
-function lambdas are interpreted, not codegen'd). Banding turns the O(n²)
+vectorized in C (Arrow's split on the ``util.words`` characters the verify
+shingles with, ``pd.util.hash_array`` SipHash word hashing, k-step numpy
+k-gram mix, ``np.minimum.reduceat`` permutation minima) — no per-row or
+per-shingle Python, and measured ~2× faster than an all-JVM
+``aggregate``/``zip_with`` formulation (Catalyst higher-order-function
+lambdas are interpreted, not codegen'd). Banding turns the O(n²)
 pair search into one groupBy shuffle on (band, band-hash) buckets; the
 pairs inside each bucket come from the shared JVM generator
 ``buckets.bucket_pairs``, which drops buckets above ``max_bucket_size``.
@@ -19,7 +20,6 @@ required by the build spec).
 
 from __future__ import annotations
 
-from itertools import chain
 from typing import Iterator
 
 import numpy as np
@@ -27,6 +27,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from data_validation_spark.dedup.buckets import bucket_pairs
+from data_validation_spark.util import ensure_min_partitions, words
 
 _MERSENNE = (1 << 61) - 1
 
@@ -41,46 +42,62 @@ def _perm_params(num_hashes: int, seed: int = 42):
 def shingle_array(text_col: Column, k: int) -> Column:
     """Array of k-word shingle strings of ``text_col`` (JVM expressions only).
 
-    Texts shorter than ``k`` words yield a single shingle of all words;
-    empty/whitespace-only texts yield an empty array.
+    Words follow ``util.words``. Texts shorter than ``k`` words yield a
+    single shingle of all words; empty/whitespace-only texts yield an empty
+    array.
     """
-    words = F.filter(
-        F.split(F.trim(text_col), r"\s+"), lambda w: F.length(w) > 0
-    )
-    n = F.size(words)
+    w = words(text_col)
+    n = F.size(w)
     return (
         F.when(
             n >= k,
             F.transform(
                 F.sequence(F.lit(0), n - k),
-                lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)),
+                lambda i: F.concat_ws(" ", F.slice(w, i + 1, k)),
             ),
         )
-        .when(n > 0, F.array(F.concat_ws(" ", words)))
+        .when(n > 0, F.array(F.concat_ws(" ", w)))
         .otherwise(F.array().cast("array<string>"))
     )
 
 
-def _batch_shingle_hashes(texts, k: int):
+def word_hashes(texts) -> tuple[np.ndarray, np.ndarray]:
+    """(hashes uint64[], lens int64[n]) of an Arrow batch's text column:
+    every row's word hashes back to back, and each row's word count (0 for
+    NULL). Words follow ``util.words``: Arrow's ``ascii_split_whitespace``
+    splits on exactly Java's ``\\s`` characters, and the empty words it
+    leaves at a text's ends are dropped; no Python object is made per word.
+    Word hashing is ``pd.util.hash_array`` (SipHash, C) over the batch's
+    distinct words."""
+    import pyarrow.compute as pc
+
+    parts = pc.ascii_split_whitespace(texts)
+    flat = parts.flatten()
+    keep = pc.not_equal(flat, "")
+    row = np.repeat(np.arange(len(texts)), parts.value_lengths().fill_null(0))
+    lens = np.bincount(row[keep.to_numpy(zero_copy_only=False)], minlength=len(texts))
+    enc = flat.filter(keep).dictionary_encode()
+    if not len(enc):
+        return np.empty(0, dtype=np.uint64), lens
+    uniq = pd.util.hash_array(enc.dictionary.to_numpy(zero_copy_only=False))
+    return uniq[enc.indices.to_numpy()], lens
+
+
+def _batch_shingle_hashes(H: np.ndarray, lens: np.ndarray, k: int):
     """Vectorized shingle hashing for a whole Arrow batch.
 
-    Returns (shingle_hashes uint64[], row_offsets int64[n+1]) where segment
-    [offsets[i], offsets[i+1]) holds row i's shingle hashes. No per-shingle
-    Python: tokenization is pandas' C string split, word hashing is
-    ``pd.util.hash_array`` (SipHash, C), and the k-gram combination is a
-    k-step numpy mix over the flat word-hash array.
+    Takes ``word_hashes``' output. Returns (shingle_hashes uint64[],
+    row_offsets int64[n+1]) where segment [offsets[i], offsets[i+1]) holds
+    row i's shingle hashes. No per-shingle Python: the k-gram combination
+    is a k-step numpy mix over the flat word-hash array.
 
     Rows shorter than k words get one fallback shingle (the mix of all their
     word hashes — the '\" \".join(words)' single-shingle semantics); empty
-    rows get zero shingles.
+    rows get zero shingles, as in ``shingle_array``.
     """
-    word_lists = texts.fillna("").str.split()
-    lens = word_lists.str.len().fillna(0).to_numpy(dtype=np.int64)
     n = len(lens)
-    flat_words = list(chain.from_iterable(word_lists))
-    if not flat_words:
+    if not H.size:
         return np.empty(0, dtype=np.uint64), np.zeros(n + 1, dtype=np.int64)
-    H = pd.util.hash_array(np.asarray(flat_words, dtype=object))  # uint64
     word_off = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lens, out=word_off[1:])
 
@@ -133,21 +150,25 @@ def minhash_signatures(
 ) -> DataFrame:
     """(id, signature array<long>) — one Arrow pass, batch-vectorized numpy.
 
-    Per batch: shingle hashes for every row at once (C string split + SipHash
-    + k-step mix, see ``_batch_shingle_hashes``), then all ``num_hashes``
-    permutations as one (num_hashes × S) multiply-add over the flat shingle
-    array with per-row minima via ``np.minimum.reduceat`` — no per-row or
-    per-shingle Python. (Catalyst higher-order-function lambdas are
-    interpreted, so an all-JVM expression formulation measured ~2× slower
-    than this; the Arrow batch path keeps the whole hot loop in C.)
+    Per Arrow batch: the words of ``util.words``' rule, the one
+    ``shingle_array`` uses (``word_hashes``), then shingle hashes for every
+    row at once (SipHash + k-step mix, see ``_batch_shingle_hashes``), then
+    all ``num_hashes`` permutations as one (num_hashes × S) multiply-add
+    over the flat shingle array with per-row minima via
+    ``np.minimum.reduceat`` — no per-row or per-shingle Python. (Catalyst
+    higher-order-function lambdas are interpreted, so an all-JVM expression
+    formulation measured ~2× slower than this; the Arrow batch path keeps
+    the whole hot loop in C.)
     Empty texts get the sentinel signature [0] * num_hashes.
     """
+    import pyarrow as pa
+
     a, b = _perm_params(num_hashes)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sh, off = _batch_shingle_hashes(pdf[text_col], shingle_k)
-            n = len(pdf)
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            sh, off = _batch_shingle_hashes(*word_hashes(batch.column(1)), shingle_k)
+            n = batch.num_rows
             sigs = np.zeros((n, num_hashes), dtype=np.int64)
             nonempty = (off[1:] - off[:-1]) > 0
             if sh.size:
@@ -155,12 +176,14 @@ def minhash_signatures(
                 starts = off[:-1][nonempty]
                 mins = np.minimum.reduceat(vals, starts, axis=1)  # (H, rows)
                 sigs[nonempty] = mins.T.astype(np.int64)
-            yield pd.DataFrame({"id": pdf[id_col], "signature": list(sigs)})
+            sig_off = np.arange(0, (n + 1) * num_hashes, num_hashes, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), pa.ListArray.from_arrays(sig_off, sigs.ravel())],
+                names=["id", "signature"],
+            )
 
-    from data_validation_spark.util import ensure_min_partitions
-
-    src = ensure_min_partitions(df.select(F.col(id_col).alias(id_col), text_col))
-    return src.mapInPandas(
+    src = ensure_min_partitions(df.select(id_col, text_col))
+    return src.mapInArrow(
         run,
         f"id {df.schema[id_col].dataType.simpleString()}, signature array<long>",
     )
@@ -196,44 +219,41 @@ def verify_jaccard(
 ) -> DataFrame:
     """Exact k-word-shingle Jaccard on candidate pairs — fully JVM-side.
 
-    Joins the (pruned, pre-shingled) texts back to the candidate pairs and
-    computes |A∩B| / |A∪B| with ``array_intersect``/``array_union`` over the
-    distinct shingle-string sets, so the verify stage has no Python and no
-    hash-collision error. Returns pairs with jaccard ≥ threshold.
-
-    The text side is pruned to ids that actually appear in a candidate pair
-    (broadcast semi-join on the distinct candidate ids) *before* the shingle
-    projection: shingling is the expensive part (interpreted higher-order
-    functions), and without the prune it runs over every row of ``df`` twice
-    — at corpus scale that is two full re-shingling passes to verify a tiny
-    candidate set. Candidate ids are bounded by the LSH bucket caps
-    (``max_bucket_size``), so the broadcast fits. ``candidates`` is persisted
-    (it is referenced by the id-prune build and both pair joins; without the
-    persist the whole LSH pipeline would re-run per reference).
+    Reads ``candidates`` once, so their lineage (the whole LSH pipeline)
+    runs once and nothing is cached: each pair explodes into its two
+    (pair, id) rows, which group by id; the inner join of those groups with
+    ``df`` on id prunes the texts to candidate ids, and each distinct id is
+    shingled once (a crossJoin candidate set puts every id in about n
+    pairs). The pairs then explode back out and regroup by pair to meet
+    both shingle sets, and |A∩B| / |A∪B| comes from ``array_intersect`` /
+    ``array_union`` over the distinct shingle strings: no Python and no
+    hash-collision error. Returns pairs with jaccard ≥ threshold; a pair
+    with an id that has no row in ``df`` gives none. Ids of ``df`` are
+    taken to be unique.
     """
-    from pyspark import StorageLevel
-
-    candidates = candidates.persist(StorageLevel.MEMORY_AND_DISK)
-    ids = candidates.select(
-        F.explode(F.array("id_a", "id_b")).alias("jid")
-    ).dropDuplicates(["jid"])
-    pruned = df.join(
-        F.broadcast(ids), df[id_col] == ids["jid"], "left_semi"
+    by_id = (
+        candidates.select(
+            F.struct("id_a", "id_b").alias("pair"),
+            F.explode(F.array("id_a", "id_b")).alias("jid"),
+        )
+        .groupBy("jid")
+        .agg(F.collect_list("pair").alias("pairs"))
     )
-    texts = pruned.select(
-        F.col(id_col).alias("jid"),
-        F.array_distinct(shingle_array(F.col(text_col), shingle_k)).alias("sh"),
+    texts = df.select(F.col(id_col).alias("jid"), F.col(text_col).alias("text"))
+    shingled = by_id.join(texts, "jid").select(
+        "pairs", F.array_distinct(shingle_array(F.col("text"), shingle_k)).alias("sh")
     )
-    joined = (
-        candidates.join(texts, candidates["id_a"] == texts["jid"])
-        .select("id_a", "id_b", F.col("sh").alias("sh_a"))
-        .join(texts, F.col("id_b") == texts["jid"])
-        .select("id_a", "id_b", "sh_a", F.col("sh").alias("sh_b"))
+    both = (
+        shingled.select(F.explode("pairs").alias("pair"), "sh")
+        .groupBy("pair")
+        .agg(F.collect_list("sh").alias("shs"))
+        .where(F.size("shs") == 2)
     )
-    union_n = F.size(F.array_union("sh_a", "sh_b"))
+    sh_a, sh_b = F.col("shs")[0], F.col("shs")[1]
+    union_n = F.size(F.array_union(sh_a, sh_b))
     jac = F.when(
         union_n > 0,
-        F.size(F.array_intersect("sh_a", "sh_b")) / union_n.cast("double"),
+        F.size(F.array_intersect(sh_a, sh_b)) / union_n.cast("double"),
     ).otherwise(F.lit(0.0))
-    verified = joined.select("id_a", "id_b", jac.alias("jaccard"))
+    verified = both.select("pair.id_a", "pair.id_b", jac.alias("jaccard"))
     return verified.where(F.col("jaccard") >= threshold)

@@ -11,7 +11,7 @@ validate_examples flow as one Spark job graph.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Optional
 
 from pyspark.sql import DataFrame, functions as F
@@ -125,7 +125,7 @@ def validate_images(
     schema = schema or default_image_schema()
     options = options or StatsOptions(categorical_features={"fmt"})
     if "bytes" in df.columns:
-        options.image_columns = set(options.image_columns) | {"bytes"}
+        options = replace(options, image_columns=set(options.image_columns) | {"bytes"})
 
     from functools import reduce
 
@@ -135,7 +135,8 @@ def validate_images(
         s = compute_statistics(df, options)
         # Schema-driven NL stats (caption columns): computed only when the
         # schema declares NL-domain constraints, so the NL rule never hits
-        # STATS_NOT_AVAILABLE for a column we could have profiled.
+        # STATS_NOT_AVAILABLE for a column we could have profiled. The
+        # domain's vocabulary resolves through options.vocab_paths.
         from data_validation_spark.stats.text import attach_nl_token_stats
 
         for spec in schema.feature:
@@ -148,10 +149,7 @@ def validate_images(
                 or bool(d.token_constraints)
             )
             if has_constraints:
-                tokens = [tc.value for tc in d.token_constraints if tc.value]
-                attach_nl_token_stats(
-                    s, df, spec.name, constrained_tokens=tokens or None
-                )
+                attach_nl_token_stats(s, df, spec.name, nl_domain=d, options=options)
         p = prev_stats
         if p is None and prev_df is not None:
             p = compute_statistics(prev_df, options)

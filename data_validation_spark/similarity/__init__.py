@@ -54,45 +54,25 @@ def train_centroids(
     Sampling is a real Bernoulli ``df.sample`` — ``limit(n)`` would take the
     first partitions only, a biased sample on sorted/partitioned data.
 
-    Sizing the Bernoulli fraction needs the row count, but a bare
-    ``df.count()`` is a full extra scan wave before training (at corpus
-    scale that doubles the sampling cost). So: with ``row_count_hint``
-    (e.g. from catalog/table statistics) the fraction is computed without
-    any counting; without a hint, a cheap ``limit(sample+1)`` probe (early
-    terminating — reads only enough partitions) detects the ≤``sample``
-    case and uses those rows directly — one action total, bit-identical
-    centroids to the counted path (both see all rows in frame order). Only
-    an unhinted input larger than ``sample`` falls back to count+sample.
+    Sizing the Bernoulli fraction needs the row count. ``row_count_hint``
+    (e.g. from catalog/table statistics) gives it without an action;
+    without a hint it is ``df.count()``, which reads no vector. An input of
+    at most ``sample`` rows samples at fraction 1.0 and so trains on every
+    row in frame order.
     """
-    if row_count_hint is None:
-        probe = df.select(vec_col).limit(sample + 1).toPandas()[vec_col].tolist()
-        if len(probe) == 0:
-            raise ValueError("cannot train centroids on an empty DataFrame")
-        if len(probe) <= sample:
-            rows = probe
-        else:
-            n_total = df.count()
-            frac = min(1.0, (sample * 1.2) / n_total)
-            rows = (
-                df.select(vec_col)
-                .sample(withReplacement=False, fraction=frac, seed=seed)
-                .limit(sample)
-                .toPandas()[vec_col]
-                .tolist()
-            )
-    else:
-        if row_count_hint == 0:
-            raise ValueError("cannot train centroids on an empty DataFrame")
-        frac = min(1.0, (sample * 1.2) / row_count_hint)
-        rows = (
-            df.select(vec_col)
-            .sample(withReplacement=False, fraction=frac, seed=seed)
-            .limit(sample)
-            .toPandas()[vec_col]
-            .tolist()
-        )
+    n = df.count() if row_count_hint is None else row_count_hint
+    if n == 0:
+        raise ValueError("cannot train centroids on an empty DataFrame")
+    vecs = df.select(vec_col)
+    frac = min(1.0, (sample * 1.2) / n)
+    rows = (
+        vecs.sample(withReplacement=False, fraction=frac, seed=seed)
+        .limit(sample)
+        .toPandas()[vec_col]
+        .tolist()
+    )
     if not rows:  # tiny inputs where the Bernoulli draw came up empty
-        rows = df.select(vec_col).limit(sample).toPandas()[vec_col].tolist()
+        rows = vecs.limit(sample).toPandas()[vec_col].tolist()
     x = np.array(rows, dtype=np.float32)
     x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-9)
     rng = np.random.RandomState(seed)

@@ -735,7 +735,10 @@ def _assemble_feature(
 
     if p.numeric:
         num_nan = int(_g(rd, p, "nan", 0))
-        if _g(rd, p, "fincnt") is None and not num_nan:
+        # a scalar int's finite values are its present ones
+        scalar_int = p.nest_depth == 0 and not p.is_float
+        finite_count = _g(rd, p, "fincnt", nonmissing if scalar_int else None)
+        if finite_count is None and not num_nan:
             # a nested feature with no non-NaN value has no aggregate row
             return fs
         num = NumericStats(
@@ -751,7 +754,7 @@ def _assemble_feature(
             finite_max=_g(rd, p, "finmax"),
         )
         quants = _g(rd, p, "quants")
-        finite_count = int(_g(rd, p, "fincnt", 0))
+        finite_count = int(finite_count or 0)
         winf = (_g(rd, p, "w_posinf", 0.0), _g(rd, p, "w_neginf", 0.0))
         w_cnt = _g(rd, p, "w_cnt", 0.0)
         if any(winf):

@@ -140,8 +140,8 @@ def numeric_aggs(x, quantiles: list, accuracy: int, weight=None,
       which assembly rebuilds the ±inf semantics of the weighted moments.
 
     A column that holds no ±inf (``is_float`` False) gets no ±inf
-    aggregates; its finite extrema are its ``min`` and ``max``, which Spark
-    plans once."""
+    aggregates and no ``fincnt``, which would equal its present count; its
+    finite extrema are its ``min`` and ``max``, which Spark plans once."""
     inf = (float("inf"), float("-inf"))
     xf = F.when(~x.isin(*inf), x) if is_float else x
     aggs = {
@@ -152,10 +152,10 @@ def numeric_aggs(x, quantiles: list, accuracy: int, weight=None,
         "zeros": F.sum(F.when(x == 0.0, 1).otherwise(0)),
         "finmin": F.min(xf),
         "finmax": F.max(xf),
-        "fincnt": F.count(xf),
         "quants": F.percentile_approx(xf, quantiles, accuracy),
     }
     if is_float:
+        aggs["fincnt"] = F.count(xf)
         aggs["posinf"] = F.sum(F.when(x == inf[0], 1).otherwise(0))
         aggs["neginf"] = F.sum(F.when(x == inf[1], 1).otherwise(0))
     if weight is not None:

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from data_validation_spark.jobs import run_parallel
 from data_validation_spark.stats.result import DatasetStatsList
-from data_validation_spark.util import persisted
+from data_validation_spark.util import persisted, words
 
 # Reference thresholds: NL domain inferred when ≥80% of ≥100 values match the
 # heuristic (natural_language_domain_inferring_stats_generator.py).
@@ -153,10 +153,7 @@ def vocab_token_stats(
     of tokens found in the vocab), OOV count, avg token length — the
     reference's nl_stats vocab path as explode + broadcast join + aggregate.
     """
-    tokens = (
-        df.select(F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"))
-        .where(F.length("tok") > 0)
-    )
+    tokens = df.select(F.explode(words(F.col(text_col))).alias("tok"))
     v = F.broadcast(vocab.select(F.col(vocab_col).alias("tok")).dropDuplicates(["tok"])
                     .withColumn("__in_vocab", F.lit(1)))
     joined = tokens.join(v, "tok", "left")
@@ -203,9 +200,7 @@ def compute_nl_statistics(
     """
     oov_tokens = oov_tokens or set()
     excluded = sequence_length_excluded_tokens or set()
-    toks = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda w: F.length(w) > 0
-    )
+    toks = words(F.col(text_col))
     # Cache `seqs` (not just `tokens`): __sid comes from
     # monotonically_increasing_id, and _bottom5 re-scans `seqs` in a separate
     # job to match ids collected from per_seq. Without the cache a
@@ -376,10 +371,10 @@ def compute_nl_statistics(
 def attach_nl_token_stats(
     stats: DatasetStatsList, df: DataFrame, text_col: str, **kwargs
 ) -> dict:
-    """Compute ``compute_nl_statistics`` and stamp the result as the
-    ``nl_statistics`` custom stat (the reference's custom-stat channel that
-    ``UpdateNaturalLanguageDomain`` reads)."""
-    nl = compute_nl_statistics(df, text_col, **kwargs)
+    """Compute ``compute_nl_statistics_for_feature`` and stamp the result as
+    the ``nl_statistics`` custom stat (the reference's custom-stat channel
+    that ``UpdateNaturalLanguageDomain`` reads)."""
+    nl = compute_nl_statistics_for_feature(df.sparkSession, df, text_col, **kwargs)
     for sl in stats.slices:
         fs = sl.features.get(text_col)
         if fs is not None:
@@ -431,7 +426,7 @@ def compute_nl_statistics_for_feature(
     spark,
     df: DataFrame,
     text_col: str,
-    nl_domain,
+    nl_domain=None,
     options=None,
     **kwargs,
 ):
@@ -442,8 +437,9 @@ def compute_nl_statistics_for_feature(
     ``io/vocab.load_vocab`` (text or GZIP TFRecord) and joins broadcast.
 
     Token constraints declared on the domain become ``constrained_tokens``.
+    Without a domain this is plain :func:`compute_nl_statistics`.
     """
-    vocab_df = None
+    vocab_df = kwargs.pop("vocab", None)
     vocab_paths = getattr(options, "vocab_paths", None) if options else None
     name = getattr(nl_domain, "vocabulary", None) if nl_domain else None
     if name:

@@ -5,8 +5,23 @@ from __future__ import annotations
 from contextlib import contextmanager
 from typing import Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StructType
+
+
+def words(text: Column) -> Column:
+    """The words of ``text`` as ``array<string>``: split on Java ``\\s+``,
+    empty words dropped, so leading and trailing whitespace yield none.
+    NULL stays NULL. Java's ``\\s`` is the six ASCII whitespace characters
+    (space, tab, newline, vertical tab, form feed, carriage return); NBSP
+    and the ``\\x1c``-``\\x1f`` separators are word characters.
+
+    The one word rule of the text operators: the dedup verify and the NL
+    token statistics split with this expression, and the dedup signature
+    and fingerprint passes split their Arrow batches on the same six
+    characters (``dedup.minhash.word_hashes``), so all of them agree on
+    every text."""
+    return F.array_remove(F.split(text, r"\s+"), "")
 
 
 def ensure_min_partitions(df: DataFrame, minimum: int | None = None) -> DataFrame:

@@ -8,16 +8,20 @@ from pyspark.sql import functions as F
 
 from data_validation_spark.dedup.exact import drop_exact_duplicates, duplicate_groups
 from data_validation_spark.dedup.minhash import (
+    _batch_shingle_hashes,
     minhash_lsh_candidates,
     minhash_signatures,
+    shingle_array,
     verify_jaccard,
+    word_hashes,
 )
-from data_validation_spark.dedup.simhash import simhash64, simhash_near_dups
+from data_validation_spark.dedup.simhash import simhash_fingerprints, simhash_near_dups
 from data_validation_spark.dedup.embedding import cosine_pairs_bruteforce, cosine_pairs_lsh
 from data_validation_spark.similarity import (
     cosine_topk_bruteforce,
     cosine_topk_ivf,
 )
+from data_validation_spark.util import words
 
 
 @pytest.fixture(scope="module")
@@ -69,11 +73,20 @@ def test_minhash_verify_jaccard(docs, spark):
     assert {(r["id_a"], r["id_b"]) for r in verified} == {(0, 1)}
 
 
-def test_simhash(docs):
-    assert simhash64("") == 0
-    a = simhash64("the quick brown fox jumps over the lazy dog")
-    b = simhash64("the quick brown fox jumps over the sleepy dog")
-    c = simhash64("columnar vectorized execution engine internals")
+def test_simhash(docs, spark):
+    texts = spark.createDataFrame(
+        [
+            (0, ""),
+            (1, "the quick brown fox jumps over the lazy dog"),
+            (2, "the quick brown fox jumps over the sleepy dog"),
+            (3, "columnar vectorized execution engine internals"),
+        ],
+        "doc_id long, text string",
+    )
+    fp = {r["id"]: r["fingerprint"] for r in
+          simhash_fingerprints(texts, "doc_id", "text").collect()}
+    assert fp[0] == 0
+    a, b, c = fp[1], fp[2], fp[3]
     mask = (1 << 64) - 1
     ham_ab = bin((a ^ b) & mask).count("1")
     ham_ac = bin((a ^ c) & mask).count("1")
@@ -81,6 +94,65 @@ def test_simhash(docs):
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in
              simhash_near_dups(docs, "doc_id", "text", radius=3).collect()}
     assert (0, 1) in pairs and pairs[(0, 1)] == 0
+
+
+def test_minhash_verify_leaves_no_cache_and_signs_once(docs, spark):
+    # verify_jaccard reads its candidates once: the LSH pipeline under them
+    # runs once (one signature pass in the executed plan) and nothing is
+    # left persisted in the session.
+    jsc = spark.sparkContext._jsc
+    before = sorted(jsc.getPersistentRDDs().keys())
+    verified = verify_jaccard(
+        minhash_lsh_candidates(docs, "doc_id", "text"), docs, "doc_id", "text",
+        threshold=0.99,
+    )
+    assert {(r["id_a"], r["id_b"]) for r in verified.collect()} == {(0, 1)}
+    assert sorted(jsc.getPersistentRDDs().keys()) == before
+    final_plan = verified._jdf.queryExecution().executedPlan().toString()
+    final_plan = final_plan.split("== Initial Plan ==")[0]
+    assert final_plan.count("MapIn") == 1, final_plan
+
+
+def test_minhash_verify_missing_id_gives_no_pair(docs, spark):
+    cand = spark.createDataFrame([(0, 1), (0, 99), (98, 99)], "id_a long, id_b long")
+    verified = verify_jaccard(cand, docs, "doc_id", "text", threshold=0.0).collect()
+    assert {(r["id_a"], r["id_b"]) for r in verified} == {(0, 1)}
+
+
+_WORD_RULE_TEXTS = [
+    "a b c d",
+    "a\xa0b c d",  # NBSP is a word character
+    "a\x1fb c d e",  # so is the unit separator
+    "a\u2028b\x85c d\x0be\x0cf\rg",
+    "\ta\tb\tc\t",
+    "  leading and trailing  ",
+    "one",
+    "",
+    None,
+]
+
+
+def test_signature_words_follow_shingle_array(spark):
+    # The signature pass shingles the words shingle_array (the verify's
+    # shingler) sees, text by text, and so does the fingerprint pass.
+    df = spark.createDataFrame(list(enumerate(_WORD_RULE_TEXTS)), "id long, text string")
+    tbl = df.select("text", F.size(shingle_array(F.col("text"), 3)).alias("n")).toArrow()
+    _, off = _batch_shingle_hashes(*word_hashes(tbl.column("text").combine_chunks()), 3)
+    assert np.diff(off).tolist() == tbl.column("n").to_pylist()
+    _, lens = word_hashes(tbl.column("text").combine_chunks())
+    assert lens.tolist() == [
+        len(r[0] or []) for r in df.select(words(F.col("text"))).collect()
+    ]
+
+    variants = spark.createDataFrame(
+        [(0, "a\xa0b c d"), (1, " a\xa0b\tc  d\n"), (2, "a b c d")], "id long, text string"
+    )
+    sig = {r["id"]: r["signature"] for r in
+           minhash_signatures(variants, "id", "text").collect()}
+    fp = {r["id"]: r["fingerprint"] for r in
+          simhash_fingerprints(variants, "id", "text").collect()}
+    assert sig[0] == sig[1] and sig[0] != sig[2]
+    assert fp[0] == fp[1] and fp[0] != fp[2]
 
 
 def test_simhash_degenerate_bucket_bounded(spark):
@@ -125,7 +197,6 @@ def test_minhash_string_ids(spark):
     pairs = {(r["id_a"], r["id_b"]) for r in cand.collect()}
     assert ("doc-a", "doc-b") in pairs
     verified = verify_jaccard(cand, df, "doc_id", "text", threshold=0.99).collect()
-    cand.unpersist()
     assert {(r["id_a"], r["id_b"]) for r in verified} == {("doc-a", "doc-b")}
 
 

@@ -95,6 +95,37 @@ def test_pipeline_nl_constraints_on_caption(spark):
     assert "SEQUENCE_VALUE_TOO_SMALL_FRACTION" in types
 
 
+def test_pipeline_nl_coverage_uses_schema_vocabulary(spark, tmp_path):
+    """The caption domain's vocabulary resolves through
+    StatsOptions.vocab_paths, so a vocabulary that covers about half of the
+    caption tokens (wNNNN, N < 10,000) trips the coverage floor; a named
+    vocabulary without a path is an error, not coverage 1.0."""
+    from data_validation_spark.schema import NaturalLanguageDomain
+
+    df = images_df(spark, 300, "clean")
+    vpath = tmp_path / "half.txt"
+    vpath.write_text("".join(f"w{i:04d}\n" for i in range(5000)))
+    schema = default_image_schema()
+    schema.get_feature("caption").natural_language_domain = NaturalLanguageDomain(
+        min_coverage=0.9, vocabulary="half"
+    )
+    options = StatsOptions(categorical_features={"fmt"}, vocab_paths={"half": str(vpath)})
+    r = validate_images(spark, df, schema, options=options)
+    nl = r.stats.default_slice().feature("caption").custom["nl_statistics"]
+    assert 0.4 < nl["feature_coverage"] < 0.6
+    assert "FEATURE_COVERAGE_TOO_LOW" in {a.type.value for a in r.anomalies.anomalies}
+
+    with pytest.raises(ValueError, match="vocab_paths"):
+        validate_images(spark, df, schema)
+
+
+def test_validate_images_leaves_options_unchanged(spark):
+    options = StatsOptions(categorical_features={"fmt"})
+    before = repr(options)
+    validate_images(spark, images_df(spark, 50, "clean"), options=options)
+    assert repr(options) == before and not options.image_columns
+
+
 def test_warm_session_memo_keys_on_application_id(monkeypatch):
     """A new session can reuse a collected session's id(); the warm-up memo
     keys on the application id, so a new application still warms up."""
@@ -126,7 +157,7 @@ def test_warm_session_memo_keys_on_application_id(monkeypatch):
 
 
 def test_warm_session_releases_its_persists(spark, monkeypatch):
-    """The warm-up runs verify_jaccard, which persists its candidates; it must
+    """The warm-up runs the dedup operators, verify_jaccard included; it must
     hand the session back with no persisted RDD of its own."""
     from data_validation_spark import datagen
 

@@ -407,21 +407,21 @@ def test_weighted_long_pass_has_no_python_node(spark, tmp_path):
 def test_lsh_pairing_stays_in_jvm(spark):
     """MinHash, SimHash and embedding LSH pair the members of a bucket with
     Spark's own operators: the only Python node in each plan is its one
-    signature, fingerprint or hyperplane ``MapInPandas``."""
+    signature or fingerprint ``MapInArrow`` or hyperplane ``MapInPandas``."""
     from data_validation_spark.dedup.embedding import cosine_pairs_lsh
     from data_validation_spark.dedup.minhash import minhash_lsh_candidates
     from data_validation_spark.dedup.simhash import simhash_near_dups
 
     docs = spark.createDataFrame([(0, "a b c d"), (1, "a b c e")], "id long, text string")
     vecs = spark.createDataFrame([(0, [1.0, 0.0]), (1, [1.0, 0.1])], "id long, v array<float>")
-    for out in (
-        minhash_lsh_candidates(docs, "id", "text"),
-        simhash_near_dups(docs, "id", "text"),
-        cosine_pairs_lsh(vecs, "id", "v", dim=2),
+    for out, node in (
+        (minhash_lsh_candidates(docs, "id", "text"), "MapInArrow"),
+        (simhash_near_dups(docs, "id", "text"), "MapInArrow"),
+        (cosine_pairs_lsh(vecs, "id", "v", dim=2), "MapInPandas"),
     ):
         plan = out._sc._jvm.PythonSQLUtils.explainString(
             out._jdf.queryExecution(), "simple"
         )
         nodes = [line.lstrip(" :+-").split(" ")[0] for line in plan.splitlines()]
         python = [n for n in nodes if "Pandas" in n or "Python" in n or "Arrow" in n]
-        assert python == ["MapInPandas"], plan
+        assert python == [node], plan
